@@ -120,16 +120,13 @@ object ChangeFeed {
       throw new MergeValidationException(
         s"Partition spec keys [${spec.keys.mkString(",")}] do not match feed keys [${keys.mkString(",")}]")
 
-    // Two consumers (touched-bucket collect + the apply join): pin the
-    // feed unless the caller already did — the PartitionedApply discipline.
+    // Two consumers (touched-bucket job + the apply join): pin the feed
+    // unless the caller already did — the PartitionedApply discipline.
     val callerPinned = feed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val pinned = if (callerPinned) feed else feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val feedKeyCols = keys.map(k =>
-        pinned(pinned.columns.find(_.equalsIgnoreCase(k)).getOrElse(
-          throw new MergeValidationException(s"Key column [$k] missing from feed"))))
-      val touched = pinned.select(spec.bucket(feedKeyCols).as("b"))
-        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      val schema = PartitionedTarget.dataSchema(spark, targetPath)
+      val touched = PartitionedTarget.touchedBuckets(spec, pinned, schema)
       if (touched.isEmpty) return Seq.empty
 
       val tgt = new Path(targetPath)
@@ -137,14 +134,14 @@ object ChangeFeed {
       val token = UUID.randomUUID().toString.take(8)
       val staging = new Path(tgt.getParent, s".${tgt.getName}.staging-$token")
 
-      val slice = PartitionedTarget.readBuckets(spark, targetPath, touched)
+      val slice = schema.flatMap(PartitionedTarget.readBuckets(spark, targetPath, touched, _))
         .getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            pinned.schema.fields.filterNot(_.name == opCol))))
+          schema.getOrElse(org.apache.spark.sql.types.StructType(
+            pinned.schema.fields.filterNot(_.name == opCol)))))
       val next = apply(slice, pinned, keys, opCol)
       val withBucket = next.withColumn(BucketCol, spec.bucket(keys.map(next(_))))
-      PartitionedApply.writePartitionedOrCleanup(withBucket, staging, fs)
+      PartitionedApply.writePartitionedOrCleanup(withBucket, staging, fs, touched.size)
       PartitionedApply.swapBuckets(spark, fs, tgt, staging, touched, token)
       MergeApply.stampLastUpdate(fs, tgt)
       touched

@@ -57,14 +57,14 @@ object PartitionedApply {
       throw new MergeValidationException(
         s"Partition spec keys [${spec.keys.mkString(",")}] do not match merge keys [${opts.keys.mkString(",")}]")
 
-    // The delta has two consumers — the touched-bucket collect and the
-    // merge join itself — and without a persist each would recompute the
-    // full source lineage (for a table-scan-derived delta, two scans of
-    // the underlying table). The delta is the SMALL side by this
-    // operator's contract (apply cost ∝ delta), so pinning it is cheap at
-    // any scale; released when the apply returns. A source the CALLER
-    // already persisted is left alone — unpersisting it here would drop
-    // the caller's cache entry out from under its later reuse.
+    // The delta has two consumers — the touched-bucket job and the merge
+    // join itself — and without a persist each would recompute the full
+    // source lineage (for a table-scan-derived delta, two scans of the
+    // underlying table). The delta is the SMALL side by this operator's
+    // contract (apply cost ∝ delta), so pinning it is cheap at any scale;
+    // released when the apply returns. A source the CALLER already
+    // persisted is left alone — unpersisting it here would drop the
+    // caller's cache entry out from under its later reuse.
     val callerPinned = rawSource.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val source =
       if (callerPinned) rawSource
@@ -72,20 +72,6 @@ object PartitionedApply {
     try applyPinned(spark, targetPath, source, opts, auditPath, thresholdPct, spec)
     finally if (!callerPinned) source.unpersist()
   }
-
-  // Opt-in phase attribution (measurement only, never set by the driver):
-  // with SPARK_GRAFT_MERGE_PROFILE set, each apply prints how its wall
-  // time splits across touched-collect / staged-write / swap — the
-  // decomposition the streaming-upsert per-batch floor work needs.
-  private val profile = sys.env.contains("SPARK_GRAFT_MERGE_PROFILE")
-  private def timed[T](what: String)(body: => T): T =
-    if (!profile) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[pmerge-profile] $what ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    }
 
   private def applyPinned(
       spark: SparkSession,
@@ -95,13 +81,18 @@ object PartitionedApply {
       auditPath: Option[String],
       thresholdPct: Option[Double],
       spec: PartitionSpec): MergeResult = {
+    // The target schema comes from one footer, so the plan is validated
+    // against the true target before any job runs — also when every delta
+    // key lands in a brand-new bucket (a subset-source merge must not write
+    // source-shaped buckets and drop the target-only columns). Only a
+    // genuinely EMPTY target (a pipeline bootstrapping into a fresh table)
+    // shapes the slice like the source.
+    val schema = PartitionedTarget.dataSchema(spark, targetPath)
+    val sliceSchema = schema.getOrElse(source.schema)
+    val plan = MergePlan.build(sliceSchema, source.schema, opts)
     // The touched-bucket set: bounded by nBuckets, so this collect is
     // metadata-sized no matter how large the delta is.
-    val srcKeyCols = opts.keys.map(k =>
-      source(source.columns.find(_.equalsIgnoreCase(k)).getOrElse(
-        throw new MergeValidationException(s"Key column [$k] missing from source"))))
-    val touched = timed("touched-collect")(source.select(spec.bucket(srcKeyCols).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq)
+    val touched = PartitionedTarget.touchedBuckets(spec, source, schema)
 
     val tgt = new Path(targetPath)
     val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -125,23 +116,9 @@ object PartitionedApply {
     // local dirs; on object storage over thousands of buckets it is the
     // apply's dominant metadata cost). Planning I/O now scales with the
     // TOUCHED set, like everything else here. Buckets the delta would
-    // create for the first time don't exist yet — they contribute no
-    // target rows, but an existing target's SCHEMA must still anchor the
-    // plan (a subset-source merge against an all-new-bucket delta would
-    // otherwise write source-shaped buckets and silently drop the
-    // target-only columns). Only a genuinely EMPTY target (a pipeline
-    // bootstrapping into a fresh table) shapes the slice like the source.
-    val slice = PartitionedTarget.readBuckets(spark, targetPath, touched)
-      .orElse {
-        if (PartitionedTarget.hasBuckets(spark, targetPath))
-          // Rare: every delta key lands in a brand-new bucket. Pay one
-          // full discovery for the true target schema; zero rows.
-          Some(spark.read.parquet(targetPath).drop(BucketCol).filter(lit(false)))
-        else None
-      }
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], source.schema))
-    val plan = MergePlan.build(slice.schema, source.schema, opts)
+    // create for the first time don't exist yet and contribute no rows.
+    val slice = schema.flatMap(PartitionedTarget.readBuckets(spark, targetPath, touched, _))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sliceSchema))
     val frame = new MergeFrame(slice, source, plan)
 
     def withBucket(df: DataFrame): DataFrame =
@@ -161,7 +138,7 @@ object PartitionedApply {
         val affected = row.getLong(0)
         val targetRows = row.getLong(2) - row.getLong(1)
         val variance = MergeApply.verdictOrCleanup(affected, targetRows, thresholdPct, fs, work)
-        writePartitionedOrCleanup(withBucket(frame.mergedFrom(staged)), staging, fs)
+        writePartitionedOrCleanup(withBucket(frame.mergedFrom(staged)), staging, fs, touched.size)
         swapBuckets(spark, fs, tgt, staging, touched, token)
         val ap = auditPath.getOrElse(MergeApply.defaultAuditPath(targetPath))
         frame.auditFrom(staged).write.mode(SaveMode.Append).parquet(ap)
@@ -170,28 +147,34 @@ object PartitionedApply {
       } finally fs.delete(work, true)
     } else {
       val obs = Observation(s"pmerge-$token")
-      timed("staged-write")(
-        writePartitionedOrCleanup(withBucket(frame.mergedObserved(obs)), staging, fs))
+      writePartitionedOrCleanup(withBucket(frame.mergedObserved(obs)), staging, fs, touched.size)
       val metrics = obs.get
       val affected = metrics("affected").asInstanceOf[Long]
       val inserted = metrics("inserted").asInstanceOf[Long]
       val targetRows = metrics("total").asInstanceOf[Long] - inserted
       val variance = MergeApply.verdictOrCleanup(affected, targetRows, thresholdPct, fs, staging)
-      timed("swap")(swapBuckets(spark, fs, tgt, staging, touched, token))
+      swapBuckets(spark, fs, tgt, staging, touched, token)
       MergeApply.stampLastUpdate(fs, tgt)
       MergeResult(affected, targetRows, variance, committed = true)
     }
   }
 
-  /** Staged write, one-file-per-bucket (repartition on the bucket — the
-    * same small-files guard as [[PartitionedTarget.write]]; the shuffle is
-    * on the delta-sized output only, and the Observation upstream of it
-    * still collects counts in this same job).
+  /** Staged write, one file per bucket: a hash repartition on the bucket
+    * puts each bucket in exactly one task (the same small-files guard as
+    * [[PartitionedTarget.write]]; the shuffle is on the delta-sized output
+    * only, and the Observation upstream of it still collects counts in
+    * this same job). The partition count is explicit —
+    * `min(buckets, defaultParallelism)` — because AQE coalesces an
+    * expression-only repartition of a small output into ONE writer task,
+    * which then writes every bucket file serially.
     */
-  private[merge] def writePartitionedOrCleanup(df: DataFrame, dir: Path, fs: FileSystem): Unit =
-    try df.repartition(col(BucketCol))
+  private[merge] def writePartitionedOrCleanup(
+      df: DataFrame, dir: Path, fs: FileSystem, buckets: Int): Unit = {
+    val nParts = math.min(buckets, df.sparkSession.sparkContext.defaultParallelism)
+    try df.repartition(nParts, col(BucketCol))
       .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(dir.toString)
     catch { case e: Throwable => fs.delete(dir, true); throw e }
+  }
 
   private def bucketDir(root: Path, b: Int): Path = new Path(root, s"$BucketCol=$b")
 

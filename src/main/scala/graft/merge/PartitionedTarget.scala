@@ -1,8 +1,11 @@
 package graft.merge
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.pipeline.HashMode
 
@@ -235,8 +238,7 @@ object PartitionedTarget {
   private def dirHealth(
       fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       targetFileBytes: Long, minFiles: Int): DirHealth = {
-    val files = fs.listStatus(dir).filter(f =>
-      f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    val files = fs.listStatus(dir).filter(isDataFile)
     val bytes = files.map(_.getLen).sum
     val desired =
       math.min(256L, math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
@@ -301,18 +303,104 @@ object PartitionedTarget {
     buckets
   }
 
-  /** Pruned read of the given buckets: lists ONLY their directories
-    * (planning metadata I/O ∝ the bucket set, not the target's fan-out),
-    * skipping buckets with no directory yet. None when none exist. The
-    * bucket column is dropped — callers get logical table content. Shared
-    * by the partition-scoped apply and the streaming current-state read.
+  /** A data file, not a sidecar (`_SUCCESS`, `_simplemerge_*`) or a
+    * hidden checksum/staging file.
     */
-  private[graft] def readBuckets(spark: SparkSession, path: String, buckets: Seq[Int]): Option[DataFrame] = {
+  private def isDataFile(st: FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
+
+  /** Footer key under which Spark's parquet writer records the row schema. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The target's data schema (bucket column excluded), read from ONE
+    * parquet footer on the driver — no schema-inference job, and known
+    * before anything runs, so an apply validates and plans against the
+    * true target schema even when every delta key lands in a brand-new
+    * bucket. Falls back to Spark inference for files whose footer lacks
+    * Spark's row metadata (a foreign writer). Nullable throughout, like
+    * every schema Spark reads back from files. None when the target holds
+    * no data file yet (an empty bootstrap target).
+    */
+  private[graft] def dataSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root)) return None
+    val footerFile = fs.listStatus(root).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(BucketCol + "="))
+      .flatMap(st => fs.listStatus(st.getPath).find(isDataFile))
+      .nextOption()
+    footerFile.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val rowSchema =
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
+        finally reader.close()
+      rowSchema match {
+        case Some(json) => asNullable(DataType.fromJson(json)).asInstanceOf[StructType]
+        case None => spark.read.parquet(path).drop(BucketCol).schema
+      }
+    }
+  }
+
+  private def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The buckets `delta`'s keys fall in, sorted. Keys are cast to the
+    * target's key types first (`schema`, from [[dataSchema]]): the merge
+    * writes rows with target-typed keys, and a hash bucket follows the
+    * key's string form, so an upcast that changes it (decimal scale,
+    * float→double, date→timestamp) would otherwise send a source key to
+    * another bucket than its target row — the staged row would land in
+    * an untouched bucket and be dropped at swap. One narrow job: each
+    * partition emits its distinct bucket ids (≤ nBuckets), the driver
+    * merges them — no `distinct` exchange.
+    */
+  private[graft] def touchedBuckets(
+      spec: PartitionSpec, delta: DataFrame, schema: Option[StructType]): Seq[Int] = {
+    val keyCols = spec.keys.map { k =>
+      val c = delta(delta.columns.find(_.equalsIgnoreCase(k)).getOrElse(
+        throw new MergeValidationException(s"Key column [$k] missing from delta")))
+      schema.flatMap(_.fields.find(_.name.equalsIgnoreCase(k))).fold(c)(f => c.cast(f.dataType))
+    }
+    val n = spec.nBuckets
+    delta.select(spec.bucket(keyCols)).as(Encoders.scalaInt)
+      .mapPartitions { ids =>
+        val seen = new java.util.BitSet(n)
+        ids.foreach(seen.set)
+        Iterator.iterate(seen.nextSetBit(0))(b => seen.nextSetBit(b + 1)).takeWhile(_ >= 0)
+      }(Encoders.scalaInt)
+      .collect().distinct.sorted.toSeq
+  }
+
+  /** Pruned read of the given buckets with a known data `schema` (no
+    * inference): lists ONLY their directories (planning metadata I/O ∝ the
+    * bucket set, not the target's fan-out), skipping buckets with no
+    * directory yet. None when none exist. The bucket column is dropped —
+    * callers get logical table content.
+    */
+  private[graft] def readBuckets(
+      spark: SparkSession, path: String, buckets: Seq[Int], schema: StructType): Option[DataFrame] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = buckets.map(b => new Path(root, s"$BucketCol=$b")).filter(fs.exists).map(_.toString)
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", path).parquet(dirs: _*).drop(BucketCol))
+    else Some(spark.read.schema(schema).option("basePath", path).parquet(dirs: _*).drop(BucketCol))
+  }
+
+  /** The stored rows `delta`'s keys can touch: [[touchedBuckets]] (one
+    * job) then [[readBuckets]] on the footer schema. None when the target
+    * has no data in those buckets. Shared by the streaming current-state
+    * read and the store-merge paths.
+    */
+  private[graft] def touchedSlice(spec: PartitionSpec, path: String, delta: DataFrame): Option[DataFrame] = {
+    val spark = delta.sparkSession
+    dataSchema(spark, path).flatMap(schema =>
+      readBuckets(spark, path, touchedBuckets(spec, delta, Some(schema)), schema))
   }
 
   private[merge] def writeSpec(spark: SparkSession, path: String, spec: PartitionSpec): Unit = {

@@ -421,20 +421,12 @@ object Sketches {
     val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
     val keys = spec.keys
     // Pin the batch's sketch aggregation for the merge's lifetime: it
-    // feeds the touched collect, the semi-join, and the merged union
+    // feeds the touched-bucket job, the semi-join, and the merged union
     // (see TextStats.mergeNgramCountsIntoStore — same rationale).
     arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Metadata-bounded collect: one bucket id per arriving slice group.
-      val touched = arriving
-        .select(spec.bucket(keys.map(arriving(_))).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val storedMatch = graft.merge.PartitionedTarget
-        .readBuckets(spark, path, touched) match {
-        case None => None
-        case Some(stored) =>
-          Some(stored.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      }
+      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
+        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
       val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
         .groupBy(keys.map(col): _*)
         .agg(
@@ -453,16 +445,8 @@ object Sketches {
     // three consumers (see TextStats.mergeNgramCountsIntoStore).
     arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Metadata-bounded collect: one bucket id per arriving slice group.
-      val touched = arriving
-        .select(spec.bucket(keys.map(arriving(_))).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val storedMatch = graft.merge.PartitionedTarget
-        .readBuckets(spark, path, touched) match {
-        case None => None
-        case Some(stored) =>
-          Some(stored.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      }
+      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
+        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
       val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
         .groupBy(keys.map(col): _*)
         .agg(hll_union_agg(col("sketch"), lit(true)).as("sketch"))
@@ -732,16 +716,8 @@ object Sketches {
     // three consumers (see TextStats.mergeNgramCountsIntoStore).
     arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Metadata-bounded collect: one bucket id per arriving slice group.
-      val touched = arriving
-        .select(spec.bucket(keys.map(arriving(_))).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val storedMatch = graft.merge.PartitionedTarget
-        .readBuckets(spark, path, touched) match {
-        case None => None
-        case Some(stored) =>
-          Some(stored.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      }
+      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
+        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
       val ordered = (keys :+ "sketch") :+ "batch_id"
       val both = storedMatch.fold(arriving)(_.unionByName(arriving))
         .select(ordered.map(col): _*)

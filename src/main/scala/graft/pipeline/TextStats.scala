@@ -2162,22 +2162,14 @@ object TextStats {
     val keys = spec.keys
     // The arriving frame is the BATCH'S GRAM AGGREGATION (explode +
     // hash-agg over every n-gram of the batch) and it feeds THREE scans
-    // — the touched-bucket collect, the stored-match semi-join, and the
+    // — the touched-bucket job, the stored-match semi-join, and the
     // merged union — so pin it for the apply's lifetime: the
-    // aggregation runs once, the collect doubles as its materialization
+    // aggregation runs once, the touched job doubles as its materialization
     // (guide §5: cache frames with ≥2 consumers; released on return).
     arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Metadata-bounded collect: at most nBuckets distinct bucket ids.
-      val touched = arriving
-        .select(spec.bucket(keys.map(arriving(_))).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val storedMatch = graft.merge.PartitionedTarget
-        .readBuckets(spark, path, touched) match {
-        case None => None
-        case Some(stored) =>
-          Some(stored.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      }
+      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
+        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
       val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
         .groupBy(keys.map(col): _*)
         .agg(sum(col("ct")).as("ct"), max(col("batch_id")).as("batch_id"))

@@ -76,20 +76,12 @@ object Vocab {
     val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
     val keys = spec.keys
     // Pin the batch's token aggregation for the apply's lifetime: it
-    // feeds the touched collect, the semi-join, and the merged union
+    // feeds the touched-bucket job, the semi-join, and the merged union
     // (see TextStats.mergeNgramCountsIntoStore — same rationale).
     arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Metadata-bounded collect: at most nBuckets distinct bucket ids.
-      val touched = arriving
-        .select(spec.bucket(keys.map(arriving(_))).as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val storedMatch = graft.merge.PartitionedTarget
-        .readBuckets(spark, path, touched) match {
-        case None => None
-        case Some(stored) =>
-          Some(stored.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      }
+      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
+        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
       val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
         .groupBy(keys.map(col): _*)
         .agg(sum(col("n")).as("n"), max(col("batch_id")).as("batch_id"))

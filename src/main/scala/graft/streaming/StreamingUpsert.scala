@@ -100,7 +100,7 @@ object StreamingUpsert {
           val source = orderCol match {
             case Some(oc) =>
               val pri = "__graft_pri"
-              val current = currentStateFor(batch, targetPath, keys, partitioned)
+              val current = currentStateFor(batch, targetPath, partitioned)
               val combined = batch.withColumn(pri, lit(1))
                 .unionByName(current.withColumn(pri, lit(0)))
               // Freshest per key; the batch row wins an exact ts tie.
@@ -122,34 +122,22 @@ object StreamingUpsert {
       }
 
   /** Target state relevant to this batch, selected to the batch's columns.
-    * Partitioned targets prune to the batch's touched buckets — the
-    * touched set is ≤ nBuckets integers (metadata-sized collect), and the
-    * filter sits on the partition column so untouched directories are
-    * eliminated at planning time, exactly as in the apply itself.
+    * Partitioned targets prune to the batch's touched buckets
+    * ([[PartitionedTarget.touchedSlice]]: one job for the ≤ nBuckets
+    * touched ids, then a listing of just those directories — the apply's
+    * own read pattern). An empty bootstrap target has no current state.
     */
   private def currentStateFor(
       batch: DataFrame,
       targetPath: String,
-      keys: Seq[String],
       partitioned: Boolean): DataFrame = {
     val spark = batch.sparkSession
     if (!partitioned)
       spark.read.parquet(targetPath).select(batch.columns.toIndexedSeq.map(col): _*)
-    else if (!PartitionedTarget.hasBuckets(spark, targetPath))
-      batch.filter(lit(false)) // empty bootstrap target: no current state
-    else {
-      val spec = PartitionedTarget.readSpec(spark, targetPath)
-      val keyCols = spec.keys.map(k =>
-        batch(batch.columns.find(_.equalsIgnoreCase(k)).getOrElse(
-          throw new IllegalArgumentException(s"Key column [$k] missing from stream"))))
-      val touched = batch.select(spec.bucket(keyCols).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      // Pruned listing of just the touched bucket dirs — the apply's own
-      // read pattern, shared via readBuckets.
-      PartitionedTarget.readBuckets(spark, targetPath, touched)
+    else
+      PartitionedTarget.touchedSlice(PartitionedTarget.readSpec(spark, targetPath), targetPath, batch)
         .map(_.select(batch.columns.toIndexedSeq.map(col): _*))
         .getOrElse(batch.filter(lit(false)))
-    }
   }
 
   /** Continuous exact-dedup ingest: append only the FIRST occurrence of

@@ -512,4 +512,143 @@ class PartitionedApplySpec extends GraftSuite {
       .select(rspec.bucket(Seq(col("k"))).as("b")).as[Int].head()
     assert(nullBucket === 15)
   }
+
+  /** A decimal(12,4)-keyed target of 64 rows (keys 0.0000 … 15.7500). */
+  private def decimalTarget(path: String): Unit =
+    PartitionedTarget.write(
+      (0 until 64).map(i => (BigDecimal(i) / 4, s"n$i", i.toDouble)).toDF("k", "name", "v")
+        .withColumn("k", col("k").cast("decimal(12,4)")),
+      path, spec)
+
+  private def decimalRows(path: String): Set[(String, String, Double)] =
+    PartitionedTarget.read(spark, path).select(col("k").cast("string"), col("name"), col("v"))
+      .as[(String, String, Double)].collect().toSet
+
+  /** Keys typed decimal(10,2), whose string form ("0.50") differs from the
+    * target's ("0.5000") — the hash bucket follows the string form.
+    */
+  private def narrowKeys(rows: Seq[(String, String, Double)]): DataFrame =
+    rows.toDF("k", "name", "v").withColumn("k", col("k").cast("decimal(10,2)"))
+
+  private def assertSomeKeyRebuckets(delta: DataFrame): Unit = {
+    val uncast = delta.select(spec.bucket(Seq(col("k")))).as[Int].collect().toSeq
+    val cast = delta.select(spec.bucket(Seq(col("k").cast("decimal(12,4)")))).as[Int].collect().toSeq
+    assert(uncast !== cast, "precondition: some key must hash differently once upcast")
+  }
+
+  test("upcast keys bucket as the target types them: a decimal(10,2) delta into a decimal(12,4) target") {
+    val path = freshDir("papply-upcast")
+    decimalTarget(path)
+    val before = decimalRows(path)
+    val source = narrowKeys(Seq(("0.25", "N1", 100.0), ("0.50", "N2", 200.0)))
+    assertSomeKeyRebuckets(source)
+
+    val r = MergeApply.applyToPartitioned(
+      spark, path, source, MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+    assert(r.committed && r.affectedRows === 2L)
+    val expected = before.map {
+      case ("0.2500", _, _) => ("0.2500", "N1", 100.0)
+      case ("0.5000", _, _) => ("0.5000", "N2", 200.0)
+      case row => row
+    }
+    assert(decimalRows(path) === expected)
+  }
+
+  test("ChangeFeed.applyToPartitioned buckets upcast feed keys as the target types them") {
+    val path = freshDir("papply-upcast-cdc")
+    decimalTarget(path)
+    val before = decimalRows(path)
+    val upserts = narrowKeys(Seq(("0.25", "N1", 100.0), ("0.50", "N2", 200.0), ("1.00", "gone", 0.0)))
+    assertSomeKeyRebuckets(upserts)
+    val feed = upserts.withColumn("op", when(col("name") === "gone", "D").otherwise("U"))
+
+    ChangeFeed.applyToPartitioned(spark, path, feed, Seq("k"))
+    val expected = before.collect {
+      case ("0.2500", _, _) => ("0.2500", "N1", 100.0)
+      case ("0.5000", _, _) => ("0.5000", "N2", 200.0)
+      case row if row._1 != "1.0000" => row
+    }
+    assert(decimalRows(path) === expected)
+  }
+
+  test("job budget: one job before the merge query, none for the slice schema, <= 5 in all; one file per touched bucket") {
+    val path = freshDir("papply-jobs")
+    PartitionedTarget.write(target60, path, spec)
+    val keys = Seq(3L, 5L, 7L, 11L, 13L, 1000L, 1001L)
+    val source = keys.map(k => (k, s"N$k", k * 10.0)).toDF("k", "name", "v")
+    val touched = bucketsOf(keys).values.toSet
+    assert(touched.size > 2)
+
+    // (jobId, SQL execution id) of every job the apply runs, by job group.
+    // A job outside any SQL execution is planning work — schema inference
+    // or parallel listing.
+    val group = "papply-job-budget"
+    val marker = "papply-job-budget-drained"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[String])]()
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+        else if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.jobId -> props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "partitioned apply under a job budget")
+      try MergeApply.applyToPartitioned(
+        spark, path, source, MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+      finally sc.clearJobGroup()
+      // Events arrive in order: once the marker job is seen, every job the
+      // apply ran has been recorded.
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+
+    val seen = jobs.asScala.toSeq.sortBy(_._1)
+    val summary = seen.mkString(", ")
+    assert(seen.forall(_._2.isDefined), s"jobs outside a SQL execution (schema inference/listing): $summary")
+    val mergeQuery = seen.last._2
+    assert(seen.count(_._2 != mergeQuery) === 1, s"jobs before the merge query: $summary")
+    assert(seen.size <= 5, s"jobs per apply: $summary")
+
+    val files = snapshotBuckets(path).keys
+      .filter { p => val n = p.split('/').last; !n.startsWith(".") && !n.startsWith("_") }
+      .groupBy(bucketOfPath).map { case (b, fs) => b -> fs.size }
+    touched.foreach(b => assert(files.get(b) === Some(1), s"bucket $b files"))
+  }
+
+  test("footer schema equals the inferred schema (decimal, nested struct, nullable columns)") {
+    val path = freshDir("papply-footer")
+    val df = Seq(
+      (1L, BigDecimal("1.25"), Option("a"), (2, Option(3.5), Seq(1L, 2L))),
+      (2L, BigDecimal("-7.50"), None, (4, None, Seq.empty[Long])))
+      .toDF("k", "amount", "label", "nested")
+      .withColumn("amount", col("amount").cast("decimal(12,4)"))
+    PartitionedTarget.write(df, path, spec)
+    val inferred = spark.read.parquet(path).drop(PartitionedTarget.BucketCol).schema
+    assert(PartitionedTarget.dataSchema(spark, path) === Some(inferred))
+    assert(PartitionedTarget.dataSchema(spark, freshDir("papply-nofooter")) === None)
+  }
+
+  test("footer schema falls back to inference when the footer has no Spark row metadata") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val path = freshDir("papply-foreign")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 k; optional binary name (UTF8); }")
+    val file = new HPath(s"$path/${PartitionedTarget.BucketCol}=0/part-0.parquet")
+    val writer = ExampleParquetWriter.builder(file).withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup().append("k", 1L).append("name", "a"))
+    finally writer.close()
+    val inferred = spark.read.parquet(path).drop(PartitionedTarget.BucketCol).schema
+    assert(PartitionedTarget.dataSchema(spark, path) === Some(inferred))
+  }
 }
