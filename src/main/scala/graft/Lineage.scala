@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage-cut policy for the iterative operators (GraphRank,
   * Dedup.clusters/clustersAlternating, Bpe.train, kCenters, the frozen
@@ -38,6 +39,9 @@ import org.apache.spark.sql.DataFrame
   * for a reliable checkpoint the files under the checkpoint dir are the
   * cluster's to clean (`spark.cleaner.referenceTracking.cleanCheckpoints`
   * or dir lifecycle policy), so it is a no-op there.
+  *
+  * [[pinned]] is the scoped cache for a frame with several consumers
+  * inside one operation; it never touches a cache its caller owns.
   */
 object Lineage {
 
@@ -56,4 +60,16 @@ object Lineage {
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(false))
+
+  /** Run `body` with `df` cached (MEMORY_AND_DISK) for its duration — for
+    * a frame that several jobs of one operation consume, so its lineage
+    * runs once. A frame the caller already persisted is left exactly as
+    * it is: not re-pinned, and NOT unpersisted on return, so the
+    * caller's later reuse still hits its cache.
+    */
+  def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val mine = df.storageLevel == StorageLevel.NONE
+    if (mine) df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(df) finally if (mine) df.unpersist(false)
+  }
 }

@@ -1,10 +1,8 @@
 package graft.merge
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** CDC change-feed application — the merge variant where the source is
   * not a full snapshot to DIFF against (the [[MergeFrame]] contract) but
@@ -112,39 +110,16 @@ object ChangeFeed {
   def applyToPartitioned(
       spark: SparkSession, targetPath: String, feed: DataFrame,
       keys: Seq[String], opCol: String = "op"): Seq[Int] = {
-    import PartitionedTarget.BucketCol
     require(keys.nonEmpty, "at least one key column required")
     require(feed.columns.contains(opCol), s"feed must carry the op column '$opCol'")
-    val spec = PartitionedTarget.readSpec(spark, targetPath)
-    if (spec.keys.map(_.toLowerCase) != keys.map(_.toLowerCase))
-      throw new MergeValidationException(
-        s"Partition spec keys [${spec.keys.mkString(",")}] do not match feed keys [${keys.mkString(",")}]")
-
-    // Two consumers (touched-bucket job + the apply join): pin the feed
-    // unless the caller already did — the PartitionedApply discipline.
-    val callerPinned = feed.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pinned = if (callerPinned) feed else feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val schema = PartitionedTarget.dataSchema(spark, targetPath)
-      val touched = PartitionedTarget.touchedBuckets(spec, pinned, schema)
-      if (touched.isEmpty) return Seq.empty
-
-      val tgt = new Path(targetPath)
-      val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val token = UUID.randomUUID().toString.take(8)
-      val staging = new Path(tgt.getParent, s".${tgt.getName}.staging-$token")
-
-      val slice = schema.flatMap(PartitionedTarget.readBuckets(spark, targetPath, touched, _))
-        .getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.getOrElse(org.apache.spark.sql.types.StructType(
-            pinned.schema.fields.filterNot(_.name == opCol)))))
-      val next = apply(slice, pinned, keys, opCol)
-      val withBucket = next.withColumn(BucketCol, spec.bucket(keys.map(next(_))))
-      PartitionedApply.writePartitionedOrCleanup(withBucket, staging, fs, touched.size)
-      PartitionedApply.swapBuckets(spark, fs, tgt, staging, touched, token)
-      MergeApply.stampLastUpdate(fs, tgt)
-      touched
-    } finally if (!callerPinned) pinned.unpersist()
+    PartitionedApply.withTouched(spark, targetPath, feed, keys) { t =>
+      if (t.buckets.nonEmpty) {
+        val slice = t.slice(StructType(t.delta.schema.filterNot(_.name == opCol)))
+        t.write(apply(slice, t.delta, keys, opCol))
+        t.swap()
+        MergeApply.stampLastUpdate(t.staging.fs, t.staging.target)
+      }
+      t.buckets
+    }
   }
 }

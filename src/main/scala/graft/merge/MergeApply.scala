@@ -6,7 +6,6 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Outcome of a merge apply — counts and verdict the reference surfaces via
   * `@@ROWCOUNT` / variance / RAISERROR (sp_SimpleMerge.sql:470-491).
@@ -35,18 +34,22 @@ final case class MergeResult(
   * the reference's extended property (sp_SimpleMerge.sql:129-140,485-491).
   *
   * Scale design (the 100 TB constraint): the expensive full-outer join
-  * executes exactly ONCE per apply —
+  * executes exactly ONCE per apply, and its affected/insert/total counts
+  * come from one [[Observation]] on the classified frame, collected by
+  * the first write that runs it —
   *
   *   - without audit: the merged result streams straight to the staging
-  *     directory while an [[Observation]] on the classified frame collects
-  *     affected/insert/total counts in the same job; the threshold verdict
-  *     is decided after the write, before the swap (the same
+  *     directory and the counts arrive with that write; the threshold
+  *     verdict is decided after the write, before the swap (the same
   *     execute-then-rollback shape as the reference's BEGIN TRAN /
   *     ROLLBACK);
   *   - with audit: the classified frame (merged columns + before-images +
-  *     action) is staged once, and counts, the audit table, and the final
-  *     target content are all derived from the staged copy — cheap rescans
-  *     of already-joined data, never a join re-run.
+  *     action) is staged once and the counts arrive with that write, so
+  *     the verdict is decided before the rewrite; the audit table and the
+  *     final target content are derived from the staged copy — cheap
+  *     rescans of already-joined data, never a join re-run.
+  *
+  * Both shapes run through [[commit]], which every merge writer shares.
   */
 object MergeApply {
 
@@ -91,16 +94,9 @@ object MergeApply {
     val plan = MergePlan.build(target.schema, source.schema, opts)
     val frame = new MergeFrame(target, source, plan)
 
-    val tgt = new Path(targetPath)
-    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = UUID.randomUUID().toString.take(8)
-    val staging = new Path(tgt.getParent, s".${tgt.getName}.staging-$token")
-
-    if (opts.audit)
-      applyWithAudit(spark, frame, thresholdPct, fs, tgt, staging, token,
-        auditPath.getOrElse(defaultAuditPath(targetPath)))
-    else
-      applyDirect(frame, thresholdPct, fs, tgt, staging, token)
+    val staging = Staging(spark, targetPath)
+    commit(frame, thresholdPct, staging, auditTarget(opts, targetPath, auditPath))(
+      writeOrCleanup(_, staging.dir, staging.fs), swap(staging))
   }
 
   /** Partition-scoped apply against a [[PartitionedTarget]] directory:
@@ -117,79 +113,73 @@ object MergeApply {
       auditPath: Option[String] = None): MergeResult =
     PartitionedApply.applyTo(spark, targetPath, source, opts, auditPath)
 
-  /** Audit-off path: one job writes the merged result to staging while the
-    * Observation collects counts from the classified frame inside it.
+  /** Where an apply with these options appends its audit rows, if any. */
+  private[merge] def auditTarget(
+      opts: MergeOptions, targetPath: String, auditPath: Option[String]): Option[String] =
+    if (opts.audit) Some(auditPath.getOrElse(defaultAuditPath(targetPath))) else None
+
+  /** The one commit sequence of every merge writer — stage, threshold
+    * verdict, swap, audit append, `lastUpdate` stamp: the reference's
+    * execute / threshold check / COMMIT or ROLLBACK / stamp block
+    * (sp_SimpleMerge.sql:470-491). A writer supplies only what differs:
+    * `write` stages a merged frame into `staging.dir`, `promote` swaps the
+    * staged result in.
+    *
+    * The counts come from one Observation on the classified frame (see the
+    * class doc): with audit off the staged write delivers them; with audit
+    * on, the work-dir copy of the classified frame does, so a breached
+    * threshold stops before the rewrite. A breach removes the staged
+    * output and raises; the target is untouched and nothing is stamped.
+    * Audit rows append AFTER the swap: the reference's OUTPUT rows exist
+    * iff the transaction commits, and an append cannot be rolled back —
+    * so a staging/swap failure must never leave phantom audit rows behind.
+    * (Residual window: a committed swap whose audit append then fails
+    * surfaces as an exception with the target already updated.)
     */
-  private def applyDirect(
+  private[merge] def commit(
       frame: MergeFrame,
       thresholdPct: Option[Double],
-      fs: FileSystem,
-      tgt: Path,
-      staging: Path,
-      token: String): MergeResult = {
-    val obs = Observation(s"merge-$token")
-    writeOrCleanup(frame.mergedObserved(obs), staging, fs)
-    val metrics = obs.get
-    val affected = metrics("affected").asInstanceOf[Long]
-    val inserted = metrics("inserted").asInstanceOf[Long]
-    val targetRows = metrics("total").asInstanceOf[Long] - inserted
-
-    val variance = verdictOrCleanup(affected, targetRows, thresholdPct, fs, staging)
-    swap(fs, tgt, staging, token)
-    stampLastUpdate(fs, tgt)
-    MergeResult(affected, targetRows, variance, committed = true)
-  }
-
-  /** Audit-on path (`@output`): stage the classified frame once; counts,
-    * audit rows, and the final target content all derive from the staged
-    * parquet. Audit rows are appended only after the threshold verdict
-    * passes (OUTPUT rolls back with the transaction in the reference).
-    */
-  private def applyWithAudit(
-      spark: SparkSession,
-      frame: MergeFrame,
-      thresholdPct: Option[Double],
-      fs: FileSystem,
-      tgt: Path,
-      staging: Path,
-      token: String,
-      auditPath: String): MergeResult = {
-    val work = new Path(tgt.getParent, s".${tgt.getName}.work-$token")
+      staging: Staging,
+      auditPath: Option[String])(
+      write: DataFrame => Unit,
+      promote: => Unit): MergeResult = {
+    val obs = Observation(s"merge-${staging.token}")
+    val counted = frame.observed(obs)
+    // Taken once, as soon as the first write that runs `counted` is done.
+    lazy val verdict = {
+      val metrics = obs.get
+      val affected = metrics("affected").asInstanceOf[Long]
+      val targetRows = metrics("total").asInstanceOf[Long] - metrics("inserted").asInstanceOf[Long]
+      val variance = verdictOrCleanup(affected, targetRows, thresholdPct, staging.fs, staging.dir)
+      MergeResult(affected, targetRows, variance, committed = true, auditPath = auditPath)
+    }
+    val work = staging.sibling("work")
     try {
-      writeOrCleanup(frame.resolved, work, fs)
-      val staged = spark.read.parquet(work.toString)
-      val row = staged.agg(
-        count(when(col(MergeFrame.ActionCol).isNotNull, 1)).as("affected"),
-        count(when(col(MergeFrame.ActionCol) === "INSERT", 1)).as("inserted"),
-        count(lit(1)).as("total")).head()
-      val affected = row.getLong(0)
-      val targetRows = row.getLong(2) - row.getLong(1)
-
-      val variance = verdictOrCleanup(affected, targetRows, thresholdPct, fs, work)
-      writeOrCleanup(frame.mergedFrom(staged), staging, fs)
-      swap(fs, tgt, staging, token)
-      // Audit appends AFTER the swap: the reference's OUTPUT rows exist iff
-      // the transaction commits, and an append cannot be rolled back — so a
-      // staging/swap failure must never leave phantom audit rows behind.
-      // (Residual window: a committed swap whose audit append then fails
-      // surfaces as an exception with the target already updated.)
-      frame.auditFrom(staged).write.mode(SaveMode.Append).parquet(auditPath)
-      stampLastUpdate(fs, tgt)
-      MergeResult(affected, targetRows, variance, committed = true, auditPath = Some(auditPath))
-    } finally fs.delete(work, true)
+      val resolved = auditPath.fold(counted) { _ =>
+        writeOrCleanup(counted, work, staging.fs)
+        verdict
+        counted.sparkSession.read.parquet(work.toString)
+      }
+      write(frame.mergedFrom(resolved))
+      verdict
+      promote
+      auditPath.foreach(frame.auditFrom(resolved).write.mode(SaveMode.Append).parquet(_))
+      stampLastUpdate(staging.fs, staging.target)
+      verdict
+    } finally staging.fs.delete(work, true)
   }
 
   /** Write a frame to a staging dir, deleting the partial output if the
     * write itself fails (no leaked staging dirs).
     */
-  private[merge] def writeOrCleanup(df: DataFrame, dir: Path, fs: FileSystem): Unit =
+  private def writeOrCleanup(df: DataFrame, dir: Path, fs: FileSystem): Unit =
     try df.write.mode(SaveMode.Overwrite).parquet(dir.toString)
     catch { case e: Throwable => fs.delete(dir, true); throw e }
 
-  /** Threshold verdict (A22): returns the variance, or cleans up the given
-    * staging/work dir and raises when the threshold is breached.
+  /** Threshold verdict (A22): returns the variance, or cleans up the
+    * staged output and raises when the threshold is breached.
     */
-  private[merge] def verdictOrCleanup(
+  private def verdictOrCleanup(
       affected: Long,
       targetRows: Long,
       thresholdPct: Option[Double],
@@ -216,23 +206,24 @@ object MergeApply {
     * that state detectable and [[recover]] restores it (single-writer,
     * rename-atomic filesystem assumed — documented above).
     */
-  private def swap(fs: FileSystem, tgt: Path, staging: Path, token: String): Unit = {
-    val retired = new Path(tgt.getParent, s".${tgt.getName}.retired-$token")
-    writeSwapMarker(fs, tgt, token, staging, retired, buckets = Nil, preExisting = Nil)
+  private def swap(staging: Staging): Unit = {
+    val Staging(fs, tgt, token) = staging
+    val retired = staging.sibling("retired")
+    writeSwapMarker(fs, tgt, token, staging.dir, retired, buckets = Nil, preExisting = Nil)
     if (!fs.rename(tgt, retired)) {
-      fs.delete(staging, true)
+      fs.delete(staging.dir, true)
       removeSwapMarker(fs, tgt, token)
       throw new IllegalStateException(s"Atomic swap failed: could not retire $tgt")
     }
-    if (!fs.rename(staging, tgt)) {
+    if (!fs.rename(staging.dir, tgt)) {
       // Roll back the retire. If THAT rename also fails, the target exists
       // only under its retired name — keep the marker (it is the breadcrumb
       // recover() needs to restore the target); removing it here would
       // destroy the only record of where the content went (ADVICE r3 #2).
       val rolledBack = fs.rename(retired, tgt)
-      fs.delete(staging, true)
+      fs.delete(staging.dir, true)
       if (rolledBack) removeSwapMarker(fs, tgt, token)
-      throw new IllegalStateException(s"Atomic swap failed: could not promote $staging" +
+      throw new IllegalStateException(s"Atomic swap failed: could not promote ${staging.dir}" +
         (if (rolledBack) "" else s"; rollback also failed — run MergeApply.recover on $tgt"))
     }
     fs.delete(retired, true)
@@ -415,5 +406,24 @@ object MergeApply {
         "\"lastUpdate\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
       } finally in.close()
     }
+  }
+}
+
+/** One write's private namespace beside its target: the
+  * `.<name>.<kind>-<token>` siblings (`staging`, `work`, `retired`) that a
+  * merge, change-feed apply or compaction stages into and swaps through.
+  * The token is fresh per write, so concurrent leftovers never collide.
+  */
+private[graft] final case class Staging(fs: FileSystem, target: Path, token: String) {
+  def sibling(kind: String): Path = new Path(target.getParent, s".${target.getName}.$kind-$token")
+  /** Where the staged result is written before the swap. */
+  def dir: Path = sibling("staging")
+}
+
+private[graft] object Staging {
+  def apply(spark: SparkSession, targetPath: String): Staging = {
+    val tgt = new Path(targetPath)
+    Staging(tgt.getFileSystem(spark.sparkContext.hadoopConfiguration), tgt,
+      UUID.randomUUID().toString.take(8))
   }
 }

@@ -175,17 +175,17 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
   /** The merged target content (reference: post-MERGE table state). */
   lazy val merged: DataFrame = mergedFrom(resolved)
 
-  /** `merged` with per-row action metrics observed during execution —
-    * lets the apply path get affected/insert/total counts from the SAME
-    * job that writes the result, so the full-outer join runs exactly once
+  /** `resolved` with per-row action metrics observed during execution —
+    * whichever write first runs it delivers the affected/insert/total
+    * counts in that SAME job, so the full-outer join runs exactly once
     * (no separate count pass). Metric names: affected, inserted, total.
     */
-  private[merge] def mergedObserved(obs: org.apache.spark.sql.Observation): DataFrame =
-    mergedFrom(resolved.observe(
+  private[merge] def observed(obs: org.apache.spark.sql.Observation): DataFrame =
+    resolved.observe(
       obs,
       count(when(col(ActionCol).isNotNull, 1)).as("affected"),
       count(when(col(ActionCol) === "INSERT", 1)).as("inserted"),
-      count(lit(1)).as("total")))
+      count(lit(1)).as("total"))
 
   /** Audit OUTPUT frame (A17-A19) from any resolved-shaped frame: one row
     * per affected target row — actionTime, action, key columns, then
@@ -288,15 +288,9 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
     // metadata-sized while the ranked side is the full input. Without the
     // hint Catalyst sort-merge-joins, re-shuffling (and re-sorting) every
     // ranked row just to pick up a per-bucket offset. A corpus whose keys
-    // are high-cardinality AND salted is outside the operator's contract
-    // (salting it buys nothing) — and since a forced broadcast there would
-    // DIE (driver OOM / 8 GB broadcast cap) instead of merely running
-    // slow, the hint is conf-gated: set
-    // spark.graft.merge.broadcastSaltedOffsets=false to fall back to the
-    // shuffle join when salting a high-cardinality key set anyway.
-    val useBroadcast = df.sparkSession.conf
-      .get("spark.graft.merge.broadcastSaltedOffsets", "true").toBoolean
-    val o = (if (useBroadcast) broadcast(offsets) else offsets).alias("o")
+    // are high-cardinality AND salted is outside the operator's contract:
+    // salting it buys nothing, and its offsets may exceed the broadcast cap.
+    val o = broadcast(offsets).alias("o")
     val cond = keys.map(k => col(s"r.$k") <=> col(s"o.$k")).reduce(_ && _) &&
       col(s"r.$sc") === col(s"o.$sc")
     r.join(o, cond)

@@ -1,10 +1,9 @@
 package graft.merge
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Partition-scoped incremental merge apply — the reference's "MERGE
   * touches only affected rows" property (sp_SimpleMerge.sql:466-472)
@@ -52,131 +51,107 @@ object PartitionedApply {
       opts: MergeOptions,
       auditPath: Option[String]): MergeResult = {
     val thresholdPct = opts.thresholdPct // fail fast on malformed (A23)
-    val spec = PartitionedTarget.readSpec(spark, targetPath)
-    if (spec.keys.map(_.toLowerCase) != opts.keys.map(_.toLowerCase))
-      throw new MergeValidationException(
-        s"Partition spec keys [${spec.keys.mkString(",")}] do not match merge keys [${opts.keys.mkString(",")}]")
-
-    // The delta has two consumers — the touched-bucket job and the merge
-    // join itself — and without a persist each would recompute the full
-    // source lineage (for a table-scan-derived delta, two scans of the
-    // underlying table). The delta is the SMALL side by this operator's
-    // contract (apply cost ∝ delta), so pinning it is cheap at any scale;
-    // released when the apply returns. A source the CALLER already
-    // persisted is left alone — unpersisting it here would drop the
-    // caller's cache entry out from under its later reuse.
-    val callerPinned = rawSource.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val source =
-      if (callerPinned) rawSource
-      else rawSource.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyPinned(spark, targetPath, source, opts, auditPath, thresholdPct, spec)
-    finally if (!callerPinned) source.unpersist()
-  }
-
-  private def applyPinned(
-      spark: SparkSession,
-      targetPath: String,
-      source: DataFrame,
-      opts: MergeOptions,
-      auditPath: Option[String],
-      thresholdPct: Option[Double],
-      spec: PartitionSpec): MergeResult = {
-    // The target schema comes from one footer, so the plan is validated
-    // against the true target before any job runs — also when every delta
-    // key lands in a brand-new bucket (a subset-source merge must not write
-    // source-shaped buckets and drop the target-only columns). Only a
-    // genuinely EMPTY target (a pipeline bootstrapping into a fresh table)
-    // shapes the slice like the source.
-    val schema = PartitionedTarget.dataSchema(spark, targetPath)
-    val sliceSchema = schema.getOrElse(source.schema)
-    val plan = MergePlan.build(sliceSchema, source.schema, opts)
-    // The touched-bucket set: bounded by nBuckets, so this collect is
-    // metadata-sized no matter how large the delta is.
-    val touched = PartitionedTarget.touchedBuckets(spec, source, schema)
-
-    val tgt = new Path(targetPath)
-    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = UUID.randomUUID().toString.take(8)
-    val staging = new Path(tgt.getParent, s".${tgt.getName}.staging-$token")
-
-    if (touched.isEmpty) {
-      // Empty delta: nothing to read or rewrite, but the merge still
-      // COMMITTED (a zero-row apply is a successful apply), so stamp
-      // lastUpdate like every other committed path and report variance 0
-      // (0 affected over an empty touched slice — not NaN, which would
-      // poison downstream arithmetic; VERDICT r3 "what's wrong" #4).
-      MergeApply.stampLastUpdate(fs, tgt)
-      return MergeResult(0L, 0L, 0.0, committed = true)
-    }
-
-    // Pruned read: list ONLY the touched bucket directories
-    // (PartitionedTarget.readBuckets) instead of discovering the whole
-    // target and filtering — on a wide target, full partition discovery
-    // is a file-listing pass over every bucket (measured ~0.3 s on 64
-    // local dirs; on object storage over thousands of buckets it is the
-    // apply's dominant metadata cost). Planning I/O now scales with the
-    // TOUCHED set, like everything else here. Buckets the delta would
-    // create for the first time don't exist yet and contribute no rows.
-    val slice = schema.flatMap(PartitionedTarget.readBuckets(spark, targetPath, touched, _))
-      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sliceSchema))
-    val frame = new MergeFrame(slice, source, plan)
-
-    def withBucket(df: DataFrame): DataFrame =
-      df.withColumn(BucketCol, spec.bucket(opts.keys.map(df(_))))
-
-    if (opts.audit) {
-      // Two-phase like MergeApply.applyWithAudit: stage the classified
-      // frame once; counts, final content, and audit rows derive from it.
-      val work = new Path(tgt.getParent, s".${tgt.getName}.work-$token")
-      try {
-        MergeApply.writeOrCleanup(frame.resolved, work, fs)
-        val staged = spark.read.parquet(work.toString)
-        val row = staged.agg(
-          count(when(col(MergeFrame.ActionCol).isNotNull, 1)).as("affected"),
-          count(when(col(MergeFrame.ActionCol) === "INSERT", 1)).as("inserted"),
-          count(lit(1)).as("total")).head()
-        val affected = row.getLong(0)
-        val targetRows = row.getLong(2) - row.getLong(1)
-        val variance = MergeApply.verdictOrCleanup(affected, targetRows, thresholdPct, fs, work)
-        writePartitionedOrCleanup(withBucket(frame.mergedFrom(staged)), staging, fs, touched.size)
-        swapBuckets(spark, fs, tgt, staging, touched, token)
-        val ap = auditPath.getOrElse(MergeApply.defaultAuditPath(targetPath))
-        frame.auditFrom(staged).write.mode(SaveMode.Append).parquet(ap)
-        MergeApply.stampLastUpdate(fs, tgt)
-        MergeResult(affected, targetRows, variance, committed = true, auditPath = Some(ap))
-      } finally fs.delete(work, true)
-    } else {
-      val obs = Observation(s"pmerge-$token")
-      writePartitionedOrCleanup(withBucket(frame.mergedObserved(obs)), staging, fs, touched.size)
-      val metrics = obs.get
-      val affected = metrics("affected").asInstanceOf[Long]
-      val inserted = metrics("inserted").asInstanceOf[Long]
-      val targetRows = metrics("total").asInstanceOf[Long] - inserted
-      val variance = MergeApply.verdictOrCleanup(affected, targetRows, thresholdPct, fs, staging)
-      swapBuckets(spark, fs, tgt, staging, touched, token)
-      MergeApply.stampLastUpdate(fs, tgt)
-      MergeResult(affected, targetRows, variance, committed = true)
+    withTouched(spark, targetPath, rawSource, opts.keys) { t =>
+      // Only a genuinely EMPTY target (a pipeline bootstrapping into a
+      // fresh table) shapes the slice like the source.
+      val sliceSchema = t.schema.getOrElse(t.delta.schema)
+      val plan = MergePlan.build(sliceSchema, t.delta.schema, opts)
+      if (t.buckets.isEmpty) {
+        // Empty delta: nothing to read or rewrite, but the merge still
+        // COMMITTED (a zero-row apply is a successful apply), so stamp
+        // lastUpdate like every other committed path and report variance 0
+        // (0 affected over an empty touched slice — not NaN, which would
+        // poison downstream arithmetic; VERDICT r3 "what's wrong" #4).
+        MergeApply.stampLastUpdate(t.staging.fs, t.staging.target)
+        MergeResult(0L, 0L, 0.0, committed = true)
+      } else
+        MergeApply.commit(new MergeFrame(t.slice(sliceSchema), t.delta, plan), thresholdPct,
+          t.staging, MergeApply.auditTarget(opts, targetPath, auditPath))(t.write, t.swap())
     }
   }
 
-  /** Staged write, one file per bucket: a hash repartition on the bucket
-    * puts each bucket in exactly one task (the same small-files guard as
-    * [[PartitionedTarget.write]]; the shuffle is on the delta-sized output
-    * only, and the Observation upstream of it still collects counts in
-    * this same job). The partition count is explicit —
-    * `min(buckets, defaultParallelism)` — because AQE coalesces an
-    * expression-only repartition of a small output into ONE writer task,
-    * which then writes every bucket file serially.
+  /** One partition-scoped rewrite of `path`: what every bucket-rewriting
+    * writer (the snapshot merge, [[ChangeFeed.applyToPartitioned]]) shares,
+    * so each keeps only how it derives the new slice content.
+    *
+    * @param schema the target's data schema from one footer
+    *               ([[PartitionedTarget.dataSchema]]), None for a target
+    *               with no data yet — known before any job runs, so a
+    *               writer validates its plan against the true target
+    *               first (also when every delta key lands in a brand-new
+    *               bucket: a subset-source merge must not write
+    *               source-shaped buckets and drop target-only columns)
     */
-  private[merge] def writePartitionedOrCleanup(
-      df: DataFrame, dir: Path, fs: FileSystem, buckets: Int): Unit = {
-    val nParts = math.min(buckets, df.sparkSession.sparkContext.defaultParallelism)
-    try df.repartition(nParts, col(BucketCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(dir.toString)
-    catch { case e: Throwable => fs.delete(dir, true); throw e }
+  private[merge] final class Touched(
+      spark: SparkSession,
+      path: String,
+      spec: PartitionSpec,
+      keys: Seq[String],
+      val delta: DataFrame,
+      val schema: Option[StructType]) {
+
+    /** The touched-bucket set: one narrow job, bounded by nBuckets, so it
+      * is metadata-sized no matter how large the delta is. Lazy: nothing
+      * runs until a writer asks for it.
+      */
+    lazy val buckets: Seq[Int] = PartitionedTarget.touchedBuckets(spec, delta, schema)
+
+    val staging: Staging = Staging(spark, path)
+
+    /** The stored rows of the touched buckets. Pruned read: lists ONLY the
+      * touched bucket directories instead of discovering the whole target
+      * and filtering — on object storage over thousands of buckets full
+      * partition discovery is the apply's dominant metadata cost. Buckets
+      * the delta creates for the first time contribute no rows; a target
+      * with no data yet reads as an empty frame of `bootstrap` shape.
+      */
+    def slice(bootstrap: => StructType): DataFrame =
+      schema.flatMap(PartitionedTarget.readBuckets(spark, path, buckets, _))
+        .getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], schema.getOrElse(bootstrap)))
+
+    /** Stage the new content of the touched buckets, one file per bucket:
+      * a hash repartition on the bucket puts each bucket in exactly one
+      * task (the same small-files guard as [[PartitionedTarget.write]]; the
+      * shuffle is on the delta-sized output only, and an Observation
+      * upstream of it still collects counts in this same job). The
+      * partition count is explicit — `min(buckets, defaultParallelism)` —
+      * because AQE coalesces an expression-only repartition of a small
+      * output into ONE writer task, which then writes every bucket file
+      * serially. A failed write leaves no staging output behind.
+      */
+    def write(df: DataFrame): Unit = {
+      val nParts = math.min(buckets.size, spark.sparkContext.defaultParallelism)
+      try df.withColumn(BucketCol, spec.bucket(keys.map(df(_))))
+        .repartition(nParts, col(BucketCol))
+        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(staging.dir.toString)
+      catch { case e: Throwable => staging.fs.delete(staging.dir, true); throw e }
+    }
+
+    /** Swap the staged buckets in; see [[swapBuckets]]. */
+    def swap(): Unit = swapBuckets(spark, staging, buckets)
   }
 
-  private def bucketDir(root: Path, b: Int): Path = new Path(root, s"$BucketCol=$b")
+  /** Run a partition-scoped rewrite of `path` for `delta`, keyed on
+    * `keys` (which must be the target's partition-spec keys). The delta
+    * has two consumers — the touched-bucket job and the writer's own job —
+    * and without a pin each would recompute its full lineage (for a
+    * table-scan-derived delta, two scans of the underlying table). The
+    * delta is the SMALL side by this operator's contract (apply cost ∝
+    * delta), so pinning it is cheap at any scale; see [[graft.Lineage.pinned]]
+    * for the caller-cache rule.
+    */
+  private[merge] def withTouched[T](
+      spark: SparkSession, path: String, delta: DataFrame, keys: Seq[String])(
+      body: Touched => T): T = {
+    val spec = PartitionedTarget.readSpec(spark, path)
+    if (spec.keys.map(_.toLowerCase) != keys.map(_.toLowerCase))
+      throw new MergeValidationException(
+        s"Partition spec keys [${spec.keys.mkString(",")}] do not match merge keys [${keys.mkString(",")}]")
+    graft.Lineage.pinned(delta) { pinned =>
+      body(new Touched(spark, path, spec, keys, pinned, PartitionedTarget.dataSchema(spark, path)))
+    }
+  }
 
   /** Swap ONLY the touched bucket directories, under an intent marker.
     * Per-bucket cases: staged + existing → replace; staged + new bucket →
@@ -188,14 +163,12 @@ object PartitionedApply {
     */
   private[graft] def swapBuckets(
       spark: SparkSession,
-      fs: FileSystem,
-      tgt: Path,
-      staging: Path,
+      staging: Staging,
       touched: Seq[Int],
-      token: String,
       partCol: String = BucketCol): Unit = {
+    val Staging(fs, tgt, token) = staging
     def dirOf(root: Path, b: Int): Path = new Path(root, s"$partCol=$b")
-    val retiredRoot = new Path(tgt.getParent, s".${tgt.getName}.retired-$token")
+    val retiredRoot = staging.sibling("retired")
     fs.mkdirs(retiredRoot)
     // Record which touched buckets exist BEFORE any rename: recover() must
     // not infer pre-existence from directory presence (ADVICE r3 #1 — a
@@ -203,12 +176,12 @@ object PartitionedApply {
     // would be indistinguishable from an already-promoted new bucket, and
     // deleting it loses pre-merge data).
     val preExisting = touched.filter(b => fs.exists(dirOf(tgt, b)))
-    MergeApply.writeSwapMarker(fs, tgt, token, staging, retiredRoot, touched, preExisting, partCol)
+    MergeApply.writeSwapMarker(fs, tgt, token, staging.dir, retiredRoot, touched, preExisting, partCol)
     try {
       touched.foreach { b =>
         val cur = dirOf(tgt, b)
-        val staged = dirOf(staging, b)
-        if (fs.exists(cur) && !fs.rename(cur, bucketDir(retiredRoot, b)))
+        val staged = dirOf(staging.dir, b)
+        if (fs.exists(cur) && !fs.rename(cur, dirOf(retiredRoot, b)))
           throw new IllegalStateException(s"Partitioned swap failed: could not retire $cur")
         if (fs.exists(staged) && !fs.rename(staged, cur))
           throw new IllegalStateException(s"Partitioned swap failed: could not promote $staged")
@@ -220,7 +193,7 @@ object PartitionedApply {
         MergeApply.recover(spark, tgt.toString)
         throw e
     }
-    fs.delete(staging, true)
+    fs.delete(staging.dir, true)
     fs.delete(retiredRoot, true)
     MergeApply.removeSwapMarker(fs, tgt, token)
   }

@@ -277,8 +277,7 @@ object PartitionedTarget {
     if (flagged.isEmpty) return Nil
 
     val buckets = flagged.map(_._1).sorted
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(root.getParent, s".${root.getName}.staging-$token")
+    val staging = Staging(spark, path)
     val dirs = buckets.map(b => new Path(root, s"$partCol=$b").toString)
     val df = spark.read.option("basePath", path).parquet(dirs: _*)
     val dataCols = df.columns.filterNot(_ == partCol).map(col)
@@ -297,9 +296,9 @@ object PartitionedTarget {
       .repartition(nParts, col(partCol), salt)
       .drop(nf)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(partCol).parquet(staging.toString)
-    catch { case e: Throwable => fs.delete(staging, true); throw e }
-    PartitionedApply.swapBuckets(spark, fs, root, staging, buckets, token, partCol)
+      .partitionBy(partCol).parquet(staging.dir.toString)
+    catch { case e: Throwable => fs.delete(staging.dir, true); throw e }
+    PartitionedApply.swapBuckets(spark, staging, buckets, partCol)
     buckets
   }
 
@@ -401,6 +400,33 @@ object PartitionedTarget {
     val spark = delta.sparkSession
     dataSchema(spark, path).flatMap(schema =>
       readBuckets(spark, path, touchedBuckets(spec, delta, Some(schema)), schema))
+  }
+
+  /** Fold `arriving` rows into a store kept as a partitioned target (the
+    * vocab and n-gram count stores, the HLL/KLL/count-min slice-sketch
+    * stores): the stored rows of the keys `arriving` carries — read from
+    * ONLY the buckets those keys hash to — are unioned with `arriving`,
+    * folded to one row per key by `combine` (given the union and the
+    * store's keys), and upserted through the partition-scoped apply in
+    * Keep mode, so keys absent from `arriving` keep their rows. Cost
+    * tracks the batch and its touched buckets, never store history.
+    *
+    * `arriving` (typically the batch's aggregation) feeds the touched
+    * job, the stored-match semi-join and the union, so it is pinned for
+    * the call — the aggregation runs once; a caller's own cache is left
+    * in place ([[graft.Lineage.pinned]]).
+    */
+  private[graft] def foldIntoStore(spark: SparkSession, path: String, arriving: DataFrame)(
+      combine: (DataFrame, Seq[String]) => DataFrame): Unit = {
+    val spec = readSpec(spark, path)
+    val keys = spec.keys
+    graft.Lineage.pinned(arriving) { a =>
+      val storedMatch = touchedSlice(spec, path, a)
+        .map(_.join(a.select(keys.map(a(_)): _*), keys, "left_semi"))
+      MergeApply.applyToPartitioned(
+        spark, path, combine(storedMatch.fold(a)(_.unionByName(a)), keys),
+        MergeOptions(keys = keys, delete = DeleteMode.Ignore))
+    }
   }
 
   private[merge] def writeSpec(spark: SparkSession, path: String, spec: PartitionSpec): Unit = {

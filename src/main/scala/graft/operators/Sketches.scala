@@ -94,19 +94,6 @@ object Sketches {
       keys: Seq[String]): DataFrame =
     unionEstimate(graft.merge.PartitionedTarget.read(spark, path), keys)
 
-  /** Union arriving slice sketches INTO the store — the increment for
-    * feeds that deliver a slice across many arrivals (a day's events
-    * trickle in all day): read the stored rows of ONLY the buckets the
-    * arriving slices hash to, union per slice, and replace through the
-    * partition-scoped apply. HLL union is a join-semilattice (register
-    * max / coupon-set union), so re-merging the same rows is a no-op on
-    * every answer the store gives — at-least-once replay needs NO
-    * watermark, the property that lets
-    * [[graft.streaming.StreamingIndex.sketchStoreTo]] skip the
-    * BM25/PQ tiers' whole batch-id protocol. Crash windows are the
-    * apply's own staged swap: a batch either landed or it didn't, and
-    * either way the replay converges to the same store.
-    */
   // ------------------------------------------------------------------
   // Theta sketches: distinct counts WITH set algebra (C138).
   // ------------------------------------------------------------------
@@ -417,42 +404,34 @@ object Sketches {
     */
   def mergeQuantilesIntoStore(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      arriving: DataFrame, k: Int = 8192): Unit = {
-    val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
-    val keys = spec.keys
-    // Pin the batch's sketch aggregation for the merge's lifetime: it
-    // feeds the touched-bucket job, the semi-join, and the merged union
-    // (see TextStats.mergeNgramCountsIntoStore — same rationale).
-    arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
-        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
-        .groupBy(keys.map(col): _*)
+      arriving: DataFrame, k: Int = 8192): Unit =
+    graft.merge.PartitionedTarget.foldIntoStore(spark, path, arriving) { (both, keys) =>
+      both.groupBy(keys.map(col): _*)
         .agg(
           kll_merge_agg_bigint(col("sketch"), lit(k)).as("sketch"),
           max(col("batch_id")).as("batch_id"))
-      appendSlices(spark, path, merged)
-    } finally arriving.unpersist(false)
-  }
+    }
 
+  /** Union arriving slice sketches INTO the store — the increment for
+    * feeds that deliver a slice across many arrivals (a day's events
+    * trickle in all day): read the stored rows of ONLY the buckets the
+    * arriving slices hash to, union per slice, and replace through the
+    * partition-scoped apply. HLL union is a join-semilattice (register
+    * max / coupon-set union), so re-merging the same rows is a no-op on
+    * every answer the store gives — at-least-once replay needs NO
+    * watermark, the property that lets
+    * [[graft.streaming.StreamingIndex.sketchStoreTo]] skip the
+    * BM25/PQ tiers' whole batch-id protocol. Crash windows are the
+    * apply's own staged swap: a batch either landed or it didn't, and
+    * either way the replay converges to the same store.
+    */
   def mergeIntoStore(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      arriving: DataFrame): Unit = {
-    val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
-    val keys = spec.keys
-    // Pin the batch's sketch aggregation for the merge's lifetime —
-    // three consumers (see TextStats.mergeNgramCountsIntoStore).
-    arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
-        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
-        .groupBy(keys.map(col): _*)
+      arriving: DataFrame): Unit =
+    graft.merge.PartitionedTarget.foldIntoStore(spark, path, arriving) { (both, keys) =>
+      both.groupBy(keys.map(col): _*)
         .agg(hll_union_agg(col("sketch"), lit(true)).as("sketch"))
-      appendSlices(spark, path, merged)
-    } finally arriving.unpersist(false)
-  }
+    }
 
   // ------------------------------------------------------------------
   // Frequency tier: exact heavy hitters + mergeable count-min (C140/C141).
@@ -710,19 +689,10 @@ object Sketches {
       arriving: DataFrame): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.util.sketch.CountMinSketch
-    val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
-    val keys = spec.keys
-    // Pin the batch's sketch aggregation for the merge's lifetime —
-    // three consumers (see TextStats.mergeNgramCountsIntoStore).
-    arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
-        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
+    graft.merge.PartitionedTarget.foldIntoStore(spark, path, arriving) { (union, keys) =>
       val ordered = (keys :+ "sketch") :+ "batch_id"
-      val both = storedMatch.fold(arriving)(_.unionByName(arriving))
-        .select(ordered.map(col): _*)
+      val both = union.select(ordered.map(col): _*)
       val nk = keys.length
-      val schema = both.schema
       val rdd = both.rdd
         .map(r => (keys.indices.map(r.get).toList,
           (r.getAs[Array[Byte]](nk), r.getLong(nk + 1))))
@@ -735,8 +705,8 @@ object Sketches {
           (bos.toByteArray, math.max(x._2, y._2))
         }
         .map { case (ks, (sk, b)) => Row.fromSeq(ks ::: List(sk, b)) }
-      appendSlices(spark, path, spark.createDataFrame(rdd, schema))
-    } finally arriving.unpersist(false)
+      spark.createDataFrame(rdd, both.schema)
+    }
   }
 
   /** EXACT phi-heavy-hitters answered THROUGH a persisted CMS slice

@@ -2157,28 +2157,11 @@ object TextStats {
     * buckets, never store history.
     */
   def mergeNgramCountsIntoStore(
-      spark: SparkSession, path: String, arriving: DataFrame): Unit = {
-    val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
-    val keys = spec.keys
-    // The arriving frame is the BATCH'S GRAM AGGREGATION (explode +
-    // hash-agg over every n-gram of the batch) and it feeds THREE scans
-    // — the touched-bucket job, the stored-match semi-join, and the
-    // merged union — so pin it for the apply's lifetime: the
-    // aggregation runs once, the touched job doubles as its materialization
-    // (guide §5: cache frames with ≥2 consumers; released on return).
-    arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
-        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
-        .groupBy(keys.map(col): _*)
+      spark: SparkSession, path: String, arriving: DataFrame): Unit =
+    graft.merge.PartitionedTarget.foldIntoStore(spark, path, arriving) { (both, keys) =>
+      both.groupBy(keys.map(col): _*)
         .agg(sum(col("ct")).as("ct"), max(col("batch_id")).as("batch_id"))
-      graft.merge.MergeApply.applyToPartitioned(
-        spark, path, merged,
-        graft.merge.MergeOptions(keys = keys, delete = graft.merge.DeleteMode.Ignore))
-      ()
-    } finally arriving.unpersist(false)
-  }
+    }
 
   /** The n-gram model as of the store's last completed maintenance —
     * the (w1…wn, ct) frame [[mknNgramNllAgainst]] consumes, bit-

@@ -72,25 +72,11 @@ object Vocab {
     */
   def mergeCountsIntoStore(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      arriving: DataFrame): Unit = {
-    val spec = graft.merge.PartitionedTarget.readSpec(spark, path)
-    val keys = spec.keys
-    // Pin the batch's token aggregation for the apply's lifetime: it
-    // feeds the touched-bucket job, the semi-join, and the merged union
-    // (see TextStats.mergeNgramCountsIntoStore — same rationale).
-    arriving.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val storedMatch = graft.merge.PartitionedTarget.touchedSlice(spec, path, arriving)
-        .map(_.join(arriving.select(keys.map(arriving(_)): _*), keys, "left_semi"))
-      val merged = storedMatch.fold(arriving)(_.unionByName(arriving))
-        .groupBy(keys.map(col): _*)
+      arriving: DataFrame): Unit =
+    graft.merge.PartitionedTarget.foldIntoStore(spark, path, arriving) { (both, keys) =>
+      both.groupBy(keys.map(col): _*)
         .agg(sum(col("n")).as("n"), max(col("batch_id")).as("batch_id"))
-      graft.merge.MergeApply.applyToPartitioned(
-        spark, path, merged,
-        graft.merge.MergeOptions(keys = keys, delete = graft.merge.DeleteMode.Ignore))
-      ()
-    } finally arriving.unpersist(false)
-  }
+    }
 
   /** The top-`vocabSize` vocabulary as of the store's last completed
     * maintenance — [[rankVocab]] over the persisted counts, so the

@@ -2,12 +2,14 @@ package graft.merge
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.GraftSuite
+import graft.pipeline.HashMode
 
 /** Apply-path specs: threshold guard / abort (A22), percent parse (A23),
   * lastUpdate stamp (A24), empty-target bypass (sp_SimpleMerge.sql:473-476),
@@ -15,6 +17,7 @@ import graft.GraftSuite
   * guarantee of the staged apply.
   */
 class MergeApplySpec extends GraftSuite {
+  import MergeApplySpec.Writer
   import spark.implicits._
 
   private def freshDir(prefix: String): String =
@@ -29,6 +32,23 @@ class MergeApplySpec extends GraftSuite {
   private def opts(threshold: Option[String] = None, audit: Boolean = false) =
     MergeOptions(keys = Seq("k"), threshold = threshold, audit = audit)
 
+  /** The partitioned writer's one-bucket spec makes its touched slice the
+    * whole target, so both writers merge the same rows and report the same
+    * counts.
+    */
+  private val writers = Seq(
+    Writer("applyTo", writeTarget, MergeApply.applyTo(spark, _, _, _)),
+    Writer("applyToPartitioned",
+      PartitionedTarget.write(_, _, PartitionSpec(Seq("k"), 1, HashMode.Xxhash64)),
+      MergeApply.applyToPartitioned(spark, _, _, _)))
+
+  /** Every file under `root`: relative path → content. */
+  private def fileBytes(root: String): Map[String, Seq[Byte]] = {
+    val base = Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
   test("commit path: result replaces target, counts and stamp correct (A21, A24)") {
     val path = freshDir("apply-commit")
     writeTarget(target3, path)
@@ -42,22 +62,25 @@ class MergeApplySpec extends GraftSuite {
     assert(MergeApply.lastUpdate(spark, path).isDefined)
   }
 
-  test("threshold abort: target untouched, no stamp, no staging leak (A22)") {
-    val path = freshDir("apply-abort")
-    writeTarget(target3, path)
-    val source = Seq((1L, "a", 10.0), (2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
-    val before = spark.read.parquet(path).collect().toSet
-    val e = intercept[MergeThresholdExceededException] {
-      MergeApply.applyTo(spark, path, source, opts(threshold = Some("50%")))
+  for (w <- writers; audit <- Seq(false, true))
+    test(s"threshold abort (A22), ${w.name}, audit=$audit: nothing changes") {
+      val path = freshDir("apply-abort")
+      w.load(target3, path)
+      val source = Seq((1L, "a", 10.0), (2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+      val before = fileBytes(path)
+      val e = intercept[MergeThresholdExceededException] {
+        w.apply(path, source, opts(threshold = Some("50%"), audit = audit))
+      }
+      assert(math.abs(e.variancePct - 100.0) < 1e-9 && e.thresholdPct === 50.0)
+      assert(fileBytes(path) === before)
+      assert(MergeApply.lastUpdate(spark, path).isEmpty)
+      // OUTPUT rows roll back with the transaction.
+      assert(!Files.exists(Paths.get(MergeApply.defaultAuditPath(path))))
+      // No leftover staging/work/retired siblings.
+      val parent = Paths.get(path).getParent
+      val leaks = Files.list(parent).toArray.map(_.toString).filter(_.contains(".t."))
+      assert(leaks.isEmpty, s"leaked: ${leaks.mkString(",")}")
     }
-    assert(math.abs(e.variancePct - 100.0) < 1e-9 && e.thresholdPct === 50.0)
-    assert(spark.read.parquet(path).collect().toSet === before)
-    assert(MergeApply.lastUpdate(spark, path).isEmpty)
-    // No leftover staging/work/retired siblings.
-    val parent = Paths.get(path).getParent
-    val leaks = Files.list(parent).toArray.map(_.toString).filter(_.contains(".t."))
-    assert(leaks.isEmpty, s"leaked: ${leaks.mkString(",")}")
-  }
 
   test("variance within threshold commits; exact boundary is inclusive (A22)") {
     val path = freshDir("apply-within")
@@ -86,37 +109,27 @@ class MergeApplySpec extends GraftSuite {
     assert(spark.read.parquet(path).count() === 3L)
   }
 
-  test("audit persistence: affected rows appended with d_*/i_* blocks (@output)") {
-    val path = freshDir("apply-audit")
-    writeTarget(target3, path)
-    val source = Seq((1L, "a", 10.0), (2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
-    val r = MergeApply.applyTo(spark, path, source, opts(audit = true))
-    assert(r.auditPath === Some(MergeApply.defaultAuditPath(path)))
-    val audit = spark.read.parquet(r.auditPath.get)
-    assert(audit.count() === r.affectedRows)
-    assert(audit.columns.toSeq === Seq("actionTime", "action", "k", "d_name", "d_v", "i_name", "i_v"))
-    val byAction = audit.collect().map(r => r.getAs[String]("action") -> r).toMap
-    assert(byAction("DELETE").getAs[String]("d_name") === "c")
-    assert(byAction("DELETE").getAs[String]("i_name") === null) // inserted.* NULL on delete
-    assert(byAction("INSERT").getAs[String]("d_name") === null) // deleted.* NULL on insert
-    assert(byAction("UPDATE").getAs[String]("d_name") === "b")
-    assert(byAction("UPDATE").getAs[String]("i_name") === "B")
-    // A no-op re-merge appends zero audit rows.
-    val r2 = MergeApply.applyTo(spark, path, source, opts(audit = true))
-    assert(r2.affectedRows === 0L)
-    assert(spark.read.parquet(r.auditPath.get).count() === r.affectedRows)
-  }
-
-  test("audit suppressed on threshold abort (OUTPUT rolls back with the txn)") {
-    val path = freshDir("apply-audit-abort")
-    writeTarget(target3, path)
-    val source = Seq((9L, "z", 90.0)).toDF("k", "name", "v")
-    intercept[MergeThresholdExceededException] {
-      MergeApply.applyTo(spark, path, source, opts(threshold = Some("1%"), audit = true))
+  for (w <- writers)
+    test(s"audit persistence (@output), ${w.name}: d_*/i_* rows appended") {
+      val path = freshDir("apply-audit")
+      w.load(target3, path)
+      val source = Seq((1L, "a", 10.0), (2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+      val r = w.apply(path, source, opts(audit = true))
+      assert(r.auditPath === Some(MergeApply.defaultAuditPath(path)))
+      val audit = spark.read.parquet(r.auditPath.get)
+      assert(audit.count() === r.affectedRows)
+      assert(audit.columns.toSeq === Seq("actionTime", "action", "k", "d_name", "d_v", "i_name", "i_v"))
+      val byAction = audit.collect().map(r => r.getAs[String]("action") -> r).toMap
+      assert(byAction("DELETE").getAs[String]("d_name") === "c")
+      assert(byAction("DELETE").getAs[String]("i_name") === null) // inserted.* NULL on delete
+      assert(byAction("INSERT").getAs[String]("d_name") === null) // deleted.* NULL on insert
+      assert(byAction("UPDATE").getAs[String]("d_name") === "b")
+      assert(byAction("UPDATE").getAs[String]("i_name") === "B")
+      // A no-op re-merge appends zero audit rows.
+      val r2 = w.apply(path, source, opts(audit = true))
+      assert(r2.affectedRows === 0L)
+      assert(spark.read.parquet(r.auditPath.get).count() === r.affectedRows)
     }
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(MergeApply.defaultAuditPath(path))))
-  }
 
   test("subset source: audit images cover target-only columns (ADVICE r1 #1)") {
     val path = freshDir("apply-subset-audit")
@@ -208,28 +221,60 @@ class MergeApplySpec extends GraftSuite {
     SimpleMerge.into(dupTarget).using(source).keys("k").badKey(true).assertUniqueKeys()
   }
 
-  test("audit-off apply executes the join exactly once (scale guarantee)") {
-    val path = freshDir("apply-once")
-    writeTarget(target3, path)
-    val source = Seq((2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+  /** (join-bearing, all) query executions `body` runs: listener delivery
+    * is async, so wait until `expected` have arrived, then settle to catch
+    * any late extra one.
+    */
+  private def executions(expected: Int)(body: => Unit): (Int, Int) = {
     val joins = new AtomicInteger(0)
+    val all = new AtomicInteger(0)
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
         if (qe.executedPlan.toString.contains("Join")) joins.incrementAndGet()
+        all.incrementAndGet()
+      }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
-      MergeApply.applyTo(spark, path, source, opts(threshold = Some("500%")))
-      // Listener delivery is async; wait for the first event, then settle.
+      body
       val deadline = System.nanoTime() + 5.seconds.toNanos
-      while (joins.get() < 1 && System.nanoTime() < deadline) Thread.sleep(50)
-      Thread.sleep(500) // catch any late double-execution event
-      assert(joins.get() === 1, s"expected exactly one join-bearing execution, saw ${joins.get()}")
+      while (all.get() < expected && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+      (joins.get(), all.get())
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("audit-off apply executes the join exactly once (scale guarantee)") {
+    val path = freshDir("apply-once")
+    writeTarget(target3, path)
+    val source = Seq((2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+    val (joins, _) = executions(1) {
+      MergeApply.applyTo(spark, path, source, opts(threshold = Some("500%")))
+    }
+    assert(joins === 1, s"expected exactly one join-bearing execution, saw $joins")
+  }
+
+  test("audit-on apply runs the join once, in three query executions") {
+    val path = freshDir("apply-once-audit")
+    writeTarget(target3, path)
+    val source = Seq((2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+    val (joins, all) = executions(3) {
+      MergeApply.applyTo(spark, path, source, opts(threshold = Some("500%"), audit = true))
+    }
+    assert(joins === 1, s"expected exactly one join-bearing execution, saw $joins")
+    assert(all === 3, s"expected three query executions, saw $all")
   }
 
   private implicit class IntSeconds(n: Int) {
     def seconds: scala.concurrent.duration.FiniteDuration = scala.concurrent.duration.Duration(n, "s")
   }
+}
+
+object MergeApplySpec {
+  /** A merge writer with the target layout it applies to. */
+  private final case class Writer(
+      name: String,
+      load: (DataFrame, String) => Unit,
+      apply: (String, DataFrame, MergeOptions) => MergeResult)
 }

@@ -498,6 +498,32 @@ class PartitionedApplySpec extends GraftSuite {
     assert(PartitionedTarget.compact(spark, path) === Nil)
   }
 
+  test("a failed promote rolls back a retired bucket of a non-default partition column") {
+    // The IVF index layout: `bucket=<b>` directories, swapped by compaction
+    // through swapBuckets with partCol = "bucket".
+    val path = freshDir("papply-partcol-rollback")
+    val rows = (0L until 8L).map(i => (i, s"n$i", (i % 2).toInt)).toDF("k", "name", "bucket")
+    rows.write.partitionBy("bucket").parquet(path)
+    val tgt = new HPath(path)
+    val local = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = Staging(local, tgt, "r0llback")
+    rows.filter(col("bucket") === 0).withColumn("name", lit("new"))
+      .write.partitionBy("bucket").parquet(staging.dir.toString)
+    // Every promote out of the staging dir fails; retires go through.
+    val noPromote = new org.apache.hadoop.fs.FilterFileSystem(local) {
+      override def rename(src: HPath, dst: HPath): Boolean =
+        src.getParent.toUri.getPath != staging.dir.toUri.getPath && super.rename(src, dst)
+    }
+
+    intercept[IllegalStateException] {
+      PartitionedApply.swapBuckets(spark, staging.copy(fs = noPromote), Seq(0), "bucket")
+    }
+    assert(spark.read.parquet(path).as[(Long, String, Int)].collect().toSet ===
+      rows.as[(Long, String, Int)].collect().toSet)
+    val leaks = Files.list(Paths.get(path).getParent).toArray.map(_.toString).filter(_.contains(".t."))
+    assert(leaks.isEmpty, s"leaked: ${leaks.mkString(",")}")
+  }
+
   test("range bucket pmod matches the documented double-% DuckDB twin on negative keys and NULL") {
     val rspec = PartitionSpec(Seq("k"), 16, HashMode.Xxhash64, rangeShift = Some(3))
     val keys = Seq(-100L, -17L, -1L, 0L, 5L, 127L, Long.MinValue, Long.MaxValue)
