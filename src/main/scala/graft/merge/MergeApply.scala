@@ -89,7 +89,9 @@ object MergeApply {
     // Opt-in schema evolution (C116) applied to the ON-DISK content: the
     // rewritten target carries the evolved columns; without the flag a
     // widened source is rejected by the alignment gate below.
-    val raw = spark.read.parquet(targetPath)
+    // The schema comes from one footer (no inference job) where it can.
+    val raw = PartitionedTarget.dataSchema(spark, targetPath)
+      .fold(spark.read)(spark.read.schema).parquet(targetPath)
     val target = if (evolveSchema) SimpleMerge.evolveTarget(raw, source) else raw
     val plan = MergePlan.build(target.schema, source.schema, opts)
     val frame = new MergeFrame(target, source, plan)

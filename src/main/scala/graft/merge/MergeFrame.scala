@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
   *   MERGE join (A6,A7,A9)  → full-outer join on `<=>` (EqualNullSafe keeps
   *                            the key hash-joinable, unlike the reference's
   *                            OR-form which defeats hash joins)
-  *   change detection (A10) → `!(struct(src payload) <=> struct(tgt payload))`
-  *                            — struct `<=>` is exactly the reference's
-  *                            NOT EXISTS(... INTERSECT ...) null-safe row
-  *                            comparison, without a correlated subquery
+  *   change detection (A10) → `!(s1 <=> t1 && … && sn <=> tn)` over the
+  *                            payload, one column computed once per row
+  *                            ahead of the projection — exactly the
+  *                            reference's NOT EXISTS(... INTERSECT ...)
+  *                            null-safe row comparison (NULL = NULL, NaN =
+  *                            NaN, -0.0 = 0.0, as struct `<=>` compares),
+  *                            without a correlated subquery or a struct
   *   actions (A11-A16,A19)  → per-column when/otherwise projection
   *   audit OUTPUT (A17-A19) → sibling projection over the same join
   *
@@ -26,8 +29,20 @@ import org.apache.spark.sql.functions._
   * merge semantics; no driver-side collection anywhere; the filtered
   * complement (`unmatchedSlice`) is a second scan with the negated
   * predicate pushed down, so the union-back costs one extra pruned scan,
-  * not a shuffle. AQE handles skewed keys at runtime; `badKey` windows
-  * partition on the same keys the join shuffles on.
+  * not a shuffle.
+  *
+  * Join strategy: the smaller side becomes a shuffled hash join's build
+  * side only when Spark's own local-map size rule admits it — estimated
+  * size below `autoBroadcastJoinThreshold × shuffle partitions`
+  * (`JoinSelectionHelper.canBuildLocalHashMapBySize`); a hash join builds
+  * one side per partition and sorts nothing. Above the rule Spark plans
+  * the sort-merge join, which can spill. The build side's per-partition
+  * share stays bounded because merge keys are unique by contract, and
+  * under badKey the `rn` join key spreads a duplicated key's rows across
+  * partitions. AQE does NOT split skew here: `OptimizeSkewedJoin` splits
+  * only inner, cross, semi, anti and left/right outer joins, never the
+  * merge's full outer one. `badKey` windows partition on the same keys
+  * the join shuffles on.
   */
 final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: MergePlan) {
   import MergeFrame._
@@ -89,14 +104,17 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
     val cond = (keyCond ++ rnCond).reduce(_ && _)
 
     // A9: MERGE == full outer join by match disposition.
-    val joined = tSide.join(sSide, cond, "full_outer")
+    val (tJoin, sJoin) = withHashBuildSide(tSide, sSide)
+    // A10: null-safe row-wise change detection over the non-key source
+    // columns, one column per row: the projection below reads it up to
+    // 1 + |payload| times, and CollapseProject never inlines a non-cheap
+    // expression read more than once.
+    val joined = tJoin.join(sJoin, cond, "full_outer")
+      .withColumn(ChangedCol, changedOf(payload.map(c => s(c.name) -> t(c.name))))
 
     val tPresent = col(TPresent).isNotNull
     val sPresent = col(SPresent).isNotNull
-    // A10: null-safe row-wise change detection over the non-key source columns.
-    val changed: Column =
-      if (payload.isEmpty) lit(false)
-      else !(struct(payload.map(c => s(c.name)): _*) <=> struct(payload.map(c => t(c.name)): _*))
+    val changed = col(ChangedCol)
 
     // A19: $action pseudo-column. Soft delete reports UPDATE, like MERGE does.
     val deleteAction: Column = opts.delete match {
@@ -131,6 +149,21 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
       mergedCols ++ images ++ Seq(
         action.as(ActionCol),
         (tPresent && !sPresent).as(NmbsCol)): _*)
+  }
+
+  /** The join sides, the smaller one hinted as a shuffled hash join's
+    * build side when its estimated size is below Spark's local-map bound
+    * `autoBroadcastJoinThreshold × shuffle partitions` (see the class doc);
+    * unhinted otherwise, so Spark plans a sort-merge join.
+    */
+  private def withHashBuildSide(l: DataFrame, r: DataFrame): (DataFrame, DataFrame) = {
+    val conf = l.sparkSession.sessionState.conf
+    val bound = BigInt(conf.autoBroadcastJoinThreshold) * conf.numShufflePartitions
+    def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val (ls, rs) = (size(l), size(r))
+    if (ls.min(rs) >= bound) (l, r)
+    else if (ls <= rs) (l.hint("shuffle_hash"), r)
+    else (l, r.hint("shuffle_hash"))
   }
 
   /** Rows with soft-delete assignments applied. All assignment right-hand
@@ -331,5 +364,14 @@ object MergeFrame {
   private[merge] val SPresent = "__graft_present_of_s"
   private[merge] val Rn = "__graft_rn"
   private[merge] val ActionCol = "__graft_action"
+  private[merge] val ChangedCol = "__graft_changed"
   private[merge] val NmbsCol = "__graft_nmbs"
+
+  /** The A10 change predicate over (source, target) payload column pairs:
+    * `!(s1 <=> t1 && … && sn <=> tn)`, the null-safe row comparison of
+    * `!(struct(s…) <=> struct(t…))` (NULL = NULL, NaN = NaN, -0.0 = 0.0)
+    * without building a struct per side and row. False with no payload.
+    */
+  private[merge] def changedOf(pairs: Seq[(Column, Column)]): Column =
+    if (pairs.isEmpty) lit(false) else !pairs.map { case (s, t) => s <=> t }.reduce(_ && _)
 }

@@ -311,33 +311,39 @@ object PartitionedTarget {
   /** Footer key under which Spark's parquet writer records the row schema. */
   private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** The target's data schema (bucket column excluded), read from ONE
+  /** A target's data schema (bucket column excluded), read from ONE
     * parquet footer on the driver — no schema-inference job, and known
     * before anything runs, so an apply validates and plans against the
     * true target schema even when every delta key lands in a brand-new
-    * bucket. Falls back to Spark inference for files whose footer lacks
-    * Spark's row metadata (a foreign writer). Nullable throughout, like
-    * every schema Spark reads back from files. None when the target holds
-    * no data file yet (an empty bootstrap target).
+    * bucket. Serves bucket-partitioned targets (a footer in any bucket
+    * directory) and flat ones (a footer at the root). Falls back to Spark
+    * inference for files whose footer lacks Spark's row metadata (a
+    * foreign writer) and for a flat directory with `key=value`
+    * subdirectories, whose partition columns only discovery supplies.
+    * Nullable throughout, like every schema Spark reads back from files.
+    * None when the target holds no data file yet (an empty bootstrap
+    * target).
     */
   private[graft] def dataSchema(spark: SparkSession, path: String): Option[StructType] = {
     val root = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return None
-    val footerFile = fs.listStatus(root).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(BucketCol + "="))
-      .flatMap(st => fs.listStatus(st.getPath).find(isDataFile))
-      .nextOption()
+    def inferred = spark.read.parquet(path).drop(BucketCol).schema
+    val (bucketDirs, entries) = fs.listStatus(root).toSeq
+      .partition(st => st.isDirectory && st.getPath.getName.startsWith(BucketCol + "="))
+    if (bucketDirs.isEmpty && entries.exists(st =>
+        st.isDirectory && st.getPath.getName.contains('=') && !st.getPath.getName.startsWith(".")))
+      return Some(inferred)
+    val footerFile =
+      if (bucketDirs.isEmpty) entries.find(isDataFile)
+      else bucketDirs.iterator.flatMap(st => fs.listStatus(st.getPath).find(isDataFile)).nextOption()
     footerFile.map { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       val rowSchema =
         try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
         finally reader.close()
-      rowSchema match {
-        case Some(json) => asNullable(DataType.fromJson(json)).asInstanceOf[StructType]
-        case None => spark.read.parquet(path).drop(BucketCol).schema
-      }
+      rowSchema.fold(inferred)(json => asNullable(DataType.fromJson(json)).asInstanceOf[StructType])
     }
   }
 

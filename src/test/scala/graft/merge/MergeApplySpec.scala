@@ -266,6 +266,63 @@ class MergeApplySpec extends GraftSuite {
     assert(all === 3, s"expected three query executions, saw $all")
   }
 
+  test("flat-target apply reads its schema from a footer: 3 jobs (4 with schema inference), none outside a SQL execution") {
+    val path = freshDir("apply-jobs")
+    writeTarget(target3, path)
+    val source = Seq((2L, "B", 21.0), (4L, "d", 40.0)).toDF("k", "name", "v")
+    // (jobId, SQL execution id) of every job the apply runs; a job outside
+    // any SQL execution is planning work such as schema inference.
+    val group = "apply-job-count"
+    val marker = "apply-job-count-drained"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[String])]()
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+        else if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.jobId -> props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "flat apply job count")
+      try MergeApply.applyTo(spark, path, source, opts(threshold = Some("500%")))
+      finally sc.clearJobGroup()
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    val seen = jobs.asScala.toSeq.sortBy(_._1)
+    assert(seen.forall(_._2.isDefined), s"jobs outside a SQL execution: ${seen.mkString(", ")}")
+    assert(seen.size === 3, s"jobs per apply: ${seen.mkString(", ")}")
+  }
+
+  test("footer schema of a flat target == spark.read.parquet schema (decimal, nested struct, nullability)") {
+    import org.apache.spark.sql.functions._
+    val path = freshDir("apply-footer")
+    Seq((1L, 7, "a"), (2L, 8, null)).toDF("k", "n", "s")
+      .select(
+        col("k"), col("n"), // n is non-nullable in the written frame
+        (col("k") * 1.25).cast("decimal(12,3)").as("dec"),
+        struct(col("s"), struct(col("n").as("inner"), array(col("s")).as("arr")).as("deep")).as("nested"))
+      .write.parquet(path)
+    assert(PartitionedTarget.dataSchema(spark, path) === Some(spark.read.parquet(path).schema))
+  }
+
+  test("a key=value-partitioned flat directory still merges with its partition column") {
+    val path = freshDir("apply-hive")
+    Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "name", "p").write.partitionBy("p").parquet(path)
+    val source = Seq((1L, "A", "x"), (3L, "c", "z")).toDF("k", "name", "p")
+    val r = MergeApply.applyTo(spark, path, source, MergeOptions(keys = Seq("k")))
+    assert(r.committed && r.affectedRows === 3L)
+    val after = spark.read.parquet(path).select("k", "name", "p").as[(Long, String, String)].collect().toSet
+    assert(after === Set((1L, "A", "x"), (3L, "c", "z")))
+  }
+
   private implicit class IntSeconds(n: Int) {
     def seconds: scala.concurrent.duration.FiniteDuration = scala.concurrent.duration.Duration(n, "s")
   }

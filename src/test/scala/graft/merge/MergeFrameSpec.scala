@@ -213,4 +213,84 @@ class MergeFrameSpec extends GraftSuite {
     val evolvedOnce = SimpleMerge.evolveTarget(evolved, cased)
     assert(evolvedOnce.columns.toSeq === evolved.columns.toSeq)
   }
+
+  /** Runs `body` with SQL confs set, restoring the previous values. */
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def joinOf(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .find(l => l.contains("FullOuter")).getOrElse(df.queryExecution.executedPlan.toString)
+
+  /** Merged rows, audit rows (action time dropped) and affected count of a
+    * fresh merge, with the join node its executed plan shows.
+    */
+  private def outcome(t: DataFrame, s: DataFrame, opts: MergeOptions) = {
+    val m = merge(opts, t, s)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    (joinOf(m.merged), rows(m.merged), rows(m.audit.drop("actionTime")), m.affectedCount())
+  }
+
+  private val strategyCases: Seq[(String, () => (DataFrame, DataFrame, MergeOptions))] = Seq(
+    "NULL keys pair up (A7)" -> { () =>
+      (Seq((Option(1), "a"), (Option.empty[Int], "nullrow-t"), (Option(2), "gone")).toDF("k", "v"),
+        Seq((Option(1), "a"), (Option.empty[Int], "nullrow-s"), (Option(3), "new")).toDF("k", "v"),
+        MergeOptions(keys = Seq("k")))
+    },
+    "badKey duplicates (A5, A8)" -> { () =>
+      (Seq((1, "t1"), (1, "t2"), (2, "t3")).toDF("k", "v"),
+        Seq((1, "s1"), (1, "s2"), (1, "s3"), (3, "s4")).toDF("k", "v"),
+        MergeOptions(keys = Seq("k"), badKey = true))
+    },
+    "soft delete (A15)" -> { () =>
+      (vendorTarget, vendorSource,
+        MergeOptions(keys = Seq("Vendor"), delete = DeleteMode.parse("set Name = 'GONE', Zip = null")))
+    },
+    "targetFilter (A3)" -> { () =>
+      (Seq((1, 10, "old-in"), (2, 99, "out"), (3, 10, "in-del")).toDF("k", "d", "v"),
+        Seq((1, 10, "new"), (2, 10, "dup-insert")).toDF("k", "d", "v"),
+        MergeOptions(keys = Seq("k"), targetFilter = Some("d < 50")))
+    },
+    "all-key table (A12)" -> { () =>
+      (Seq((1, "a"), (2, "b")).toDF("k1", "k2"), Seq((1, "a"), (3, "c")).toDF("k1", "k2"),
+        MergeOptions(keys = Seq("k1", "k2")))
+    },
+    "target-only columns" -> { () =>
+      (Seq((1, "a", "extra1"), (2, "b", "extra2")).toDF("k", "v", "x"),
+        Seq((1, "a2"), (3, "c")).toDF("k", "v"), MergeOptions(keys = Seq("k")))
+    },
+    "audit images (A17)" -> { () => (vendorTarget, vendorSource, MergeOptions(keys = Seq("Vendor"))) })
+
+  for ((name, mk) <- strategyCases)
+    test(s"join strategies agree: $name — shuffled hash join by default, sort-merge without the size rule") {
+      val (t, s, opts) = mk()
+      val hashed = outcome(t, s, opts)
+      val sorted = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(outcome(t, s, opts))
+      assert(hashed._1.contains("ShuffledHashJoin"), hashed._1)
+      assert(sorted._1.contains("SortMergeJoin"), sorted._1)
+      assert(hashed._2 === sorted._2, "merged rows")
+      assert(hashed._3 === sorted._3, "audit rows")
+      assert(hashed._4 === sorted._4, "affected count")
+    }
+
+  test("scale guard: a build side above autoBroadcastJoinThreshold x shuffle partitions plans SortMergeJoin") {
+    val t = (1 to 2000).map(i => (i, s"v$i")).toDF("k", "v")
+    val s = (1000 to 3000).map(i => (i, s"w$i")).toDF("k", "v")
+    val smaller = Seq(t, s).map(_.queryExecution.optimizedPlan.stats.sizeInBytes).min
+    val parts = spark.sessionState.conf.numShufflePartitions
+    def planned(threshold: BigInt) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold.toString)(
+        joinOf(merge(MergeOptions(keys = Seq("k")), t, s).merged))
+    // Four times the smaller side's estimate under the bound: hash join;
+    // a quarter of it: the build side would not fit, so sort-merge.
+    assert(planned(smaller * 4 / parts).contains("ShuffledHashJoin"))
+    assert(planned(smaller / 4 / parts).contains("SortMergeJoin"))
+  }
 }

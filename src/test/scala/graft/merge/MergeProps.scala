@@ -1,14 +1,22 @@
 package graft.merge
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe}
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean}
 
 /** Property families from SURVEY §5.3, over random small tables:
   * (a) merge(T,S,delete=YES) ≡ S on distinct keys (incl. NULL keys),
   * (b) idempotence — a second merge is all no-op,
   * (c) audit rows == affected count,
   * (d) badKey — result multiset ≡ source multiset under duplicate keys,
-  * (e) NULL keys pair up (A7).
+  * (e) NULL keys pair up (A7),
+  * (f) the column-wise change predicate (A10) agrees row for row with the
+  *     struct `<=>` form on NULL, NaN, ±0.0, decimal, string, binary, array
+  *     and nested-struct payloads, and the plan compares each payload
+  *     column once.
   */
 object MergeProps extends Properties("SimpleMerge") {
 
@@ -72,4 +80,84 @@ object MergeProps extends Properties("SimpleMerge") {
       val src = Seq((None: Option[Long], s0, d0.toDouble), (Some(1L), "a", 1.0))
       rowsOf(merge(t, src).delete("YES").merged).toSet == src.toSet
     }
+
+  /** Payload columns with the values where null-safe equality is subtle:
+    * NULL, NaN, -0.0 against 0.0, decimals of one value written at two
+    * scales, empty strings and byte arrays, and the same inside an array
+    * and a nested struct.
+    */
+  private val payloadSchema = StructType(Seq(
+    StructField("d", DoubleType),
+    StructField("dec", DecimalType(10, 2)),
+    StructField("s", StringType),
+    StructField("b", BinaryType),
+    StructField("arr", ArrayType(DoubleType)),
+    StructField("st", StructType(Seq(
+      StructField("x", DoubleType), StructField("y", StringType))))))
+
+  private val cellGens: Seq[Gen[Any]] = {
+    val dbl = Gen.oneOf[Any](null, Double.NaN, -0.0, 0.0, 1.5)
+    Seq(
+      dbl,
+      Gen.oneOf[Any](null, new java.math.BigDecimal("1.1"), new java.math.BigDecimal("1.10"),
+        new java.math.BigDecimal("2.00")),
+      Gen.oneOf[Any](null, "", "a", "b"),
+      Gen.oneOf[Any](null, Array.emptyByteArray, Array[Byte](1), Array[Byte](1, 2)),
+      Gen.oneOf[Any](null, Seq(), Seq(Double.NaN), Seq(-0.0), Seq(0.0), Seq(null, 1.5)),
+      Gen.oneOf[Any](null, Row(null, null), Row(Double.NaN, "a"), Row(-0.0, ""), Row(0.0, "")))
+  }
+
+  /** (target payload, source payload) pairs: each source cell repeats the
+    * target's with probability 3/4, else is drawn afresh — so unchanged,
+    * one-column and many-column changes all occur.
+    */
+  private val payloadPairs: Gen[Seq[(Seq[Any], Seq[Any])]] = Gen.listOfN(30,
+    Gen.sequence[Seq[(Any, Any)], (Any, Any)](cellGens.map(g =>
+      for { tv <- g; sv <- Gen.frequency(3 -> Gen.const(tv), 1 -> g) } yield (tv, sv)))
+      .map(cells => (cells.map(_._1), cells.map(_._2))))
+
+  private def payloadDF(rows: Seq[Seq[Any]]): DataFrame = {
+    val schema = StructType(StructField("k", IntegerType) +: payloadSchema.fields)
+    val data = rows.zipWithIndex.map { case (cells, i) => Row.fromSeq(i +: cells) }
+    spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+  }
+
+  private val payloadNames = payloadSchema.fieldNames.toSeq
+
+  property("change predicate: column-wise <=> agrees row for row with struct <=> (A10)") =
+    forAllNoShrink(payloadPairs) { pairs =>
+      val t = payloadDF(pairs.map(_._1))
+      val s = payloadDF(pairs.map(_._2))
+      val joined = t.as("t").join(s.as("s"), "k")
+      val both = joined.select(
+        col("k"),
+        MergeFrame.changedOf(payloadNames.map(c => col(s"s.$c") -> col(s"t.$c"))).as("columnwise"),
+        (!(struct(payloadNames.map(c => col(s"s.$c")): _*) <=>
+          struct(payloadNames.map(c => col(s"t.$c")): _*))).as("structwise"))
+        .collect()
+      val byStruct = both.filter(_.getBoolean(2)).map(_.getInt(0)).toSet
+      val updated = {
+        val sp = spark
+        import sp.implicits._
+        SimpleMerge.into(t).using(s).keys("k").delete("YES").audit
+          .filter(col("action") === "UPDATE").select("k").as[Int].collect().toSet
+      }
+      both.length == pairs.length && both.forall(r => r.getBoolean(1) == r.getBoolean(2)) &&
+        updated == byStruct
+    }
+
+  property("change predicate: the optimized plan compares each payload column exactly once") = {
+    val t = payloadDF(Seq(payloadSchema.fields.map(_ => null).toSeq))
+    val plan = SimpleMerge.into(t).using(t).keys("k").delete("YES").merged.queryExecution.optimizedPlan
+    def named(e: org.apache.spark.sql.catalyst.expressions.Expression) = e match {
+      case a: AttributeReference => a.name
+      case other => other.sql
+    }
+    val compared = plan.flatMap(_.expressions.flatMap(_.collect {
+      case EqualNullSafe(l, r) => Seq(named(l), named(r)).sorted.mkString(" <=> ")
+    }))
+    val counts = compared.groupBy(identity).view.mapValues(_.size).toMap
+    payloadNames.forall(c => counts.get(Seq(MergeFrame.SrcPrefix + c, c).sorted.mkString(" <=> ")).contains(1)) :|
+      s"payload <=> counts: $counts"
+  }
 }
