@@ -114,7 +114,8 @@ object Bench {
     }
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val failedNames = results.collect { case (k, _, false, _) => k }
+    val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (_, v, true, _) => v }.sum
     // SPARK_GRAFT_BENCH_RAW=1 appends every per-iteration sample (not just
     // the median) — the isolated A/B protocol wants the spread, and extra
@@ -147,8 +148,19 @@ object Bench {
     // stays in the full line and in the BENCH_SELF.json artifact of
     // record. Additions-only: the full line is still printed first, so
     // any parser that scans for the first '{"metric"' line is unaffected.
-    val cpusN = scala.util.Try(cpus.toInt).getOrElse(-1)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_failed":${results.count(!_._3)},"failed":$failed,"sf":"$sfDir","cpus":$cpusN,"iterations":$iters,"full":"$out"}""")
+    println(summaryLine(total, results.size, failedNames, sfDir,
+      scala.util.Try(cpus.toInt).getOrElse(-1), iters, out))
     spark.stop()
+  }
+
+  /** The compact summary line printed last, bounded however many
+    * queries fail: it lists the first 10 failed names, `n_failed` carries
+    * the count and the full line every name.
+    */
+  private[graft] def summaryLine(
+      total: Double, n: Int, failedNames: Seq[String], sfDir: String, cpus: Int,
+      iters: Int, out: String): String = {
+    val failed = failedNames.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"n_failed":${failedNames.size},"failed":$failed,"sf":"$sfDir","cpus":$cpus,"iterations":$iters,"full":"$out"}"""
   }
 }

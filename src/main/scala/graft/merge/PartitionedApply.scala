@@ -1,8 +1,7 @@
 package graft.merge
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Partition-scoped incremental merge apply — the reference's "MERGE
@@ -110,23 +109,17 @@ object PartitionedApply {
         .getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], schema.getOrElse(bootstrap)))
 
-    /** Stage the new content of the touched buckets, one file per bucket:
-      * a hash repartition on the bucket puts each bucket in exactly one
-      * task (the same small-files guard as [[PartitionedTarget.write]]; the
-      * shuffle is on the delta-sized output only, and an Observation
-      * upstream of it still collects counts in this same job). The
-      * partition count is explicit — `min(buckets, defaultParallelism)` —
-      * because AQE coalesces an expression-only repartition of a small
-      * output into ONE writer task, which then writes every bucket file
-      * serially. A failed write leaves no staging output behind.
+    /** Stage the new content of the touched buckets, one file per bucket
+      * on `min(touched, defaultParallelism)` writer tasks
+      * ([[PartitionedTarget.writeBuckets]]; the shuffle is on the
+      * delta-sized output only, and an Observation upstream of it still
+      * collects counts in this same job). A failed write leaves no staging
+      * output behind.
       */
-    def write(df: DataFrame): Unit = {
-      val nParts = math.min(buckets.size, spark.sparkContext.defaultParallelism)
-      try df.withColumn(BucketCol, spec.bucket(keys.map(df(_))))
-        .repartition(nParts, col(BucketCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(staging.dir.toString)
+    def write(df: DataFrame): Unit =
+      try PartitionedTarget.writeBuckets(df, spec, keys,
+        math.min(buckets.size, spark.sparkContext.defaultParallelism), staging.dir.toString)
       catch { case e: Throwable => staging.fs.delete(staging.dir, true); throw e }
-    }
 
     /** Swap the staged buckets in; see [[swapBuckets]]. */
     def swap(): Unit = swapBuckets(spark, staging, buckets)

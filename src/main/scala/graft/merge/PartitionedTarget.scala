@@ -117,16 +117,28 @@ object PartitionedTarget {
       throw new MergeValidationException(s"Partition spec keys missing from frame: ${missing.mkString(",")}")
     if (df.columns.exists(_.equalsIgnoreCase(BucketCol)))
       throw new MergeValidationException(s"Column [$BucketCol] uses the reserved __graft_ prefix")
-    // Repartition on the bucket before partitionBy: otherwise every task
-    // holding rows of bucket b emits its own file into b's directory —
-    // tasks × buckets small files (the Layout operator's small-files
-    // hazard). One shuffle on the bucket makes it ~one file per bucket.
-    df.withColumn(BucketCol, spec.bucket(spec.keys.map(df(_))))
-      .repartition(col(BucketCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(BucketCol).parquet(path)
+    writeBuckets(df, spec, spec.keys,
+      math.min(spec.nBuckets, df.sparkSession.sparkContext.defaultParallelism), path)
     writeSpec(df.sparkSession, path, spec)
   }
+
+  /** Write `df` as bucket directories under `dest`, one data file per
+    * bucket: the bucket column, then a hash repartition on it into
+    * `nParts` writer tasks, then `partitionBy`. Without the repartition
+    * every task holding rows of bucket b emits its own file into b's
+    * directory (tasks × buckets small files); with it each bucket lives
+    * in exactly one task. The count is explicit because AQE coalesces an
+    * expression-only repartition of a small output into very few tasks,
+    * which then write every bucket file serially. Shared by the full
+    * load ([[write]]) and the partition-scoped apply's staged write.
+    */
+  private[merge] def writeBuckets(
+      df: DataFrame, spec: PartitionSpec, keys: Seq[String], nParts: Int,
+      dest: String): Unit =
+    df.withColumn(BucketCol, spec.bucket(keys.map(df(_))))
+      .repartition(nParts, col(BucketCol))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy(BucketCol).parquet(dest)
 
   /** The logical table content — bucket column stripped. Filters on key
     * columns do NOT prune buckets (the hash is opaque to Catalyst); use

@@ -1496,7 +1496,7 @@ object Dedup {
     *             band grow 2^(width/bands), dividing expected occupancy
     *             (and the `bucketCap` drop rate) as the corpus grows.
     *             Measured on the sf0.1 fixture (5200 docs, d=3,
-    *             cap=200, `HammingCapProbe`): 32-bit drops 13 buckets,
+    *             cap=200, a one-off probe): 32-bit drops 13 buckets,
     *             occupancies to 3981; 60-bit still drops 12, but max
     *             occupancy halves to 1971 — the fixture's templated
     *             text clusters fingerprints far above the uniform

@@ -357,7 +357,7 @@ object ModelStore {
   // ------------------------------------------------------ n-gram counts
 
   /** Persist an n-gram count frame (the ONLY model input of the KN/MKN
-    * scorers — [[TextStats.mknTrigramNllAgainst]] derives everything
+    * scorers — [[TextStats.mknNgramNllAgainst]] derives everything
     * from it): the counts as parquet plus the `order` so a loader
     * cannot score a trigram table as a 5-gram model. The in-Spark
     * analog of shipping a KenLM binary.

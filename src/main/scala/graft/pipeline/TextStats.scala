@@ -994,25 +994,6 @@ object TextStats {
     bigramNllAgainst(docs, bigramCounts(docs, textCol), unigramCounts(docs, textCol),
       idCol, textCol, addK)
 
-  /** Adjacent-token trigram counts over a reference corpus — the
-    * order-3 model side of [[trigramNllAgainst]]. Same map-only window
-    * build as [[bigramCounts]] (one `transform` per doc, no self-join),
-    * one map-side-combined aggregation; output is trigram-vocabulary-
-    * sized.
-    *
-    * @return (w1, w2, w3, ct) — raw adjacent-triple occurrence counts.
-    */
-  def trigramCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(TextOps.tokens(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) >= 3)
-      .select(explode(transform(sequence(lit(1), size(col("__ws")) - 2),
-        i => struct(element_at(col("__ws"), i).as("w1"),
-          element_at(col("__ws"), i + 1).as("w2"),
-          element_at(col("__ws"), i + 2).as("w3")))).as("__t"))
-      .select(col("__t.w1").as("w1"), col("__t.w2").as("w2"), col("__t.w3").as("w3"))
-      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
-
   /** Per-document NLL under a Jelinek–Mercer INTERPOLATED trigram model
     * — the closest engine-native step toward the KenLM-grade filter the
     * perplexity tier has approximated since C52/C124: token i ≥ 2
@@ -1180,56 +1161,8 @@ object TextStats {
         round(-col("__sum") / col("n_tokens"), 6).as("avg_nll"))
   }
 
-  /** Per-document NLL under an interpolated MODIFIED-Kneser–Ney
-    * trigram model — the actual KenLM default estimator (Chen & Goodman
-    * 1999), combining [[trigramNllAgainst]]'s order-3 machinery with
-    * [[knBigramNllAgainst]]'s continuation math, plus the piece neither
-    * had: COUNT-BINNED discounts at the top order, estimated from the
-    * trigram table's count-of-counts
-    *
-    *   Y = n₁/(n₁+2n₂); D₁ = 1−2Y·n₂/n₁; D₂ = 2−3Y·n₃/n₂;
-    *   D₃₊ = 3−4Y·n₄/n₃   (nᵢ = #trigrams with count exactly i)
-    *
-    * so singleton trigrams (c=1 bin) are discounted differently from
-    * doubletons (c=2) and from the head (c≥3) — the refinement that
-    * makes modified KN beat single-discount KN on real corpora. Scoring:
-    *
-    *   p(w|u,v) = max(c(uvw)−D(c),0)/c(uv·) + γ(u,v)·p(w|v)
-    *   γ(u,v)   = [D₁N₁(uv·)+D₂N₂(uv·)+D₃₊N₃₊(uv·)]/c(uv·)
-    *
-    * (γ exact by construction — the discounted mass, so Σ_w p = 1 for
-    * every seen context). The BIGRAM level scores CONTINUATION counts
-    * c'(vw) = N₁₊(·vw) under single-discount KN (the C181 formula, one
-    * order up: every count derived from the trigram table), and the
-    * unigram level is the continuation-of-continuation distribution
-    * c''(w) = N₁₊(··w) over N₁₊(··). Honest scope note: KenLM bins
-    * discounts at EVERY order; this engine bins at the top order and
-    * uses the single `discount` below, because lower-order
-    * count-of-counts are degenerate on small/synthetic corpora (this
-    * fixture has ZERO bigram-continuation doubletons at some scales —
-    * the formulas would divide by zero); top-order bins whose formula
-    * is uncomputable or non-positive take KenLM's documented
-    * `--discount_fallback` defaults per bin — see [[mknDiscounts]].
-    *
-    * Zero-routing inherits the family's add-1 guard: doc-initial
-    * tokens, unseen contexts, and the zero-mixture case (both the
-    * continuation count and the unigram-continuation count absent)
-    * score (c''(w)+1)/(N₁₊(··)+V) — every token finite.
-    *
-    * Determinism: the three discounts are exact rationals of integer
-    * counts, rounded 6dp once (driver-side, embedded as plan literals;
-    * the oracle computes the identical expression in SQL); ln-sums
-    * fold in position order, final avg rounded 6dp. Scale shape: the
-    * model aggregations (context stats, continuation tables,
-    * count-of-counts — all trigram-vocabulary-sized, computed once per
-    * model) plus the same vocabulary-keyed equi-joins as
-    * [[trigramNllAgainst]] and a 1-row totals broadcast.
-    *
-    * @param trigramModel (w1, w2, w3, ct) from [[trigramCounts]] — the
-    *                     ONLY model input; everything is derived.
-    */
-  /** [[mknTrigramNllAgainst]]'s top-order discount estimation, exposed
-    * for auditability: (D₁, D₂, D₃₊) from the trigram table's
+  /** [[mknNgramNllAgainst]]'s top-order discount estimation, exposed
+    * for auditability: (D₁, D₂, D₃₊) from the n-gram table's
     * count-of-counts, each bin FALLING BACK to KenLM's
     * `--discount_fallback` defaults (0.5, 1.0, 1.5) when its formula
     * is not computable (an empty bin divides by zero) or yields a
@@ -1238,8 +1171,8 @@ object TextStats {
     * sf0.1 cut estimates D₂ ≈ −2). Deterministic and total: the oracle
     * computes the identical guarded expressions in SQL.
     */
-  def mknDiscounts(trigramModel: DataFrame): (Double, Double, Double) = {
-    val cc = trigramModel.agg(
+  def mknDiscounts(ngramModel: DataFrame): (Double, Double, Double) = {
+    val cc = ngramModel.agg(
       sum(when(col("ct") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2"),
       sum(when(col("ct") === 3, 1L).otherwise(0L)).as("n3"),
@@ -1247,10 +1180,10 @@ object TextStats {
     // Null sums ⇔ zero model rows: fail loud with the cause, not a
     // ROW_VALUE_IS_NULL deep in the mixture (an empty model means the
     // corpus — or, in the CCNet composition, the classifier-selected
-    // REFERENCE slice — has no 3-token docs; there is nothing to score
-    // against).
+    // REFERENCE slice — has no doc as long as the model order; there is
+    // nothing to score against).
     if (cc.isNullAt(0)) throw new IllegalArgumentException(
-      "empty trigram model: the model corpus has no docs with >= 3 tokens " +
+      "empty n-gram model: the model corpus has no doc with >= order tokens " +
         "(in a reference-gated pipeline this means the gate accepted " +
         "nothing) — a KN/MKN model cannot be estimated from it.")
     val (n1, n2, n3, n4) =
@@ -1265,207 +1198,217 @@ object TextStats {
       bin(n3, 3 - 4 * y * n4 / n3, 1.5))
   }
 
-  /** The derived, FROZEN form of a trigram MKN model — every table the
-    * scoring join chain consumes plus the three binned discounts, all
-    * pure functions of the count frame. Deriving them is the expensive
-    * half of a scoring run (five model-sized aggregations + the
-    * discount collect); [[trigramTables]] builds them ONCE so repeated
-    * scoring runs against the same frozen model — a streaming gate's
-    * micro-batches — stop re-paying the derivation per batch (the
-    * guide's "don't compute things you throw away": the tables were
-    * recomputed and discarded 4× per st22/st24 replay).
-    * [[materialized]] pins each table eagerly (localCheckpoint — the
-    * CrawlStages seam discipline; tables are model-vocabulary-sized,
-    * never corpus-sized).
-    */
-  final case class TrigramTables private[pipeline] (
-      d1: Double, d2: Double, d3: Double,
-      tri: DataFrame, tctx: DataFrame, bc: DataFrame, bctx: DataFrame,
-      uc: DataFrame, totals: DataFrame)
-
-  /** Derive [[TrigramTables]] from a trigram count frame. Each table is
-    * one aggregation of the model (never of the corpus); `totals.__v`
-    * is ONE scan of the model (the three token positions explode into
-    * one stream) — the union-of-three-scans it replaces recomputed the
-    * model lineage three times when the frame was not materialized.
+  /** Adjacent-token n-gram counts over a reference corpus — the one
+    * count builder behind every KN/MKN model here (`order = 3` is the
+    * trigram table). Map-only window build (one `transform` per doc, no
+    * self-join), one map-side-combined aggregation; output is
+    * n-gram-vocabulary-sized.
     *
-    * `pin` intercepts each derived AGGREGATE table:
-    * [[trigramTablesMaterialized]] passes an eager localCheckpoint so
-    * `bctx`/`uc` derive from the PINNED `bc` (one cheap scan of the
-    * checkpointed rows) instead of re-aggregating the model, and a
-    * stream's later batches join against in-memory leaves. `tri` itself
-    * is deliberately NOT pinned — it is the model frame the caller
-    * already holds persisted or parquet-backed, and copying it bought
-    * nothing in the st24 A/B (the top-order join reads it once per
-    * scoring run either way).
+    * `groupCols` builds one independent model per group value (the
+    * CCNet per-language reference: each language's model sees only its
+    * own reference slice) — the group key is prepended to the one
+    * aggregation; output is sum-of-per-group-vocabularies-sized.
+    *
+    * @return (`groupCols`…, w1, …, w`order`, ct) — raw adjacent-tuple
+    *         occurrence counts, the [[ModelStore.saveNgram]] layout
+    *         when ungrouped.
     */
-  private def buildTrigramTables(
-      trigramModel: DataFrame, pin: DataFrame => DataFrame): TrigramTables = {
-    val tri = trigramModel.select(
-      col("w1").as("prev2"), col("w2").as("prev"), col("w3").as("w"), col("ct"))
-    val (d1, d2, d3) = mknDiscounts(trigramModel)
-    // Derived model tables (each one aggregation of the trigram table).
-    val tctx = pin(tri.groupBy("prev2", "prev").agg(
+  def ngramCounts(
+      docs: DataFrame, textCol: String, order: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    require(order >= 1, s"order must be >= 1, got $order")
+    val g = groupCols.map(col)
+    docs
+      .select(g :+ TextOps.tokens(col(textCol)).as("__ws"): _*)
+      .filter(size(col("__ws")) >= order)
+      .select(g :+ explode(transform(sequence(lit(1), size(col("__ws")) - (order - 1)),
+        i => struct((0 until order).map(o =>
+          element_at(col("__ws"), i + o).as(s"w${o + 1}")): _*))).as("__t"): _*)
+      .select(g ++ (1 to order).map(i => col(s"__t.w$i").as(s"w$i")): _*)
+      .groupBy(g ++ (1 to order).map(i => col(s"w$i")): _*)
+      .agg(count(lit(1)).as("ct"))
+  }
+
+  /** Per-document NLL under an interpolated MODIFIED-Kneser–Ney model
+    * of any order ≥ 3 (Chen & Goodman 1999; the KenLM default is
+    * `order = 5`, t45 and the CCNet gates score `order = 3`). The one
+    * MKN implementation: one-shot, pre-derived ([[mknNgramNllWith]]),
+    * per-group and at-rest ([[mknNgramNllIndexed]]) scoring share
+    * [[mknScore]]'s expression trees.
+    *
+    * The TOP order scores raw counts under count-binned discounts
+    *
+    *   p(w|ctx) = max(c(ctx w)−D(c),0)/c(ctx·) + γ(ctx)·p(w|ctx′)
+    *   γ(ctx)   = [D₁N₁(ctx·)+D₂N₂(ctx·)+D₃₊N₃₊(ctx·)]/c(ctx·)
+    *
+    * (D₁/D₂/D₃₊ from [[mknDiscounts]]); each MIDDLE order k scores
+    * CONTINUATION counts c_k(u) = N₁₊(·u), one aggregation per level
+    * from the level above (the raw n-gram table is the ONLY model
+    * input), under the single `discount` with the exact discounted-mass
+    * weight (Σ_w p = 1 for every seen context); the base is the
+    * continuation-of-continuation unigram distribution with the
+    * family's add-1 guard over (U + V). KenLM bins discounts at EVERY
+    * order; this engine bins the top order only, because lower-order
+    * count-of-counts are degenerate on small corpora (zero
+    * bigram-continuation doubletons at some fixture scales).
+    *
+    * Zero-routing: a position with fewer than k context tokens scores
+    * at level k = pos; an UNSEEN context at any level falls to the level
+    * below; the level-2 zero-mixture case (continuation count AND
+    * unigram continuation both absent — OOV after a seen context) takes
+    * the guard. Every token scores finite.
+    *
+    * Per group (`groupCols`, the model from [[ngramCounts]] with the
+    * same `groupCols`): each document scores against ITS OWN group's
+    * model — CCNet's per-language gate. Every derived table carries the
+    * group key, every scoring join adds it, and the discounts are
+    * estimated per group in-engine ([[mknDiscountsBy]]): no per-group
+    * loop and no per-group collect. A doc whose group has NO model is
+    * absent from the output (the per-group totals join is inner — no
+    * reference, no pass). One constant group equals the ungrouped
+    * scorer, every double (spec-pinned).
+    *
+    * Determinism: discounts are rounded 6dp once (the oracle computes
+    * the identical guarded expressions in SQL); ln-sums fold in position
+    * order, final avg rounded 6dp. Each level's probability is its OWN
+    * projection column (`__pl2` … `__plTop`) that higher levels
+    * reference — inlined, level k's tree would duplicate 2^(n−k) times.
+    *
+    * Scale shape: 2(n−1) model-side aggregations (n-gram-vocabulary-
+    * sized), 2(n−1)+1 vocabulary-keyed equi-joins on the probe stream,
+    * a totals broadcast (one row, or one per group) and the
+    * position-ordered ln fold; nothing shuffles the corpus more than
+    * the token explode already does.
+    *
+    * @param ngramModel (`groupCols`…, w1, …, w`order`, ct) from
+    *                   [[ngramCounts]]
+    * @return (`idCol`, `groupCols`…, n_tokens, avg_nll) — lower is more
+    *         reference-like.
+    */
+  def mknNgramNllAgainst(
+      docs: DataFrame, ngramModel: DataFrame, idCol: String, textCol: String,
+      order: Int, discount: Double = 0.75,
+      groupCols: Seq[String] = Nil): DataFrame =
+    mknNgramNllWith(docs, mknTables(ngramModel, order, groupCols), idCol, textCol,
+      discount)
+
+  /** [[mknNgramNllAgainst]] against pre-derived [[MknTables]] — the
+    * repeated-scoring entry (a streaming gate derives a frozen model's
+    * tables once and scores every micro-batch here); bit-identical.
+    */
+  def mknNgramNllWith(
+      docs: DataFrame, tables: MknTables, idCol: String, textCol: String,
+      discount: Double = 0.75): DataFrame =
+    mknScore(docs, idCol, textCol, tables.order, tables.groupCols, discount,
+      _ => tables)
+
+  /** The derived, frozen form of an order-n MKN model: every table the
+    * scoring join chain consumes, plus the three binned discounts as
+    * Columns (plan literals ungrouped; per group, columns of `totals`).
+    * Built by [[mknTables]] / [[mknTablesMaterialized]] or read from an
+    * at-rest index ([[mknNgramNllIndexed]]) — one type, one scorer.
+    */
+  final case class MknTables private[graft] (
+      order: Int, groupCols: Seq[String],
+      d1: Column, d2: Column, d3: Column,
+      topRaw: DataFrame, topCtx: DataFrame,
+      conts: Map[Int, DataFrame], ctxTabs: Map[Int, DataFrame],
+      totals: DataFrame)
+
+  /** Derive [[MknTables]] from an n-gram count frame, lazily. Ungrouped,
+    * the discounts are estimated here (one eager collect that fails loud
+    * on an empty model).
+    */
+  def mknTables(
+      ngramModel: DataFrame, order: Int, groupCols: Seq[String] = Nil): MknTables =
+    mknDerive(ngramModel, order, groupCols, identity)
+
+  /** [[mknTables]] with every derived table PINNED eagerly
+    * ([[graft.Lineage.cut]]) — for the streaming LM gates, which score
+    * many batches against one frozen model: each level derives from the
+    * pinned level above, and each batch joins checkpointed leaves.
+    * `topRaw` stays unpinned: it is the model frame the caller already
+    * holds, read once per scoring run either way. Bit-identical tables.
+    */
+  def mknTablesMaterialized(
+      ngramModel: DataFrame, order: Int, groupCols: Seq[String] = Nil): MknTables =
+    mknDerive(ngramModel, order, groupCols, graft.Lineage.cut)
+
+  /** Positional context-column names, nearest token first. */
+  private def mknCtxKeys(j: Int): Seq[String] = (j to 1 by -1).map(i => s"__p$i")
+
+  /** Derive every scoring table from the raw n-gram count frame. Each
+    * table is one aggregation of the table above it (never of the
+    * corpus); `pin` intercepts each. `totals.__v` is ONE scan of the
+    * model (the n token positions explode into one stream). A caller
+    * holding the ungrouped triple passes `discounts` and skips the
+    * estimation ([[refreshNgramIndexFromStore]], once per dirty table).
+    */
+  private def mknDerive(
+      ngramModel: DataFrame, order: Int, groupCols: Seq[String],
+      pin: DataFrame => DataFrame,
+      discounts: Option[(Double, Double, Double)] = None): MknTables = {
+    require(order >= 3, s"order must be >= 3 (use knBigramNllAgainst below), got $order")
+    val n = order
+    val g = groupCols
+    val ctxKeys = mknCtxKeys _
+    def by(keys: Seq[String]) = (g ++ keys).map(col)
+    // Ungrouped: the triple as plan literals (estimated first, so an
+    // empty model fails before any table is pinned). Per group: columns
+    // of the per-group discount frame joined into totals below.
+    val (d1, d2, d3) =
+      if (g.isEmpty) {
+        val (a, b, c) = discounts.getOrElse(mknDiscounts(ngramModel))
+        (lit(a), lit(b), lit(c))
+      } else (col("d1"), col("d2"), col("d3"))
+    // The model with positional names: w_i (i < n) is the token n−i
+    // back from the scored token; w_n is the token itself.
+    val topRaw = ngramModel.select(g.map(col) ++
+      (1 until n).map(i => col(s"w$i").as(s"__p${n - i}")) ++
+      Seq(col(s"w$n").as("w"), col("ct")): _*)
+    val topCtx = pin(topRaw.groupBy(by(ctxKeys(n - 1)): _*).agg(
       sum(col("ct")).as("cuv"),
       sum(when(col("ct") === 1, 1L).otherwise(0L)).as("n1uv"),
       sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2uv"),
       sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("n3uv")))
-    val bc = pin(tri.groupBy("prev", "w").agg(count(lit(1)).as("cbc")))
-    val bctx = pin(bc.groupBy("prev").agg(
-      sum(col("cbc")).as("cbv"), count(lit(1)).as("n1v")))
-    val uc = pin(bc.groupBy("w").agg(count(lit(1)).as("cuw")))
-    val totals = pin(bc.agg(count(lit(1)).as("__u"))
-      .crossJoin(
-        tri.select(explode(array(col("prev2"), col("prev"), col("w"))).as("t"))
-          .agg(countDistinct(col("t")).as("__v"))))
-    TrigramTables(d1, d2, d3, tri, tctx, bc, bctx, uc, totals)
+    // Continuation tables, level n−1 down to 1: level k's rows are the
+    // DISTINCT (k+1)-suffixes of the level above, counted — exactly
+    // N₁₊(·u), each one aggregation of the previous (never of the
+    // corpus); each level's context table follows its counts.
+    val conts = scala.collection.mutable.Map.empty[Int, DataFrame]
+    val ctxTabs = scala.collection.mutable.Map.empty[Int, DataFrame]
+    var cur: DataFrame = topRaw
+    for (k <- (n - 1) to 1 by -1) {
+      cur = pin(cur.groupBy(by(ctxKeys(k - 1) :+ "w"): _*)
+        .agg(count(lit(1)).as(s"c$k")))
+      conts(k) = cur
+      if (k >= 2) ctxTabs(k) = pin(cur.groupBy(by(ctxKeys(k - 1)): _*)
+        .agg(sum(col(s"c$k")).as(s"cv$k"), count(lit(1)).as(s"n1v$k")))
+    }
+    val vocab = ngramModel.select(g.map(col) :+
+      explode(array((1 to n).map(i => col(s"w$i")): _*)).as("t"): _*)
+    val totals = pin(
+      if (g.isEmpty)
+        conts(2).agg(count(lit(1)).as("__u"))
+          .crossJoin(vocab.agg(countDistinct(col("t")).as("__v")))
+      else
+        conts(2).groupBy(g.map(col): _*).agg(count(lit(1)).as("__u"))
+          .join(vocab.groupBy(g.map(col): _*).agg(countDistinct(col("t")).as("__v")), g)
+          .join(mknDiscountsBy(ngramModel, g), g))
+    MknTables(n, g, d1, d2, d3, topRaw, topCtx, conts.toMap, ctxTabs.toMap, totals)
   }
 
-  def trigramTables(trigramModel: DataFrame): TrigramTables =
-    buildTrigramTables(trigramModel, identity)
-
-  /** [[trigramTables]] with every derived aggregate PINNED eagerly —
-    * for consumers that score MANY batches against one frozen model
-    * (the streaming LM gates): derivation is paid once, each batch
-    * joins checkpointed leaves. Bit-identical tables (same aggregation
-    * expressions; pinning only fixes where the rows live).
-    */
-  def trigramTablesMaterialized(trigramModel: DataFrame): TrigramTables =
-    buildTrigramTables(trigramModel, graft.Lineage.cut)
-
-  def mknTrigramNllAgainst(
-      docs: DataFrame, trigramModel: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    mknTrigramNllWith(docs, trigramTables(trigramModel), idCol, textCol, discount)
-
-  /** [[mknTrigramNllAgainst]] against pre-derived [[TrigramTables]] —
-    * the repeated-scoring entry (streaming gates derive once upstream,
-    * score every micro-batch here). Bit-identical output by
-    * construction: the join chain and expressions are the single shared
-    * implementation.
-    */
-  def mknTrigramNllWith(
-      docs: DataFrame, t: TrigramTables, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame = {
-    require(discount > 0 && discount < 1, s"discount must lie in (0,1), got $discount")
-    val TrigramTables(d1, d2, d3, tri, tctx, bc, bctx, uc, totals) = t
-    val tok = docs
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("__ws"))
-      .select(col("id"), col("__ws"), posexplode(col("__ws")).as(Seq("pos", "w")))
-      .withColumn("prev", when(col("pos") === 0, lit(null).cast("string"))
-        .otherwise(element_at(col("__ws"), col("pos"))))
-      .withColumn("prev2", when(col("pos") <= 1, lit(null).cast("string"))
-        .otherwise(element_at(col("__ws"), col("pos") - 1)))
-      .drop("__ws")
-    val dTop = when(col("ct") === 1, lit(d1))
-      .when(col("ct") === 2, lit(d2)).otherwise(lit(d3))
-    val scored = tok
-      .join(uc, Seq("w"), "left")
-      .join(bc, Seq("prev", "w"), "left")
-      .join(bctx, Seq("prev"), "left")
-      .join(tri, Seq("prev2", "prev", "w"), "left")
-      .join(tctx, Seq("prev2", "prev"), "left")
-      .crossJoin(broadcast(totals))
-      .withColumn("__pug",
-        (coalesce(col("cuw"), lit(0L)) + lit(1.0)) / (col("__u") + col("__v")))
-      .withColumn("__pb",
-        when(col("cbv").isNull || (col("cbc").isNull && col("cuw").isNull),
-          col("__pug"))
-          .otherwise(
-            (greatest(coalesce(col("cbc"), lit(0L)) - lit(discount), lit(0.0)) +
-              lit(discount) * col("n1v") *
-                (coalesce(col("cuw"), lit(0L)) / col("__u").cast("double"))) /
-              col("cbv")))
-      .withColumn("__gt",
-        (lit(d1) * col("n1uv") + lit(d2) * col("n2uv") + lit(d3) * col("n3uv")) /
-          col("cuv"))
-      .withColumn("__pt",
-        when(col("ct").isNull, lit(0.0))
-          .otherwise(greatest(col("ct") - dTop, lit(0.0))) / col("cuv") +
-          col("__gt") * col("__pb"))
-      .withColumn("lnp",
-        when(col("prev").isNull, log(col("__pug")))
-          .when(col("prev2").isNull || col("cuv").isNull, log(col("__pb")))
-          .otherwise(log(col("__pt"))))
-    scored
-      .groupBy(col("id").as(idCol))
-      .agg(count(lit(1)).as("n_tokens"), collect_list(struct(col("pos"), col("lnp"))).as("__s"))
-      .withColumn("__sum", aggregate(
-        transform(array_sort(col("__s")), e => e.getField("lnp")),
-        lit(0.0), (acc, x) => acc + x))
-      .select(col(idCol), col("n_tokens"),
-        round(-col("__sum") / col("n_tokens"), 6).as("avg_nll"))
-  }
-
-  /** [[mknTrigramNllAgainst]] with the model trained on `docs` itself —
-    * modified-KN trigram self-perplexity (the bootstrap).
-    */
-  def mknTrigramNll(
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    mknTrigramNllAgainst(docs, trigramCounts(docs, textCol), idCol, textCol, discount)
-
-  /** [[trigramCounts]] PER GROUP — one independent trigram model per
-    * value of `groupCol` (the CCNet per-language reference: each
-    * language's model sees only its own reference slice). One
-    * aggregation with the group key prepended; output is
-    * sum-of-per-group-vocabularies-sized.
+  /** [[mknDiscounts]] PER GROUP, in-engine: the same guarded bin
+    * formulas as column expressions (`round(…, 6)` is the same HALF_UP),
+    * one row per group — collecting one triple per group would put the
+    * group count on a collect for no reason. Arithmetic order mirrors
+    * [[mknDiscounts]] and the oracle exactly (left-assoc products), so
+    * the doubles agree bit-for-bit.
     *
-    * @return (`groupCol`, w1, w2, w3, ct)
+    * @return (`groupCols`…, d1, d2, d3)
     */
-  def trigramCountsBy(
-      docs: DataFrame, textCol: String, groupCol: String): DataFrame =
-    docs
-      .select(col(groupCol), TextOps.tokens(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) >= 3)
-      .select(col(groupCol),
-        explode(transform(sequence(lit(1), size(col("__ws")) - 2),
-          i => struct(element_at(col("__ws"), i).as("w1"),
-            element_at(col("__ws"), i + 1).as("w2"),
-            element_at(col("__ws"), i + 2).as("w3")))).as("__t"))
-      .select(col(groupCol), col("__t.w1").as("w1"), col("__t.w2").as("w2"),
-        col("__t.w3").as("w3"))
-      .groupBy(col(groupCol), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("ct"))
-
-  /** [[mknTrigramNllAgainst]] PER GROUP — CCNet's actual gate design:
-    * each document scores against the model of ITS OWN group (its
-    * predicted language), not one global reference mixture. The model
-    * frame is [[trigramCountsBy]]'s layout; every derived table, the
-    * count-of-count discount estimation, and the totals carry the
-    * group key, and every scoring join adds a group-equality conjunct
-    * — so the whole thing stays the same token-linear join chain, with
-    * the group key riding each shuffle key (no per-group loop, no
-    * driver-side model dispatch).
-    *
-    * Discounts are estimated per group IN-ENGINE (the [[mknDiscounts]]
-    * guarded formulas as column expressions, `round(…, 6)` = the
-    * driver's HALF_UP): a per-group model means per-group
-    * count-of-counts, and collecting G triples to the driver would put
-    * the group count on the driver path for no reason.
-    *
-    * Semantics at the group boundary, stated: a probe doc whose group
-    * has NO model (no reference doc of that group had ≥ 3 tokens)
-    * CANNOT be scored and is absent from the output — the per-group
-    * totals join is inner. A gate built on this treats such docs as
-    * rejected (no reference ⇒ no quality evidence), which is CCNet's
-    * posture: languages without a reference LM don't pass.
-    *
-    * @param docs         probe frame; must carry `groupCol`
-    * @param trigramModel [[trigramCountsBy]] frame (`groupCol`, w1..w3, ct)
-    * @return (`idCol`, `groupCol`, n_tokens, avg_nll)
-    */
-  def mknTrigramNllPerGroup(
-      docs: DataFrame, trigramModel: DataFrame, groupCol: String,
-      idCol: String, textCol: String, discount: Double = 0.75): DataFrame = {
-    require(discount > 0 && discount < 1, s"discount must lie in (0,1), got $discount")
-    val g = groupCol
-    val tri = trigramModel.select(col(g),
-      col("w1").as("prev2"), col("w2").as("prev"), col("w3").as("w"), col("ct"))
-    // Per-group discount estimation: mknDiscounts' bin() guards as
-    // columns. Arithmetic order mirrors the driver/oracle expressions
-    // exactly (left-assoc products) so the doubles agree bit-for-bit.
-    val cc = tri.groupBy(col(g)).agg(
+  private def mknDiscountsBy(ngramModel: DataFrame, groupCols: Seq[String]): DataFrame = {
+    val cc = ngramModel.groupBy(groupCols.map(col): _*).agg(
       sum(when(col("ct") === 1, 1L).otherwise(0L)).as("n1"),
       sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2"),
       sum(when(col("ct") === 3, 1L).otherwise(0L)).as("n3"),
@@ -1474,264 +1417,53 @@ object TextStats {
       when(divisorBin > 0 && (col("n1") + lit(2) * col("n2")) > 0 && raw > 0,
         round(raw, 6)).otherwise(lit(fallback))
     val y = col("n1").cast("double") / (col("n1") + lit(2) * col("n2"))
-    val disc = cc.select(col(g),
+    cc.select(groupCols.map(col) ++ Seq(
       binned(col("n1"), lit(1) - lit(2) * y * col("n2") / col("n1"), 0.5).as("d1"),
       binned(col("n2"), lit(2) - lit(3) * y * col("n3") / col("n2"), 1.0).as("d2"),
-      binned(col("n3"), lit(3) - lit(4) * y * col("n4") / col("n3"), 1.5).as("d3"))
-    val tctx = tri.groupBy(g, "prev2", "prev").agg(
-      sum(col("ct")).as("cuv"),
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("n1uv"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2uv"),
-      sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("n3uv"))
-    val bc = tri.groupBy(g, "prev", "w").agg(count(lit(1)).as("cbc"))
-    val bctx = bc.groupBy(g, "prev").agg(
-      sum(col("cbc")).as("cbv"), count(lit(1)).as("n1v"))
-    val uc = bc.groupBy(g, "w").agg(count(lit(1)).as("cuw"))
-    // __v in ONE model scan per group (explode over the three token
-    // positions) — the union form scanned the model lineage three
-    // times when the frame arrived unmaterialized (a live
-    // trigramCountsBy aggregation). Same multiset, same countDistinct.
-    val totals = bc.groupBy(col(g)).agg(count(lit(1)).as("__u"))
-      .join(
-        tri.select(col(g),
-            explode(array(col("prev2"), col("prev"), col("w"))).as("t"))
-          .groupBy(col(g)).agg(countDistinct(col("t")).as("__v")),
-        Seq(g))
-    val tok = docs
-      .select(col(idCol).as("id"), col(g), TextOps.tokens(col(textCol)).as("__ws"))
-      .select(col("id"), col(g), col("__ws"),
-        posexplode(col("__ws")).as(Seq("pos", "w")))
-      .withColumn("prev", when(col("pos") === 0, lit(null).cast("string"))
-        .otherwise(element_at(col("__ws"), col("pos"))))
-      .withColumn("prev2", when(col("pos") <= 1, lit(null).cast("string"))
-        .otherwise(element_at(col("__ws"), col("pos") - 1)))
-      .drop("__ws")
-    val dTop = when(col("ct") === 1, col("d1"))
-      .when(col("ct") === 2, col("d2")).otherwise(col("d3"))
-    val scored = tok
-      .join(uc, Seq(g, "w"), "left")
-      .join(bc, Seq(g, "prev", "w"), "left")
-      .join(bctx, Seq(g, "prev"), "left")
-      .join(tri, Seq(g, "prev2", "prev", "w"), "left")
-      .join(tctx, Seq(g, "prev2", "prev"), "left")
-      .join(broadcast(totals), Seq(g)) // inner: no model for the group ⇒ unscorable
-      .join(broadcast(disc), Seq(g))
-      .withColumn("__pug",
-        (coalesce(col("cuw"), lit(0L)) + lit(1.0)) / (col("__u") + col("__v")))
-      .withColumn("__pb",
-        when(col("cbv").isNull || (col("cbc").isNull && col("cuw").isNull),
-          col("__pug"))
-          .otherwise(
-            (greatest(coalesce(col("cbc"), lit(0L)) - lit(discount), lit(0.0)) +
-              lit(discount) * col("n1v") *
-                (coalesce(col("cuw"), lit(0L)) / col("__u").cast("double"))) /
-              col("cbv")))
-      .withColumn("__gt",
-        (col("d1") * col("n1uv") + col("d2") * col("n2uv") + col("d3") * col("n3uv")) /
-          col("cuv"))
-      .withColumn("__pt",
-        when(col("ct").isNull, lit(0.0))
-          .otherwise(greatest(col("ct") - dTop, lit(0.0))) / col("cuv") +
-          col("__gt") * col("__pb"))
-      .withColumn("lnp",
-        when(col("prev").isNull, log(col("__pug")))
-          .when(col("prev2").isNull || col("cuv").isNull, log(col("__pb")))
-          .otherwise(log(col("__pt"))))
-    scored
-      .groupBy(col("id").as(idCol), col(g))
-      .agg(count(lit(1)).as("n_tokens"), collect_list(struct(col("pos"), col("lnp"))).as("__s"))
-      .withColumn("__sum", aggregate(
-        transform(array_sort(col("__s")), e => e.getField("lnp")),
-        lit(0.0), (acc, x) => acc + x))
-      .select(col(idCol), col(g), col("n_tokens"),
-        round(-col("__sum") / col("n_tokens"), 6).as("avg_nll"))
-  }
-
-  /** Adjacent-token n-gram counts over a reference corpus — the
-    * order-`order` generalization of [[trigramCounts]] (identical rows
-    * at order 3, spec-pinned). Same map-only window build (one
-    * `transform` per doc, no self-join), one map-side-combined
-    * aggregation; output is n-gram-vocabulary-sized.
-    *
-    * @return (w1, …, w`order`, ct) — raw adjacent-tuple occurrence
-    *         counts, the [[ModelStore.saveNgram]] layout.
-    */
-  def ngramCounts(docs: DataFrame, textCol: String, order: Int): DataFrame = {
-    require(order >= 1, s"order must be >= 1, got $order")
-    docs
-      .select(TextOps.tokens(col(textCol)).as("__ws"))
-      .filter(size(col("__ws")) >= order)
-      .select(explode(transform(sequence(lit(1), size(col("__ws")) - (order - 1)),
-        i => struct((0 until order).map(o =>
-          element_at(col("__ws"), i + o).as(s"w${o + 1}")): _*))).as("__t"))
-      .select((1 to order).map(i => col(s"__t.w$i").as(s"w$i")): _*)
-      .groupBy((1 to order).map(i => col(s"w$i")): _*)
-      .agg(count(lit(1)).as("ct"))
-  }
-
-  /** Per-document NLL under an interpolated MODIFIED-Kneser–Ney model
-    * of ANY order ≥ 3 — [[mknTrigramNllAgainst]]'s machinery
-    * generalized to the KenLM default (`order = 5`) and beyond, and
-    * spec-pinned BIT-EQUAL to the trigram implementation at order 3
-    * (same expressions, same float evaluation order — the two code
-    * paths cannot drift).
-    *
-    * Structure per Chen & Goodman: the TOP order scores raw counts
-    * under count-binned discounts ([[mknDiscounts]] — D₁/D₂/D₃₊ from
-    * the n-gram table's count-of-counts, with KenLM's
-    * `--discount_fallback` defaults per degenerate bin); each MIDDLE
-    * order k (2 ≤ k < n) scores CONTINUATION counts
-    * c_k(u) = N₁₊(·u) — derived by one aggregation per level from the
-    * level above, so the raw n-gram table is the ONLY model input —
-    * under the single `discount`, interpolating the level below with
-    * the exact discounted-mass weight (Σ_w p = 1 for every seen
-    * context); the base is the continuation-of-continuation unigram
-    * distribution with the family's add-1 guard over (U + V).
-    *
-    * Zero-routing, uniform at every level: a position with fewer than
-    * k context tokens scores at level k = pos (doc-initial backoff);
-    * an UNSEEN context at any level falls to the level below (γ is
-    * undefined at c(ctx·) = 0); and the level-2 zero-mixture case
-    * (continuation count AND unigram continuation both absent — the
-    * OOV-after-seen-context hazard) takes the guard, so every token
-    * scores finite. Levels 3+ need no zero-mixture branch: their
-    * interpolated tail is a full lower-order probability, > 0 by
-    * induction.
-    *
-    * Codegen discipline: each level's probability materializes as its
-    * OWN projection column (`__pl2` … `__plTop`) and higher levels
-    * reference it — inlined, level k's tree would duplicate 2^(n−k)
-    * times (the softmax-K² lesson, C188).
-    *
-    * Scale shape: 2(n−1) model-side aggregations (all n-gram-
-    * vocabulary-sized, computed once per model — a deployment persists
-    * them beside the counts), 2(n−1)+1 vocabulary-keyed equi-joins on
-    * the probe stream, a 1-row totals broadcast, and the family's
-    * position-ordered ln fold. Join count grows with the order, row
-    * width stays bounded; nothing shuffles the corpus more than the
-    * token explode already does.
-    *
-    * @param ngramModel (w1, …, w`order`, ct) from [[ngramCounts]] —
-    *                   the ONLY model input; everything is derived.
-    */
-  def mknNgramNllAgainst(
-      docs: DataFrame, ngramModel: DataFrame, idCol: String, textCol: String,
-      order: Int, discount: Double = 0.75): DataFrame = {
-    require(order >= 3, s"order must be >= 3 (use knBigramNllAgainst below), got $order")
-    val t = mknDerive(ngramModel, order)
-    mknScore(docs, idCol, textCol, order, discount, _ => t)
-  }
-
-  /** The derived model tables + binned discounts of an order-n MKN
-    * model — everything the scoring join chain needs beyond the probe
-    * stream. Built per model by [[mknDerive]] (live), or loaded
-    * bucket-pruned from an at-rest index ([[mknNgramNllIndexed]]); ONE
-    * provider type means the two paths share [[mknScore]]'s expression
-    * trees verbatim and cannot drift (bit-equality spec-pinned).
-    */
-  private final case class MknTables(
-      d1: Double, d2: Double, d3: Double,
-      topRaw: DataFrame, topCtx: DataFrame,
-      conts: Map[Int, DataFrame], ctxTabs: Map[Int, DataFrame],
-      totals: DataFrame)
-
-  /** Positional context-column names, nearest token first. */
-  private def mknCtxKeys(j: Int): Seq[String] = (j to 1 by -1).map(i => s"__p$i")
-
-  /** Derive every scoring table from the raw n-gram count frame — the
-    * model's ONLY input. Each table is one aggregation of the table
-    * above it (n-gram-vocabulary-sized, never corpus-sized).
-    */
-  private def mknDerive(ngramModel: DataFrame, order: Int): MknTables = {
-    val (d1, d2, d3) = mknDiscounts(ngramModel)
-    mknDeriveWith(ngramModel, order, d1, d2, d3)
-  }
-
-  /** [[mknDerive]] with the discounts supplied by the caller — for
-    * paths that need the derived FRAMES but already hold (or do not
-    * consume) the discount triple: [[refreshNgramIndexFromStore]] calls
-    * this once per dirty table and writes one frame each time;
-    * re-estimating the (unused) discounts per call was one wasted
-    * eager model aggregation PER TABLE.
-    */
-  private def mknDeriveWith(
-      ngramModel: DataFrame, order: Int,
-      d1: Double, d2: Double, d3: Double): MknTables = {
-    val n = order
-    val ctxKeys = mknCtxKeys _
-    // The model with positional names: w_i (i < n) is the token n−i
-    // back from the scored token; w_n is the token itself.
-    val topRaw = ngramModel.select(
-      (1 until n).map(i => col(s"w$i").as(s"__p${n - i}")) ++
-        Seq(col(s"w$n").as("w"), col("ct")): _*)
-    val topCtx = topRaw.groupBy(ctxKeys(n - 1).map(col): _*).agg(
-      sum(col("ct")).as("cuv"),
-      sum(when(col("ct") === 1, 1L).otherwise(0L)).as("n1uv"),
-      sum(when(col("ct") === 2, 1L).otherwise(0L)).as("n2uv"),
-      sum(when(col("ct") >= 3, 1L).otherwise(0L)).as("n3uv"))
-    // Continuation tables, level n−1 down to 1: level k's rows are the
-    // DISTINCT (k+1)-suffixes of the level above, counted — exactly
-    // N₁₊(·u), each one aggregation of the previous (never of the
-    // corpus).
-    val conts = scala.collection.mutable.Map.empty[Int, DataFrame]
-    var cur: DataFrame = topRaw
-    for (k <- (n - 1) to 1 by -1) {
-      val g = cur.groupBy((ctxKeys(k - 1) :+ "w").map(col): _*)
-        .agg(count(lit(1)).as(s"c$k"))
-      conts(k) = g
-      cur = g
-    }
-    val ctxTabs = (2 until n).map { k =>
-      k -> conts(k).groupBy(ctxKeys(k - 1).map(col): _*)
-        .agg(sum(col(s"c$k")).as(s"cv$k"), count(lit(1)).as(s"n1v$k"))
-    }.toMap
-    // __v in ONE model scan (explode over the n token positions): the
-    // union-of-n-scans form recomputed the model lineage n times when
-    // the frame arrived unmaterialized (a live ngramCounts aggregation).
-    // Same multiset, same countDistinct — bit-identical totals.
-    val totals = conts(2).agg(count(lit(1)).as("__u"))
-      .crossJoin(
-        ngramModel
-          .select(explode(array((1 to n).map(i => col(s"w$i")): _*)).as("t"))
-          .agg(countDistinct(col("t")).as("__v")))
-    MknTables(d1, d2, d3, topRaw, topCtx, conts.toMap, ctxTabs, totals)
+      binned(col("n3"), lit(3) - lit(4) * y * col("n4") / col("n3"), 1.5).as("d3")): _*)
   }
 
   /** The order-n MKN scoring join chain + lnp fold over a probe stream,
     * against tables from `tablesFor` (which receives the built token
     * frame so an at-rest provider can prune its reads to the buckets
-    * the probe actually touches).
+    * the probe actually touches). `groupCols` ride the token frame,
+    * every join key and the output.
     */
   private def mknScore(
       docs: DataFrame, idCol: String, textCol: String, order: Int,
-      discount: Double, tablesFor: DataFrame => MknTables): DataFrame = {
+      groupCols: Seq[String], discount: Double,
+      tablesFor: DataFrame => MknTables): DataFrame = {
     require(discount > 0 && discount < 1, s"discount must lie in (0,1), got $discount")
     val n = order
+    val g = groupCols
     val ctxKeys = mknCtxKeys _
     val tok0 = docs
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("__ws"))
-      .select(col("id"), col("__ws"), posexplode(col("__ws")).as(Seq("pos", "w")))
+      .select((col(idCol).as("id") +: g.map(col)) :+
+        TextOps.tokens(col(textCol)).as("__ws"): _*)
+      .select((col("id") +: g.map(col)) ++
+        Seq(col("__ws"), posexplode(col("__ws")).as(Seq("pos", "w"))): _*)
     val tok = (1 until n).foldLeft(tok0)((df, j) =>
         df.withColumn(s"__p$j", when(col("pos") <= j - 1, lit(null).cast("string"))
           .otherwise(element_at(col("__ws"), col("pos") - (j - 1)))))
       .drop("__ws")
     val t = tablesFor(tok)
     val (d1, d2, d3) = (t.d1, t.d2, t.d3)
-    var scored = tok.join(t.conts(1), Seq("w"), "left")
+    var scored = tok.join(t.conts(1), g :+ "w", "left")
     for (k <- 2 until n) {
       scored = scored
-        .join(t.conts(k), ctxKeys(k - 1) :+ "w", "left")
-        .join(t.ctxTabs(k), ctxKeys(k - 1), "left")
+        .join(t.conts(k), g ++ ctxKeys(k - 1) :+ "w", "left")
+        .join(t.ctxTabs(k), g ++ ctxKeys(k - 1), "left")
     }
     scored = scored
-      .join(t.topRaw, ctxKeys(n - 1) :+ "w", "left")
-      .join(t.topCtx, ctxKeys(n - 1), "left")
-      .crossJoin(broadcast(t.totals))
+      .join(t.topRaw, g ++ ctxKeys(n - 1) :+ "w", "left")
+      .join(t.topCtx, g ++ ctxKeys(n - 1), "left")
+    // Inner per-group totals join: no model for the group ⇒ unscorable.
+    scored = (if (g.isEmpty) scored.crossJoin(broadcast(t.totals))
+      else scored.join(broadcast(t.totals), g))
       .withColumn("__pug",
         (coalesce(col("c1"), lit(0L)) + lit(1.0)) / (col("__u") + col("__v")))
-      // Level 2 — the trigram implementation's __pb verbatim, raw
-      // continuation-unigram tail inside the mixture, guard on the
-      // zero-mixture case.
+      // Level 2 — raw continuation-unigram tail inside the mixture,
+      // guard on the zero-mixture case.
       .withColumn("__pl2",
         when(col("cv2").isNull || (col("c2").isNull && col("c1").isNull),
           col("__pug"))
@@ -1749,8 +1481,8 @@ object TextStats {
               (lit(discount) * col(s"n1v$k") / col(s"cv$k")) *
                 col(s"__pl${k - 1}")))
     }
-    val dTop = when(col("ct") === 1, lit(d1))
-      .when(col("ct") === 2, lit(d2)).otherwise(lit(d3))
+    val dTop = when(col("ct") === 1, d1)
+      .when(col("ct") === 2, d2).otherwise(d3)
     val lnpExpr = {
       var c = when(col("__p1").isNull, log(col("__pug")))
       for (k <- 2 until n) c = c.when(col(s"__p$k").isNull, log(col(s"__pl$k")))
@@ -1758,8 +1490,7 @@ object TextStats {
     }
     scored
       .withColumn("__gt",
-        (lit(d1) * col("n1uv") + lit(d2) * col("n2uv") + lit(d3) * col("n3uv")) /
-          col("cuv"))
+        (d1 * col("n1uv") + d2 * col("n2uv") + d3 * col("n3uv")) / col("cuv"))
       .withColumn("__plTop",
         when(col("cuv").isNull, col(s"__pl${n - 1}"))
           .otherwise(
@@ -1767,19 +1498,19 @@ object TextStats {
               .otherwise(greatest(col("ct") - dTop, lit(0.0))) / col("cuv") +
               col("__gt") * col(s"__pl${n - 1}")))
       .withColumn("lnp", lnpExpr)
-      .groupBy(col("id").as(idCol))
+      .groupBy((col("id").as(idCol) +: g.map(col)): _*)
       .agg(count(lit(1)).as("n_tokens"),
         collect_list(struct(col("pos"), col("lnp"))).as("__s"))
       .withColumn("__sum", aggregate(
         transform(array_sort(col("__s")), e => e.getField("lnp")),
         lit(0.0), (acc, x) => acc + x))
-      .select(col(idCol), col("n_tokens"),
-        round(-col("__sum") / col("n_tokens"), 6).as("avg_nll"))
+      .select((col(idCol) +: g.map(col)) ++ Seq(col("n_tokens"),
+        round(-col("__sum") / col("n_tokens"), 6).as("avg_nll")): _*)
   }
 
   /** [[mknNgramNllAgainst]] with the model trained on `docs` itself —
     * order-n modified-KN self-perplexity (the bootstrap; `order = 5`
-    * is the KenLM default).
+    * is the KenLM default, `order = 3` t45's trigram model).
     */
   def mknNgramNll(
       docs: DataFrame, idCol: String, textCol: String, order: Int = 5,
@@ -1819,7 +1550,8 @@ object TextStats {
     import spark.implicits._
     val n = order
     val buckets = if (nBuckets > 0) nBuckets else ngramIndexBuckets(ngramModel)
-    val t = mknDerive(ngramModel, order)
+    val (d1, d2, d3) = mknDiscounts(ngramModel)
+    val t = mknDerive(ngramModel, order, Nil, identity, Some((d1, d2, d3)))
     // The 2(n−1)+1 table writes are independent jobs over the shared
     // derived frames — submit them concurrently so each write's tail
     // back-fills the others' idle executors (guide §2.6); output paths
@@ -1829,7 +1561,7 @@ object TextStats {
       writeIndexTab(indexTabOf(t, nm), keys, s"$path/$nm", buckets)
     }
     t.totals.coalesce(1).write.mode("overwrite").parquet(s"$path/totals")
-    Seq((order, buckets, t.d1, t.d2, t.d3, lastBatchId))
+    Seq((order, buckets, d1, d2, d3, lastBatchId))
       .toDF("order", "n_buckets", "d1", "d2", "d3", "last_batch_id")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -2032,7 +1764,8 @@ object TextStats {
         // Group-preserving filter: every model row whose group key
         // hashes into a dirty bucket — recomputed bucket content is
         // the full rebuild's, bit for bit.
-        val t = mknDeriveWith(model.filter(bucketOf(ks).isin(d: _*)), n, d1, d2, d3)
+        val t = mknDerive(model.filter(bucketOf(ks).isin(d: _*)), n, Nil, identity,
+          Some((d1, d2, d3)))
         writeIndexTab(indexTabOf(t, nm), ks, s"$newIndexPath/$nm", nBuckets)
       }
       val src = new org.apache.hadoop.fs.Path(s"$prevIndexPath/$nm")
@@ -2080,7 +1813,7 @@ object TextStats {
     val meta = spark.read.parquet(s"$path/meta").head()
     val n = meta.getAs[Int]("order")
     val nBuckets = meta.getAs[Int]("n_buckets")
-    mknScore(docs, idCol, textCol, n, discount, tok => {
+    mknScore(docs, idCol, textCol, n, Nil, discount, tok => {
       def b(keys: Seq[String]) =
         pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
       val keysFor = mknIndexTables(n)
@@ -2091,9 +1824,9 @@ object TextStats {
         spark.read.parquet(s"$path/$nm")
           .filter(col("pbucket").isin(wanted: _*)).drop("pbucket")
       }
-      MknTables(
-        meta.getAs[Double]("d1"), meta.getAs[Double]("d2"),
-        meta.getAs[Double]("d3"),
+      MknTables(n, Nil,
+        lit(meta.getAs[Double]("d1")), lit(meta.getAs[Double]("d2")),
+        lit(meta.getAs[Double]("d3")),
         read("top"), read("topctx"),
         (1 until n).map(k => k -> read(s"cont$k")).toMap,
         (2 until n).map(k => k -> read(s"ctx$k")).toMap,
@@ -2194,6 +1927,6 @@ object TextStats {
   def trigramNll(
       docs: DataFrame, idCol: String, textCol: String, addK: Double = 1.0,
       lambda3: Double = 0.5, lambda2: Double = 0.3): DataFrame =
-    trigramNllAgainst(docs, trigramCounts(docs, textCol), bigramCounts(docs, textCol),
+    trigramNllAgainst(docs, ngramCounts(docs, textCol, 3), bigramCounts(docs, textCol),
       unigramCounts(docs, textCol), idCol, textCol, addK, lambda3, lambda2)
 }

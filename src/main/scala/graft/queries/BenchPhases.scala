@@ -378,10 +378,10 @@ object BenchPhases {
       val d = Fixtures.table(s, dir, "documents")
       val path = Fixtures.scratchDir("graft-t60-bench") + "/model"
       graft.pipeline.ModelStore.saveNgram(
-        graft.pipeline.TextStats.trigramCounts(d, "text"), path, order = 3)
+        graft.pipeline.TextStats.ngramCounts(d, "text", 3), path, order = 3)
       () => {
-        val (m, _) = graft.pipeline.ModelStore.loadNgram(s, path)
-        graft.pipeline.TextStats.mknTrigramNllAgainst(d, m, "doc_id", "text")
+        val (m, order) = graft.pipeline.ModelStore.loadNgram(s, path)
+        graft.pipeline.TextStats.mknNgramNllAgainst(d, m, "doc_id", "text", order)
           .count(); ()
       }
     }),

@@ -71,10 +71,12 @@ private[graft] object CrawlStages {
   def route(s: SparkSession, deduped: DataFrame): DataFrame = {
     import s.implicits._
     val lfeats = (0 until PipelineQueries.LangidBuckets).map(b => s"x$b")
-    val fSeed = PipelineQueries.langidFeatures(
-      PipelineQueries.LangidSeeds.toDF("doc_id", "lang", "text")).cache()
-    val wl = Classifier.trainSoftmax(fSeed, lfeats, "y",
-      numClasses = PipelineQueries.LangidLangs.size, iters = 8, lr = 1.0)
+    // The seed features feed every GD round: pinned for the training only.
+    val wl = graft.Lineage.pinned(PipelineQueries.langidFeatures(
+        PipelineQueries.LangidSeeds.toDF("doc_id", "lang", "text"))) { fSeed =>
+      Classifier.trainSoftmax(fSeed, lfeats, "y",
+        numClasses = PipelineQueries.LangidLangs.size, iters = 8, lr = 1.0)
+    }
     val routed = Classifier.scoreSoftmax(
         PipelineQueries.langidFeatures(
           deduped.withColumn("lang", lit(null).cast("string"))), wl, lfeats)
@@ -108,8 +110,8 @@ private[graft] object CrawlStages {
         Classifier.score(cf, wq, Seq("x1", "x2", "x3"), threshold = 0.5)
           .filter(col("accepted")).select("doc_id"),
         Seq("doc_id"))
-      val lm = TextStats.trigramCounts(ref, "text")
-      val kept = TextStats.mknTrigramNllAgainst(docs, lm, "doc_id", "text")
+      val lm = TextStats.ngramCounts(ref, "text", 3)
+      val kept = TextStats.mknNgramNllAgainst(docs, lm, "doc_id", "text", 3)
         .join(docs.select("doc_id", "pred_lang"), Seq("doc_id"))
         .withColumn("bucket", ntile(3).over(
           Window.partitionBy("pred_lang").orderBy(col("avg_nll"), col("doc_id"))))
@@ -122,7 +124,7 @@ private[graft] object CrawlStages {
     * PER-LANGUAGE reference models — CCNet's actual design (the r19
     * ask): each predicted language's reference slice trains its own
     * modified-KN trigram model and every doc scores against its own
-    * language's model (`mknTrigramNllPerGroup` — the group key rides
+    * language's model (`mknNgramNllAgainst` by `pred_lang` — the group key rides
     * every model aggregation and scoring join; no per-group loop).
     * Tercile CUTOFFS read from a KLL sketch of the fixed-point NLLs
     * (one map-side-combined sketch aggregation), then a MAP-ONLY
@@ -151,9 +153,9 @@ private[graft] object CrawlStages {
         Classifier.score(cf, wq, Seq("x1", "x2", "x3"), threshold = 0.5)
           .filter(col("accepted")).select("doc_id"),
         Seq("doc_id"))
-      val lm = TextStats.trigramCountsBy(ref, "text", "pred_lang")
-      val fixed = TextStats.mknTrigramNllPerGroup(
-          docs, lm, "pred_lang", "doc_id", "text")
+      val lm = TextStats.ngramCounts(ref, "text", 3, Seq("pred_lang"))
+      val fixed = TextStats.mknNgramNllAgainst(
+          docs, lm, "doc_id", "text", 3, groupCols = Seq("pred_lang"))
         .withColumn("__nf", round(col("avg_nll") * 1e6).cast("long"))
       val cuts = graft.operators.Sketches.mergedQuantiles(
           graft.operators.Sketches.quantileSketches(fixed, Seq("pred_lang"), "__nf"),

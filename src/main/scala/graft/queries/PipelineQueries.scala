@@ -585,8 +585,8 @@ $bandSelects
         Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
           .filter(col("accepted")).select("doc_id"),
         Seq("doc_id"))
-      val model = TextStats.trigramCounts(ref, "text")
-      TextStats.mknTrigramNllAgainst(d, model, "doc_id", "text")
+      val model = TextStats.ngramCounts(ref, "text", 3)
+      TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
         .withColumn("bucket", ntile(3).over(
           Window.partitionBy("lang").orderBy(col("avg_nll"), col("doc_id")))
@@ -615,8 +615,8 @@ $bandSelects
         Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
           .filter(col("accepted")).select("doc_id"),
         Seq("doc_id"))
-      val model = TextStats.trigramCounts(ref, "text")
-      val fixed = TextStats.mknTrigramNllAgainst(d, model, "doc_id", "text")
+      val model = TextStats.ngramCounts(ref, "text", 3)
+      val fixed = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
         .withColumn("__nf", round(col("avg_nll") * 1e6).cast("long"))
       val cuts = graft.operators.Sketches.mergedQuantiles(
@@ -700,7 +700,7 @@ $bandSelects
     // specifies that the global-LM variants approximate — each
     // language's reference slice trains ITS OWN modified-KN trigram
     // model and every doc scores against its own language's model
-    // (trigramCountsBy + mknTrigramNllPerGroup: the group key rides
+    // (ngramCounts + mknNgramNllAgainst by lang: the group key rides
     // every model aggregation, discount estimation, and scoring join —
     // no per-group loop, no driver dispatch). Cutoff machinery
     // unchanged from p10: per-lang tercile cutoffs from the KLL sketch
@@ -717,8 +717,9 @@ $bandSelects
         Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
           .filter(col("accepted")).select("doc_id"),
         Seq("doc_id"))
-      val model = TextStats.trigramCountsBy(ref, "text", "lang")
-      val fixed = TextStats.mknTrigramNllPerGroup(d, model, "lang", "doc_id", "text")
+      val model = TextStats.ngramCounts(ref, "text", 3, Seq("lang"))
+      val fixed = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3,
+          groupCols = Seq("lang"))
         .withColumn("__nf", round(col("avg_nll") * 1e6).cast("long"))
       val cuts = graft.operators.Sketches.mergedQuantiles(
           graft.operators.Sketches.quantileSketches(fixed, Seq("lang"), "__nf"),
@@ -820,7 +821,7 @@ $bandSelects
     // Exact integer counts + three 6dp discounts; the oracle replays
     // the discount estimation and every mixture literally.
     "t45_mkn_trigram_nll" -> ((s, dir) =>
-      TextStats.mknTrigramNll(table(s, dir, "documents"), "doc_id", "text")
+      TextStats.mknNgramNll(table(s, dir, "documents"), "doc_id", "text", order = 3)
         .orderBy("doc_id")),
     // Interpolated trigram NLL (C175 / t36): Jelinek–Mercer mix of
     // add-1-smoothed trigram/bigram/unigram conditionals — the KenLM-
@@ -1450,10 +1451,10 @@ $bandSelects
     "t60_mkn_saved_nll" -> ((s, dir) => {
       val d = table(s, dir, "documents")
       val path = Fixtures.scratchDir("graft-t60") + "/model"
-      ModelStore.saveNgram(TextStats.trigramCounts(d, "text"), path, order = 3)
+      ModelStore.saveNgram(TextStats.ngramCounts(d, "text", 3), path, order = 3)
       val (model, order) = ModelStore.loadNgram(s, path)
       require(order == 3, s"stored model order drifted: $order")
-      TextStats.mknTrigramNllAgainst(d, model, "doc_id", "text")
+      TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", order)
         .orderBy("doc_id")
     }),
     // 5-gram modified-Kneser–Ney (C205 / t61): the KenLM DEFAULT order
@@ -2639,8 +2640,8 @@ $bandSelects
     (base +: rounds).mkString(",\n")
   }
 
-  /** [[mknNllCtes]] PER GROUP — `TextStats.mknTrigramNllPerGroup`'s
-    * exact twin: `modelSrc` and `probeSrc` each expose (doc_id, `grp`,
+  /** [[mknNllCtes]] PER GROUP — `TextStats.mknNgramNllAgainst`'s
+    * exact twin at order 3 with `groupCols = Seq(grp)`: `modelSrc` and `probeSrc` each expose (doc_id, `grp`,
     * text); every model CTE, the discount estimation, and the totals
     * carry the group key, every scoring join adds a group-equality
     * conjunct, and the totals/discount joins are INNER (a probe doc
@@ -2744,7 +2745,7 @@ $bandSelects
        |)""".stripMargin
 
   /** The modified-Kneser–Ney trigram chain (`TextStats.
-    * mknTrigramNllAgainst`'s exact twin, the t45 machinery
+    * mknNgramNllAgainst`'s exact twin at order 3, the t45 machinery
     * parameterized): trains the model on `modelSrc` and scores
     * `probeSrc` (each any relation exposing doc_id, text), ending in
     * `perdoc`(doc_id, n_tokens, avg_nll). Count-binned discounts from

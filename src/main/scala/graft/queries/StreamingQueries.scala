@@ -988,11 +988,11 @@ object StreamingQueries {
       graft.pipeline.Classifier.score(feats, w, Seq("x1", "x2", "x3"), threshold = 0.5)
         .filter(col("accepted")).select("doc_id"),
       Seq("doc_id"))
-    val model = TextStats.trigramCounts(ref, "text").persist()
+    val model = TextStats.ngramCounts(ref, "text", 3).persist()
     model.count()
     // Batch calibration: the p9 terciles, read off as frozen cutoffs
     // (one (lang, c1, c2) row per language — bounded collect).
-    val calib = TextStats.mknTrigramNllAgainst(d, model, "doc_id", "text")
+    val calib = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
       .join(d.select("doc_id", "lang"), Seq("doc_id"))
       .withColumn("bucket", ntile(3).over(
         Window.partitionBy("lang").orderBy(col("avg_nll"), col("doc_id"))))
@@ -1099,9 +1099,9 @@ object StreamingQueries {
       graft.pipeline.Classifier.score(feats, w0, wf0, threshold = 0.5)
         .filter(col("accepted")).select("doc_id"),
       Seq("doc_id"))
-    val trained = TextStats.trigramCounts(ref, "text")
+    val trained = TextStats.ngramCounts(ref, "text", 3)
     graft.pipeline.ModelStore.saveNgram(trained, s"$root/v=1/lm", order = 3)
-    TextStats.mknTrigramNllAgainst(d, trained, "doc_id", "text")
+    TextStats.mknNgramNllAgainst(d, trained, "doc_id", "text", 3)
       .join(d.select("doc_id", "lang"), Seq("doc_id"))
       .withColumn("bucket", ntile(3).over(
         Window.partitionBy("lang").orderBy(col("avg_nll"), col("doc_id"))))

@@ -88,7 +88,7 @@ object StreamingScore {
     * routes to bucket 3 (tail — conservative reject), stated.
     *
     * Per micro-batch this runs the BATCH scorer
-    * ([[graft.pipeline.TextStats.mknTrigramNllAgainst]]) — ONE
+    * ([[graft.pipeline.TextStats.mknNgramNllAgainst]] at order 3) — ONE
     * implementation, no streaming twin to drift — which is legal
     * precisely because the gate is stateless across batches: per-doc
     * NLL and a cutoff CASE need nothing from any other batch.
@@ -98,10 +98,10 @@ object StreamingScore {
       trigramModel: DataFrame, cut1: Map[String, Double],
       cut2: Map[String, Double]): DataFrame =
     lmGateWith(batch, idCol, textCol, langCol,
-      graft.pipeline.TextStats.trigramTables(trigramModel), cut1, cut2)
+      graft.pipeline.TextStats.mknTables(trigramModel, 3), cut1, cut2)
 
   /** [[lmGate]] against PRE-DERIVED model tables
-    * ([[graft.pipeline.TextStats.trigramTables]]) — the repeated-batch
+    * ([[graft.pipeline.TextStats.mknTables]]) — the repeated-batch
     * entry: the model is frozen across a stream's micro-batches, so its
     * derived tables (five model-sized aggregations + the discount
     * estimation) are derived ONCE and every batch pays only the probe
@@ -109,11 +109,11 @@ object StreamingScore {
     */
   def lmGateWith(
       batch: DataFrame, idCol: String, textCol: String, langCol: String,
-      tables: graft.pipeline.TextStats.TrigramTables, cut1: Map[String, Double],
+      tables: graft.pipeline.TextStats.MknTables, cut1: Map[String, Double],
       cut2: Map[String, Double]): DataFrame = {
     val c1 = typedlit(cut1)
     val c2 = typedlit(cut2)
-    graft.pipeline.TextStats.mknTrigramNllWith(batch, tables, idCol, textCol)
+    graft.pipeline.TextStats.mknNgramNllWith(batch, tables, idCol, textCol)
       .join(batch.select(col(idCol), col(langCol)), Seq(idCol))
       .withColumn("bucket",
         when(col("avg_nll") <=
@@ -143,7 +143,7 @@ object StreamingScore {
     // cost — 4 replay batches paid the derivation 4×. localCheckpoint
     // blocks are vocabulary-sized and release with the query's
     // references (the bench's isolate() also purges them).
-    val tables = graft.pipeline.TextStats.trigramTablesMaterialized(trigramModel)
+    val tables = graft.pipeline.TextStats.mknTablesMaterialized(trigramModel, 3)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -182,7 +182,7 @@ object StreamingScore {
     // model per batch. Published version directories are immutable, so
     // a version path keys its tables forever. foreachBatch bodies run
     // sequentially on the stream's thread — the var needs no lock.
-    var cached: Option[(String, graft.pipeline.TextStats.TrigramTables,
+    var cached: Option[(String, graft.pipeline.TextStats.MknTables,
       Map[String, Double], Map[String, Double])] = None
     stream.writeStream
       .option("checkpointLocation", checkpoint)
@@ -193,7 +193,7 @@ object StreamingScore {
         val (tables, cut1, cut2) = cached match {
           case Some((p, t, c1, c2)) if p == cur => (t, c1, c2)
           case _ =>
-            val (model, _) = graft.pipeline.ModelStore.loadNgram(s, s"$cur/lm")
+            val (model, order) = graft.pipeline.ModelStore.loadNgram(s, s"$cur/lm")
             val calib = s.read.parquet(s"$cur/cutoffs").collect()
             val c1 = calib.collect {
               case r if !r.isNullAt(1) => (r.getString(0), r.getDouble(1))
@@ -201,7 +201,7 @@ object StreamingScore {
             val c2 = calib.collect {
               case r if !r.isNullAt(2) => (r.getString(0), r.getDouble(2))
             }.toMap
-            val t = graft.pipeline.TextStats.trigramTablesMaterialized(model)
+            val t = graft.pipeline.TextStats.mknTablesMaterialized(model, order)
             cached = Some((cur, t, c1, c2))
             (t, c1, c2)
         }

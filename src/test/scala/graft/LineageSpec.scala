@@ -88,6 +88,17 @@ class LineageSpec extends GraftSuite {
     Lineage.free(r)
   }
 
+  test("CrawlStages.route releases its langid seed-feature pin: persistent RDDs back at baseline") {
+    import spark.implicits._
+    val docs = Seq((1L, "the cat sat on the mat"), (2L, "le chat est sur le tapis"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val routed = graft.queries.CrawlStages.route(spark, docs)
+    assert(routed.count() === 2L)
+    Lineage.free(routed) // the caller owns the returned cut
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("kCenters releases its round frames") {
     import spark.implicits._
     val vecs = (0L until 12L).map(i =>

@@ -47,6 +47,43 @@ class PartitionedApplySpec extends GraftSuite {
     rel.split('/').find(_.startsWith(PartitionedTarget.BucketCol + "="))
       .map(_.split('=')(1).toInt).getOrElse(sys.error(s"no bucket in $rel"))
 
+  /** Data files per bucket under `root` (hidden and `_` files excluded). */
+  private def filesPerBucket(root: String): Map[Int, Int] =
+    snapshotBuckets(root).keys
+      .filter { p => val n = p.split('/').last; !n.startsWith(".") && !n.startsWith("_") }
+      .groupBy(bucketOfPath).map { case (b, fs) => b -> fs.size }
+
+  /** Every job `body` runs, as its start event, in job order. A marker
+    * job after `body` drains the listener bus: events arrive in order, so
+    * once the marker is seen every job of `body` has been recorded.
+    */
+  private def jobStarts(group: String)(body: => Unit)
+      : Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    val marker = s"$group-drained"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    @volatile var drained = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+        else if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.add(e)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq.sortBy(_.jobId)
+  }
+
   test("delta apply rewrites only touched buckets; untouched files are byte-identical") {
     val path = freshDir("papply-delta")
     PartitionedTarget.write(target60, path, spec)
@@ -605,48 +642,37 @@ class PartitionedApplySpec extends GraftSuite {
     val touched = bucketsOf(keys).values.toSet
     assert(touched.size > 2)
 
-    // (jobId, SQL execution id) of every job the apply runs, by job group.
-    // A job outside any SQL execution is planning work — schema inference
-    // or parallel listing.
-    val group = "papply-job-budget"
-    val marker = "papply-job-budget-drained"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[String])]()
-    @volatile var drained = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
-        else if (props.exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.jobId -> props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "partitioned apply under a job budget")
-      try MergeApply.applyToPartitioned(
+    // (jobId, SQL execution id) of every job the apply runs. A job outside
+    // any SQL execution is planning work — schema inference or parallel
+    // listing.
+    val seen = jobStarts("papply-job-budget") {
+      MergeApply.applyToPartitioned(
         spark, path, source, MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
-      finally sc.clearJobGroup()
-      // Events arrive in order: once the marker job is seen, every job the
-      // apply ran has been recorded.
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(drained, "listener bus did not deliver the marker job")
-    } finally sc.removeSparkListener(listener)
-
-    val seen = jobs.asScala.toSeq.sortBy(_._1)
+    }.map(e => e.jobId -> Option(e.properties).flatMap(p =>
+      Option(p.getProperty("spark.sql.execution.id"))))
     val summary = seen.mkString(", ")
     assert(seen.forall(_._2.isDefined), s"jobs outside a SQL execution (schema inference/listing): $summary")
     val mergeQuery = seen.last._2
     assert(seen.count(_._2 != mergeQuery) === 1, s"jobs before the merge query: $summary")
     assert(seen.size <= 5, s"jobs per apply: $summary")
 
-    val files = snapshotBuckets(path).keys
-      .filter { p => val n = p.split('/').last; !n.startsWith(".") && !n.startsWith("_") }
-      .groupBy(bucketOfPath).map { case (b, fs) => b -> fs.size }
+    val files = filesPerBucket(path)
     touched.foreach(b => assert(files.get(b) === Some(1), s"bucket $b files"))
+  }
+
+  test("full load spanning >= defaultParallelism buckets writes on defaultParallelism tasks, one data file per bucket") {
+    val dp = spark.sparkContext.defaultParallelism
+    val wide = PartitionSpec(Seq("k"), dp * 4, HashMode.Xxhash64)
+    val rows = (0L until 2000L).map(i => (i, s"n$i")).toDF("k", "name")
+    val buckets = rows.select(wide.bucket(Seq(col("k")))).distinct().count()
+    assert(buckets >= dp)
+    val path = freshDir("ptarget-load-tasks")
+    // The write job's result stage (the highest stage id of the last job)
+    // is the writer: one task per output partition.
+    val jobs = jobStarts("ptarget-load-tasks")(PartitionedTarget.write(rows, path, wide))
+    assert(jobs.last.stageInfos.maxBy(_.stageId).numTasks === dp)
+    val files = filesPerBucket(path)
+    assert(files.size.toLong === buckets && files.values.forall(_ == 1), files.toString)
   }
 
   test("footer schema equals the inferred schema (decimal, nested struct, nullable columns)") {

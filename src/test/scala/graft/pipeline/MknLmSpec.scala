@@ -2,13 +2,16 @@ package graft.pipeline
 
 import graft.GraftSuite
 
-/** Modified-Kneser–Ney trigram laws (C190): the count-binned discounts
+/** Modified-Kneser–Ney trigram laws (C190), on the order-n estimator
+  * at order 3: the count-binned discounts
   * are estimated exactly from count-of-counts and each bin is exercised
   * by hand arithmetic (c=1 → D₁, c=2 → D₂, c≥3 → D₃₊ — including the
   * n₄=0 edge where D₃₊ = 3 wipes the raw count and γ redistributes all
   * of it), degenerate/non-Zipf corpora route per-bin to KenLM's
   * documented fallback discounts instead of dividing by zero or making
-  * γ negative, and cross-corpus OOV scoring stays finite.
+  * γ negative, cross-corpus OOV scoring stays finite, pre-derived
+  * tables score bit-equal to the one-shot scorer, and the group key is
+  * inert when constant and independent per group.
   */
 class MknLmSpec extends GraftSuite {
 
@@ -28,7 +31,7 @@ class MknLmSpec extends GraftSuite {
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("hand-checked arithmetic across all three discount bins") {
-    val out = TextStats.mknTrigramNll(corpus, "doc_id", "text")
+    val out = TextStats.mknNgramNll(corpus, "doc_id", "text", order = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val pug = 1.0 / 16 // (0+1)/(U+V) — every pos-0/pos-1 case here
     // doc 5 "g h i": pos2 has ct=1 → D₁=0.5: numer 0.5/cuv 1; γ=0.5;
@@ -47,10 +50,10 @@ class MknLmSpec extends GraftSuite {
     // and D₂ estimate fine: n1=1, n2=1 ⇒ Y=1/3, D₁=1/3, D₂=2−0=2.
     val degenerate = docs("a b c", "a b c", "d e f")
     val ds = TextStats.mknDiscounts(
-      TextStats.trigramCounts(degenerate, "text"))
+      TextStats.ngramCounts(degenerate, "text", 3))
     assert(ds === ((0.333333, 2.0, 1.5)))
     // And scoring under them is total.
-    val out = TextStats.mknTrigramNll(degenerate, "doc_id", "text").collect()
+    val out = TextStats.mknNgramNll(degenerate, "doc_id", "text", order = 3).collect()
     assert(out.length === 3)
     out.foreach(r => assert(!r.isNullAt(2)))
   }
@@ -69,9 +72,9 @@ class MknLmSpec extends GraftSuite {
   }
 
   test("cross-corpus OOV after a seen context scores finite") {
-    val model = TextStats.trigramCounts(corpus, "text")
-    val out = TextStats.mknTrigramNllAgainst(
-      docs("a b zzz", "zzz qqq xxx"), model, "doc_id", "text").collect()
+    val model = TextStats.ngramCounts(corpus, "text", 3)
+    val out = TextStats.mknNgramNllAgainst(
+      docs("a b zzz", "zzz qqq xxx"), model, "doc_id", "text", 3).collect()
     assert(out.length === 2)
     out.foreach(r => assert(!r.isNullAt(2), s"avg_nll NULL for ${r.getLong(0)}"))
     // "a b zzz" pos2: (a,b) context seen (cuv=3) but ct/cbc/cuw all
@@ -80,75 +83,76 @@ class MknLmSpec extends GraftSuite {
 
   test("discount validation") {
     intercept[IllegalArgumentException] {
-      TextStats.mknTrigramNll(corpus, "doc_id", "text", discount = 1.0)
+      TextStats.mknNgramNll(corpus, "doc_id", "text", order = 3, discount = 1.0)
     }
   }
 
   test("deterministic across runs on real corpus data") {
     val d = spark.read.parquet(s"${graft.SparkTestBase.sf0001}/documents.parquet")
       .select("doc_id", "text")
-    val a = TextStats.mknTrigramNll(d, "doc_id", "text").collect()
+    val a = TextStats.mknNgramNll(d, "doc_id", "text", order = 3).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
-    val b = TextStats.mknTrigramNll(d, "doc_id", "text").collect()
+    val b = TextStats.mknNgramNll(d, "doc_id", "text", order = 3).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
     assert(a === b)
   }
 
-  test("pre-derived tables: mknTrigramNllWith over trigramTables / trigramTablesMaterialized == mknTrigramNllAgainst bit-for-bit") {
-    // The r20 optimization splits derivation from scoring so streaming
-    // gates derive once per frozen model; this pins that BOTH forms of
-    // the split (lazy tables, and the localCheckpoint-pinned tables the
-    // gates actually hold) reproduce the one-shot scorer exactly —
-    // every double identical, on real corpus data.
+  test("pre-derived tables: mknNgramNllWith over mknTables / mknTablesMaterialized == mknNgramNllAgainst bit-for-bit, ungrouped and per group") {
+    // Streaming gates derive once per frozen model; this pins that BOTH
+    // forms of the split (lazy tables, and the pinned tables the gates
+    // actually hold) reproduce the one-shot scorer exactly — every
+    // double identical, on real corpus data, with and without a group.
     val d = spark.read.parquet(s"${graft.SparkTestBase.sf0001}/documents.parquet")
-      .select("doc_id", "text")
-    val model = TextStats.trigramCounts(d, "text")
-    val oneShot = TextStats.mknTrigramNllAgainst(d, model, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    val lazyTabs = TextStats.mknTrigramNllWith(
-        d, TextStats.trigramTables(model), "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(lazyTabs.toSeq === oneShot.toSeq)
-    val pinned = TextStats.trigramTablesMaterialized(model)
-    val viaPinned = TextStats.mknTrigramNllWith(d, pinned, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(viaPinned.toSeq === oneShot.toSeq)
-    // Reuse law: a SECOND scoring run against the same pinned tables
-    // (the micro-batch shape) is also identical — nothing in the first
-    // run mutates the tables.
-    val again = TextStats.mknTrigramNllWith(d, pinned, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(again.toSeq === oneShot.toSeq)
+      .select("doc_id", "lang", "text")
+    for (g <- Seq(Nil, Seq("lang"))) {
+      val model = TextStats.ngramCounts(d, "text", 3, g)
+      val oneShot = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3,
+          groupCols = g)
+        .orderBy("doc_id").collect()
+      val lazyTabs = TextStats.mknNgramNllWith(
+          d, TextStats.mknTables(model, 3, g), "doc_id", "text")
+        .orderBy("doc_id").collect()
+      assert(lazyTabs.toSeq === oneShot.toSeq)
+      val pinned = TextStats.mknTablesMaterialized(model, 3, g)
+      val viaPinned = TextStats.mknNgramNllWith(d, pinned, "doc_id", "text")
+        .orderBy("doc_id").collect()
+      assert(viaPinned.toSeq === oneShot.toSeq)
+      // Reuse law: a SECOND scoring run against the same pinned tables
+      // (the micro-batch shape) is also identical — nothing in the first
+      // run mutates the tables.
+      val again = TextStats.mknNgramNllWith(d, pinned, "doc_id", "text")
+        .orderBy("doc_id").collect()
+      assert(again.toSeq === oneShot.toSeq)
+    }
   }
 
   test("per-group scorer: one constant group == the global scorer bit-for-bit; per-lang groups == independent per-slice global models; a group with no model drops its docs") {
     import org.apache.spark.sql.functions.{col, lit}
     val d = spark.read.parquet(s"${graft.SparkTestBase.sf0001}/documents.parquet")
       .select("doc_id", "lang", "text")
+    def perGroup(probe: org.apache.spark.sql.DataFrame,
+        model: org.apache.spark.sql.DataFrame, g: String) =
+      TextStats.mknNgramNllAgainst(probe, model, "doc_id", "text", 3, groupCols = Seq(g))
     // Law 1 — the group key is inert when constant: grouped chain ==
     // the ungrouped chain, every double identical.
     val one = d.withColumn("gg", lit("x"))
-    val grouped = TextStats.mknTrigramNllPerGroup(
-        one, TextStats.trigramCountsBy(one, "text", "gg"), "gg",
-        "doc_id", "text")
+    val grouped = perGroup(one, TextStats.ngramCounts(one, "text", 3, Seq("gg")), "gg")
       .select("doc_id", "n_tokens", "avg_nll").orderBy("doc_id").collect()
-    val global = TextStats.mknTrigramNllAgainst(
-        d, TextStats.trigramCounts(d, "text"), "doc_id", "text")
+    val global = TextStats.mknNgramNllAgainst(
+        d, TextStats.ngramCounts(d, "text", 3), "doc_id", "text", 3)
       .orderBy("doc_id").collect()
     assert(grouped.toSeq === global.toSeq)
     // Law 2 — grouping by lang == training and scoring each language
     // slice independently with the GLOBAL machinery (model tables,
     // discounts, totals all per-slice).
-    val byLang = TextStats.mknTrigramNllPerGroup(
-        d, TextStats.trigramCountsBy(d, "text", "lang"), "lang",
-        "doc_id", "text")
+    val byLang = perGroup(d, TextStats.ngramCounts(d, "text", 3, Seq("lang")), "lang")
       .select("doc_id", "n_tokens", "avg_nll").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     val langs = d.select("lang").distinct().collect().map(_.getString(0))
     val sliced = langs.flatMap { l =>
       val s0 = d.filter(col("lang") === l)
-      TextStats.mknTrigramNllAgainst(
-          s0, TextStats.trigramCounts(s0, "text"), "doc_id", "text")
+      TextStats.mknNgramNllAgainst(
+          s0, TextStats.ngramCounts(s0, "text", 3), "doc_id", "text", 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }.sortBy(_._1)
     assert(byLang.toSeq === sliced.toSeq)
@@ -158,11 +162,10 @@ class MknLmSpec extends GraftSuite {
     import spark.implicits._
     val probe = Seq((1L, "en", "a b c d"), (2L, "xx", "a b c d"))
       .toDF("doc_id", "lang", "text")
-    val model = TextStats.trigramCountsBy(
+    val model = TextStats.ngramCounts(
       Seq((10L, "en", "a b c a b c")).toDF("doc_id", "lang", "text"),
-      "text", "lang")
-    val out = TextStats.mknTrigramNllPerGroup(
-      probe, model, "lang", "doc_id", "text").collect()
+      "text", 3, Seq("lang"))
+    val out = perGroup(probe, model, "lang").collect()
     assert(out.map(_.getLong(0)).toSeq === Seq(1L))
   }
 }

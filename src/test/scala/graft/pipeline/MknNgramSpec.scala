@@ -4,12 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSuite
 
-/** Order-n modified-Kneser–Ney laws (C205): the generic estimator is
-  * BIT-EQUAL to the dedicated trigram implementation at order 3 (same
-  * expressions, same float evaluation order — the two paths cannot
-  * drift); ngramCounts generalizes trigramCounts exactly; order 5
-  * backs off through every level (doc-initial positions, unseen
-  * contexts, OOV) with every token finite.
+/** Order-n modified-Kneser–Ney laws (C205) — the engine's one MKN
+  * estimator (the order-3 trigram laws live in MknLmSpec): ngramCounts
+  * builds exact adjacent-tuple counts, with the group key riding the
+  * one aggregation; order 5 backs off through every level (doc-initial
+  * positions, unseen contexts, OOV) with every token finite; the
+  * at-rest index and its incremental refresh score bit-equal to the
+  * live derivation.
   */
 class MknNgramSpec extends GraftSuite {
 
@@ -26,23 +27,23 @@ class MknNgramSpec extends GraftSuite {
     "one two three four five six seven",
     "the end")
 
-  test("ngramCounts at order 3 == trigramCounts, row for row") {
-    val a = TextStats.ngramCounts(corpus, "text", 3)
-      .orderBy("w1", "w2", "w3").collect().toSeq
-    val b = TextStats.trigramCounts(corpus, "text")
-      .orderBy("w1", "w2", "w3").collect().toSeq
-    assert(a === b)
-  }
-
-  test("generic order 3 == mknTrigramNllAgainst BIT-FOR-BIT on cross-corpus scoring") {
-    val model3 = TextStats.trigramCounts(corpus, "text")
-    val probe = docs("the cat sat on a rug", "zz unseen words here",
-      "the", "one two", "a dog ran off")
-    val generic = TextStats.mknNgramNllAgainst(probe, model3, "doc_id", "text", 3)
-      .orderBy("doc_id").collect().toSeq
-    val dedicated = TextStats.mknTrigramNllAgainst(probe, model3, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    assert(generic === dedicated)
+  test("ngramCounts at order 3: hand-checked rows; grouped == per-slice counts with the key prepended") {
+    import spark.implicits._
+    // "a b c a b c" windows abc, bca, cab, abc; "a b c" adds abc; the
+    // 2-token doc has no trigram.
+    val d = Seq((0L, "x", "a b c a b c"), (1L, "y", "a b c"), (2L, "y", "a b"))
+      .toDF("doc_id", "g", "text")
+    val rows = TextStats.ngramCounts(d, "text", 3)
+      .orderBy("w1", "w2", "w3").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    assert(rows === Seq(("a", "b", "c", 3L), ("b", "c", "a", 1L), ("c", "a", "b", 1L)))
+    val grouped = TextStats.ngramCounts(d, "text", 3, Seq("g"))
+      .orderBy("g", "w1", "w2", "w3").collect().toSeq
+    val sliced = Seq("x", "y").flatMap(v =>
+      TextStats.ngramCounts(d.filter(col("g") === v), "text", 3)
+        .select(lit(v).as("g"), col("w1"), col("w2"), col("w3"), col("ct"))
+        .orderBy("w1", "w2", "w3").collect().toSeq)
+    assert(grouped === sliced)
   }
 
   test("order 5: every token scores finite — doc-initial backoff, unseen contexts, OOV after seen context") {

@@ -155,7 +155,7 @@ class ModelStoreSpec extends GraftSuite {
 
   test("n-gram: the count frame round-trips with its order; scoring through the loaded model is identical") {
     val d = docs("the cat sat on the mat", "the cat ran", "a dog sat")
-    val model = TextStats.trigramCounts(d, "text")
+    val model = TextStats.ngramCounts(d, "text", 3)
     val path = store("ngram")
     ModelStore.saveNgram(model, path, order = 3)
     val (loaded, order) = ModelStore.loadNgram(spark, path)
@@ -163,7 +163,7 @@ class ModelStoreSpec extends GraftSuite {
     assert(loaded.orderBy("w1", "w2", "w3").collect().toSeq ===
       model.orderBy("w1", "w2", "w3").collect().toSeq)
     def score(m: org.apache.spark.sql.DataFrame) =
-      TextStats.mknTrigramNllAgainst(d, m, "doc_id", "text")
+      TextStats.mknNgramNllAgainst(d, m, "doc_id", "text", 3)
         .orderBy("doc_id").collect().toSeq
     assert(score(loaded) === score(model))
     // Column-layout contract enforced at save.

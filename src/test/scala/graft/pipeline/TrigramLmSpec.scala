@@ -41,7 +41,7 @@ class TrigramLmSpec extends GraftSuite {
       "doc_id", "text").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(bi(0L) === bi(1L)) // order 2 is blind to the damage
     val tri = TextStats.trigramNllAgainst(
-      both, TextStats.trigramCounts(model, "text"), TextStats.bigramCounts(model, "text"),
+      both, TextStats.ngramCounts(model, "text", 3), TextStats.bigramCounts(model, "text"),
       TextStats.unigramCounts(model, "text"), "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(tri(0L) < tri(1L)) // order 3 collapses on the unseen contexts

@@ -70,11 +70,11 @@ class StreamingScoreSpec extends GraftSuite {
     (3L, "en", "zq xv qq zz vq xx qv zx"),
     (4L, "fr", "le chat dort sur le tapis")).toDF("doc_id", "lang", "text")
 
-  test("lm gate: frozen-model law — NLLs == batch mknTrigramNllAgainst, cutoffs route by CASE") {
-    val model = graft.pipeline.TextStats.trigramCounts(
-      lmDocs.filter(col("doc_id") <= 2), "text")
+  test("lm gate: frozen-model law — NLLs == batch mknNgramNllAgainst, cutoffs route by CASE") {
+    val model = graft.pipeline.TextStats.ngramCounts(
+      lmDocs.filter(col("doc_id") <= 2), "text", 3)
     val batchNll = graft.pipeline.TextStats
-      .mknTrigramNllAgainst(lmDocs, model, "doc_id", "text")
+      .mknNgramNllAgainst(lmDocs, model, "doc_id", "text", 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     // Cutoffs read off the en NLLs; the gate must replay the CASE rule.
     val en = Seq(1L, 2L, 3L).map(batchNll).sorted
@@ -101,7 +101,7 @@ class StreamingScoreSpec extends GraftSuite {
     val out = s"$scratch/out"
     def bundle(ver: Int, modelDocs: org.apache.spark.sql.DataFrame): Unit = {
       ModelStore.saveNgram(
-        TextStats.trigramCounts(modelDocs, "text"), s"$root/v=$ver/lm", order = 3)
+        TextStats.ngramCounts(modelDocs, "text", 3), s"$root/v=$ver/lm", order = 3)
       Seq(("en", 3.0, 6.0)).toDF("lang", "c1", "c2")
         .coalesce(1).write.mode("overwrite").parquet(s"$root/v=$ver/cutoffs")
     }
@@ -122,7 +122,7 @@ class StreamingScoreSpec extends GraftSuite {
       // A retrain IN FLIGHT: v2's lm landed, nothing published — the
       // next batch must still serve the complete v1.
       ModelStore.saveNgram(
-        TextStats.trigramCounts(lmDocs, "text"), s"$root/v=2/lm", order = 3)
+        TextStats.ngramCounts(lmDocs, "text", 3), s"$root/v=2/lm", order = 3)
       feed() // batch 1: still v1
       // The retrain completes and publishes: the NEXT batch boundary
       // picks up v2 — the running query follows the pointer.
@@ -139,8 +139,8 @@ class StreamingScoreSpec extends GraftSuite {
     // And the scores per batch are exactly the BATCH scoring under that
     // whole version's model — one complete version, never a mixture.
     def nllOf(modelDocs: org.apache.spark.sql.DataFrame): Map[Long, Double] =
-      TextStats.mknTrigramNllAgainst(
-          lmDocs, TextStats.trigramCounts(modelDocs, "text"), "doc_id", "text")
+      TextStats.mknNgramNllAgainst(
+          lmDocs, TextStats.ngramCounts(modelDocs, "text", 3), "doc_id", "text", 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val v1Nll = nllOf(lmDocs.filter(col("doc_id") <= 2))
     val v2Nll = nllOf(lmDocs)
@@ -152,7 +152,7 @@ class StreamingScoreSpec extends GraftSuite {
   }
 
   test("lm gate: per-batch directory overwrite makes a replayed batch a no-op") {
-    val model = graft.pipeline.TextStats.trigramCounts(lmDocs, "text")
+    val model = graft.pipeline.TextStats.ngramCounts(lmDocs, "text", 3)
     val path = graft.queries.Fixtures.scratchDir("graft-lmgate-spec") + "/out"
     def writeBatch(id: Long): Unit =
       StreamingScore.lmGate(lmDocs, "doc_id", "text", "lang", model,

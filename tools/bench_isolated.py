@@ -19,8 +19,6 @@ path, not the query, and accelerate the degradation for every later
 sample. One JVM per cell pays the fault tax once (untimed: Bench's
 warmup + iteration 1 absorb heap growth; the median over N shrugs off
 iteration 1), and the per-iteration raw samples still expose the spread.
-Between cells the runner best-effort compacts kernel memory to slow the
-machine-wide drift.
 
 Reported per cell: n, median, p25/p75, IQR, and raw samples.
 
@@ -54,19 +52,6 @@ ADD_OPENS = [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar",
 ]
-
-
-def compact_memory():
-    """Best-effort: ask the kernel to compact free memory between cells.
-
-    On the affected host the fault path partially recovers after
-    compaction; elsewhere this silently does nothing.
-    """
-    try:
-        with open("/proc/sys/vm/compact_memory", "w") as f:
-            f.write("1")
-    except OSError:
-        pass
 
 
 def run_cell(classes, query, iters, sf_dir, cpus, mem, timeout):
@@ -146,7 +131,6 @@ def main():
     }
     t0 = time.time()
     for cell in cells:
-        compact_memory()
         try:
             med, samples = run_cell(cell["classes"], cell["query"], args.iters,
                                     cell["sf_dir"], args.cpus, args.mem, args.timeout)
