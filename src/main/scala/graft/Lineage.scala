@@ -35,10 +35,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * [[free]] releases a superseded cut's storage: for a local checkpoint
   * it drops the block-manager blocks eagerly (waiting for the GC-driven
-  * ContextCleaner measurably leaks — the d22 12 → 63 s degradation);
-  * for a reliable checkpoint the files under the checkpoint dir are the
-  * cluster's to clean (`spark.cleaner.referenceTracking.cleanCheckpoints`
-  * or dir lifecycle policy), so it is a no-op there.
+  * ContextCleaner measurably leaks — the d22 12 → 63 s degradation).
+  * A reliable checkpoint is a leaf over the same kind of RDD, but one
+  * that holds no blocks: its storage is the files under the checkpoint
+  * dir, which are the cluster's to clean
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints` or dir lifecycle
+  * policy), so freeing it releases nothing.
   *
   * [[pinned]] is the scoped cache for a frame with several consumers
   * inside one operation; it never touches a cache its caller owns.
@@ -52,9 +54,11 @@ object Lineage {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(true)
 
-  /** Release the block-manager blocks behind a superseded [[cut]] leaf.
-    * No-op when `df` is not a leaf-RDD plan (e.g. a reliable checkpoint
-    * whose storage is files, or a frame that was never cut).
+  /** Release the block-manager blocks behind a superseded [[cut]] leaf
+    * (the `LogicalRDD` its plan reads). A reliable checkpoint is such a
+    * leaf too, but its RDD holds no blocks — its storage is checkpoint
+    * files, which this leaves in place — so freeing it does nothing; so
+    * does freeing a frame that was never cut (no `LogicalRDD` leaf).
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectFirst {

@@ -1,8 +1,10 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** The merge dataflow, declared entirely in the public DataFrame API so
   * Catalyst plans it (vectorized parquet scan → shuffle/broadcast join →
@@ -29,7 +31,12 @@ import org.apache.spark.sql.functions._
   * merge semantics; no driver-side collection anywhere; the filtered
   * complement (`unmatchedSlice`) is a second scan with the negated
   * predicate pushed down, so the union-back costs one extra pruned scan,
-  * not a shuffle.
+  * not a shuffle. Under a [[CoPartition]] (the partitioned apply's
+  * audit-off, unfiltered write) both sides instead shuffle on the target
+  * BUCKET of their keys, the bucket leading the join keys: the join's
+  * output is then already clustered the way the bucketed write lays out
+  * files, and that write adds no shuffle of its own — one shuffle per
+  * merge instead of two.
   *
   * Join strategy: the smaller side becomes a shuffled hash join's build
   * side only when Spark's own local-map size rule admits it — estimated
@@ -42,9 +49,16 @@ import org.apache.spark.sql.functions._
   * partitions. AQE does NOT split skew here: `OptimizeSkewedJoin` splits
   * only inner, cross, semi, anti and left/right outer joins, never the
   * merge's full outer one. `badKey` windows partition on the same keys
-  * the join shuffles on.
+  * the join shuffles on (bucket first when co-partitioned).
+  *
+  * @param coPartition partition both join sides on the target bucket
+  *                    of their keys; see [[CoPartition]]
   */
-final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: MergePlan) {
+final class MergeFrame(
+    val target: DataFrame,
+    val source: DataFrame,
+    val plan: MergePlan,
+    coPartition: Option[CoPartition] = None) {
   import MergeFrame._
 
   private val opts = plan.options
@@ -78,6 +92,21 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
         source(c.sourceName.get).cast(c.dataType).as(SrcPrefix + c.name)): _*)
       .withColumn(SPresent, lit(true))
 
+    // Co-partitioned join: each side's bucket column, hash-partitioned
+    // into cp.n, ahead of everything that needs a key distribution — the
+    // badKey rank below partitions on bucket + keys, which that
+    // partitioning already satisfies, so it adds no exchange either.
+    coPartition.foreach { cp =>
+      val keyTypes = plan.keyCols.map(_.dataType)
+      tSide = cp.partitioned(tSide, keyNames.map(t), keyTypes, JoinBucket)
+      sSide = cp.partitioned(sSide, keyNames.map(s), keyTypes, SrcPrefix + JoinBucket)
+    }
+    val (tRankKeys, sRankKeys) = {
+      val sKeys = keyNames.map(SrcPrefix + _)
+      if (coPartition.isEmpty) (keyNames, sKeys)
+      else (JoinBucket +: keyNames, (SrcPrefix + JoinBucket) +: sKeys)
+    }
+
     if (opts.badKey) {
       // A5/A8: duplicate-key disambiguation — row_number within key groups,
       // ordered by an arbitrary-but-stable-within-a-run id, the Spark analog
@@ -86,22 +115,24 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
       // With badKeySalt > 1 the rank is computed two-phase over salt
       // buckets so a hot key's sort spreads across badKeySalt tasks.
       if (opts.badKeySalt > 1) {
-        tSide = withSaltedRn(tSide, keyNames, Rn, opts.badKeySalt)
-        sSide = withSaltedRn(sSide, keyNames.map(SrcPrefix + _), SrcPrefix + Rn, opts.badKeySalt)
+        tSide = withSaltedRn(tSide, tRankKeys, Rn, opts.badKeySalt)
+        sSide = withSaltedRn(sSide, sRankKeys, SrcPrefix + Rn, opts.badKeySalt)
       } else {
-        val tw = Window.partitionBy(keyNames.map(col): _*).orderBy(monotonically_increasing_id())
-        val sw = Window.partitionBy(keyNames.map(n => col(SrcPrefix + n)): _*)
-          .orderBy(monotonically_increasing_id())
+        val tw = Window.partitionBy(tRankKeys.map(col): _*).orderBy(monotonically_increasing_id())
+        val sw = Window.partitionBy(sRankKeys.map(col): _*).orderBy(monotonically_increasing_id())
         tSide = tSide.withColumn(Rn, row_number().over(tw))
         sSide = sSide.withColumn(SrcPrefix + Rn, row_number().over(sw))
       }
     }
 
     // A6/A7: composite equi-join, null-safe per key column. `<=>` remains a
-    // hash-partitionable join key in Catalyst.
+    // hash-partitionable join key in Catalyst. A co-partitioned join leads
+    // with the bucket, which the key match implies (never NULL).
+    val bucketCond =
+      if (coPartition.isEmpty) Nil else Seq(col(JoinBucket) === col(SrcPrefix + JoinBucket))
     val keyCond = keyNames.map(k => t(k) <=> s(k))
     val rnCond = if (opts.badKey) Seq(col(Rn) === col(SrcPrefix + Rn)) else Nil
-    val cond = (keyCond ++ rnCond).reduce(_ && _)
+    val cond = (bucketCond ++ keyCond ++ rnCond).reduce(_ && _)
 
     // A9: MERGE == full outer join by match disposition.
     val (tJoin, sJoin) = withHashBuildSide(tSide, sSide)
@@ -153,12 +184,14 @@ final class MergeFrame(val target: DataFrame, val source: DataFrame, val plan: M
 
   /** The join sides, the smaller one hinted as a shuffled hash join's
     * build side when its estimated size is below Spark's local-map bound
-    * `autoBroadcastJoinThreshold × shuffle partitions` (see the class doc);
-    * unhinted otherwise, so Spark plans a sort-merge join.
+    * `autoBroadcastJoinThreshold × join partitions` (see the class doc) —
+    * the session's shuffle partitions, or a co-partitioned join's own
+    * count; unhinted otherwise, so Spark plans a sort-merge join.
     */
   private def withHashBuildSide(l: DataFrame, r: DataFrame): (DataFrame, DataFrame) = {
     val conf = l.sparkSession.sessionState.conf
-    val bound = BigInt(conf.autoBroadcastJoinThreshold) * conf.numShufflePartitions
+    val parts = coPartition.fold(conf.numShufflePartitions)(_.n)
+    val bound = BigInt(conf.autoBroadcastJoinThreshold) * parts
     def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val (ls, rs) = (size(l), size(r))
     if (ls.min(rs) >= bound) (l, r)
@@ -366,6 +399,7 @@ object MergeFrame {
   private[merge] val ActionCol = "__graft_action"
   private[merge] val ChangedCol = "__graft_changed"
   private[merge] val NmbsCol = "__graft_nmbs"
+  private[merge] val JoinBucket = "__graft_join_bucket"
 
   /** The A10 change predicate over (source, target) payload column pairs:
     * `!(s1 <=> t1 && … && sn <=> tn)`, the null-safe row comparison of
@@ -374,4 +408,47 @@ object MergeFrame {
     */
   private[merge] def changedOf(pairs: Seq[(Column, Column)]): Column =
     if (pairs.isEmpty) lit(false) else !pairs.map { case (s, t) => s <=> t }.reduce(_ && _)
+}
+
+/** Co-partitioning of a merge join on a [[PartitionSpec]]'s bucket
+  * function: both sides hash-partitioned on the bucket of their
+  * target-typed keys into `n` partitions, the bucket leading the join
+  * keys. The join's output is then clustered by bucket, so a bucketed
+  * write of it ([[PartitionedTarget.writeBuckets]] without a repartition)
+  * writes one file per bucket with no shuffle of its own.
+  *
+  * Spark keeps these two exchanges only when its planner lets a
+  * partitioning on a subset of the join keys serve the join, and only
+  * when their partition count is at least `spark.sql.shuffle.partitions`;
+  * otherwise it re-shuffles both sides on every key. [[planned]] runs the
+  * write under a thread-local copy of the session conf that allows both;
+  * the session conf itself is never written, so no other query — on this
+  * thread before or after, or on any other thread — sees the override.
+  */
+private[merge] final case class CoPartition(spec: PartitionSpec, n: Int) {
+  require(n > 0, s"co-partition count must be positive, got $n")
+
+  /** `df` with its join bucket in `name`, hash-partitioned on it into
+    * `n`. Floating keys bucket on their join-normalized value (-0.0 as
+    * 0.0), because the join matches -0.0 to 0.0 while their string forms,
+    * which the hash bucket follows, differ: the bucket must be implied by
+    * the key match. NaN needs nothing: every NaN has the string form
+    * "NaN".
+    */
+  def partitioned(df: DataFrame, keys: Seq[Column], types: Seq[DataType], name: String): DataFrame =
+    df.withColumn(name, spec.bucket(keys.zip(types).map {
+        case (k, dt @ (FloatType | DoubleType)) => when(k === 0, lit(0).cast(dt)).otherwise(k)
+        case (k, _) => k
+      }))
+      .repartition(n, col(name))
+
+  /** Run `body` — the query that consumes the co-partitioned join — with
+    * the planner settings the class doc names, on this thread only.
+    */
+  def planned[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.sessionState.conf.clone()
+    conf.setConf(SQLConf.REQUIRE_ALL_CLUSTER_KEYS_FOR_CO_PARTITION, false)
+    conf.setConf(SQLConf.SHUFFLE_PARTITIONS, n)
+    SQLConf.withExistingConf(conf)(body)
+  }
 }

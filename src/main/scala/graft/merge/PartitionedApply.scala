@@ -21,6 +21,21 @@ import org.apache.spark.sql.types.StructType
   *     are never opened, never rewritten — apply cost scales with the
   *     DELTA, not the target.
   *
+  * One shuffle per merge: with audit off and no `targetFilter`, the merge
+  * join is co-partitioned on the bucket ([[CoPartition]]) — both sides
+  * hash-partitioned on the target bucket of their keys into
+  * `min(touched, defaultParallelism)` partitions — so the join's output
+  * is already laid out one bucket per task and the staged write adds no
+  * shuffle of its own. The planner keeps that partitioning only under two
+  * settings the session normally forbids; the write query is planned
+  * under a thread-local copy of the session conf that carries them, so
+  * the session conf is never written and concurrent queries on other
+  * threads never see the override. An audit-on apply writes from the
+  * staged work copy, and a `targetFilter` apply unions the filter's
+  * complement back in: neither writes the join's output as it stands,
+  * so both keep the join on the merge keys and repartition the write by
+  * bucket.
+  *
   * Semantics: identical to a merge with the implicit target filter
   * "bucket(key) ∈ touched(source)" — the same scoping contract as the
   * reference's `@targetFilter` CTE (A3): rows outside the slice are
@@ -63,9 +78,16 @@ object PartitionedApply {
         // poison downstream arithmetic; VERDICT r3 "what's wrong" #4).
         MergeApply.stampLastUpdate(t.staging.fs, t.staging.target)
         MergeResult(0L, 0L, 0.0, committed = true)
-      } else
-        MergeApply.commit(new MergeFrame(t.slice(sliceSchema), t.delta, plan), thresholdPct,
-          t.staging, MergeApply.auditTarget(opts, targetPath, auditPath))(t.write, t.swap())
+      } else {
+        // Audit re-reads a staged work copy and a targetFilter unions its
+        // complement back: either way the written frame is not the join's
+        // output, so only an unfiltered audit-off apply co-partitions.
+        val coPartition =
+          if (opts.audit || opts.targetFilter.isDefined) None else Some(t.coPartition)
+        MergeApply.commit(new MergeFrame(t.slice(sliceSchema), t.delta, plan, coPartition),
+          thresholdPct, t.staging, MergeApply.auditTarget(opts, targetPath, auditPath))(
+          t.write(_, coPartition), t.swap())
+      }
     }
   }
 
@@ -109,17 +131,33 @@ object PartitionedApply {
         .getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], schema.getOrElse(bootstrap)))
 
+    /** Writer tasks for the touched buckets: one per bucket, at most one
+      * per core.
+      */
+    private def writers: Int = math.min(buckets.size, spark.sparkContext.defaultParallelism)
+
+    /** The merge join's co-partitioning on this target's buckets, into
+      * [[writers]] partitions.
+      */
+    def coPartition: CoPartition = CoPartition(spec, writers)
+
     /** Stage the new content of the touched buckets, one file per bucket
-      * on `min(touched, defaultParallelism)` writer tasks
-      * ([[PartitionedTarget.writeBuckets]]; the shuffle is on the
-      * delta-sized output only, and an Observation upstream of it still
-      * collects counts in this same job). A failed write leaves no staging
+      * on [[writers]] tasks. A frame that is the output of a join under
+      * `coPartition` is already clustered by bucket and is written as it
+      * stands, planned under [[CoPartition.planned]] — the join's shuffle
+      * is the write's. Any other frame is repartitioned by bucket first
+      * ([[PartitionedTarget.writeBuckets]]; that shuffle is on the
+      * delta-sized output only). Either way an Observation upstream still
+      * collects counts in this same job. A failed write leaves no staging
       * output behind.
       */
-    def write(df: DataFrame): Unit =
-      try PartitionedTarget.writeBuckets(df, spec, keys,
-        math.min(buckets.size, spark.sparkContext.defaultParallelism), staging.dir.toString)
-      catch { case e: Throwable => staging.fs.delete(staging.dir, true); throw e }
+    def write(df: DataFrame, coPartition: Option[CoPartition] = None): Unit = {
+      val dest = staging.dir.toString
+      try coPartition match {
+        case Some(cp) => cp.planned(spark)(PartitionedTarget.writeBuckets(df, spec, keys, None, dest))
+        case None => PartitionedTarget.writeBuckets(df, spec, keys, Some(writers), dest)
+      } catch { case e: Throwable => staging.fs.delete(staging.dir, true); throw e }
+    }
 
     /** Swap the staged buckets in; see [[swapBuckets]]. */
     def swap(): Unit = swapBuckets(spark, staging, buckets)

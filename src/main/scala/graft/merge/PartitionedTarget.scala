@@ -1,6 +1,7 @@
 package graft.merge
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
@@ -118,7 +119,7 @@ object PartitionedTarget {
     if (df.columns.exists(_.equalsIgnoreCase(BucketCol)))
       throw new MergeValidationException(s"Column [$BucketCol] uses the reserved __graft_ prefix")
     writeBuckets(df, spec, spec.keys,
-      math.min(spec.nBuckets, df.sparkSession.sparkContext.defaultParallelism), path)
+      Some(math.min(spec.nBuckets, df.sparkSession.sparkContext.defaultParallelism)), path)
     writeSpec(df.sparkSession, path, spec)
   }
 
@@ -129,16 +130,19 @@ object PartitionedTarget {
     * directory (tasks × buckets small files); with it each bucket lives
     * in exactly one task. The count is explicit because AQE coalesces an
     * expression-only repartition of a small output into very few tasks,
-    * which then write every bucket file serially. Shared by the full
-    * load ([[write]]) and the partition-scoped apply's staged write.
+    * which then write every bucket file serially. `nParts = None` skips
+    * the repartition, for a `df` already clustered by bucket (a
+    * [[CoPartition]]ed merge join). Shared by the full load ([[write]])
+    * and the partition-scoped apply's staged write.
     */
   private[merge] def writeBuckets(
-      df: DataFrame, spec: PartitionSpec, keys: Seq[String], nParts: Int,
-      dest: String): Unit =
-    df.withColumn(BucketCol, spec.bucket(keys.map(df(_))))
-      .repartition(nParts, col(BucketCol))
+      df: DataFrame, spec: PartitionSpec, keys: Seq[String], nParts: Option[Int],
+      dest: String): Unit = {
+    val bucketed = df.withColumn(BucketCol, spec.bucket(keys.map(df(_))))
+    nParts.fold(bucketed)(bucketed.repartition(_, col(BucketCol)))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy(BucketCol).parquet(dest)
+  }
 
   /** The logical table content — bucket column stripped. Filters on key
     * columns do NOT prune buckets (the hash is opaque to Catalyst); use
@@ -351,7 +355,11 @@ object PartitionedTarget {
       if (bucketDirs.isEmpty) entries.find(isDataFile)
       else bucketDirs.iterator.flatMap(st => fs.listStatus(st.getPath).find(isDataFile)).nextOption()
     footerFile.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      // Read options from the session's Configuration: the defaults build
+      // a fresh Configuration, re-parsing the Hadoop XML resources on
+      // every call.
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, conf), HadoopReadOptions.builder(conf).build())
       val rowSchema =
         try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))
         finally reader.close()

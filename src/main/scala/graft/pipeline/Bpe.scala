@@ -44,7 +44,8 @@ object Bpe {
 
   /** A trained tokenizer: the ordered merge table (driver-side — k rows
     * by construction) plus the distinct-word table with its final
-    * segmentation (`word`, `freq`, `seg`), persisted and materialized.
+    * segmentation (`word`, `freq`, `seg`), materialized: a lineage cut
+    * from [[train]], a driver-local table from [[trainLocal]].
     * `cappedOut` is [[trainLocal]]'s no-silent-caps diagnostic: how many
     * distinct words fell outside the frequency cap and carry the
     * character-fallback segmentation (always 0 for [[train]]).
@@ -347,19 +348,21 @@ object Bpe {
       }
       step += 1
     }
-    val cappedDf = capped.zip(segs).toSeq
-      .map { case ((w, f), s) => (w, f, s.mkString(" ")) }
-      .toDF("word", "freq", "seg")
+    val cappedRows = capped.zip(segs).map { case ((w, f), s) => (w, f, s.mkString(" ")) }
     // Tail words beyond the cap keep their initial (char/byte)
     // segmentation — the conservative no-merge fallback, counted,
     // never silent.
-    val tail = wf.join(cappedDf.select("word"), Seq("word"), "left_anti")
+    val tail = wf.join(capped.map(_._1).toSeq.toDF("word"), Seq("word"), "left_anti")
       .withColumn("seg", initSeg(col("word"), byteLevel))
       .select("word", "freq", "seg")
-    val words = cappedDf.unionByName(tail).persist()
-    val total = words.count()
+      .as[(String, Long, String)].collect()
     wf.unpersist(false)
-    BpeModel(merges.toSeq, words, cappedOut = total - capped.length,
+    // A driver-local table, like the merge table: every consumer
+    // broadcasts the word table, so it is driver-sized already, and a
+    // local relation holds no cached blocks that a caller would have to
+    // release.
+    val words = (cappedRows ++ tail).toSeq.toDF("word", "freq", "seg")
+    BpeModel(merges.toSeq, words, cappedOut = tail.length.toLong,
       byteLevel = byteLevel, tokenizer = tokenizer, reserved = reserved)
   }
 

@@ -37,21 +37,6 @@ object StreamingQueries {
 
   private val NBatches = 4
 
-  /** Untimed setup: build the stale-seeded range-bucketed target, collect
-    * the replay rows, start the continuous upsert. Returns (replay thunk —
-    * the measured operation: N micro-batches through the partition-scoped
-    * apply — and the target path for reading the converged state).
-    */
-  /** Run `body` (which must CREATE AND START a streaming query) with the
-    * session's shuffle-partition count pinned to `n`, restoring the
-    * previous value afterwards. The stateful operators' partitioning is
-    * frozen into the stream's fresh checkpoint at start, so this sizes
-    * the state stores without touching any other query. Rationale: the
-    * dominant harness cost of every stateful st-query is the
-    * per-(operator × partition × batch) state-store commit, NOT data —
-    * a real deployment sizes state partitions to key cardinality, which
-    * is tiny for these fixtures.
-    */
   /** Opt-in micro-batch cost attribution (the st1 SPARK_GRAFT_ST1_PROFILE
     * precedent, generalized): with SPARK_GRAFT_ST_PROFILE set, dump every
     * batch's full progress JSON — durationMs (addBatch vs WAL vs planning)
@@ -63,7 +48,24 @@ object StreamingQueries {
     if (sys.env.contains("SPARK_GRAFT_ST_PROFILE"))
       q.recentProgress.foreach(p => System.err.println(s"[st-profile:$tag] ${p.json}"))
 
-  private def pinnedStateParts[T](s: SparkSession, n: Int)(body: => T): T = {
+  /** Run `body` (which must CREATE AND START a streaming query) with the
+    * session's shuffle-partition count pinned to `n`, restoring the
+    * previous value afterwards. The stateful operators' partitioning is
+    * frozen into the stream's fresh checkpoint at start, so this sizes
+    * the state stores without touching any other query. Rationale: the
+    * dominant harness cost of every stateful st-query is the
+    * per-(operator × partition × batch) state-store commit, NOT data —
+    * a real deployment sizes state partitions to key cardinality, which
+    * is tiny for these fixtures.
+    *
+    * @param noDataBatches whether the stream keeps Spark's no-data
+    *        micro-batches. `false` turns them off for the stream under
+    *        the pin (below): safe only for a query whose results all
+    *        land in DATA batches — one that emits on watermark advance
+    *        alone (an append-mode windowed aggregation without trailing
+    *        sentinel batches) would never flush its last windows.
+    */
+  private def pinnedStateParts[T](s: SparkSession, n: Int, noDataBatches: Boolean)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     // No-data micro-batches exist to lower RESULT latency between
     // arrivals: after a data batch advances the watermark, Spark runs an
@@ -75,21 +77,27 @@ object StreamingQueries {
     // batches and ~40-50 % of replay wall time. A replay/backfill
     // stream — this harness, or any throughput-bound production
     // backfill — reads results at convergence, so the early emission
-    // buys nothing; disable it for the stream under this pin (scoped
-    // and restored, like the partition pin). Results are UNCHANGED at
-    // convergence: every real window/session flushes in the sentinel
-    // DATA batches by construction, and the only rows that no longer
-    // land are sentinel-window rows the declared reads filter out —
+    // buys nothing; a caller may disable it for the stream under this
+    // pin (scoped and restored, like the partition pin). Results are
+    // UNCHANGED at convergence for every caller here: every real
+    // window/session flushes in the sentinel DATA batches by
+    // construction, and the only rows that no longer land are
+    // sentinel-window rows the declared reads filter out —
     // oracle-pinned. A latency-sensitive live deployment keeps the
     // default; that trade is the operator's documented posture.
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(ndKey)
     s.conf.set(key, n.toString)
-    s.conf.set(ndKey, "false")
+    if (!noDataBatches) s.conf.set(ndKey, "false")
     try body finally { s.conf.set(key, prev); s.conf.set(ndKey, prevNd) }
   }
 
+  /** Untimed setup: build the stale-seeded range-bucketed target, collect
+    * the replay rows, start the continuous upsert. Returns (replay thunk —
+    * the measured operation: N micro-batches through the partition-scoped
+    * apply — and the target path for reading the converged state).
+    */
   private[graft] def st1Setup(s: SparkSession, dir: String): (() => Unit, String) = {
     import s.implicits._
     implicit val ctx: SQLContext = s.sqlContext
@@ -119,7 +127,7 @@ object StreamingQueries {
     // joins over ≤|batch| rows don't need 32-way shuffles. Measured
     // ~neutral at sf0.1 (st1's cost is the apply's bucket I/O, not
     // shuffle width) — kept for consistency with the stateful setups.
-    val replay = () => pinnedStateParts(s, 8) {
+    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
       try {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
         // Opt-in cost attribution (VERDICT r5 next #8): durationMs splits a
@@ -176,7 +184,7 @@ object StreamingQueries {
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     }
     val schema = ev.schema
-    val replay = () => pinnedStateParts(s, 8) {
+    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
       val q = StreamingUpsert.upsertTo(stream, target, Seq("event_id"), s"$scratch/cp")
@@ -202,7 +210,7 @@ object StreamingQueries {
     val rows = ev.as[(Long, Long, String, Double)].collect().sortBy(_._1)
     val per = math.max(1, (rows.length + NBatches - 1) / NBatches)
     val mem = MemoryStream[(Long, Long, String, Double)]
-    val q = pinnedStateParts(s, 8)(StreamingUpsert.dedupedAppendTo(
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(StreamingUpsert.dedupedAppendTo(
       mem.toDF().toDF("event_id", "user_id", "event_type", "value"),
       target, Seq("event_id"), s"$scratch/cp"))
     val replay = () =>
@@ -258,7 +266,7 @@ object StreamingQueries {
     val stream = mem.toDF().toDF("us", "event_type", "value")
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"), col("value"))
     val agg = StreamingUpsert.hourlyCounts(stream, "ts", "event_type", "value")
-    val q = pinnedStateParts(s, 8)(agg
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(agg
       .select(col("window.start").cast("timestamp_ntz").as("hour"), col("event_type"),
         col("n"), round(col("sum_value"), 2).as("sum_value"))
       .writeStream.outputMode("append").format("parquet")
@@ -301,7 +309,7 @@ object StreamingQueries {
     val stream = mem.toDF().toDF("user_id", "us")
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
       .withWatermark("ts", "1 hour")
-    val q = pinnedStateParts(s, 8)(
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(
       graft.streaming.StreamingSessionize.byGap(stream, "user_id", "ts", gapMinutes = 30)
         .toDF()
         .writeStream.outputMode("append").format("parquet")
@@ -694,7 +702,7 @@ object StreamingQueries {
     val agg = graft.streaming.StreamingUpsert.hourlyUniqueUsers(stream, "ts", "user_id")
     // Two chained stateful operators double the per-partition commit
     // cost — see pinnedStateParts.
-    val q = pinnedStateParts(s, 8)(agg
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(agg
       .select(col("window.start").cast("timestamp_ntz").as("hour"), col("n_users"))
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
@@ -729,7 +737,7 @@ object StreamingQueries {
       .as[(String, Long)].collect().sortBy(_._2)
     val per = math.max(1, (rows.length + NBatches - 1) / NBatches)
     val mem = MemoryStream[(String, Long)]
-    val q = pinnedStateParts(s, 8)(StreamingQuota.admit(mem.toDS(), quota = 15)
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(StreamingQuota.admit(mem.toDS(), quota = 15)
       .toDF("source", "doc_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
@@ -1275,7 +1283,7 @@ object StreamingQueries {
       mem.toDF().toDF("event_id", "user_id", "value"),
       dim, Seq("user_id" -> "c_custkey"))
       .select("event_id", "user_id", "value", "c_mktsegment", "n_name")
-    val q = pinnedStateParts(s, 8)(enriched
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(enriched
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
       .start())
@@ -1324,7 +1332,7 @@ object StreamingQueries {
       .select(col("click_id"), col("view_id"), col("click_user").as("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("view_ts")).as("view_us"))
-    val q = pinnedStateParts(s, 8)(joined
+    val q = pinnedStateParts(s, 8, noDataBatches = false)(joined
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
       .start())
@@ -1369,7 +1377,7 @@ object StreamingQueries {
     val w = graft.streaming.StreamingCdc.writer(stream, target, Seq("o_orderkey"))
       .option("checkpointLocation", s"$scratch/cp")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val replay = () => pinnedStateParts(s, 8) {
+    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
       val q = w.start()
       try q.awaitTermination() finally q.stop()
     }

@@ -111,4 +111,24 @@ class LineageSpec extends GraftSuite {
     assert(added.isEmpty,
       s"kCenters returns a driver-side frame; no round leaf may stay pinned, found ${added.size}")
   }
+
+  test("p13's CrawlStages chain: persistent RDDs back at baseline once the caller frees the frames it holds") {
+    import graft.queries.CrawlStages
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val shard = graft.queries.IngestQueries.warcCrawlNearFixture(spark, SparkTestBase.sf0001)
+    val (ingested, _) = CrawlStages.ingest(spark, shard)
+    val deduped = CrawlStages.dedup(CrawlStages.scrub(ingested))
+    val near = CrawlStages.nearDedup(deduped)
+    val routed = CrawlStages.route(spark, near)
+    val corpus = CrawlStages.gateSketch(routed)
+    val model = CrawlStages.trainTokenizer(corpus)
+    val (ids, seqs) = CrawlStages.packSequences(corpus, model)
+    assert(seqs.count() > 0L)
+    // The caller owns the cuts the stages hand back: release every leaf.
+    Seq(deduped, near, routed, corpus, ids, seqs).foreach(_.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(false)))
+    val added = spark.sparkContext.getPersistentRDDs -- before
+    assert(added.isEmpty, added.values.map(r => s"${r.id}:${r.getStorageLevel.description}").mkString(", "))
+  }
 }

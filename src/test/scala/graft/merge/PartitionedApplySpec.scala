@@ -5,7 +5,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.ShuffledJoin
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.GraftSuite
 import graft.pipeline.HashMode
@@ -702,5 +710,203 @@ class PartitionedApplySpec extends GraftSuite {
     finally writer.close()
     val inferred = spark.read.parquet(path).drop(PartitionedTarget.BucketCol).schema
     assert(PartitionedTarget.dataSchema(spark, path) === Some(inferred))
+  }
+
+  /** Every stored row of `path` as one string — each column cast to
+    * string, NULL as ∅ — sorted: compares -0.0, 0.0 and NaN by their
+    * stored form, which tuple equality would not.
+    */
+  private def storedRows(path: String): Seq[String] = {
+    val df = PartitionedTarget.read(spark, path)
+    df.select(concat_ws("|", df.columns.toIndexedSeq.map(c =>
+        coalesce(col(c).cast("string"), lit("∅"))): _*))
+      .as[String].collect().sorted.toSeq
+  }
+
+  /** Apply `source` to two identical targets: with audit off (the
+    * co-partitioned join and write) and with audit on (the join on the
+    * merge keys, then the repartitioning write). Both must leave the same
+    * rows and report the same affected count; each touched bucket ends in
+    * one data file either way.
+    */
+  private def assertCoPartitionedAgrees(
+      name: String, target: DataFrame, source: DataFrame, opts: MergeOptions): Unit = {
+    val Seq(coPartitioned, repartitioned) = Seq(false, true).map { audit =>
+      val path = freshDir(s"papply-diff-$name")
+      PartitionedTarget.write(target, path, spec)
+      val before = snapshotBuckets(path)
+      val r = MergeApply.applyToPartitioned(spark, path, source, opts.copy(audit = audit))
+      val after = snapshotBuckets(path)
+      val rewritten = after.keySet.diff(before.keySet).map(bucketOfPath)
+      val files = filesPerBucket(path)
+      rewritten.foreach(b => assert(files(b) === 1, s"$name audit=$audit: bucket $b files"))
+      (r.affectedRows, storedRows(path))
+    }
+    assert(coPartitioned === repartitioned, name)
+  }
+
+  test("co-partitioned apply == repartitioning apply: NULL keys, badKey, soft delete, target-only columns") {
+    val nullable = Seq[(Option[Long], String, Double)](
+      (None, "null-key", 1.0), (Some(1L), "a", 2.0), (Some(2L), "b", 3.0), (Some(3L), "c", 4.0))
+      .toDF("k", "name", "v")
+    assertCoPartitionedAgrees("nullkeys", nullable,
+      Seq[(Option[Long], String, Double)]((None, "NULL-KEY", 10.0), (Some(2L), "B", 30.0), (Some(9L), "i", 0.0))
+        .toDF("k", "name", "v"),
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+
+    // Duplicate keys on both sides; no source payload repeats a target
+    // payload of its key, so every pairing the rank picks updates.
+    val dups = Seq((1L, "a1", 1.0), (1L, "a2", 2.0), (2L, "b1", 3.0), (3L, "c1", 4.0), (3L, "c2", 5.0))
+      .toDF("k", "name", "v")
+    val dupSource = Seq((1L, "x", 9.0), (1L, "y", 9.0), (1L, "z", 9.0), (3L, "w", 9.0), (4L, "n", 9.0))
+      .toDF("k", "name", "v")
+    assertCoPartitionedAgrees("badkey", dups, dupSource,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete, badKey = true))
+    assertCoPartitionedAgrees("badkey-salted", dups, dupSource,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete, badKey = true, badKeySalt = 3))
+
+    val delta = Seq((5L, "N5", 500.0), (7L, "N7", 700.0), (1000L, "new", 1.0)).toDF("k", "name", "v")
+    assertCoPartitionedAgrees("softdelete", target60, delta,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.SoftDelete(Seq("name" -> "'gone'", "v" -> "v * -1"))))
+    assertCoPartitionedAgrees("targetonly", target60.withColumn("extra", concat(lit("x"), col("name"))),
+      delta, MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete))
+  }
+
+  test("co-partitioned apply == repartitioning apply: decimal and float->double upcast keys") {
+    val decimals = (0 until 64).map(i => (BigDecimal(i) / 4, s"n$i", i.toDouble)).toDF("k", "name", "v")
+      .withColumn("k", col("k").cast("decimal(12,4)"))
+    val narrow = narrowKeys(Seq(("0.25", "N1", 100.0), ("0.50", "N2", 200.0), ("99.75", "new", 1.0)))
+    assertSomeKeyRebuckets(narrow)
+    assertCoPartitionedAgrees("decimal", decimals, narrow,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+
+    val doubles = (0 until 40).map(i => (i * 0.25, s"n$i")).toDF("k", "name")
+    val floats = Seq((0.5f, "N"), (1.25f, "M"), (123.5f, "new")).toDF("k", "name")
+    assertCoPartitionedAgrees("float", doubles, floats,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete))
+  }
+
+  test("co-partitioned apply == repartitioning apply: double keys 0.0, -0.0 and NaN") {
+    val zeroBucket = Seq(0.0).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head()
+    val negZeroBucket = Seq(-0.0).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head()
+    assert(zeroBucket !== negZeroBucket, "precondition: -0.0 and 0.0 hash to different buckets")
+    // A source key that touches 0.0's bucket, so the slice holds the 0.0
+    // row that the join matches to the source's -0.0.
+    val sameAsZero = (1 until 200).map(_ * 1.5).find(k =>
+      Seq(k).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head() == zeroBucket).get
+    val target = (Seq(0.0, Double.NaN, sameAsZero) ++ (1 to 20).map(_.toDouble))
+      .map(k => (k, s"t$k")).toDF("k", "name")
+    val source = Seq((-0.0, "neg-zero"), (Double.NaN, "nan"), (sameAsZero, "same"), (77.0, "new"))
+      .toDF("k", "name")
+    assertCoPartitionedAgrees("doublekeys", target, source,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+    assertCoPartitionedAgrees("doublekeys-delete", target, source,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete))
+  }
+
+  test("a targetFilter apply keeps the repartitioning write: one file per touched bucket") {
+    val path = freshDir("papply-filtered")
+    PartitionedTarget.write(target60, path, spec)
+    val keys = Seq(3L, 5L, 7L, 11L, 13L, 1000L, 1001L)
+    val source = keys.map(k => (k, s"N$k", k * 10.0)).toDF("k", "name", "v")
+    val r = MergeApply.applyToPartitioned(spark, path, source,
+      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete, targetFilter = Some("v < 30")))
+    assert(r.committed)
+    val files = filesPerBucket(path)
+    bucketsOf(keys).values.toSet.foreach((b: Int) => assert(files.get(b) === Some(1), s"bucket $b files"))
+    // Rows outside the filter survive the delete; every source row lands.
+    val got = PartitionedTarget.read(spark, path).as[(Long, String, Double)].collect().toSet
+    assert(keys.forall(k => got.contains((k, s"N$k", k * 10.0))))
+    assert(got.contains((40L, "n40", 40.0)))
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The executed plan of the write query `body` runs (its one
+    * execution holding a `DataWritingCommandExec`, which AQE plans inside
+    * its final plan).
+    */
+  private def writePlan(body: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(200)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size === 1, s"write queries: ${plans.size}")
+    plans.peek()
+  }
+
+  /** The write plan of a co-partitioned apply: exactly two exchanges,
+    * both hash-partitioned on a join-bucket column into `n`, and a join
+    * whose keys lead with those columns.
+    */
+  private def assertCoPartitionedPlan(plan: SparkPlan, n: Int): Unit = {
+    val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 2, plan.toString)
+    exchanges.foreach(e => e.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), parts) =>
+        assert(a.name.endsWith(MergeFrame.JoinBucket) && parts === n, e.toString)
+      case other => fail(s"exchange not on the join bucket: $other")
+    })
+    val joins = Aqe.collect(plan) { case j: ShuffledJoin => j }
+    assert(joins.size === 1, plan.toString)
+    Seq(joins.head.leftKeys.head, joins.head.rightKeys.head).foreach {
+      case a: Attribute => assert(a.name.endsWith(MergeFrame.JoinBucket), joins.head.toString)
+      case other => fail(s"join key does not lead with the bucket: $other")
+    }
+  }
+
+  test("co-partitioned write plan: two exchanges on the bucket, join keys lead with it (touched < shuffle partitions, badKey)") {
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val path = freshDir("papply-plan")
+    PartitionedTarget.write(target60, path, spec)
+    // Two touched buckets: n = 2, below the session's shuffle partitions.
+    val two = bucketsOf(0L until 60L).groupBy(_._2).values.map(_.keys.min).take(2).toSeq
+    assert(bucketsOf(two).values.toSet.size === 2 && 2 < shufflePartitions)
+    val plan = writePlan {
+      MergeApply.applyToPartitioned(spark, path, two.map(k => (k, s"N$k", 1.0)).toDF("k", "name", "v"),
+        MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+    }
+    assertCoPartitionedPlan(plan, 2)
+
+    // badKey: the rank partitions on bucket + keys inside the same exchanges.
+    val keys = Seq(3L, 5L, 7L, 11L, 13L, 1000L, 1001L)
+    val n = math.min(bucketsOf(keys).values.toSet.size, spark.sparkContext.defaultParallelism)
+    val badKeyPlan = writePlan {
+      MergeApply.applyToPartitioned(spark, path,
+        (keys ++ keys).map(k => (k, s"N$k", 1.0)).toDF("k", "name", "v"),
+        MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore, badKey = true))
+    }
+    assertCoPartitionedPlan(badKeyPlan, n)
+    assert(filesPerBucket(path).values.forall(_ == 1))
+  }
+
+  test("co-partitioned apply runs 4 jobs and leaves the session's planner settings as they were") {
+    val path = freshDir("papply-jobs4")
+    PartitionedTarget.write(target60, path, spec)
+    val keys = Seq(3L, 5L, 7L, 11L, 13L, 1000L, 1001L)
+    val source = keys.map(k => (k, s"N$k", k * 10.0)).toDF("k", "name", "v")
+    val confKeys = Seq("spark.sql.requireAllClusterKeysForCoPartition", "spark.sql.shuffle.partitions")
+    val before = confKeys.map(k => spark.conf.getOption(k))
+    val jobs = jobStarts("papply-jobs4") {
+      MergeApply.applyToPartitioned(
+        spark, path, source, MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+    }
+    // The touched-bucket job, one map stage per join side, the write.
+    assert(jobs.size === 4, jobs.map(_.jobId).mkString(", "))
+    val files = filesPerBucket(path)
+    bucketsOf(keys).values.toSet.foreach((b: Int) => assert(files.get(b) === Some(1), s"bucket $b files"))
+    assert(confKeys.map(k => spark.conf.getOption(k)) === before)
+    assert(spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.REQUIRE_ALL_CLUSTER_KEYS_FOR_CO_PARTITION))
   }
 }
