@@ -115,7 +115,7 @@ object ChangeFeed {
     PartitionedApply.withTouched(spark, targetPath, feed, keys) { t =>
       if (t.buckets.nonEmpty) {
         val slice = t.slice(StructType(t.delta.schema.filterNot(_.name == opCol)))
-        t.write(apply(slice, t.delta, keys, opCol))
+        t.write(apply(slice, t.delta, keys, opCol), coPartition = None)
         t.swap()
         MergeApply.stampLastUpdate(t.staging.fs, t.staging.target)
       }

@@ -58,8 +58,10 @@ final class MergeFrame(
     val target: DataFrame,
     val source: DataFrame,
     val plan: MergePlan,
-    coPartition: Option[CoPartition] = None) {
+    private[merge] val coPartition: Option[CoPartition] = None) {
   import MergeFrame._
+  require(coPartition.isEmpty || CoPartition.admits(plan.keyCols.map(_.dataType)),
+    "co-partitioned merge join on keys that may match across buckets")
 
   private val opts = plan.options
   private def s(name: String): Column = col(SrcPrefix + name)
@@ -97,9 +99,8 @@ final class MergeFrame(
     // badKey rank below partitions on bucket + keys, which that
     // partitioning already satisfies, so it adds no exchange either.
     coPartition.foreach { cp =>
-      val keyTypes = plan.keyCols.map(_.dataType)
-      tSide = cp.partitioned(tSide, keyNames.map(t), keyTypes, JoinBucket)
-      sSide = cp.partitioned(sSide, keyNames.map(s), keyTypes, SrcPrefix + JoinBucket)
+      tSide = cp.partitioned(tSide, keyNames.map(t), JoinBucket)
+      sSide = cp.partitioned(sSide, keyNames.map(s), SrcPrefix + JoinBucket)
     }
     val (tRankKeys, sRankKeys) = {
       val sKeys = keyNames.map(SrcPrefix + _)
@@ -415,7 +416,8 @@ object MergeFrame {
   * target-typed keys into `n` partitions, the bucket leading the join
   * keys. The join's output is then clustered by bucket, so a bucketed
   * write of it ([[PartitionedTarget.writeBuckets]] without a repartition)
-  * writes one file per bucket with no shuffle of its own.
+  * writes one file per bucket with no shuffle of its own — as long as
+  * keys the join matches always share a bucket ([[CoPartition.admits]]).
   *
   * Spark keeps these two exchanges only when its planner lets a
   * partitioning on a subset of the join keys serve the join, and only
@@ -428,19 +430,11 @@ object MergeFrame {
 private[merge] final case class CoPartition(spec: PartitionSpec, n: Int) {
   require(n > 0, s"co-partition count must be positive, got $n")
 
-  /** `df` with its join bucket in `name`, hash-partitioned on it into
-    * `n`. Floating keys bucket on their join-normalized value (-0.0 as
-    * 0.0), because the join matches -0.0 to 0.0 while their string forms,
-    * which the hash bucket follows, differ: the bucket must be implied by
-    * the key match. NaN needs nothing: every NaN has the string form
-    * "NaN".
+  /** `df` with the bucket of `keys` in `name`, hash-partitioned on it
+    * into `n`.
     */
-  def partitioned(df: DataFrame, keys: Seq[Column], types: Seq[DataType], name: String): DataFrame =
-    df.withColumn(name, spec.bucket(keys.zip(types).map {
-        case (k, dt @ (FloatType | DoubleType)) => when(k === 0, lit(0).cast(dt)).otherwise(k)
-        case (k, _) => k
-      }))
-      .repartition(n, col(name))
+  def partitioned(df: DataFrame, keys: Seq[Column], name: String): DataFrame =
+    df.withColumn(name, spec.bucket(keys)).repartition(n, col(name))
 
   /** Run `body` — the query that consumes the co-partitioned join — with
     * the planner settings the class doc names, on this thread only.
@@ -451,4 +445,17 @@ private[merge] final case class CoPartition(spec: PartitionSpec, n: Int) {
     conf.setConf(SQLConf.SHUFFLE_PARTITIONS, n)
     SQLConf.withExistingConf(conf)(body)
   }
+}
+
+private[merge] object CoPartition {
+
+  /** Whether keys of these types always share a bucket when the join
+    * matches them. Floating keys do not: the join matches -0.0 to 0.0,
+    * but the bucket follows the string form, and "-0.0" and "0.0" may
+    * hash apart. A co-partitioned join would send a -0.0 row to 0.0's
+    * writer task while the write files it under -0.0's bucket, so that
+    * bucket would get a file from each of two tasks.
+    */
+  def admits(keyTypes: Seq[DataType]): Boolean =
+    !keyTypes.exists(dt => dt == FloatType || dt == DoubleType)
 }

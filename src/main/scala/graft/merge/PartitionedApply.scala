@@ -34,7 +34,8 @@ import org.apache.spark.sql.types.StructType
   * staged work copy, and a `targetFilter` apply unions the filter's
   * complement back in: neither writes the join's output as it stands,
   * so both keep the join on the merge keys and repartition the write by
-  * bucket.
+  * bucket. So does an apply on floating keys: the join matches -0.0 to
+  * 0.0, which may lie in different buckets ([[CoPartition.admits]]).
   *
   * Semantics: identical to a merge with the implicit target filter
   * "bucket(key) ∈ touched(source)" — the same scoping contract as the
@@ -81,12 +82,15 @@ object PartitionedApply {
       } else {
         // Audit re-reads a staged work copy and a targetFilter unions its
         // complement back: either way the written frame is not the join's
-        // output, so only an unfiltered audit-off apply co-partitions.
-        val coPartition =
-          if (opts.audit || opts.targetFilter.isDefined) None else Some(t.coPartition)
-        MergeApply.commit(new MergeFrame(t.slice(sliceSchema), t.delta, plan, coPartition),
-          thresholdPct, t.staging, MergeApply.auditTarget(opts, targetPath, auditPath))(
-          t.write(_, coPartition), t.swap())
+        // output. Floating keys may match across buckets
+        // (CoPartition.admits). Only the other applies co-partition, and
+        // the write reads that choice off the frame.
+        val coPartitioned = !opts.audit && opts.targetFilter.isEmpty &&
+          CoPartition.admits(plan.keyCols.map(_.dataType))
+        val frame = new MergeFrame(t.slice(sliceSchema), t.delta, plan,
+          if (coPartitioned) Some(t.coPartition) else None)
+        MergeApply.commit(frame, thresholdPct, t.staging,
+          MergeApply.auditTarget(opts, targetPath, auditPath))(t.write(_, frame.coPartition), t.swap())
       }
     }
   }
@@ -142,16 +146,17 @@ object PartitionedApply {
     def coPartition: CoPartition = CoPartition(spec, writers)
 
     /** Stage the new content of the touched buckets, one file per bucket
-      * on [[writers]] tasks. A frame that is the output of a join under
-      * `coPartition` is already clustered by bucket and is written as it
-      * stands, planned under [[CoPartition.planned]] — the join's shuffle
-      * is the write's. Any other frame is repartitioned by bucket first
+      * on [[writers]] tasks. `coPartition` is the co-partitioning of the
+      * merge join `df` is the output of ([[MergeFrame.coPartition]]), if
+      * any: such a frame is already clustered by bucket and is written as
+      * it stands, planned under [[CoPartition.planned]] — the join's
+      * shuffle is the write's. Any other frame is repartitioned by bucket first
       * ([[PartitionedTarget.writeBuckets]]; that shuffle is on the
       * delta-sized output only). Either way an Observation upstream still
       * collects counts in this same job. A failed write leaves no staging
       * output behind.
       */
-    def write(df: DataFrame, coPartition: Option[CoPartition] = None): Unit = {
+    def write(df: DataFrame, coPartition: Option[CoPartition]): Unit = {
       val dest = staging.dir.toString
       try coPartition match {
         case Some(cp) => cp.planned(spark)(PartitionedTarget.writeBuckets(df, spec, keys, None, dest))

@@ -45,7 +45,8 @@ object Bpe {
   /** A trained tokenizer: the ordered merge table (driver-side — k rows
     * by construction) plus the distinct-word table with its final
     * segmentation (`word`, `freq`, `seg`), materialized: a lineage cut
-    * from [[train]], a driver-local table from [[trainLocal]].
+    * from [[train]], a driver-local table from [[trainLocal]] (every
+    * distinct word, held on the driver while the model lives).
     * `cappedOut` is [[trainLocal]]'s no-silent-caps diagnostic: how many
     * distinct words fell outside the frequency cap and carry the
     * character-fallback segmentation (always 0 for [[train]]).
@@ -230,8 +231,13 @@ object Bpe {
     * by `wordCap`, the same vocabulary argument [[train]] already
     * makes), and the k merges run in memory with an incremental
     * pair-count index — per-merge cost is an in-memory map update, not
-    * a cluster round trip. The result broadcasts back as the same
-    * (word, freq, seg) table [[encode]]/[[fertility]] already consume.
+    * a cluster round trip. The model's word table is the same
+    * (word, freq, seg) table [[encode]]/[[fertility]] already consume,
+    * as a driver-local relation: every distinct word, capped-out tail
+    * included, is collected and held on the driver for the model's
+    * lifetime (every consumer broadcasts that table, so it must fit
+    * there anyway). `wordCap` bounds the merge learning only, not the
+    * driver memory.
     *
     * THE CAP CONTRACT, stated honestly: merges are learned from the
     * top-`wordCap` words by (freq DESC, word ASC — Spark/DuckDB binary
@@ -278,7 +284,7 @@ object Bpe {
     wf.count()
     TextOps.requireGrainConsistent(
       guardWordTable(wf, maxWordChars, byteLevel), tokenizer)
-    // The ONE driver-side collect: TakeOrdered top-wordCap — bounded by
+    // The merge-learning collect: TakeOrdered top-wordCap — bounded by
     // the cap, never by the corpus.
     val capped = wf.orderBy(desc("freq"), asc("word")).limit(wordCap)
       .collect().map(r => (r.getString(0), r.getLong(1)))
@@ -357,7 +363,8 @@ object Bpe {
       .select("word", "freq", "seg")
       .as[(String, Long, String)].collect()
     wf.unpersist(false)
-    // A driver-local table, like the merge table: every consumer
+    // A driver-local table, like the merge table, held at the full
+    // distinct-word count for the model's lifetime: every consumer
     // broadcasts the word table, so it is driver-sized already, and a
     // local relation holds no cached blocks that a caller would have to
     // release.

@@ -58,14 +58,13 @@ object StreamingQueries {
     * a real deployment sizes state partitions to key cardinality, which
     * is tiny for these fixtures.
     *
-    * @param noDataBatches whether the stream keeps Spark's no-data
-    *        micro-batches. `false` turns them off for the stream under
-    *        the pin (below): safe only for a query whose results all
-    *        land in DATA batches — one that emits on watermark advance
-    *        alone (an append-mode windowed aggregation without trailing
-    *        sentinel batches) would never flush its last windows.
+    * The pin also turns off Spark's no-data micro-batches for the stream
+    * (below). That is safe only for a query whose results all land in
+    * DATA batches: one that emits on watermark advance alone (an
+    * append-mode windowed aggregation without trailing sentinel batches)
+    * would never flush its last windows under it.
     */
-  private def pinnedStateParts[T](s: SparkSession, n: Int, noDataBatches: Boolean)(body: => T): T = {
+  private def pinnedStateParts[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     // No-data micro-batches exist to lower RESULT latency between
     // arrivals: after a data batch advances the watermark, Spark runs an
@@ -77,19 +76,18 @@ object StreamingQueries {
     // batches and ~40-50 % of replay wall time. A replay/backfill
     // stream — this harness, or any throughput-bound production
     // backfill — reads results at convergence, so the early emission
-    // buys nothing; a caller may disable it for the stream under this
-    // pin (scoped and restored, like the partition pin). Results are
-    // UNCHANGED at convergence for every caller here: every real
-    // window/session flushes in the sentinel DATA batches by
-    // construction, and the only rows that no longer land are
-    // sentinel-window rows the declared reads filter out —
+    // buys nothing; disable it for the stream under this pin (scoped
+    // and restored, like the partition pin). Results are UNCHANGED at
+    // convergence: every real window/session flushes in the sentinel
+    // DATA batches by construction, and the only rows that no longer
+    // land are sentinel-window rows the declared reads filter out —
     // oracle-pinned. A latency-sensitive live deployment keeps the
     // default; that trade is the operator's documented posture.
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(ndKey)
     s.conf.set(key, n.toString)
-    if (!noDataBatches) s.conf.set(ndKey, "false")
+    s.conf.set(ndKey, "false")
     try body finally { s.conf.set(key, prev); s.conf.set(ndKey, prevNd) }
   }
 
@@ -127,7 +125,7 @@ object StreamingQueries {
     // joins over ≤|batch| rows don't need 32-way shuffles. Measured
     // ~neutral at sf0.1 (st1's cost is the apply's bucket I/O, not
     // shuffle width) — kept for consistency with the stateful setups.
-    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
+    val replay = () => pinnedStateParts(s, 8) {
       try {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
         // Opt-in cost attribution (VERDICT r5 next #8): durationMs splits a
@@ -184,7 +182,7 @@ object StreamingQueries {
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     }
     val schema = ev.schema
-    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
+    val replay = () => pinnedStateParts(s, 8) {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
       val q = StreamingUpsert.upsertTo(stream, target, Seq("event_id"), s"$scratch/cp")
@@ -210,7 +208,7 @@ object StreamingQueries {
     val rows = ev.as[(Long, Long, String, Double)].collect().sortBy(_._1)
     val per = math.max(1, (rows.length + NBatches - 1) / NBatches)
     val mem = MemoryStream[(Long, Long, String, Double)]
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(StreamingUpsert.dedupedAppendTo(
+    val q = pinnedStateParts(s, 8)(StreamingUpsert.dedupedAppendTo(
       mem.toDF().toDF("event_id", "user_id", "event_type", "value"),
       target, Seq("event_id"), s"$scratch/cp"))
     val replay = () =>
@@ -266,7 +264,7 @@ object StreamingQueries {
     val stream = mem.toDF().toDF("us", "event_type", "value")
       .select(timestamp_micros(col("us")).as("ts"), col("event_type"), col("value"))
     val agg = StreamingUpsert.hourlyCounts(stream, "ts", "event_type", "value")
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(agg
+    val q = pinnedStateParts(s, 8)(agg
       .select(col("window.start").cast("timestamp_ntz").as("hour"), col("event_type"),
         col("n"), round(col("sum_value"), 2).as("sum_value"))
       .writeStream.outputMode("append").format("parquet")
@@ -309,7 +307,7 @@ object StreamingQueries {
     val stream = mem.toDF().toDF("user_id", "us")
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
       .withWatermark("ts", "1 hour")
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(
+    val q = pinnedStateParts(s, 8)(
       graft.streaming.StreamingSessionize.byGap(stream, "user_id", "ts", gapMinutes = 30)
         .toDF()
         .writeStream.outputMode("append").format("parquet")
@@ -702,7 +700,7 @@ object StreamingQueries {
     val agg = graft.streaming.StreamingUpsert.hourlyUniqueUsers(stream, "ts", "user_id")
     // Two chained stateful operators double the per-partition commit
     // cost — see pinnedStateParts.
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(agg
+    val q = pinnedStateParts(s, 8)(agg
       .select(col("window.start").cast("timestamp_ntz").as("hour"), col("n_users"))
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
@@ -737,7 +735,7 @@ object StreamingQueries {
       .as[(String, Long)].collect().sortBy(_._2)
     val per = math.max(1, (rows.length + NBatches - 1) / NBatches)
     val mem = MemoryStream[(String, Long)]
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(StreamingQuota.admit(mem.toDS(), quota = 15)
+    val q = pinnedStateParts(s, 8)(StreamingQuota.admit(mem.toDS(), quota = 15)
       .toDF("source", "doc_id")
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
@@ -1283,7 +1281,7 @@ object StreamingQueries {
       mem.toDF().toDF("event_id", "user_id", "value"),
       dim, Seq("user_id" -> "c_custkey"))
       .select("event_id", "user_id", "value", "c_mktsegment", "n_name")
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(enriched
+    val q = pinnedStateParts(s, 8)(enriched
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
       .start())
@@ -1332,7 +1330,7 @@ object StreamingQueries {
       .select(col("click_id"), col("view_id"), col("click_user").as("user_id"),
         unix_micros(col("click_ts")).as("click_us"),
         unix_micros(col("view_ts")).as("view_us"))
-    val q = pinnedStateParts(s, 8, noDataBatches = false)(joined
+    val q = pinnedStateParts(s, 8)(joined
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", s"$scratch/cp")
       .start())
@@ -1377,7 +1375,7 @@ object StreamingQueries {
     val w = graft.streaming.StreamingCdc.writer(stream, target, Seq("o_orderkey"))
       .option("checkpointLocation", s"$scratch/cp")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val replay = () => pinnedStateParts(s, 8, noDataBatches = false) {
+    val replay = () => pinnedStateParts(s, 8) {
       val q = w.start()
       try q.awaitTermination() finally q.stop()
     }

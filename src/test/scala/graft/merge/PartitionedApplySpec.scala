@@ -786,22 +786,46 @@ class PartitionedApplySpec extends GraftSuite {
       MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete))
   }
 
-  test("co-partitioned apply == repartitioning apply: double keys 0.0, -0.0 and NaN") {
-    val zeroBucket = Seq(0.0).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head()
-    val negZeroBucket = Seq(-0.0).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head()
+  test("double keys 0.0, -0.0 and NaN keep the repartitioning write: rows as with audit on, one file per touched bucket") {
+    def bucketOf(k: Double): Int = Seq(k).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head()
+    val (zeroBucket, negZeroBucket) = (bucketOf(0.0), bucketOf(-0.0))
     assert(zeroBucket !== negZeroBucket, "precondition: -0.0 and 0.0 hash to different buckets")
-    // A source key that touches 0.0's bucket, so the slice holds the 0.0
-    // row that the join matches to the source's -0.0.
-    val sameAsZero = (1 until 200).map(_ * 1.5).find(k =>
-      Seq(k).toDF("k").select(spec.bucket(Seq(col("k")))).as[Int].head() == zeroBucket).get
-    val target = (Seq(0.0, Double.NaN, sameAsZero) ++ (1 to 20).map(_.toDouble))
-      .map(k => (k, s"t$k")).toDF("k", "name")
-    val source = Seq((-0.0, "neg-zero"), (Double.NaN, "nan"), (sameAsZero, "same"), (77.0, "new"))
-      .toDF("k", "name")
-    assertCoPartitionedAgrees("doublekeys", target, source,
-      MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
-    assertCoPartitionedAgrees("doublekeys-delete", target, source,
-      MergeOptions(keys = Seq("k"), delete = DeleteMode.Delete))
+    // Keys stored beside 0.0 and beside -0.0 in their bucket directories:
+    // touching 0.0's bucket puts the 0.0 row that the join matches to a
+    // source -0.0 in the slice, and -0.0's directory gets rows from a
+    // -0.0 row and from a key that does not compare equal to 0.0.
+    def beside(b: Int): Double = (1 until 200).map(_ * 1.5).find(bucketOf(_) == b).get
+    val (besideZero, besideNegZero) = (beside(zeroBucket), beside(negZeroBucket))
+    def rows(keys: Seq[Double], prefix: String): DataFrame = keys.map(k => (k, s"$prefix$k")).toDF("k", "name")
+    val others = (1 to 20).map(_.toDouble)
+    // Stored 0.0 matched by a source -0.0; stored -0.0 matched by a
+    // source 0.0 or kept; an unmatched -0.0 insert. Each touches at
+    // least three buckets.
+    val storedZero = rows(Seq(0.0, Double.NaN, besideZero) ++ others, "t")
+    val storedNegZero = rows(Seq(-0.0, Double.NaN, besideNegZero) ++ others, "t")
+    val noZero = rows(Seq(Double.NaN, besideNegZero) ++ others, "t")
+    val insertNegZero = rows(Seq(-0.0, besideNegZero, 77.0), "s")
+    for {
+      (name, target, source) <- Seq(
+        ("matched-zero", storedZero, rows(Seq(-0.0, Double.NaN, besideZero, 77.0), "s")),
+        ("matched-negzero", storedNegZero, rows(Seq(0.0, besideNegZero, 77.0), "s")),
+        ("kept-negzero", storedNegZero, rows(Seq(besideNegZero, 3.0, 77.0), "s")),
+        ("inserted-negzero", noZero, insertNegZero))
+      delete <- Seq(DeleteMode.Ignore, DeleteMode.Delete)
+    } assertCoPartitionedAgrees(s"doublekeys-$name-$delete", target, source,
+      MergeOptions(keys = Seq("k"), delete = delete))
+
+    // Floating keys never co-partition: the write repartitions by bucket.
+    val path = freshDir("papply-doublekeys-plan")
+    PartitionedTarget.write(noZero, path, spec)
+    val plan = writePlan {
+      MergeApply.applyToPartitioned(spark, path, insertNegZero,
+        MergeOptions(keys = Seq("k"), delete = DeleteMode.Ignore))
+    }
+    val exchangeCols = Aqe.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case HashPartitioning(Seq(a: Attribute), _) => a.name }
+    assert(exchangeCols.contains(PartitionedTarget.BucketCol), plan.toString)
+    assert(!exchangeCols.exists(_.endsWith(MergeFrame.JoinBucket)), plan.toString)
   }
 
   test("a targetFilter apply keeps the repartitioning write: one file per touched bucket") {
