@@ -47,6 +47,7 @@ object Bench {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.install(spark)
     // Steady-state warmup (untimed): one trivial job so the first timed
     // query doesn't absorb executor startup + first-codegen costs that a
     // long-lived cluster never pays per query. Guarded — a broken sfDir

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -33,14 +34,13 @@ import org.apache.spark.storage.StorageLevel
   * over them — results are bit-identical (spec-pinned in LineageSpec);
   * only where the materialized rows LIVE differs.
   *
-  * [[free]] releases a superseded cut's storage: for a local checkpoint
-  * it drops the block-manager blocks eagerly (waiting for the GC-driven
-  * ContextCleaner measurably leaks — the d22 12 → 63 s degradation).
-  * A reliable checkpoint is a leaf over the same kind of RDD, but one
-  * that holds no blocks: its storage is the files under the checkpoint
-  * dir, which are the cluster's to clean
-  * (`spark.cleaner.referenceTracking.cleanCheckpoints` or dir lifecycle
-  * policy), so freeing it releases nothing.
+  * [[free]] releases a superseded cut's storage eagerly, for either
+  * kind: a local checkpoint's block-manager blocks (waiting for the
+  * GC-driven ContextCleaner measurably leaks — the d22 12 → 63 s
+  * degradation), or a reliable checkpoint's files under the checkpoint
+  * dir (the ContextCleaner deletes those only under
+  * `spark.cleaner.referenceTracking.cleanCheckpoints`, off by default,
+  * so otherwise they stay for the session).
   *
   * [[pinned]] is the scoped cache for a frame with several consumers
   * inside one operation; it never touches a cache its caller owns.
@@ -54,16 +54,21 @@ object Lineage {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(true)
 
-  /** Release the block-manager blocks behind a superseded [[cut]] leaf
-    * (the `LogicalRDD` its plan reads). A reliable checkpoint is such a
-    * leaf too, but its RDD holds no blocks — its storage is checkpoint
-    * files, which this leaves in place — so freeing it does nothing; so
-    * does freeing a frame that was never cut (no `LogicalRDD` leaf).
+  /** Release the storage behind a superseded [[cut]] (a frame whose plan
+    * is one `LogicalRDD` leaf): a local checkpoint's block-manager blocks,
+    * a reliable checkpoint's files. The frame is unreadable afterwards.
+    * Any other frame is left alone, including one derived from a cut,
+    * whose leaf may be a frame its caller still holds.
     */
-  def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false))
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD =>
+      l.rdd.unpersist(false)
+      l.rdd.getCheckpointFile.foreach { f =>
+        val dir = new Path(f)
+        dir.getFileSystem(l.rdd.sparkContext.hadoopConfiguration).delete(dir, true)
+      }
+    case _ =>
+  }
 
   /** Run `body` with `df` cached (MEMORY_AND_DISK) for its duration — for
     * a frame that several jobs of one operation consume, so its lineage

@@ -16,6 +16,7 @@ object Verify {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.install(spark)
     new java.io.File(outDir).mkdirs()
     // Dev loop (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): dump a subset.
     // The driver never sets it, so round verifies stay complete.

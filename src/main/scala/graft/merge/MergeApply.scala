@@ -423,7 +423,11 @@ private[graft] final case class Staging(fs: FileSystem, target: Path, token: Str
 }
 
 private[graft] object Staging {
+  /** Every staged writer starts here, so this is also where the session's
+    * `file:` writes are made fork-free ([[graft.LocalFs.install]]).
+    */
   def apply(spark: SparkSession, targetPath: String): Staging = {
+    graft.LocalFs.install(spark)
     val tgt = new Path(targetPath)
     Staging(tgt.getFileSystem(spark.sparkContext.hadoopConfiguration), tgt,
       UUID.randomUUID().toString.take(8))

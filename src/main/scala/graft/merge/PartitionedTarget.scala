@@ -118,6 +118,7 @@ object PartitionedTarget {
       throw new MergeValidationException(s"Partition spec keys missing from frame: ${missing.mkString(",")}")
     if (df.columns.exists(_.equalsIgnoreCase(BucketCol)))
       throw new MergeValidationException(s"Column [$BucketCol] uses the reserved __graft_ prefix")
+    graft.LocalFs.install(df.sparkSession)
     writeBuckets(df, spec, spec.keys,
       Some(math.min(spec.nBuckets, df.sparkSession.sparkContext.defaultParallelism)), path)
     writeSpec(df.sparkSession, path, spec)

@@ -40,6 +40,7 @@ object CrawlDemo {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     def p(msg: String): Unit = println(s"[demo] $msg")
 

@@ -31,6 +31,7 @@ object CrawlProfile {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     val times = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     def phase[T](name: String)(body: => T): T = {

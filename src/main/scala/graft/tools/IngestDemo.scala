@@ -34,6 +34,7 @@ object IngestDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
     def log(m: String): Unit = println(s"[demo] $m")
 
     val schema = graft.queries.IngestQueries.jsonlSchema

@@ -22,6 +22,7 @@ object MergeDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     // target: 90% of orders, some prices perturbed; source: the truth.

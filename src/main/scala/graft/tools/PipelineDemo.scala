@@ -41,6 +41,7 @@ object PipelineDemo {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     val raw = spark.read.parquet(s"$sfDir/documents.parquet")
     println(s"[demo] raw corpus: ${raw.count()} docs")

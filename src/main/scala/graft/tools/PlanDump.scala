@@ -31,6 +31,7 @@ object PlanDump {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (which == "all") graft.SparkEntry.queries.keys.toSeq.sorted

@@ -28,6 +28,7 @@ object RecallProbe {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     val v = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
     val n = v.count()

@@ -54,6 +54,7 @@ object ScaleFixture {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
 
     def copies(df: DataFrame): DataFrame =
       df.crossJoin(broadcast(spark.range(k).select(col("id").as("__copy"))))

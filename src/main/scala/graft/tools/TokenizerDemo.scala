@@ -32,6 +32,7 @@ object TokenizerDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.LocalFs.install(spark)
     import spark.implicits._
     def log(m: String): Unit = println(s"[demo] $m")
 

@@ -40,8 +40,8 @@ class LineageSpec extends GraftSuite {
       // Same rows either way — the flag moves WHERE the rows live, never
       // what they are.
       assert(rel.orderBy("k").collect().toSeq == local.orderBy("k").collect().toSeq)
-      Lineage.free(rel) // no-op on a reliable leaf; frame stays readable
       assert(rel.count() == 7)
+      Lineage.free(rel)
     } finally {
       // Local mode: setCheckpointDir(null) resets to None (the non-local
       // path-validation branch is skipped when isLocal).
@@ -49,6 +49,28 @@ class LineageSpec extends GraftSuite {
       Lineage.free(local)
     }
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
+  test("free deletes a superseded reliable cut's checkpoint files, and only a cut's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-free").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      val held = Lineage.cut(frame())
+      val heldFile = new java.io.File(new java.net.URI(leafRdd(held).get.getCheckpointFile.get))
+      // A frame derived from a cut is not a cut: its leaf is `held`.
+      Lineage.free(held.filter(col("k") > 0))
+      assert(heldFile.isDirectory && held.count() == 7)
+
+      val superseded = Lineage.cut(frame())
+      val file = new java.io.File(new java.net.URI(leafRdd(superseded).get.getCheckpointFile.get))
+      assert(file.isDirectory && file.list().exists(_.startsWith("part-")),
+        "a reliable cut's rows live in checkpoint part files")
+      Lineage.free(superseded)
+      assert(!file.exists, s"free left the checkpoint files of a superseded cut at $file")
+      assert(heldFile.isDirectory && held.count() == 7, "free touched another cut's files")
+      Lineage.free(held)
+      assert(!heldFile.exists)
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("operators under a reliable checkpoint dir: GraphRank/kCenters results hash-equal") {

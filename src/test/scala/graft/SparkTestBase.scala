@@ -17,6 +17,7 @@ object SparkTestBase {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LocalFs.install(s)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
