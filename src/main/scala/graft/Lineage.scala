@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage-cut policy for the iterative operators (GraphRank,
-  * Dedup.clusters/clustersAlternating, Bpe.train, kCenters, the frozen
+  * Dedup.clusters, Bpe.train, kCenters, the frozen
   * LM-gate table pinning, the CrawlStages seams).
   *
   * These operators materialize an intermediate once per round and join

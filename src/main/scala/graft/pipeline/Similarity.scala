@@ -402,6 +402,13 @@ object Similarity {
     * fan-out is bucket occupancy, never |corpus|² (the same scale shape as
     * the banded-MinHash text dedup).
     *
+    * Scoped like [[Dedup.withJaccardPairs]]: the bucket assignment
+    * (broadcast-centroid crossJoin + rank window + occupancy window) feeds
+    * BOTH sides of the pair self-join, so it is pinned while `f` runs
+    * (without the pin Catalyst recomputes that whole lineage twice —
+    * VERDICT r5 "what's wrong" #3, e3's bench double-compute) and
+    * released when `f` returns.
+    *
     * @param bucketCap drop buckets holding more than this many vectors
     *                  before pairing (VERDICT r2 "what's wrong" #1): the
     *                  within-bucket join fans out quadratically in
@@ -409,67 +416,35 @@ object Similarity {
     *                  the SAME bucket by construction — the exact workload
     *                  this operator targets is the one that blows it up.
     *                  Same occupancy-window pattern as
-    *                  [[Dedup.minhashLshPairs]]'s bucketCap; unlike LSH
+    *                  [[Dedup.withMinhashLshPairs]]'s bucketCap; unlike LSH
     *                  there is no second band to recover a dropped bucket,
     *                  so run [[Dedup.exact]] first for duplicate floods,
     *                  or raise the cap knowing cost grows with cap².
-    * @return (vec_a, vec_b, sim) with vec_a < vec_b, sim rounded to 6.
-    *         The persisted bucket assignment lives until the session ends
-    *         (or eviction) — use [[cosineNearDupPairsHandle]] /
-    *         [[withCosineNearDupPairs]] to release it, exactly like the
-    *         [[Dedup.jaccardPairs]] family.
-    */
-  def cosineNearDupPairs(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      bucketCap: Int = 10000): DataFrame =
-    cosineNearDupPairsHandle(vectors, centroids, idCol, vecCol, threshold, bucketCap).pairs
-
-  /** [[cosineNearDupPairs]] returning a [[Dedup.PairsHandle]] so the
-    * persisted bucket assignment can be released once the result is
-    * consumed. The assignment frame (broadcast-centroid crossJoin + rank
-    * window + occupancy window) feeds BOTH sides of the pair self-join;
-    * without the persist Catalyst recomputes that whole lineage twice
-    * (VERDICT r5 "what's wrong" #3 — e3's bench double-compute). Same
-    * persist-and-release discipline as [[Dedup.jaccardPairsHandle]].
-    */
-  def cosineNearDupPairsHandle(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      bucketCap: Int = 10000): Dedup.PairsHandle = {
-    val dp = dotOn(vectors.sparkSession)
-    val b = assignBuckets(vectors, centroids, idCol, vecCol)
-      .withColumn("__occ", count(lit(1)).over(Window.partitionBy("bucket")))
-      .filter(col("__occ") <= bucketCap)
-      .drop("__occ")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = b.as("x").join(
-        b.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.vid") < col("y.vid"))
-      .withColumn("sim", round(dp(col("x.__v"), col("y.__v")) / (col("x.__vn") * col("y.__vn")), 6))
-      .filter(col("sim") >= threshold)
-      .select(col("x.vid").as("vec_a"), col("y.vid").as("vec_b"), col("sim"))
-    new Dedup.PairsHandle(pairs, Seq(b))
-  }
-
-  /** Run `f` over the cosine near-dup pair frame, releasing the persisted
-    * bucket assignment when it returns — `f` must CONSUME the frame
-    * (count/collect/write), not return it lazily.
+    * @param f receives (vec_a, vec_b, sim) with vec_a < vec_b, sim
+    *          rounded to 6.
     */
   def withCosineNearDupPairs[T](
-      vectors: DataFrame, centroids: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, bucketCap: Int = 10000)(f: DataFrame => T): T = {
-    val h = cosineNearDupPairsHandle(vectors, centroids, idCol, vecCol, threshold, bucketCap)
-    try f(h.pairs) finally h.release()
+      vectors: DataFrame,
+      centroids: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double,
+      bucketCap: Int = 10000)(f: DataFrame => T): T = {
+    val dp = dotOn(vectors.sparkSession)
+    graft.Lineage.pinned(assignBuckets(vectors, centroids, idCol, vecCol)
+        .withColumn("__occ", count(lit(1)).over(Window.partitionBy("bucket")))
+        .filter(col("__occ") <= bucketCap)
+        .drop("__occ")) { b =>
+      f(b.as("x").join(
+          b.as("y"),
+          col("x.bucket") === col("y.bucket") && col("x.vid") < col("y.vid"))
+        .withColumn("sim", round(dp(col("x.__v"), col("y.__v")) / (col("x.__vn") * col("y.__vn")), 6))
+        .filter(col("sim") >= threshold)
+        .select(col("x.vid").as("vec_a"), col("y.vid").as("vec_b"), col("sim")))
+    }
   }
 
-  /** Deterministic Rademacher (±1) hyperplanes for [[hyperplaneLshPairs]]:
+  /** Deterministic Rademacher (±1) hyperplanes for [[withHyperplaneLshPairs]]:
     * `nBits` planes of `dim` components each, derived from
     * `java.util.Random` seeded per plane (the LCG is pinned by its Javadoc
     * spec, so the matrix is identical on every JVM). For random-projection
@@ -541,7 +516,7 @@ object Similarity {
     * near-identical vectors (θ ≈ 0) collide in every band while unrelated
     * ones are scattered across 2^bandBits buckets per band.
     *
-    * The data-independent complement of [[cosineNearDupPairs]]: IVF
+    * The data-independent complement of [[withCosineNearDupPairs]]: IVF
     * buckets adapt to the data's density (better candidate quality) but
     * need a centroid model; hyperplane LSH needs none — the right tool
     * when no training pass has run, for streaming ingest against stable
@@ -552,16 +527,21 @@ object Similarity {
     * row, no shuffle); the candidate join keys on (band, bucket) with
     * fan-out = bucket occupancy, never corpus²; `bucketCap` drops
     * degenerate buckets (mass-duplicated vectors collide in EVERY band by
-    * construction) exactly like [[Dedup.minhashLshPairs]]' cap, and a
+    * construction) exactly like [[Dedup.withMinhashLshPairs]]' cap, and a
     * capped bucket's members can still pair through their other bands.
     * Verification touches the distinct candidate set only.
     *
+    * Scoped like [[Dedup.withJaccardPairs]]: the slim signature and norm
+    * frames are pinned while `f` runs — sig feeds BOTH sides of the
+    * candidate join, vecs both verification joins, and without the pins
+    * Catalyst recomputes the signature/norm lineage per use (the e3/d3
+    * lesson).
+    *
     * @param dim vector dimensionality (the plane matrix is driver-side
     *            literal constants, so it cannot be inferred lazily)
-    * @return [[Dedup.PairsHandle]] over (vec_a, vec_b, sim), vec_a < vec_b,
-    *         sim rounded to 6 — release it once the result is consumed.
+    * @param f receives (vec_a, vec_b, sim), vec_a < vec_b, sim rounded to 6.
     */
-  def hyperplaneLshPairsHandle(
+  def withHyperplaneLshPairs[T](
       vectors: DataFrame,
       idCol: String,
       vecCol: String,
@@ -570,51 +550,26 @@ object Similarity {
       nBits: Int = 16,
       bandBits: Int = 8,
       seed: Int = 7,
-      bucketCap: Int = 10000): Dedup.PairsHandle = {
-    // Slim persisted frames: sig feeds BOTH sides of the candidate join,
-    // vecs feeds both verification joins — without the persists Catalyst
-    // recomputes the signature/norm lineage per use (the e3/d3 lesson).
+      bucketCap: Int = 10000)(f: DataFrame => T): T = {
     val dp = dotOn(vectors.sparkSession)
-    val vecs = withNorm(vectors, idCol, vecCol, "vid", "__v", "__vn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sig = signatureOf(vecs, dim, nBits, bandBits, seed)
-      .withColumn("__occ", count(lit(1)).over(Window.partitionBy("band", "bucket")))
-      .filter(col("__occ") <= bucketCap)
-      .drop("__occ")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val candidates = sig.as("a")
-      .join(sig.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vid") < col("b.vid"))
-      .select(col("a.vid").as("vec_a"), col("b.vid").as("vec_b"))
-      .distinct()
-
-    val pairs = candidates
-      .join(vecs.as("va"), col("vec_a") === col("va.vid"))
-      .join(vecs.as("vb"), col("vec_b") === col("vb.vid"))
-      .withColumn("sim",
-        round(dp(col("va.__v"), col("vb.__v")) / (col("va.__vn") * col("vb.__vn")), 6))
-      .filter(col("sim") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("sim"))
-    new Dedup.PairsHandle(pairs, Seq(vecs, sig))
+    graft.Lineage.pinned(hyperplaneNorms(vectors, idCol, vecCol)) { vecs =>
+      graft.Lineage.pinned(cappedSignatures(vecs, dim, nBits, bandBits, seed, bucketCap)) { sig =>
+        val candidates = sig.as("a")
+          .join(sig.as("b"),
+            col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+              col("a.vid") < col("b.vid"))
+          .select(col("a.vid").as("vec_a"), col("b.vid").as("vec_b"))
+          .distinct()
+        f(candidates
+          .join(vecs.as("va"), col("vec_a") === col("va.vid"))
+          .join(vecs.as("vb"), col("vec_b") === col("vb.vid"))
+          .withColumn("sim",
+            round(dp(col("va.__v"), col("vb.__v")) / (col("va.__vn") * col("vb.__vn")), 6))
+          .filter(col("sim") >= threshold)
+          .select(col("vec_a"), col("vec_b"), col("sim")))
+      }
+    }
   }
-
-  /** [[hyperplaneLshPairsHandle]] without the release plumbing — the
-    * persisted signature frames live until session end or eviction.
-    */
-  def hyperplaneLshPairs(
-      vectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double,
-      nBits: Int = 16,
-      bandBits: Int = 8,
-      seed: Int = 7,
-      bucketCap: Int = 10000): DataFrame =
-    hyperplaneLshPairsHandle(
-      vectors, idCol, vecCol, dim, threshold, nBits, bandBits, seed, bucketCap).pairs
 
   /** (id, vector, norm) projection with the operator-internal column names
     * the hyperplane family uses — the entry point for callers (streaming
@@ -622,6 +577,19 @@ object Similarity {
     */
   private[graft] def hyperplaneNorms(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     withNorm(df, idCol, vecCol, "vid", "__v", "__vn")
+
+  /** [[signatureOf]] minus every (band, bucket) holding more than
+    * `bucketCap` vectors: degenerate buckets (mass-duplicated vectors
+    * collide in every band) are dropped whole, so no pairing ever pays a
+    * quadratic bucket fan-out.
+    */
+  private[graft] def cappedSignatures(
+      vecs: DataFrame, dim: Int, nBits: Int, bandBits: Int, seed: Int,
+      bucketCap: Int): DataFrame =
+    signatureOf(vecs, dim, nBits, bandBits, seed)
+      .withColumn("__occ", count(lit(1)).over(Window.partitionBy("band", "bucket")))
+      .filter(col("__occ") <= bucketCap)
+      .drop("__occ")
 
   /** Exploded (vid, band, bucket) sign signatures of a [[hyperplaneNorms]]
     * frame — map-only: nBits codegen'd dots per row, no shuffle.
@@ -647,8 +615,8 @@ object Similarity {
 
   /** Incremental hyperplane-LSH near-dup: every (new, corpus) pair with
     * cosine >= threshold among candidates sharing a band bucket — the
-    * delta-ingest twin of [[hyperplaneLshPairs]] (the role
-    * [[Dedup.incrementalJaccardPairs]] plays for the shingle family).
+    * delta-ingest twin of [[withHyperplaneLshPairs]] (the role
+    * [[Dedup.withIncrementalJaccardPairs]] plays for the shingle family).
     * Candidates are delta × corpus only — the corpus never self-pairs, so
     * a daily delta against a 100 TB corpus costs |delta| signatures plus
     * bucket-local joins, never a corpus re-pairing.
@@ -657,10 +625,12 @@ object Similarity {
     * side is uncapped (a batch is small by construction). Because the
     * planes are data-independent constants, corpus signatures never go
     * stale — unlike IVF centroids, there is no drift to re-train away.
+    * Scoped like [[withHyperplaneLshPairs]]: the corpus norms and capped
+    * signatures and the delta norms are pinned while `f` runs.
     *
-    * @return (new_id, corpus_id, sim), sim rounded to 6.
+    * @param f receives (new_id, corpus_id, sim), sim rounded to 6.
     */
-  def hyperplaneIncrementalPairsHandle(
+  def withHyperplaneIncrementalPairs[T](
       newVecs: DataFrame,
       corpus: DataFrame,
       idCol: String,
@@ -670,37 +640,18 @@ object Similarity {
       nBits: Int = 16,
       bandBits: Int = 8,
       seed: Int = 7,
-      bucketCap: Int = 10000): Dedup.PairsHandle = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cVecs = hyperplaneNorms(corpus, idCol, vecCol).persist(lvl)
-    val cSig = signatureOf(cVecs, dim, nBits, bandBits, seed)
-      .withColumn("__occ", count(lit(1)).over(Window.partitionBy("band", "bucket")))
-      .filter(col("__occ") <= bucketCap)
-      .drop("__occ")
-      .persist(lvl)
-    val nVecs = hyperplaneNorms(newVecs, idCol, vecCol).persist(lvl)
-    val pairs = incrementalPairsAgainst(nVecs, cSig, cVecs, dim, threshold, nBits, bandBits, seed)
-    new Dedup.PairsHandle(pairs, Seq(cVecs, cSig, nVecs))
-  }
-
-  /** [[hyperplaneIncrementalPairsHandle]] without the release plumbing. */
-  def hyperplaneIncrementalPairs(
-      newVecs: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      threshold: Double,
-      nBits: Int = 16,
-      bandBits: Int = 8,
-      seed: Int = 7,
-      bucketCap: Int = 10000): DataFrame =
-    hyperplaneIncrementalPairsHandle(
-      newVecs, corpus, idCol, vecCol, dim, threshold, nBits, bandBits, seed, bucketCap).pairs
+      bucketCap: Int = 10000)(f: DataFrame => T): T =
+    graft.Lineage.pinned(hyperplaneNorms(corpus, idCol, vecCol)) { cVecs =>
+      graft.Lineage.pinned(cappedSignatures(cVecs, dim, nBits, bandBits, seed, bucketCap)) { cSig =>
+        graft.Lineage.pinned(hyperplaneNorms(newVecs, idCol, vecCol)) { nVecs =>
+          f(incrementalPairsAgainst(nVecs, cSig, cVecs, dim, threshold, nBits, bandBits, seed))
+        }
+      }
+    }
 
   /** Delta-side pairing against PRE-STAGED corpus frames (capped
     * signatures + norm payloads) — the per-micro-batch core shared by
-    * [[hyperplaneIncrementalPairsHandle]] and the streaming ingest path,
+    * [[withHyperplaneIncrementalPairs]] and the streaming ingest path,
     * which prepares the corpus once and calls this per batch.
     */
   private[graft] def incrementalPairsAgainst(
@@ -735,7 +686,7 @@ object Similarity {
   private[graft] val SigStreamBatchFile = "_graft_stream_batch"
 
   /** Persist the hyperplane-LSH signature index — the at-rest form of the
-    * [[hyperplaneIncrementalPairs]] corpus side (the C82/d23 protocol
+    * [[withHyperplaneIncrementalPairs]] corpus side (the C82/d23 protocol
     * applied to the e6 detector): the corpus is signatured ONCE EVER,
     * every later delta probes `(band, bucket, vid)` rows off disk and
     * appends its own, and no corpus vector is ever re-signatured. The
@@ -813,14 +764,14 @@ object Similarity {
       .groupBy("band", "bucket").agg(count(lit(1)).as("occ"))
   }
 
-  /** [[hyperplaneIncrementalPairs]] against the AT-REST index: the delta
+  /** [[withHyperplaneIncrementalPairs]] against the AT-REST index: the delta
     * is signatured in memory with the PINNED plane family, the corpus
     * side reads `(band, bucket, vid)` rows off disk, and the occupancy
     * cap is an ANTI-JOIN against the (tiny, broadcast) set of over-cap
     * buckets read off the occ cache — no count window over the corpus
     * signatures, no corpus vector touched outside the probed buckets'
     * verify joins. Result contract identical to
-    * [[hyperplaneIncrementalPairs]] over the same corpus (spec-pinned
+    * [[withHyperplaneIncrementalPairs]] over the same corpus (spec-pinned
     * row-for-row).
     */
   def pairsAgainstSignatureIndex(
@@ -1027,7 +978,7 @@ object Similarity {
     * (so placement is consistent with every existing row) and appended
     * under its bucket directories — only the touched buckets gain files,
     * untouched directories are never opened. The index twin of
-    * [[Dedup.incrementalJaccardPairs]]'s delta-vs-corpus shape: a daily
+    * [[Dedup.withIncrementalJaccardPairs]]'s delta-vs-corpus shape: a daily
     * embedding increment costs the increment, not the corpus.
     *
     * Caller contract: ids disjoint from the existing index (append is
@@ -1130,7 +1081,7 @@ object Similarity {
     *                   row — at 100 TB this is the difference between a
     *                   model fit and a full scan per round)
     * @return (idCol: centroid id 0..k-1, vecCol: array<double>) — feed to
-    *         [[ivfTopK]] / [[cosineNearDupPairs]]
+    *         [[ivfTopK]] / [[withCosineNearDupPairs]]
     */
   def trainCentroids(
       vectors: DataFrame,
@@ -2096,11 +2047,11 @@ object Similarity {
     * minhash / simhash) cannot see — different words, same meaning — for
     * the cost of the embedding pass the corpus already paid.
     *
-    * Composition, not new machinery: [[cosineNearDupPairsHandle]]
+    * Composition, not new machinery: [[withCosineNearDupPairs]]
     * generates the pair frame (centroid-bucketed self-join under an
     * occupancy cap — never corpus²), [[Dedup.pruneDuplicates]] resolves
-    * transitive duplicate groups (BSP min-label propagation, one job per
-    * round) and LEFT ANTI joins the corpus against the non-canonical
+    * transitive duplicate groups ([[Dedup.clusters]]' O(log n)-round star
+    * contraction) and LEFT ANTI joins the corpus against the non-canonical
     * members — the embedding-space instance of the d10 keep-one pipeline.
     *
     * Scale shape inherits both parents: centroids broadcast, one shuffle
@@ -2126,12 +2077,10 @@ object Similarity {
       threshold: Double,
       bucketCap: Int = 10000,
       maxIters: Int = 30): DataFrame = {
-    val h = cosineNearDupPairsHandle(vectors, centroids, idCol, vecCol, threshold, bucketCap)
-    // pruneDuplicates checkpoints the cluster frame inside the call, so
-    // releasing the handle's persisted bucket assignment afterwards leaves
-    // the returned (lazy) anti-join evaluable — the withJaccardPairs
-    // contract the d10 query relies on.
-    try Dedup.pruneDuplicates(vectors, h.pairs, idCol, maxIters, "vec_a", "vec_b")
-    finally h.release()
+    // pruneDuplicates cuts the cluster frame inside the scope, so the
+    // returned (lazy) anti-join stays evaluable after the bucket
+    // assignment is released — the d10 composition.
+    withCosineNearDupPairs(vectors, centroids, idCol, vecCol, threshold, bucketCap)(
+      pairs => Dedup.pruneDuplicates(vectors, pairs, idCol, maxIters, "vec_a", "vec_b"))
   }
 }

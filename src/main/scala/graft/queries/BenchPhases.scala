@@ -404,9 +404,9 @@ object BenchPhases {
     "d23_index_neardup" -> ((s, dir) => {
       val (idxPath, newDocs) = PipelineQueries.d23Setup(s, dir)
       () => {
-        graft.pipeline.Dedup.jaccardPairsAgainstIndex(
+        graft.pipeline.Dedup.withJaccardPairsAgainstIndex(
           s, idxPath, newDocs, "doc_id", "text",
-          PipelineQueries.DfCap, PipelineQueries.JaccardThreshold).count()
+          PipelineQueries.DfCap, PipelineQueries.JaccardThreshold)(_.count())
         ()
       }
     }),

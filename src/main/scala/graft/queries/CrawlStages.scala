@@ -54,8 +54,10 @@ private[graft] object CrawlStages {
     * kept) AFTER exact dedup — a real crawl runs both: republication
     * mirrors collapse on the fingerprint, boilerplate-padded
     * near-copies need the shingle index. Candidate generation is
-    * df-capped and bucketed (never corpus²); the pair indexes release
-    * when the prune materializes (the d10 scoped-handle discipline).
+    * df-capped and bucketed (never corpus²); the pair indexes are pinned
+    * only inside the generator's scope, and the prune's loser side is
+    * `clusters`' cut, so the stage's cut after the scope reads no
+    * released pin.
     */
   def nearDedup(deduped: DataFrame): DataFrame =
     graft.pipeline.Dedup.withJaccardPairs(deduped, "doc_id", "text",

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Lineage
 import graft.pipeline.{Bpe, Classifier, Dedup, HashMode, ModelStore, Multimodal, Sampling, Similarity, SpecialTokens, TextOps, TextStats, Unigram, Vocab}
 
 /** Driver-contract queries for the training-data-pipeline operator family
@@ -276,13 +277,22 @@ $bandSelects
 
   // ---- queries ----
 
+  /** d9/d22: [[Dedup.clusters]] over the d2 pairs. `clusters` returns a
+    * cut, so the pair indexes are released before the frame is returned.
+    */
+  private val dupClusters: (SparkSession, String) => DataFrame = (s, dir) =>
+    Dedup.withJaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
+      pairs => Dedup.clusters(pairs))
+      .orderBy("doc_id")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d1_exact_dedup" -> ((s, dir) =>
       Dedup.exact(docsDupAug(s, dir), "doc_id", "text")
         .select("doc_id", "lang", "source", "n_chars", "n_copies")
         .orderBy("doc_id")),
     "d2_neardup_jaccard" -> ((s, dir) =>
-      Dedup.jaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold)
+      Dedup.withJaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
+        Lineage.cut)
         .orderBy("doc_a", "doc_b")),
     // Production-hash twin of d2 (the d3/d6 pattern): the identical
     // inverted-index jaccard pipeline with shingles keyed by xxhash64
@@ -291,12 +301,12 @@ $bandSelects
     // keeps the exact oracle. The bench line prices the md5→xxhash64
     // saving on the string-shuffle-free index at the same SF.
     "d7_neardup_jaccard_fast" -> ((s, dir) =>
-      Dedup.jaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold,
-        HashMode.Xxhash64)
+      Dedup.withJaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold,
+        HashMode.Xxhash64)(Lineage.cut)
         .orderBy("doc_a", "doc_b")),
     "d3_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashLshPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, Bands, RowsPerBand,
-        JaccardThreshold, BucketCap)
+      Dedup.withMinhashLshPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, Bands, RowsPerBand,
+        JaccardThreshold, BucketCap)(Lineage.cut)
         .orderBy("doc_a", "doc_b")),
     // Production-hash twin of d3: the identical LSH pipeline through
     // xxhash64 (codegen'd — no per-shingle md5 digests, the cost that makes
@@ -304,8 +314,8 @@ $bandSelects
     // records the weaker rows-only check here; d3 keeps the exact oracle.
     // The bench line quantifies the md5→xxhash64 saving at the same SF.
     "d6_minhash_lsh_fast" -> ((s, dir) =>
-      Dedup.minhashLshPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, Bands, RowsPerBand,
-        JaccardThreshold, BucketCap, HashMode.Xxhash64)
+      Dedup.withMinhashLshPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, Bands, RowsPerBand,
+        JaccardThreshold, BucketCap, HashMode.Xxhash64)(Lineage.cut)
         .orderBy("doc_a", "doc_b")),
     "d4_simhash" -> ((s, dir) =>
       Dedup.simhash(docsNearAug(s, dir), "doc_id", "text")
@@ -383,8 +393,8 @@ $bandSelects
     // its source while its jaccard (~0.19) is invisible to d2's
     // symmetric threshold. Same inverted-index + dfCap shape as d2.
     "d21_containment" -> ((s, dir) =>
-      Dedup.containmentPairs(docsQuoteAug(s, dir), "doc_id", "text",
-        ShingleN, DfCap, threshold = 0.8)
+      Dedup.withContainmentPairs(docsQuoteAug(s, dir), "doc_id", "text",
+        ShingleN, DfCap, threshold = 0.8)(Lineage.cut)
         .orderBy("doc_a", "doc_b")),
     // Incremental novelty (C66 / d20): today's delta (near-copies of
     // every 25th doc) scored against the corpus's published shingle
@@ -977,7 +987,7 @@ $bandSelects
         "doc_id", "dhash", maxHamming = 4, bits = 56, bucketCap = 100)
         .orderBy("doc_a", "doc_b")),
     // Image keep-one-per-cluster (mm8): mm7's pairs resolved by the SAME
-    // BSP min-label machinery the lexical d10 pipeline uses — transitive
+    // `clusters` + `pruneDuplicates` the lexical d10 pipeline uses — transitive
     // perceptual-dup groups collapse to their min-id canonical, unpaired
     // images pass through. No image-specific dedup code anywhere.
     "mm8_image_dedup" -> ((s, dir) => {
@@ -1889,7 +1899,8 @@ $bandSelects
       val newDocs = d.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 200000).as("doc_id"),
           concat(col("text"), lit(" zq zq zq")).as("text"))
-      Dedup.incrementalJaccardPairs(newDocs, d, "doc_id", "text", ShingleN, DfCap, JaccardThreshold)
+      Dedup.withIncrementalJaccardPairs(newDocs, d, "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
+        Lineage.cut)
         .orderBy("new_id", "corpus_id")
     }),
     // Persisted shingle index (C82 / d23): d12's check against the AT-REST
@@ -1899,7 +1910,8 @@ $bandSelects
     // setup, like e4's IVF index).
     "d23_index_neardup" -> ((s, dir) => {
       val (idxPath, newDocs) = d23Setup(s, dir)
-      Dedup.jaccardPairsAgainstIndex(s, idxPath, newDocs, "doc_id", "text", DfCap, JaccardThreshold)
+      Dedup.withJaccardPairsAgainstIndex(s, idxPath, newDocs, "doc_id", "text", DfCap, JaccardThreshold)(
+        Lineage.cut)
         .orderBy("new_id", "corpus_id")
     }),
     // Cross-source overlap matrix (C83 / d24): corpus-level republication
@@ -1910,7 +1922,7 @@ $bandSelects
       val mirrored = d.unionByName(
         d.filter(col("source") === "src0").select((col("doc_id") + 500000).as("doc_id"),
           lit("srcM").as("source"), col("text")))
-      Dedup.sourceOverlap(mirrored, "doc_id", "source", "text", ShingleN)
+      Dedup.withSourceOverlap(mirrored, "doc_id", "source", "text", ShingleN)(Lineage.cut)
         .orderBy("src_a", "src_b")
     }),
     // End-to-end decontamination (C33 / d11): the d8 fixture's corpus with
@@ -2307,9 +2319,9 @@ $bandSelects
     // (scaled + shifted -> cosine just under 1); pairs are found within
     // IVF centroid buckets, never corpus².
     "e3_embedding_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairs(
+      Similarity.withCosineNearDupPairs(
         embNearAug(s, dir), embNearAug(s, dir).filter(col("vec_id") < 8),
-        "vec_id", "embedding", threshold = 0.8, bucketCap = EmbBucketCap)
+        "vec_id", "embedding", threshold = 0.8, bucketCap = EmbBucketCap)(Lineage.cut)
         .orderBy("vec_a", "vec_b")),
     // Centroid-distance outlier report (C49 / e7): the 25 vectors least
     // similar to their own nearest centroid — the embedding-space OOD /
@@ -2325,9 +2337,9 @@ $bandSelects
     // path; the oracle replays the identical plane matrix (inlined
     // constants) with the same left-to-right dot fold.
     "e6_hyperplane_lsh" -> ((s, dir) =>
-      Similarity.hyperplaneLshPairs(
+      Similarity.withHyperplaneLshPairs(
         embNearAug(s, dir), "vec_id", "embedding", dim = HpDim, threshold = 0.8,
-        nBits = HpBits, bandBits = HpBandBits, seed = HpSeed, bucketCap = EmbBucketCap)
+        nBits = HpBits, bandBits = HpBandBits, seed = HpSeed, bucketCap = EmbBucketCap)(Lineage.cut)
         .orderBy("vec_a", "vec_b")),
     // Persisted signature index (e19): e6's detector THROUGH DISK — the
     // corpus signatured once into the at-rest (band, bucket, vid) index,
@@ -2375,27 +2387,16 @@ $bandSelects
     // Duplicate-cluster resolution (C31): connected components over the
     // d2 near-dup pairs — transitive duplicates (a~b, b~c) collapse into
     // one cluster keyed by its minimum doc id.
-    // Scoped handle (VERDICT r7 "what's wrong" #3): `clusters` consumes the
-    // pair frame EAGERLY (its output is checkpointed, severing the lineage),
-    // so the shingle indexes can be released before the query frame is
-    // returned — no pinned blocks outlive the composition.
-    "d9_dup_clusters" -> ((s, dir) =>
-      Dedup.withJaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
-        pairs => Dedup.clusters(pairs))
-        .orderBy("doc_id")),
-    // Alternating large-star/small-star resolution (C78 / d22): the SAME
-    // connected-components answer as d9 — identical oracle — via the
-    // O(log n)-round contraction that survives chain-shaped components
-    // where min-label propagation pays a round per hop of diameter.
-    "d22_dup_clusters_star" -> ((s, dir) =>
-      Dedup.withJaccardPairs(docsNearAug(s, dir), "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
-        pairs => Dedup.clustersAlternating(pairs))
-        .orderBy("doc_id")),
+    "d9_dup_clusters" -> dupClusters,
+    // C78 / d22: the query contract keeps the name; with one `clusters`
+    // algorithm (the large-star/small-star contraction) it is d9 —
+    // identical oracle.
+    "d22_dup_clusters_star" -> dupClusters,
     // Keep-one-per-cluster pruning (C32 / d10): the end-to-end composition
     // a pipeline user actually runs — d2's pair generator, d9's cluster
     // resolution, then the corpus LEFT ANTI the non-canonical members. The
-    // returned join's loser side is `clusters`' checkpoint, so it stays
-    // evaluable after the handle releases the pair indexes.
+    // returned join's loser side is `clusters`' cut, so it stays evaluable
+    // after the generator's scope releases the pair indexes.
     // One hoisted corpus frame feeds BOTH the pair generator and the
     // LEFT ANTI passthrough side (ADVICE r8 #2). Two SCANS remain by
     // design: the index build and the passthrough each read the corpus
@@ -7153,8 +7154,7 @@ $bandSelects
     })
 
   /** The xxhash64 fast twins (d6/d7) share d2's exact-jaccard oracle
-    * verbatim — the d9/d22 "two algorithms, one ground truth, one oracle"
-    * precedent (`Dedup.clustersAlternating` scaladoc).
+    * verbatim — one ground truth, one oracle, like d9/d22.
     *
     * d7: the hash only keys the inverted index; the OUTPUT (verified pairs
     * + exact shingle jaccard) is hash-independent absent collisions, and

@@ -1,15 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.Similarity
 
 /** Streaming embedding near-dup-on-ingest: incoming vectors are checked
   * against a STATIC corpus via random-hyperplane LSH
-  * ([[Similarity.hyperplaneLshPairs]]'s plane family) — the signature step
+  * ([[Similarity.withHyperplaneLshPairs]]'s plane family) — the signature step
   * is a stateless map (the ±1 planes are data-independent constants, so
   * there is no centroid model to retrain and corpus signatures never go
   * stale), the candidate step is a stream-static equi-join on
@@ -39,9 +37,9 @@ object StreamingNearDup {
 
   /** Stage the corpus for streaming ingest: norm projection + capped
     * band-bucket signatures, persisted. Same cap semantics as
-    * [[Similarity.hyperplaneIncrementalPairsHandle]]: degenerate buckets
-    * (mass-duplicated corpus vectors collide in every band) are dropped
-    * whole so no micro-batch ever pays a quadratic bucket fan-out.
+    * [[Similarity.withHyperplaneIncrementalPairs]] (one
+    * [[Similarity.cappedSignatures]]), so no micro-batch ever pays a
+    * quadratic bucket fan-out.
     */
   def indexCorpus(
       corpus: DataFrame,
@@ -54,11 +52,7 @@ object StreamingNearDup {
       bucketCap: Int = 10000): CorpusIndex = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vecs = Similarity.hyperplaneNorms(corpus, idCol, vecCol).persist(lvl)
-    val sig = Similarity.signatureOf(vecs, dim, nBits, bandBits, seed)
-      .withColumn("__occ", count(lit(1)).over(Window.partitionBy("band", "bucket")))
-      .filter(col("__occ") <= bucketCap)
-      .drop("__occ")
-      .persist(lvl)
+    val sig = Similarity.cappedSignatures(vecs, dim, nBits, bandBits, seed, bucketCap).persist(lvl)
     new CorpusIndex(sig, vecs, dim, nBits, bandBits, seed)
   }
 

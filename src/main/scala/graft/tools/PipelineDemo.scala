@@ -49,11 +49,12 @@ object PipelineDemo {
     // 0. Source-level triage BEFORE any doc-level work: a source pair at
     //    high containment is a republisher — drop or down-weight it here
     //    and the doc-level dedup never pays for the union.
-    val overlap = Dedup.sourceOverlap(raw, "doc_id", "source", "text")
-    val worst = overlap.orderBy(col("containment").desc, col("src_a"), col("src_b"))
-      .select("src_a", "src_b", "containment").limit(1)
-      .collect().headOption.map(r => s"${r.getString(0)}~${r.getString(1)} @ ${r.getDouble(2)}")
-    println(s"[demo] source overlap: ${overlap.count()} overlapping pairs; worst containment ${worst.getOrElse("n/a")}")
+    Dedup.withSourceOverlap(raw, "doc_id", "source", "text") { overlap =>
+      val worst = overlap.orderBy(col("containment").desc, col("src_a"), col("src_b"))
+        .select("src_a", "src_b", "containment").limit(1)
+        .collect().headOption.map(r => s"${r.getString(0)}~${r.getString(1)} @ ${r.getDouble(2)}")
+      println(s"[demo] source overlap: ${overlap.count()} overlapping pairs; worst containment ${worst.getOrElse("n/a")}")
+    }
 
     // 1. Quality gate: keep docs passing all curation rules (the filter
     //    returns per-rule verdicts; semi-join the keepers back).
@@ -125,9 +126,10 @@ object PipelineDemo {
     println(s"[demo] after span scrub: ${scrubbed.count()} ($spanTokensRemoved repeated-span tokens removed)")
 
     // 3. Near-dup prune: jaccard pairs → cluster resolution → keep one per
-    //    cluster. Scoped handle releases the shingle indexes when done.
+    //    cluster. The scope releases the shingle indexes once the pruned
+    //    corpus is cut.
     val pruned = Dedup.withJaccardPairs(scrubbed, "doc_id", "text", threshold = 0.8) { pairs =>
-      Dedup.pruneDuplicates(scrubbed, pairs, "doc_id").localCheckpoint(true)
+      graft.Lineage.cut(Dedup.pruneDuplicates(scrubbed, pairs, "doc_id"))
     }
     println(s"[demo] after near-dup prune: ${pruned.count()}")
 

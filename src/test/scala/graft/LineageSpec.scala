@@ -73,6 +73,25 @@ class LineageSpec extends GraftSuite {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
+  test("clusters under a checkpoint dir keeps only its result's files, none once freed") {
+    import spark.implicits._
+    val chain = (1L until 201L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-cc").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      val cpDir = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      def rddDirs() = Option(cpDir.list()).toSeq.flatten.filter(_.startsWith("rdd-")).toSet
+      val out = graft.pipeline.Dedup.clusters(chain)
+      val outDir = new java.io.File(new java.net.URI(leafRdd(out).get.getCheckpointFile.get)).getName
+      // Every star round is a reliable cut; each superseded round must
+      // take its checkpoint files with it.
+      assert(rddDirs() === Set(outDir))
+      assert(out.as[(Long, Long)].collect().toMap === (1L to 201L).map(_ -> 1L).toMap)
+      Lineage.free(out)
+      assert(rddDirs().isEmpty)
+    } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
   test("operators under a reliable checkpoint dir: GraphRank/kCenters results hash-equal") {
     import spark.implicits._
     val edges = Seq(

@@ -43,8 +43,8 @@ object PipelineProps extends Properties("pipeline") {
       val s = spark
       import s.implicits._
       val withDup = rows :+ (999L, rows.head._2) // plant an exact copy of doc 0
-      val pairs = Dedup.jaccardPairs(toDF(withDup), "doc_id", "text", n = 2, dfCap = 1000, threshold = 0.0)
-        .as[(Long, Long, Double)].collect()
+      val pairs = Dedup.withJaccardPairs(toDF(withDup), "doc_id", "text", n = 2, dfCap = 1000, threshold = 0.0)(
+        _.as[(Long, Long, Double)].collect())
       val wellFormed = pairs.forall { case (a, b, j) => a < b && j > 0.0 && j <= 1.0 }
       val plantedScoresOne =
         rows.head._2.split(" ").length < 2 || // too short for bigrams: no pair expected
@@ -57,10 +57,10 @@ object PipelineProps extends Properties("pipeline") {
       val s = spark
       import s.implicits._
       val df = toDF(rows)
-      val exact = Dedup.jaccardPairs(df, "doc_id", "text", n = 2, dfCap = 1000, threshold = 0.5)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-      val lsh = Dedup.minhashLshPairs(df, "doc_id", "text", n = 2, bands = 2, rowsPerBand = 2, threshold = 0.5)
-        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+      val exact = Dedup.withJaccardPairs(df, "doc_id", "text", n = 2, dfCap = 1000, threshold = 0.5)(
+        _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
+      val lsh = Dedup.withMinhashLshPairs(df, "doc_id", "text", n = 2, bands = 2, rowsPerBand = 2, threshold = 0.5)(
+        _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
       lsh.subsetOf(exact)
     }
 
@@ -218,18 +218,34 @@ object PipelineProps extends Properties("pipeline") {
         (101 to 100 + nSmall).forall(i => k02.contains(i.toLong))
     }
 
-  property("alternating-star clustering == min-label clustering on random graphs") =
+  /** Driver-side union-find reference for [[Dedup.clusters]]: every
+    * vertex of `edges` mapped to the minimum id of its component. A root
+    * is always re-hung under the smaller root, so each root is its set's
+    * minimum.
+    */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  property("clusters == driver-side union-find on random multigraphs") =
     forAll(Gen.chooseNum(0, 25).flatMap(m =>
       Gen.listOfN(m, Gen.zip(Gen.chooseNum(1L, 15L), Gen.chooseNum(1L, 15L))))) { edges =>
       val s = spark
       import s.implicits._
       // Random multigraphs over 15 vertices: self-loops, duplicates, and
-      // disconnected fragments all land in the generator's range. Both
-      // algorithms must produce the identical (doc_id -> component-min) map.
-      val df = (edges :+ ((1L, 1L))).toDF("doc_a", "doc_b")
-      val a = Dedup.clusters(df).as[(Long, Long)].collect().toMap
-      val b = Dedup.clustersAlternating(df).as[(Long, Long)].collect().toMap
-      a == b
+      // disconnected fragments all land in the generator's range.
+      val all = edges :+ ((1L, 1L))
+      val df = all.toDF("doc_a", "doc_b")
+      Dedup.clusters(df).as[(Long, Long)].collect().toMap == unionFindLabels(all)
     }
 
   property("rolling gram hash == direct polynomial at every offset, on random corpora and widths") =

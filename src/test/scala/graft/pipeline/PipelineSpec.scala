@@ -33,24 +33,23 @@ class PipelineSpec extends GraftSuite {
     // regression: the span scrub emptied the pair set at sf0.001).
     val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(noPairs).count() === 0)
-    assert(Dedup.clustersAlternating(noPairs).count() === 0)
     val kept = Dedup.pruneDuplicates(docs, noPairs, "doc_id")
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(1L, 2L, 3L, 4L, 5L))
   }
 
   test("jaccard near-dup pairing finds the planted pair and nothing else") {
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val pairs = Dedup.withJaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
     // 1-2 exact (J=1), 1-3 and 2-3 near (7 shared of 8 shingles).
     assert(pairs === Set((1L, 2L), (1L, 3L), (2L, 3L)))
   }
 
   test("minhash LSH candidates verify to a subset of exact jaccard pairs") {
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4, threshold = 0.5)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val exact = Dedup.withJaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
+    val lsh = Dedup.withMinhashLshPairs(docs, "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4, threshold = 0.5)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
     assert(lsh.subsetOf(exact))
     assert(lsh.contains((1L, 2L))) // identical docs always share every band
   }
@@ -77,7 +76,6 @@ class PipelineSpec extends GraftSuite {
     val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (5L, 6L, 0.99)).toDF("doc_a", "doc_b", "jaccard")
     val c = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
     assert(c === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
-    // A long chain needs multiple propagation rounds (diameter 8).
     val chain = (1L until 9L).map(i => (i, i + 1, 1.0)).toDF("doc_a", "doc_b", "jaccard")
     val cc = Dedup.clusters(chain).as[(Long, Long)].collect().toMap
     assert(cc === (1L to 9L).map(_ -> 1L).toMap)
@@ -86,20 +84,28 @@ class PipelineSpec extends GraftSuite {
   }
 
   test("alternating-star clustering matches min-label on cliques, chains, self-pairs") {
+    // The labels min-label propagation gave on these shapes: min id per
+    // component, and a doc paired only with itself is its own cluster.
     val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (5L, 6L, 0.99), (9L, 9L, 1.0))
       .toDF("doc_a", "doc_b", "jaccard")
-    val c = Dedup.clustersAlternating(pairs).as[(Long, Long)].collect().toMap
+    val c = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
     assert(c === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
   }
 
   test("alternating-star converges in O(log n) rounds where min-label needs the diameter") {
-    // A 200-hop path: min-label propagation would need ~200 rounds (its
-    // per-hop guard behavior is pinned on the chain-9 above), while star
-    // contraction halves path lengths each alternation and must land
+    // A 200-hop path: min-label propagation needed one round per hop, while
+    // star contraction halves path lengths each alternation and must land
     // inside 12 — the scale claim, pinned as a hard iteration bound.
     val chain = (1L until 201L).map(i => (i, i + 1, 1.0)).toDF("doc_a", "doc_b", "jaccard")
-    val cc = Dedup.clustersAlternating(chain, maxIters = 12).as[(Long, Long)].collect().toMap
+    val cc = Dedup.clusters(chain, maxIters = 12).as[(Long, Long)].collect().toMap
     assert(cc === (1L to 201L).map(_ -> 1L).toMap)
+  }
+
+  test("pruneDuplicates over a 64-hop chain keeps exactly the min id at the default maxIters") {
+    val corpus = (1L to 65L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val chain = (1L until 65L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val kept = Dedup.pruneDuplicates(corpus, chain, "doc_id").select("doc_id").as[Long].collect()
+    assert(kept.toSeq === Seq(1L))
   }
 
   test("pruneDuplicates keeps one doc per cluster plus every unpaired doc, columns intact") {
@@ -131,15 +137,15 @@ class PipelineSpec extends GraftSuite {
       (10L, "alpha beta gamma delta epsilon zeta eta theta kappa"),
       (11L, "completely fresh content with no corpus overlap at all")
     ).toDF("doc_id", "text")
-    val got = Dedup.incrementalJaccardPairs(newDocs, corpus, "doc_id", "text", n = 3, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet
+    val got = Dedup.withIncrementalJaccardPairs(newDocs, corpus, "doc_id", "text", n = 3, threshold = 0.5)(
+      _.as[(Long, Long, Double)].collect().map(t => (t._1, t._2)).toSet)
     assert(got.contains((10L, 1L)))           // cross pair found
     assert(!got.exists(_._1 == 11L))          // fresh doc pairs with nothing
     assert(got.forall { case (n2, c) => n2 >= 10L && c <= 3L }) // strictly new × corpus
-    // Agreement pin: the cross-boundary pairs equal what jaccardPairs
+    // Agreement pin: the cross-boundary pairs equal what withJaccardPairs
     // finds on the union (restricted to new×corpus pairs).
-    val viaUnion = Dedup.jaccardPairs(corpus.unionByName(newDocs), "doc_id", "text", n = 3, threshold = 0.5)
-      .as[(Long, Long, Double)].collect()
+    val viaUnion = Dedup.withJaccardPairs(corpus.unionByName(newDocs), "doc_id", "text", n = 3, threshold = 0.5)(
+      _.as[(Long, Long, Double)].collect())
       .collect { case (a, b, _) if b >= 10L && a <= 3L => (b, a) }.toSet
     assert(got === viaUnion)
   }
@@ -152,9 +158,9 @@ class PipelineSpec extends GraftSuite {
       (4L, "M", "five six seven eight"),     // mirror of doc 2 — M ≡ A exactly
       (5L, "B", "totally different words here")
     ).toDF("doc_id", "source", "text")
-    val out = Dedup.sourceOverlap(docs, "doc_id", "source", "text", n = 3)
-      .select("src_a", "src_b", "inter", "sz_a", "sz_b", "containment")
-      .as[(String, String, Long, Long, Long, Double)].collect()
+    val out = Dedup.withSourceOverlap(docs, "doc_id", "source", "text", n = 3)(
+      _.select("src_a", "src_b", "inter", "sz_a", "sz_b", "containment")
+        .as[(String, String, Long, Long, Long, Double)].collect())
       .map(r => (r._1, r._2) -> r).toMap
     // Each doc has 2 trigrams; per-source distinct = 4. A≡M → inter 4,
     // containment 1.0. CRUCIALLY inter is 4, not 5+: a cross-document
@@ -184,11 +190,11 @@ class PipelineSpec extends GraftSuite {
     Dedup.writeShingleIndex(corpus, "doc_id", "text", path, n = 3)
 
     def probe(delta: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-      Dedup.jaccardPairsAgainstIndex(spark, path, delta, "doc_id", "text", dfCap = 50, threshold = 0.5)
-        .as[(Long, Long, Double)].collect().toSet
+      Dedup.withJaccardPairsAgainstIndex(spark, path, delta, "doc_id", "text", dfCap = 50, threshold = 0.5)(
+        _.as[(Long, Long, Double)].collect().toSet)
 
-    val mem = Dedup.incrementalJaccardPairs(delta1, corpus, "doc_id", "text", n = 3, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().toSet
+    val mem = Dedup.withIncrementalJaccardPairs(delta1, corpus, "doc_id", "text", n = 3, threshold = 0.5)(
+      _.as[(Long, Long, Double)].collect().toSet)
     assert(probe(delta1) === mem)
 
     // Accept delta1, then delta2 must pair with 11 through the index.
@@ -222,8 +228,8 @@ class PipelineSpec extends GraftSuite {
     }
     val probeDocs = Seq((20L, "alpha beta gamma delta epsilon zeta eta theta kappa")).toDF("doc_id", "text")
     def probe(): Set[(Long, Long, Double)] =
-      Dedup.jaccardPairsAgainstIndex(spark, path, probeDocs, "doc_id", "text", dfCap = 50, threshold = 0.5)
-        .as[(Long, Long, Double)].collect().toSet
+      Dedup.withJaccardPairsAgainstIndex(spark, path, probeDocs, "doc_id", "text", dfCap = 50, threshold = 0.5)(
+        _.as[(Long, Long, Double)].collect().toSet)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def nFiles(sub: String): Int =
@@ -295,8 +301,8 @@ class PipelineSpec extends GraftSuite {
     fs.create(marker, true).close()
 
     def probe(): Set[(Long, Long, Double)] =
-      Dedup.jaccardPairsAgainstIndex(spark, path, probeDocs, "doc_id", "text",
-        dfCap = 50, threshold = 0.5).as[(Long, Long, Double)].collect().toSet
+      Dedup.withJaccardPairsAgainstIndex(spark, path, probeDocs, "doc_id", "text",
+        dfCap = 50, threshold = 0.5)(_.as[(Long, Long, Double)].collect().toSet)
     // Mid-promotion: loud failure, never a silently-pairless answer.
     intercept[IllegalArgumentException] { probe() }
     assert(Dedup.recoverShingleIndex(spark, path))
@@ -511,11 +517,11 @@ class PipelineSpec extends GraftSuite {
     // The exact-duplicate pair shares every band under ANY hash function,
     // and verification is true Jaccard — so the planted pair must survive
     // the mode switch, and all pairs remain a subset of exact Jaccard's.
-    val fast = Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4,
-      threshold = 0.5, bucketCap = 200, hashMode = HashMode.Xxhash64)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val fast = Dedup.withMinhashLshPairs(docs, "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4,
+      threshold = 0.5, bucketCap = 200, hashMode = HashMode.Xxhash64)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
+    val exact = Dedup.withJaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
     assert(fast.contains((1L, 2L)))
     assert(fast.subsetOf(exact))
 
@@ -541,89 +547,134 @@ class PipelineSpec extends GraftSuite {
     // set AND the verified jaccard values must be identical across modes
     // (the d2/d7 twin contract — d7 is d2 minus the md5 digests).
     def run(hm: HashMode) =
-      Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5, hashMode = hm)
-        .select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+      Dedup.withJaccardPairs(docs, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5, hashMode = hm)(
+        _.select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet)
     val md5 = run(HashMode.Md5Portable)
     val fast = run(HashMode.Xxhash64)
     assert(md5 === fast)
     assert(md5.nonEmpty)
   }
 
-  test("dedup handles release their persisted indexes (no leaked cache blocks)") {
-    // A corpus unique to this test — Spark's CacheManager dedupes cached
-    // plans, so reusing `docs` would silently share (and then unpersist)
-    // entries leaked by other tests instead of exercising fresh ones.
-    val own = Seq(
-      (1L, "release test corpus alpha beta gamma delta"),
-      (2L, "release test corpus alpha beta gamma delta epsilon"),
-      (3L, "wholly unrelated release-lifecycle document body")
-    ).toDF("doc_id", "text")
+  // Runs a scoped pair generator twice: consuming its pairs inside the
+  // scope must pin something and release it on exit, and a cut handed out
+  // of the scope must be all that stays until the caller frees it. Callers
+  // pass frames unique to their test — Spark's CacheManager dedupes cached
+  // plans, and a pin finds a plan another test left cached already
+  // persisted, so it would leave it alone instead of exercising a fresh
+  // pin and release.
+  private def assertScopedReleases(name: String, withX: (DataFrame => Any) => Any): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val n = withX { pairs =>
+      val n = pairs.count()
+      assert(added.nonEmpty, s"$name pinned nothing while its pairs were consumed")
+      n
+    }.asInstanceOf[Long]
+    assert(n >= 1L, s"$name found no pair on its fixture")
+    assert(added.isEmpty, s"$name left ${added.size} persistent RDDs after withX(_.count())")
+    val cut = withX(graft.Lineage.cut).asInstanceOf[DataFrame]
+    assert(cut.count() === n, name)
+    graft.Lineage.free(cut)
+    assert(added.isEmpty, s"$name left ${added.size} persistent RDDs after freeing its cut")
+  }
 
-    val jh = Dedup.jaccardPairsHandle(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)
-    assert(jh.pairs.count() >= 1)
-    val mh = Dedup.minhashLshPairsHandle(own, "doc_id", "text", threshold = 0.5)
-    mh.pairs.count()
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
-
-    jh.release(); mh.release()
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
-
-    // Scoped form releases on exit, including the result value.
-    val n = Dedup.withJaccardPairs(own, "doc_id", "text", threshold = 0.5)(_.count())
-    assert(n >= 1)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+  test("dedup handles release their persisted indexes (no leaked cache blocks)") {
+    val own = Seq(
+      (1L, "handle release corpus alpha beta gamma delta"),
+      (2L, "handle release corpus alpha beta gamma delta"),
+      (3L, "wholly unrelated handle-lifecycle document body")
+    ).toDF("doc_id", "text")
+    assertScopedReleases("jaccard", f =>
+      Dedup.withJaccardPairs(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)(f))
+    assertScopedReleases("minhash-LSH", f =>
+      Dedup.withMinhashLshPairs(own, "doc_id", "text", threshold = 0.5)(f))
   }
 
   test("checkpoint-leaf handles release their blocks (sourceOverlap probe loop)") {
-    // sourceOverlap returns a localCheckpoint LEAF whose blocks the
-    // ContextCleaner frees only on GC — the d22 leak mode. The handle form
-    // must free them eagerly; consume the pairs BEFORE release (a leaf has
-    // no lineage to recompute from).
+    // sourceOverlap once returned a localCheckpoint leaf whose blocks only
+    // GC freed; the scoped form must free whatever it pins eagerly.
     val own = Seq(
       (1L, "srcA", "checkpoint release corpus alpha beta gamma"),
       (2L, "srcB", "checkpoint release corpus alpha beta gamma delta"),
       (3L, "srcB", "unrelated checkpoint-lifecycle document body")
     ).toDF("doc_id", "source", "text")
+    assertScopedReleases("sourceOverlap", f =>
+      Dedup.withSourceOverlap(own, "doc_id", "source", "text", n = 3)(f))
+  }
+
+  test("scoped pair generators, lshRecall and semDedup release every pin") {
+    val own = Seq(
+      (1L, "release test corpus alpha beta gamma delta"),
+      (2L, "release test corpus alpha beta gamma delta"),
+      (3L, "wholly unrelated release-lifecycle document body")
+    ).toDF("doc_id", "text")
+    val delta = Seq((10L, "release test corpus alpha beta gamma delta zeta")).toDF("doc_id", "text")
+    val idxPath = java.nio.file.Files.createTempDirectory("graft-leak-idx").resolve("i").toString
+    Dedup.writeShingleIndex(own, "doc_id", "text", idxPath, n = 3)
+    val vecs = Seq(
+      (1L, Array(1.0f, 0.0f, 0.5f)), (2L, Array(2.0f, 0.0f, 1.0f)),
+      (3L, Array(0.0f, 1.0f, -0.5f)), (4L, Array(0.01f, 1.0f, -0.5f))
+    ).toDF("vec_id", "embedding")
+    val newVecs = Seq((9L, Array(3.0f, 0.0f, 1.5f))).toDF("vec_id", "embedding")
+    val cents = Seq((100L, Array(1.0f, 0.1f, 0.5f)), (101L, Array(0.1f, 1.0f, -0.5f)))
+      .toDF("vec_id", "embedding")
+
+    val scoped: Seq[(String, (DataFrame => Any) => Any)] = Seq(
+      "containment" -> (f => Dedup.withContainmentPairs(own, "doc_id", "text", threshold = 0.5)(f)),
+      "incremental-jaccard" -> (f =>
+        Dedup.withIncrementalJaccardPairs(delta, own, "doc_id", "text", threshold = 0.5)(f)),
+      "against-index" -> (f =>
+        Dedup.withJaccardPairsAgainstIndex(spark, idxPath, delta, "doc_id", "text", threshold = 0.5)(f)),
+      "cosine" -> (f => Similarity.withCosineNearDupPairs(vecs, cents, "vec_id", "embedding", 0.95)(f)),
+      "hyperplane-LSH" -> (f =>
+        Similarity.withHyperplaneLshPairs(vecs, "vec_id", "embedding", dim = 3, threshold = 0.95)(f)),
+      "hyperplane-incremental" -> (f => Similarity.withHyperplaneIncrementalPairs(
+        newVecs, vecs, "vec_id", "embedding", dim = 3, threshold = 0.95)(f)))
+
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val h = Dedup.sourceOverlapHandle(own, "doc_id", "source", "text", n = 3)
-    assert(h.pairs.count() >= 1)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
-    h.release()
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    scoped.foreach { case (name, withX) => assertScopedReleases(name, withX) }
+
+    val recall = Dedup.lshRecall(own, "doc_id", "text", n = 3, bands = 4, rowsPerBand = 4,
+      threshold = 0.5).collect()
+    assert(recall.length === 1 && recall.head.getLong(0) >= 1L)
+    assert(added.isEmpty, s"lshRecall left ${added.size} persistent RDDs")
+
+    val kept = Similarity.semDedup(vecs, cents, "vec_id", "embedding", threshold = 0.95)
+    assert(kept.select("vec_id").as[Long].collect().toSet === Set(1L, 3L))
+    // What stays is the one cluster cut the returned anti-join reads; the
+    // caller owns it.
+    val leaves = kept.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    assert(leaves.size === 1)
+    leaves.foreach(_.unpersist(false))
+    assert(added.isEmpty, s"semDedup left ${added.size} persistent RDDs beyond its cluster cut")
   }
 
   test("composed d9/d10 path releases the pair indexes but stays evaluable") {
     // The d9/d10 query shape (VERDICT r7 "what's wrong" #3): clusters /
-    // pruneDuplicates inside withJaccardPairs. clusters consumes the pairs
-    // eagerly and checkpoints, so the handle's indexes must be released by
-    // the time the query frame is returned — and the frame must still
-    // evaluate correctly afterwards.
+    // pruneDuplicates inside withJaccardPairs. clusters cuts its output
+    // inside the scope, so the scope's pins are released by the time the
+    // query frame is returned — and the frame still evaluates afterwards.
     val own = Seq(
       (1L, "composed release corpus alpha beta gamma delta epsilon"),
       (2L, "composed release corpus alpha beta gamma delta epsilon zeta"),
       (3L, "entirely different composed-lifecycle document body here")
     ).toDF("doc_id", "text")
-
-    var handleFrames: Seq[DataFrame] = Nil
-    val pruned = {
-      val h = Dedup.jaccardPairsHandle(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)
-      handleFrames = h.cached
-      try Dedup.pruneDuplicates(own, h.pairs, "doc_id") finally h.release()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var pinned = 0
+    val pruned = Dedup.withJaccardPairs(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5) { pairs =>
+      val out = Dedup.pruneDuplicates(own, pairs, "doc_id")
+      pinned = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      out
     }
-    // Handle frames are unpersisted (storageLevel NONE) after release...
-    assert(handleFrames.nonEmpty)
-    assert(handleFrames.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
-    // ...and the returned frame still evaluates: docs 1/2 are near-dups
-    // (one survivor, min id), doc 3 untouched.
-    val kept = pruned.select("doc_id").as[Long].collect().toSet
-    assert(kept === Set(1L, 3L))
-
-    // The exact query composition (scoped form) agrees.
-    val viaScoped = Dedup.withJaccardPairs(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5)(
-      pairs => Dedup.pruneDuplicates(own, pairs, "doc_id"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(viaScoped === kept)
+    // Inside the scope: the index, filtered index, sizes and the cluster
+    // cut; after it only the cut the returned anti-join reads.
+    assert(pinned >= 2)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+    // Docs 1/2 are near-dups (one survivor, min id), doc 3 untouched.
+    assert(pruned.select("doc_id").as[Long].collect().toSet === Set(1L, 3L))
   }
 
   test("embedding near-dup pair join is bounded by bucketCap (duplicate flood)") {
@@ -636,16 +687,15 @@ class PipelineSpec extends GraftSuite {
 
     // Cap below the flood's occupancy: the flooded bucket is dropped whole,
     // the healthy bucket still pairs — the join stays bounded.
-    val capped = Similarity.cosineNearDupPairs(vecs, centroids, "vec_id", "embedding",
-      threshold = 0.9, bucketCap = 10)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
+    val capped = Similarity.withCosineNearDupPairs(vecs, centroids, "vec_id", "embedding",
+      threshold = 0.9, bucketCap = 10)(_.select("vec_a", "vec_b").as[(Long, Long)].collect().toSet)
     assert(capped === Set((100L, 101L)))
 
     // Cap above occupancy: the flood pairs quadratically (40*39/2), proving
     // the cap was what bounded it.
-    val uncapped = Similarity.cosineNearDupPairs(vecs, centroids, "vec_id", "embedding",
-      threshold = 0.9, bucketCap = 1000)
-    assert(uncapped.count() === (40L * 39 / 2) + 1)
+    val uncapped = Similarity.withCosineNearDupPairs(vecs, centroids, "vec_id", "embedding",
+      threshold = 0.9, bucketCap = 1000)(_.count())
+    assert(uncapped === (40L * 39 / 2) + 1)
   }
 
   test("stratified split hits exact per-stratum proportions, deterministically") {
@@ -737,21 +787,21 @@ class PipelineSpec extends GraftSuite {
     }
     val copies = Seq(100L -> base(0)._2, 107L -> base(7)._2)
     val vecs = (base ++ copies).toDF("vec_id", "embedding")
-    val pairs = Similarity.hyperplaneLshPairs(
-      vecs, "vec_id", "embedding", dim = 8, threshold = 0.999, nBits = 16, bandBits = 4)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
+    val pairs = Similarity.withHyperplaneLshPairs(
+      vecs, "vec_id", "embedding", dim = 8, threshold = 0.999, nBits = 16, bandBits = 4)(
+      _.select("vec_a", "vec_b").as[(Long, Long)].collect().toSet)
     assert(pairs.contains((0L, 100L)) && pairs.contains((7L, 107L)))
 
     // bucketCap = 1 drops every shared bucket → no candidates at all.
-    val capped = Similarity.hyperplaneLshPairs(
+    val capped = Similarity.withHyperplaneLshPairs(
       vecs, "vec_id", "embedding", dim = 8, threshold = 0.999, nBits = 16, bandBits = 4,
-      bucketCap = 1)
-    assert(capped.count() === 0L)
+      bucketCap = 1)(_.count())
+    assert(capped === 0L)
 
     // nBits must band evenly.
     intercept[IllegalArgumentException] {
-      Similarity.hyperplaneLshPairs(vecs, "vec_id", "embedding", dim = 8,
-        threshold = 0.9, nBits = 10, bandBits = 4)
+      Similarity.withHyperplaneLshPairs(vecs, "vec_id", "embedding", dim = 8,
+        threshold = 0.9, nBits = 10, bandBits = 4)(_.count())
     }
   }
 
@@ -2175,11 +2225,11 @@ class PipelineSpec extends GraftSuite {
     // 1.0, jaccard 0.5 — invisible to the 0.6 jaccard threshold.
     val corpus = docs.unionByName(
       Seq((99L, "completely different text about spark")).toDF("doc_id", "text"))
-    val cont = Dedup.containmentPairs(corpus, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.9)
-      .as[(Long, Long, Double)].collect().toSet
+    val cont = Dedup.withContainmentPairs(corpus, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.9)(
+      _.as[(Long, Long, Double)].collect().toSet)
     assert(cont === Set((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (4L, 99L, 1.0)))
-    val jac = Dedup.jaccardPairs(corpus, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.6)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    val jac = Dedup.withJaccardPairs(corpus, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.6)(
+      _.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
     assert(!jac.contains((4L, 99L)), s"jaccard should miss the excerpt pair: $jac")
   }
 

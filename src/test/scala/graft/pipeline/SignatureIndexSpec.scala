@@ -37,9 +37,9 @@ class SignatureIndexSpec extends GraftSuite {
     val atRest = Similarity.pairsAgainstSignatureIndex(
       spark, idx, delta, "vec_id", "embedding", threshold = 0.999)
       .orderBy("new_id", "corpus_id").collect().toSeq
-    val live = Similarity.hyperplaneIncrementalPairs(
-      delta, corpus, "vec_id", "embedding", dim = Dim, threshold = 0.999)
-      .orderBy("new_id", "corpus_id").collect().toSeq
+    val live = Similarity.withHyperplaneIncrementalPairs(
+      delta, corpus, "vec_id", "embedding", dim = Dim, threshold = 0.999)(
+      _.orderBy("new_id", "corpus_id").collect().toSeq)
     assert(atRest === live)
     assert(atRest.map(r => (r.getLong(0), r.getLong(1))).toSet
       .contains((100L, 0L)))
@@ -50,9 +50,9 @@ class SignatureIndexSpec extends GraftSuite {
     val cappedAtRest = Similarity.pairsAgainstSignatureIndex(
       spark, idx, delta, "vec_id", "embedding", threshold = 0.999, bucketCap = 1)
       .orderBy("new_id", "corpus_id").collect().toSeq
-    val cappedLive = Similarity.hyperplaneIncrementalPairs(
-      delta, corpus, "vec_id", "embedding", dim = Dim, threshold = 0.999, bucketCap = 1)
-      .orderBy("new_id", "corpus_id").collect().toSeq
+    val cappedLive = Similarity.withHyperplaneIncrementalPairs(
+      delta, corpus, "vec_id", "embedding", dim = Dim, threshold = 0.999, bucketCap = 1)(
+      _.orderBy("new_id", "corpus_id").collect().toSeq)
     assert(cappedAtRest === cappedLive)
     // Plane-family pinning: a non-index path fails loudly.
     val err = intercept[IllegalArgumentException] {

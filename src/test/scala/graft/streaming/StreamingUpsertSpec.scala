@@ -33,10 +33,10 @@ class StreamingUpsertSpec extends GraftSuite {
     val corpus = corpusRows.toDF("vec_id", "embedding")
     val delta = deltaRows.toDF("vec_id", "embedding")
 
-    val expected = Similarity.hyperplaneIncrementalPairs(
+    val expected = Similarity.withHyperplaneIncrementalPairs(
       delta, corpus, "vec_id", "embedding", dim = 8, threshold = 0.999,
-      nBits = 16, bandBits = 4)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
+      nBits = 16, bandBits = 4)(
+      _.select("new_id", "corpus_id").as[(Long, Long)].collect().toSet)
     assert(expected.contains((100L, 0L)) && expected.contains((107L, 7L)))
     // Delta×corpus only: the corpus' own near-identical rows never pair.
     assert(expected.forall(_._1 >= 100L))
