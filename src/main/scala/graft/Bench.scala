@@ -68,12 +68,12 @@ object Bench {
     // suspect): clearCache covers catalog-cached frames, but NOT
     // localCheckpoint blocks (d9, cluster outputs) — those live in
     // getPersistentRDDs until the ContextCleaner happens to GC their
-    // references. Unpersist them explicitly, and delete the scratch
+    // references. Release them explicitly (`Lineage.releaseAll`, which
+    // also deletes reliable cuts' checkpoint files), and delete the scratch
     // targets (m13/m14/st1 write a full copy per iteration) instead of
     // parking them on disk until JVM exit.
     def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Lineage.releaseAll(spark)
       queries.Fixtures.purgeScratch()
     }
     val results = selected.map { case (name, fn) =>

@@ -1,24 +1,31 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Lineage-cut policy for the iterative operators (GraphRank,
-  * Dedup.clusters, Bpe.train, kCenters, the frozen
-  * LM-gate table pinning, the CrawlStages seams).
+/** The one materialization policy: every persist, checkpoint and
+  * release in the program goes through here, under one rule.
   *
-  * These operators materialize an intermediate once per round and join
-  * later rounds against the materialized leaf — without the cut, the
-  * logical plan doubles per round and planning itself becomes the
-  * bottleneck (guide §3.3; the q41 9,723-line / 1,137-Exchange plan).
-  * `localCheckpoint` is the cheap cut: blocks live in executor memory/
-  * disk, no distributed-FS round trip. Its documented trade is fault
-  * tolerance — executor-local blocks cannot be recomputed (the lineage
-  * is gone) NOR re-fetched after an executor loss, so on a real cluster
-  * a spot kill / OOM / dynamic deallocation mid-operator fails every
-  * downstream job unrecoverably. Single-tenant local runs (this bench)
-  * never see that failure mode.
+  *   - A frame that several jobs of ONE call reuse is [[pinned]] for
+  *     that call's scope and released when the scope exits, by return or
+  *     by throw. A frame its caller already cached is left alone.
+  *   - A frame that outlives the call (the lazy plan it returns still
+  *     reads it, or a loop's next round joins against it) is a [[cut]]:
+  *     materialized eagerly, with its lineage replaced by one leaf. The
+  *     cut's owner releases it with [[free]] once nothing reads it; what
+  *     a query hands its harness, the harness's [[releaseAll]] releases.
+  *
+  * A cut keeps the logical plan constant-size: an iterative operator
+  * that joins round r against round r−1 without it doubles its plan
+  * per round, and planning itself becomes the bottleneck (guide §3.3;
+  * the q41 9,723-line / 1,137-Exchange plan). `localCheckpoint` is the
+  * cheap cut: blocks live in executor memory/disk, no distributed-FS
+  * round trip. Its documented trade is fault tolerance — executor-local
+  * blocks cannot be recomputed (the lineage is gone) NOR re-fetched
+  * after an executor loss, so on a real cluster a spot kill / OOM /
+  * dynamic deallocation mid-operator fails every downstream job
+  * unrecoverably. Single-tenant local runs never see that failure mode.
   *
   * [[cut]] therefore keys the cut type off the session's checkpoint
   * directory — the standard Spark switch for exactly this trade:
@@ -27,8 +34,7 @@ import org.apache.spark.storage.StorageLevel
   *     cluster pointing at durable storage): RELIABLE checkpoint —
   *     `Dataset.checkpoint(eager = true)` writes the rows to the
   *     checkpoint dir; an executor loss costs a re-read, not the job.
-  *   - unset (the local default): `localCheckpoint(eager = true)`,
-  *     exactly the pre-flag behavior.
+  *   - unset (the local default): `localCheckpoint(eager = true)`.
   *
   * Both paths materialize the same rows eagerly and return a leaf plan
   * over them — results are bit-identical (spec-pinned in LineageSpec);
@@ -41,9 +47,6 @@ import org.apache.spark.storage.StorageLevel
   * dir (the ContextCleaner deletes those only under
   * `spark.cleaner.referenceTracking.cleanCheckpoints`, off by default,
   * so otherwise they stay for the session).
-  *
-  * [[pinned]] is the scoped cache for a frame with several consumers
-  * inside one operation; it never touches a cache its caller owns.
   */
 object Lineage {
 
@@ -68,6 +71,23 @@ object Lineage {
         dir.getFileSystem(l.rdd.sparkContext.hadoopConfiguration).delete(dir, true)
       }
     case _ =>
+  }
+
+  /** Release everything the session has materialized: every cache,
+    * every persisted RDD (local cuts included) and every reliable cut's
+    * files under the checkpoint dir. A harness's reset between runs,
+    * once no frame of the last run is read again — the owner of the cuts
+    * a query's returned lazy plan reads.
+    */
+  private[graft] def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    sc.getCheckpointDir.foreach { d =>
+      val dir = new Path(d)
+      val fs = dir.getFileSystem(sc.hadoopConfiguration)
+      if (fs.exists(dir)) fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
+    }
   }
 
   /** Run `body` with `df` cached (MEMORY_AND_DISK) for its duration — for

@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * (bounded by content, not size) before any per-round work happens.
   * Each round is one map-side pair explode + one aggregation over the
   * word table + a 1-row argmax collect (bounded by contract), then a
-  * map-only fold applying the merge; the persist/materialize/unpersist
-  * cycle per round is the [[graft.operators.GraphRank]] lineage-cut
-  * discipline.
+  * map-only fold applying the merge; the cut/free cycle per round is
+  * the [[graft.operators.GraphRank]] lineage-cut discipline.
   *
   * Determinism is the contract (same build on any run, engine, or
   * cluster size): the argmax tie-breaks (count DESC, lhs ASC, rhs ASC),
@@ -44,9 +43,9 @@ object Bpe {
 
   /** A trained tokenizer: the ordered merge table (driver-side — k rows
     * by construction) plus the distinct-word table with its final
-    * segmentation (`word`, `freq`, `seg`), materialized: a lineage cut
-    * from [[train]], a driver-local table from [[trainLocal]] (every
-    * distinct word, held on the driver while the model lives).
+    * segmentation (`word`, `freq`, `seg`) as a driver-local table
+    * ([[localWords]]: every distinct word, held on the driver while the
+    * model lives; no cached blocks to release).
     * `cappedOut` is [[trainLocal]]'s no-silent-caps diagnostic: how many
     * distinct words fell outside the frequency cap and carry the
     * character-fallback segmentation (always 0 for [[train]]).
@@ -127,7 +126,7 @@ object Bpe {
     * PER SENTENCE — every sentence a distinct table row — and training
     * silently degenerates. Rather than degrade, the trainer REJECTS a
     * corpus whose longest word exceeds the cap (one tiny agg over the
-    * already-persisted word table), with the fix named in the message:
+    * already-pinned word table), with the fix named in the message:
     * route text through [[TextOps.segmentNoSpaceScripts]] first. Pass
     * `maxWordChars = 0` to disable for corpora with legitimately
     * enormous tokens.
@@ -137,18 +136,15 @@ object Bpe {
       tokenizer: TextOps.Tok = TextOps.WhitespaceTok,
       reserved: Seq[String] = Nil): BpeModel = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    var words = docs
-      .select(explode(tokenizer.fn(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .withColumn("seg", initSeg(col("word"), byteLevel))
-      .persist()
-    words.count()
-    TextOps.requireGrainConsistent(
-      guardWordTable(words, maxWordChars, byteLevel), tokenizer)
-    val merges = ArrayBuffer.empty[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= numMerges && !exhausted) {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // One round: the most frequent adjacent pair over `words` and the
+    // table with it merged — a Lineage.cut, an eager TRUE lineage cut
+    // (persist+count only cuts physically): without it the logical plan
+    // chains one aggregate-HOF projection per round and analysis cost —
+    // and eventually tree-traversal stack depth — grows with the round
+    // count. None once no word has an adjacent pair left.
+    def round(words: DataFrame, step: Int): Option[(Merge, DataFrame)] = {
       val syms = split(col("seg"), " ")
       val top = words
         .select(col("freq"),
@@ -159,29 +155,58 @@ object Bpe {
         .agg(sum(col("freq")).as("n"))
         .orderBy(desc("n"), asc("lhs"), asc("rhs"))
         .limit(1).collect() // 1 row by contract: the round's argmax
-      if (top.isEmpty) exhausted = true
-      else {
-        val r = top.head
+      top.headOption.map { r =>
         val m = Merge(step.toLong, r.getString(0), r.getString(1),
           r.getString(0) + r.getString(1), r.getLong(2))
-        merges += m
-        // Lineage.cut is an eager TRUE lineage cut (persist+count only
-        // cuts physically): without it the logical plan chains one
-        // aggregate-HOF projection per round and analysis cost — and
-        // eventually tree-traversal stack depth — grows with the round
-        // count. The word table is vocabulary-sized, so checkpoint
-        // storage is bounded by content; each round's superseded leaf
-        // releases its blocks eagerly (Lineage.free — unpersist alone
-        // does not drop a checkpoint leaf's blocks).
-        val next = graft.Lineage.cut(words.withColumn("seg", applyMerge(col("seg"), m)))
-        words.unpersist(false)
-        graft.Lineage.free(words)
-        words = next
-        step += 1
+        (m, graft.Lineage.cut(words.withColumn("seg", applyMerge(col("seg"), m))))
       }
     }
-    BpeModel(merges.toSeq, words, byteLevel = byteLevel,
+    def rows(words: DataFrame) =
+      words.select("word", "freq", "seg").as[(String, Long, String)].collect()
+    val merges = ArrayBuffer.empty[Merge]
+    // The initial table is pinned for the guard and the first round only;
+    // a trainer that throws (either guard) releases it on the way out.
+    val first = graft.Lineage.pinned(docs
+        .select(explode(tokenizer.fn(col(textCol))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .withColumn("seg", initSeg(col("word"), byteLevel))) { initial =>
+      TextOps.requireGrainConsistent(
+        guardWordTable(initial, maxWordChars, byteLevel), tokenizer)
+      round(initial, 1).map { case (m, next) => merges += m; next }.toRight(rows(initial))
+    }
+    // Later rounds read the previous round's cut. The word table is
+    // vocabulary-sized, so cut storage is bounded by content; each
+    // superseded leaf releases its blocks eagerly.
+    val table = first.fold(identity, { cut =>
+      var words = cut
+      var step = 2
+      try {
+        var more = true
+        while (more && step <= numMerges) round(words, step) match {
+          case Some((m, next)) =>
+            merges += m
+            graft.Lineage.free(words)
+            words = next
+            step += 1
+          case None => more = false
+        }
+        rows(words)
+      } finally graft.Lineage.free(words)
+    })
+    BpeModel(merges.toSeq, localWords(spark, table.toSeq), byteLevel = byteLevel,
       tokenizer = tokenizer, reserved = reserved)
+  }
+
+  /** A model's word table (word, freq, seg) as a driver-local relation —
+    * the one form every trainer and [[ModelStore.loadBpe]] return. Every
+    * consumer broadcasts the table, so it is driver-sized already, and a
+    * local relation holds no cached blocks that a caller would have to
+    * release.
+    */
+  private[pipeline] def localWords(
+      spark: SparkSession, rows: Seq[(String, Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("word", "freq", "seg")
   }
 
   /** Spark's string ordering is binary over UTF-8 bytes (and so is
@@ -277,17 +302,25 @@ object Bpe {
     require(wordCap >= 1, s"wordCap must be >= 1, got $wordCap")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wf = docs
-      .select(explode(tokenizer.fn(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .persist()
-    wf.count()
-    TextOps.requireGrainConsistent(
-      guardWordTable(wf, maxWordChars, byteLevel), tokenizer)
-    // The merge-learning collect: TakeOrdered top-wordCap — bounded by
-    // the cap, never by the corpus.
-    val capped = wf.orderBy(desc("freq"), asc("word")).limit(wordCap)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    // The frequency table is pinned for the guard and the two collects
+    // only; the merges run on the driver.
+    val (capped, tail) = graft.Lineage.pinned(docs
+        .select(explode(tokenizer.fn(col(textCol))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))) { wf =>
+      TextOps.requireGrainConsistent(
+        guardWordTable(wf, maxWordChars, byteLevel), tokenizer)
+      // The merge-learning collect: TakeOrdered top-wordCap — bounded by
+      // the cap, never by the corpus.
+      val capped = wf.orderBy(desc("freq"), asc("word")).limit(wordCap)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      // Tail words beyond the cap keep their initial (char/byte)
+      // segmentation — the conservative no-merge fallback, counted,
+      // never silent.
+      (capped, wf.join(capped.map(_._1).toSeq.toDF("word"), Seq("word"), "left_anti")
+        .withColumn("seg", initSeg(col("word"), byteLevel))
+        .select("word", "freq", "seg")
+        .as[(String, Long, String)].collect())
+    }
     val segs: Array[ArrayBuffer[String]] = capped.map { case (w, _) =>
       if (byteLevel) {
         val bytes = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -355,21 +388,9 @@ object Bpe {
       step += 1
     }
     val cappedRows = capped.zip(segs).map { case ((w, f), s) => (w, f, s.mkString(" ")) }
-    // Tail words beyond the cap keep their initial (char/byte)
-    // segmentation — the conservative no-merge fallback, counted,
-    // never silent.
-    val tail = wf.join(capped.map(_._1).toSeq.toDF("word"), Seq("word"), "left_anti")
-      .withColumn("seg", initSeg(col("word"), byteLevel))
-      .select("word", "freq", "seg")
-      .as[(String, Long, String)].collect()
-    wf.unpersist(false)
-    // A driver-local table, like the merge table, held at the full
-    // distinct-word count for the model's lifetime: every consumer
-    // broadcasts the word table, so it is driver-sized already, and a
-    // local relation holds no cached blocks that a caller would have to
-    // release.
-    val words = (cappedRows ++ tail).toSeq.toDF("word", "freq", "seg")
-    BpeModel(merges.toSeq, words, cappedOut = tail.length.toLong,
+    // Held at the full distinct-word count for the model's lifetime.
+    BpeModel(merges.toSeq, localWords(spark, (cappedRows ++ tail).toSeq),
+      cappedOut = tail.length.toLong,
       byteLevel = byteLevel, tokenizer = tokenizer, reserved = reserved)
   }
 

@@ -311,8 +311,8 @@ object Dedup {
     * derivatives are pinned, and they are released when `f` returns. So
     * `f` must CONSUME the frame (count/collect/write) or return one whose
     * lineage no longer reads it: [[graft.Lineage.cut]] to keep the pairs
-    * themselves, [[clusters]] (a cut) or [[pruneDuplicates]] (whose loser
-    * side is that cut) to resolve them.
+    * themselves, [[clusters]] (a cut) to resolve them, or
+    * [[pruneDuplicates]] with a cut of what its own scope keeps.
     *
     * @param dfCap drop shingles appearing in more than this many documents
     *              during CANDIDATE GENERATION only — bounds the per-bucket
@@ -612,8 +612,12 @@ object Dedup {
     * the minimum-id representative — plus every document that appears in
     * no pair. Composes with any pair generator ([[withJaccardPairs]],
     * [[withMinhashLshPairs]], [[Similarity.withCosineNearDupPairs]]).
-    * The returned anti-join's loser side is [[clusters]]' cut, so it stays
-    * evaluable after the generator's scope releases its pins.
+    * Scoped like the generators: `f` runs over the pruned frame, a lazy
+    * anti-join against [[clusters]]' cut, and that cut is freed when `f`
+    * returns or throws. A caller whose result must outlive the scope
+    * cuts inside `f` only the columns it keeps (d10:
+    * `p => Lineage.cut(p.select("doc_id"))`), so a pruned columnar scan
+    * still drops the rest.
     *
     * Scale shape: the cluster frame is one row per PAIRED doc (duplicates
     * only, ≪ corpus), already materialized by [[clusters]]; the corpus is
@@ -625,15 +629,17 @@ object Dedup {
     * @param pairs near-dup pair frame; endpoint ids (in `aCol`/`bCol` —
     *              pass `"vec_a"`/`"vec_b"` for the cosine generator) must
     *              be the same type as `docs(idCol)`.
-    * @return `docs` minus non-canonical duplicate-cluster members.
+    * @return `f` of `docs` minus non-canonical duplicate-cluster members.
     */
-  def pruneDuplicates(
+  def pruneDuplicates[T](
       docs: DataFrame, pairs: DataFrame, idCol: String, maxIters: Int = 30,
-      aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
-    val losers = clusters(pairs, maxIters, aCol, bCol)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as("__graft_loser"))
-    docs.join(losers, docs(idCol) === col("__graft_loser"), "left_anti")
+      aCol: String = "doc_a", bCol: String = "doc_b")(f: DataFrame => T): T = {
+    val cl = clusters(pairs, maxIters, aCol, bCol)
+    try {
+      val losers = cl.filter(col("doc_id") =!= col("cluster_id"))
+        .select(col("doc_id").as("__graft_loser"))
+      f(docs.join(losers, docs(idCol) === col("__graft_loser"), "left_anti"))
+    } finally graft.Lineage.free(cl)
   }
 
   /** Soft dedup: every doc KEPT, weighted 1/|cluster| — the
@@ -650,17 +656,19 @@ object Dedup {
     * star contraction; the size count is ONE window over the cluster
     * label (near-dup clusters are small by construction — a cluster's
     * rows land in one task, the usual top-N note) and singletons join
-    * in via the same left-join coalesce as the split assigner.
+    * in via the same left-join coalesce as the split assigner. Scoped
+    * as [[pruneDuplicates]] is: the cluster cut lives while `f` runs.
     */
-  def softDedupWeights(
+  def softDedupWeights[T](
       docs: DataFrame, pairs: DataFrame, idCol: String, maxIters: Int = 30,
-      aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
+      aCol: String = "doc_a", bCol: String = "doc_b")(f: DataFrame => T): T = {
     val cl = clusters(pairs, maxIters, aCol, bCol)
-      .select(col("doc_id").as(idCol), col("cluster_id"))
-    docs.join(cl, Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-      .withColumn("weight",
-        round(lit(1.0) / count(lit(1)).over(Window.partitionBy(col("cluster_id"))), 6))
+    try f(
+      docs.join(cl.select(col("doc_id").as(idCol), col("cluster_id")), Seq(idCol), "left")
+        .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
+        .withColumn("weight",
+          round(lit(1.0) / count(lit(1)).over(Window.partitionBy(col("cluster_id"))), 6)))
+    finally graft.Lineage.free(cl)
   }
 
   /** Cross-source content-overlap matrix — the corpus-level diagnostic
@@ -921,15 +929,13 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String, path: String,
       n: Int = 3, hashMode: HashMode = HashMode.Md5Portable): Unit = {
     val spark = docs.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val idx = shingleIndex(docs, idCol, textCol, n, hashWith = Some(hashMode)).persist(lvl)
-    try {
+    graft.Lineage.pinned(shingleIndex(docs, idCol, textCol, n, hashWith = Some(hashMode))) { idx =>
       idx.write.mode("overwrite").parquet(s"$path/index")
       idx.groupBy("id").agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$path/sizes")
       idx.groupBy("sh").agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$path/df")
-    } finally idx.unpersist()
+    }
     val p = new org.apache.hadoop.fs.Path(path, ShingleSpecFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mode = hashMode match { case HashMode.Md5Portable => "md5"; case HashMode.Xxhash64 => "xxhash64" }
@@ -1008,9 +1014,7 @@ object Dedup {
     // Unmarked staging leftovers are garbage from an append that never
     // reached its intent point.
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val idx = shingleIndex(newDocs, idCol, textCol, n, hashWith = Some(hm)).persist(lvl)
-    try {
+    graft.Lineage.pinned(shingleIndex(newDocs, idCol, textCol, n, hashWith = Some(hm))) { idx =>
       idx.write.mode("overwrite").parquet(s"$path/append.staging/index")
       idx.groupBy("id").agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$path/append.staging/sizes")
@@ -1021,7 +1025,7 @@ object Dedup {
       val marker = fs.create(new org.apache.hadoop.fs.Path(path, AppendIntentFile), true)
       try marker.write("pending".getBytes("UTF-8")) finally marker.close()
       promoteAppend(fs, path)
-    } finally idx.unpersist()
+    }
   }
 
   /** Promote a fully-staged append (intent marker present). Idempotent:

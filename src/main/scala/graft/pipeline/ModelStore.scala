@@ -209,9 +209,8 @@ object ModelStore {
   }
 
   /** Reload a [[Bpe.BpeModel]]. Merges collect ordered by `step` (k
-    * rows — bounded by the merge budget); the word table stays a
-    * parquet-backed DataFrame, persisted like the trainers leave it
-    * (every consumer broadcast-joins it repeatedly).
+    * rows — bounded by the merge budget); the word table collects into
+    * the same driver-local table the trainers return ([[Bpe.localWords]]).
     */
   def loadBpe(spark: SparkSession, path: String): Bpe.BpeModel = {
     val m = readMeta(spark, path, "bpe")
@@ -222,8 +221,10 @@ object ModelStore {
       .map(r => Bpe.Merge(r.getAs[Long]("step"), r.getAs[String]("lhs"),
         r.getAs[String]("rhs"), r.getAs[String]("merged"), r.getAs[Long]("n")))
       .toSeq
-    val words = spark.read.parquet(s"$path/words").persist()
-    Bpe.BpeModel(merges, words,
+    import spark.implicits._
+    val words = spark.read.parquet(s"$path/words")
+      .select("word", "freq", "seg").as[(String, Long, String)].collect()
+    Bpe.BpeModel(merges, Bpe.localWords(spark, words.toSeq),
       cappedOut = m.getAs[Long]("capped_out"),
       // as in loadUnigram: artifacts saved before these identity fields
       // existed were word-grain whitespace models — load them that way.

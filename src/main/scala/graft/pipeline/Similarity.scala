@@ -271,42 +271,42 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     val dp = dotOn(spark)
-    val base = withNorm(vectors, idCol, vecCol, "__id", "__v", "__vn").persist()
-    try {
-      def distTo(vec: Seq[Double], norm: Double): Column =
-        round(lit(1.0) - dp(col("__v"), typedLit(vec)) / (col("__vn") * lit(norm)), 6)
-      val seed = base.orderBy(col("__id")).limit(1).collect().head
-      def vecOf(r: org.apache.spark.sql.Row) = (r.getSeq[Double](1), r.getDouble(2))
-      val picks = scala.collection.mutable.ArrayBuffer(
-        (1L, seed.getLong(0), 0.0))
-      var (cv, cn) = vecOf(seed)
-      // Lineage.cut, not persist+count: persist only cut the PHYSICAL
-      // recomputation — round r's logical plan still nested r
-      // withColumn/least layers over the corpus lineage, so per-round
-      // analysis cost grew with r (the GraphRank lesson, guide §3.3).
-      // Each round's frame is a constant-size leaf; superseded rounds
-      // release their blocks eagerly (Lineage.free).
-      var cur = graft.Lineage.cut(base.withColumn("mind", distTo(cv, cn)))
-      base.unpersist(false)
-      var step = 2
-      while (step <= k) {
-        val top = cur.filter(!col("__id").isin(picks.toSeq.map(_._2): _*))
-          .orderBy(desc("mind"), asc("__id")).limit(1).collect()
-        if (top.isEmpty) step = k + 1 // corpus exhausted before k
-        else {
-          val t = top.head
-          picks += ((step.toLong, t.getLong(0), t.getAs[Double]("mind")))
-          val (tv, tn) = vecOf(t)
-          val next = graft.Lineage.cut(cur
-            .withColumn("mind", least(col("mind"), distTo(tv, tn))))
-          graft.Lineage.free(cur)
-          cur = next
-          step += 1
-        }
+    def distTo(vec: Seq[Double], norm: Double): Column =
+      round(lit(1.0) - dp(col("__v"), typedLit(vec)) / (col("__vn") * lit(norm)), 6)
+    def vecOf(r: org.apache.spark.sql.Row) = (r.getSeq[Double](1), r.getDouble(2))
+    // Lineage.cut, not persist+count: persist only cut the PHYSICAL
+    // recomputation — round r's logical plan still nested r
+    // withColumn/least layers over the corpus lineage, so per-round
+    // analysis cost grew with r (the GraphRank lesson, guide §3.3).
+    // Each round's frame is a constant-size leaf; superseded rounds
+    // release their blocks eagerly (Lineage.free). The norm pass is
+    // pinned only for the seed pick and the first round's cut.
+    val (seed, first) = graft.Lineage.pinned(
+        withNorm(vectors, idCol, vecCol, "__id", "__v", "__vn")) { base =>
+      val s = base.orderBy(col("__id")).limit(1).collect().head
+      val (sv, sn) = vecOf(s)
+      (s, graft.Lineage.cut(base.withColumn("mind", distTo(sv, sn))))
+    }
+    val picks = scala.collection.mutable.ArrayBuffer((1L, seed.getLong(0), 0.0))
+    var cur = first
+    var step = 2
+    while (step <= k) {
+      val top = cur.filter(!col("__id").isin(picks.toSeq.map(_._2): _*))
+        .orderBy(desc("mind"), asc("__id")).limit(1).collect()
+      if (top.isEmpty) step = k + 1 // corpus exhausted before k
+      else {
+        val t = top.head
+        picks += ((step.toLong, t.getLong(0), t.getAs[Double]("mind")))
+        val (tv, tn) = vecOf(t)
+        val next = graft.Lineage.cut(cur
+          .withColumn("mind", least(col("mind"), distTo(tv, tn))))
+        graft.Lineage.free(cur)
+        cur = next
+        step += 1
       }
-      graft.Lineage.free(cur)
-      picks.toSeq.toDF("step", "center_id", "dist")
-    } finally base.unpersist(false)
+    }
+    graft.Lineage.free(cur)
+    picks.toSeq.toDF("step", "center_id", "dist")
   }
 
   def dominantDirection(
@@ -317,8 +317,7 @@ object Similarity {
     def r6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val dp = dotOn(vectors.sparkSession)
-    val base = vectors.select(asDouble(col(vecCol)).as("__e")).persist()
-    try {
+    graft.Lineage.pinned(vectors.select(asDouble(col(vecCol)).as("__e"))) { base =>
       var v: IndexedSeq[Double] = IndexedSeq.fill(dim)(1.0 / math.sqrt(dim.toDouble))
       for (_ <- 1 to iters) {
         val s = dp(col("__e"), typedLit(v))
@@ -334,7 +333,7 @@ object Similarity {
         sum(s * s).as("__num"),
         sum(dp(col("__e"), col("__e"))).as("__den")).first()
       (v.toArray, r6(er.getDouble(0) / er.getDouble(1)))
-    } finally base.unpersist(false)
+    }
   }
 
   def embeddingQc(vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -711,9 +710,7 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
       dim: Int, nBits: Int = 16, bandBits: Int = 8, seed: Int = 7): Unit = {
     val spark = corpus.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val vecs = hyperplaneNorms(corpus, idCol, vecCol).persist(lvl)
-    try {
+    graft.Lineage.pinned(hyperplaneNorms(corpus, idCol, vecCol)) { vecs =>
       vecs.select(col("vid"), col("__v").as("v"), col("__vn").as("vn"))
         .write.mode("overwrite").parquet(s"$path/vecs")
       signatureOf(vecs, dim, nBits, bandBits, seed)
@@ -722,7 +719,7 @@ object Similarity {
       spark.read.parquet(s"$path/sig")
         .groupBy("band", "bucket").agg(count(lit(1)).as("occ"))
         .write.mode("overwrite").parquet(s"$path/occ")
-    } finally vecs.unpersist()
+    }
     val p = new org.apache.hadoop.fs.Path(path, SigSpecFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -815,9 +812,7 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val vecs = hyperplaneNorms(newVecs, idCol, vecCol).persist(lvl)
-    try {
+    graft.Lineage.pinned(hyperplaneNorms(newVecs, idCol, vecCol)) { vecs =>
       vecs.select(col("vid"), col("__v").as("v"), col("__vn").as("vn"))
         .write.mode("overwrite").parquet(s"$path/append.staging/vecs")
       signatureOf(vecs, dim, nBits, bandBits, seed)
@@ -832,7 +827,7 @@ object Similarity {
       val marker = fs.create(new org.apache.hadoop.fs.Path(path, SigAppendIntent), true)
       try marker.write("pending".getBytes("UTF-8")) finally marker.close()
       promoteSigAppend(fs, path)
-    } finally vecs.unpersist()
+    }
   }
 
   /** Promote a fully-staged signature append (intent marker present);
@@ -2056,10 +2051,12 @@ object Similarity {
     *
     * Scale shape inherits both parents: centroids broadcast, one shuffle
     * on the bucket id, pair fan-out bounded by `bucketCap`; the cluster
-    * frame holds only PAIRED vectors (≪ corpus) and is checkpointed, so
-    * the persisted bucket assignment is released on return while the
-    * result stays evaluable; the final prune is one id-keyed anti-join
-    * the corpus streams through. Every column of `vectors` passes
+    * frame holds only PAIRED vectors (≪ corpus); the final prune is one
+    * id-keyed anti-join the corpus streams through. Scoped like
+    * [[Dedup.pruneDuplicates]]: `f` runs over the pruned frame while the
+    * bucket assignment and the cluster cut live, and both are released
+    * when it returns, so a result that outlives the call is a cut `f`
+    * makes of the columns it keeps. Every column of `vectors` passes
     * through untouched.
     *
     * @param centroids cluster model — [[trainCentroids]] output or any
@@ -2067,20 +2064,17 @@ object Similarity {
     *                  more centroids → smaller buckets → cheaper pairs
     *                  but near-dups straddling a boundary escape (the
     *                  standard SemDeDup recall trade).
-    * @return `vectors` minus non-canonical duplicate-group members.
+    * @return `f` of `vectors` minus non-canonical duplicate-group members.
     */
-  def semDedup(
+  def semDedup[T](
       vectors: DataFrame,
       centroids: DataFrame,
       idCol: String,
       vecCol: String,
       threshold: Double,
       bucketCap: Int = 10000,
-      maxIters: Int = 30): DataFrame = {
-    // pruneDuplicates cuts the cluster frame inside the scope, so the
-    // returned (lazy) anti-join stays evaluable after the bucket
-    // assignment is released — the d10 composition.
+      maxIters: Int = 30)(f: DataFrame => T): T = {
     withCosineNearDupPairs(vectors, centroids, idCol, vecCol, threshold, bucketCap)(
-      pairs => Dedup.pruneDuplicates(vectors, pairs, idCol, maxIters, "vec_a", "vec_b"))
+      pairs => Dedup.pruneDuplicates(vectors, pairs, idCol, maxIters, "vec_a", "vec_b")(f))
   }
 }

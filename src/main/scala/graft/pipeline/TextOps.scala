@@ -168,8 +168,9 @@ object TextOps {
     * collapse the bounded-word-table argument), and — when
     * `forbidSpaces` and a custom tokenizer emitted space-BEARING tokens
     * (GPT-2 pretokens) — reject representations whose space-joined seg
-    * strings cannot hold them. Unpersists `words` before throwing so a
-    * rejected corpus leaves no pinned storage behind.
+    * strings cannot hold them. Releasing `words` is the caller's: every
+    * trainer pins it in a [[graft.Lineage.pinned]] scope, which a throw
+    * exits too.
     *
     * Returns whether any token CARRIES a space — the corpus-observed
     * grain signal (GPT-2-style pretokens carry their leading space;
@@ -187,14 +188,12 @@ object TextOps {
     val maxLen = if (row.isNullAt(0)) 0 else row.getInt(0)
     val hasSpace = !row.isNullAt(1) && row.getBoolean(1)
     if (forbidSpaces && hasSpace) {
-      words.unpersist(false)
       throw new IllegalArgumentException(
         "the tokenizer emitted space-bearing tokens (GPT-2-style pretokens): " +
           "the word-grain seg representation is space-joined and cannot hold " +
           "them — train with byteLevel = true (hex-pair symbols are space-safe).")
     }
     if (maxWordChars > 0 && maxLen > maxWordChars) {
-      words.unpersist(false)
       throw new IllegalArgumentException(
         s"longest 'word' in the corpus is $maxLen chars (> $maxWordChars): " +
           "this is the signature of no-space-script (Han/Kana/Thai) text, " +

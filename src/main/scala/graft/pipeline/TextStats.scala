@@ -383,11 +383,9 @@ object TextStats {
     // Unmarked staging leftovers are garbage from an append that never
     // reached its intent point.
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    val base = newDocs
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("__w"))
-      .withColumn("dl", size(col("__w")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Lineage.pinned(newDocs
+        .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("__w"))
+        .withColumn("dl", size(col("__w")).cast("long"))) { base =>
       base.select(col("doc_id"), col("dl"), explode(col("__w")).as("term"))
         .groupBy("term", "doc_id", "dl").agg(count(lit(1)).cast("long").as("tf"))
         .withColumn("pbucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
@@ -413,7 +411,7 @@ object TextStats {
       val marker = fs.create(new org.apache.hadoop.fs.Path(path, Bm25AppendIntent), true)
       try marker.write("pending".getBytes("UTF-8")) finally marker.close()
       promoteBm25Append(fs, path)
-    } finally base.unpersist()
+    }
   }
 
   /** Promote a fully-staged BM25 append (intent marker present).

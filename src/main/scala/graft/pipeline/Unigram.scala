@@ -259,64 +259,65 @@ object Unigram {
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
     require(seedMulti >= 0, s"seedMulti must be >= 0, got $seedMulti")
     val w = symWidth(byteLevel)
-    val words = docs
-      .select(explode(tokenizer.fn(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .withColumn("rep", repOf(col("word"), byteLevel))
-      .persist()
-    words.count()
-    TextOps.requireGrainConsistent(
-      TextOps.guardWordTable(words, maxWordChars, forbidSpaces = !byteLevel),
-      tokenizer)
-    def nSymOf(rep: Column): Column =
-      if (w == 1) length(rep) else (length(rep) / w).cast("int")
-    // Seed masses: one explode over (position, length) in SYMBOL space —
-    // occurrence-weighted substring counts, the SentencePiece
-    // frequent-substring seed. Aggregation output is bounded by distinct
-    // substrings of the vocabulary, not by the corpus.
-    val seed = words
-      .select(col("freq"), col("rep"),
-        explode(sequence(lit(1), nSymOf(col("rep")))).as("i"))
-      .select(col("freq"), explode(transform(
-        sequence(lit(1),
-          least(lit(maxPieceLen), nSymOf(col("rep")) - col("i") + lit(1))),
-        l =>
-          if (w == 1) col("rep").substr(col("i"), l)
-          else col("rep").substr((col("i") - lit(1)) * lit(w) + lit(1), l * lit(w))))
-        .as("piece"))
-      .groupBy("piece").agg(sum(col("freq")).as("mass"))
-      .persist()
-    // Two bounded collects: the full alphabet (distinct symbols —
-    // content-bounded; at most 256 at byte grain) and the top-seedMulti
-    // multi-symbol candidates (TakeOrdered, binary-UTF-8 tie-break
-    // in-engine).
-    val singles = seed.filter(length(col("piece")) === w)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val multi = seed.filter(length(col("piece")) > w)
-      .orderBy(desc("mass"), asc("piece")).limit(seedMulti)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    seed.unpersist(false)
-    var model = normalize((singles ++ multi).toSeq)
-    for (_ <- 1 to iters) {
-      // unkLogp never fires during training (the alphabet covers every
-      // corpus symbol by construction) but keeps the DP expression
-      // total; computed per round for consistency with encode.
-      val unk = round6(math.log(0.5 / model.map(_._2).sum.toDouble))
-      val lpMap = model.map(t => (t._1, t._3)).toMap
-      // E-step: one distributed Viterbi+aggregate job; the result is
-      // vocabulary-bounded (only vocab pieces can appear in a seg).
-      val em = words
-        .select(col("freq"),
-          explode(split(viterbiSeg(col("rep"), lpMap, unk, maxPieceLen, w), " "))
-            .as("piece"))
-        .groupBy("piece").agg(sum(col("freq")).as("em"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      // M-step: +1-smooth the alphabet, drop unused multi-symbol pieces.
-      val next = model.flatMap { case (p, _, _) =>
-        val m = em.getOrElse(p, 0L) + (if (symLen(p, w) == 1) 1L else 0L)
-        if (m > 0L) Some((p, m)) else None
+    // The word table feeds the guard, the seed and every EM round: pinned
+    // for the training, released on return or on a guard's throw.
+    val model = graft.Lineage.pinned(docs
+        .select(explode(tokenizer.fn(col(textCol))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .withColumn("rep", repOf(col("word"), byteLevel))) { words =>
+      TextOps.requireGrainConsistent(
+        TextOps.guardWordTable(words, maxWordChars, forbidSpaces = !byteLevel),
+        tokenizer)
+      def nSymOf(rep: Column): Column =
+        if (w == 1) length(rep) else (length(rep) / w).cast("int")
+      // Seed masses: one explode over (position, length) in SYMBOL space —
+      // occurrence-weighted substring counts, the SentencePiece
+      // frequent-substring seed. Aggregation output is bounded by distinct
+      // substrings of the vocabulary, not by the corpus.
+      val (singles, multi) = graft.Lineage.pinned(words
+        .select(col("freq"), col("rep"),
+          explode(sequence(lit(1), nSymOf(col("rep")))).as("i"))
+        .select(col("freq"), explode(transform(
+          sequence(lit(1),
+            least(lit(maxPieceLen), nSymOf(col("rep")) - col("i") + lit(1))),
+          l =>
+            if (w == 1) col("rep").substr(col("i"), l)
+            else col("rep").substr((col("i") - lit(1)) * lit(w) + lit(1), l * lit(w))))
+          .as("piece"))
+        .groupBy("piece").agg(sum(col("freq")).as("mass"))) { seed =>
+        // Two bounded collects: the full alphabet (distinct symbols —
+        // content-bounded; at most 256 at byte grain) and the top-seedMulti
+        // multi-symbol candidates (TakeOrdered, binary-UTF-8 tie-break
+        // in-engine).
+        (seed.filter(length(col("piece")) === w)
+          .collect().map(r => (r.getString(0), r.getLong(1))),
+         seed.filter(length(col("piece")) > w)
+          .orderBy(desc("mass"), asc("piece")).limit(seedMulti)
+          .collect().map(r => (r.getString(0), r.getLong(1))))
       }
-      model = normalize(next)
+      var model = normalize((singles ++ multi).toSeq)
+      for (_ <- 1 to iters) {
+        // unkLogp never fires during training (the alphabet covers every
+        // corpus symbol by construction) but keeps the DP expression
+        // total; computed per round for consistency with encode.
+        val unk = round6(math.log(0.5 / model.map(_._2).sum.toDouble))
+        val lpMap = model.map(t => (t._1, t._3)).toMap
+        // E-step: one distributed Viterbi+aggregate job; the result is
+        // vocabulary-bounded (only vocab pieces can appear in a seg).
+        val em = words
+          .select(col("freq"),
+            explode(split(viterbiSeg(col("rep"), lpMap, unk, maxPieceLen, w), " "))
+              .as("piece"))
+          .groupBy("piece").agg(sum(col("freq")).as("em"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+        // M-step: +1-smooth the alphabet, drop unused multi-symbol pieces.
+        val next = model.flatMap { case (p, _, _) =>
+          val m = em.getOrElse(p, 0L) + (if (symLen(p, w) == 1) 1L else 0L)
+          if (m > 0L) Some((p, m)) else None
+        }
+        model = normalize(next)
+      }
+      model
     }
     // Prune to the target size: alphabet always kept, multi-symbol
     // budget = vocabSize − |alphabet| by (mass DESC, piece ASC).
@@ -328,7 +329,6 @@ object Unigram {
     val kept = normalize((sgl ++ keepMulti).map(t => (t._1, t._2)))
       .sortWith((a, b) => utf8Compare(a._1, b._1) < 0)
     val unkLogp = round6(math.log(0.5 / kept.map(_._2).sum.toDouble))
-    words.unpersist(false)
     UnigramModel(kept, unkLogp, maxPieceLen, reserved = reserved,
       byteLevel = byteLevel, tokenizer = tokenizer)
   }
@@ -419,18 +419,16 @@ object Unigram {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(wordCap >= 1, s"wordCap must be >= 1, got $wordCap")
     val w = symWidth(byteLevel)
-    val wf = docs
-      .select(explode(tokenizer.fn(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .persist()
-    val totalWords = wf.count()
-    TextOps.requireGrainConsistent(
-      TextOps.guardWordTable(wf, maxWordChars, forbidSpaces = !byteLevel),
-      tokenizer)
-    // The ONE driver-side collect: bounded by the cap, never the corpus.
-    val words = wf.orderBy(desc("freq"), asc("word")).limit(wordCap)
-      .collect().map(r => (repOfLocal(r.getString(0), byteLevel), r.getLong(1)))
-    wf.unpersist(false)
+    val (totalWords, words) = graft.Lineage.pinned(docs
+        .select(explode(tokenizer.fn(col(textCol))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))) { wf =>
+      TextOps.requireGrainConsistent(
+        TextOps.guardWordTable(wf, maxWordChars, forbidSpaces = !byteLevel),
+        tokenizer)
+      // The ONE driver-side collect: bounded by the cap, never the corpus.
+      (wf.count(), wf.orderBy(desc("freq"), asc("word")).limit(wordCap)
+        .collect().map(r => (repOfLocal(r.getString(0), byteLevel), r.getLong(1))))
+    }
     // Seed: occurrence-weighted symbol-aligned substring masses, in
     // memory.
     val seedMass = scala.collection.mutable.HashMap.empty[String, Long]

@@ -156,11 +156,11 @@ object BenchPhases {
     }),
     // t32's claim is the ENCODE (posexplode + broadcast vocab attach +
     // hashed OOV fallback); the vocab build it encodes against is setup —
-    // cached and materialized untimed so the timed pass never recomputes it.
+    // a cut made untimed so the timed pass never recomputes it (released
+    // by the reset before the next iteration, like t46's).
     "t32_encode_tokens" -> ((s, dir) => {
       val d = Fixtures.table(s, dir, "documents")
-      val vocab = graft.pipeline.Vocab.build(d, "text", vocabSize = 100).cache()
-      vocab.count()
+      val vocab = graft.Lineage.cut(graft.pipeline.Vocab.build(d, "text", vocabSize = 100))
       () => {
         graft.pipeline.Vocab.encode(d, "doc_id", "text", vocab,
           vocabSize = 100, oovBuckets = 16, seed = 5).count(); ()
@@ -179,7 +179,7 @@ object BenchPhases {
     }),
     // t34's claim is the subword ENCODE (posexplode + broadcast
     // segmentation attach + piece re-explode); training the merges is
-    // setup — the model's word table arrives already persisted.
+    // setup — the model's word table arrives as a driver-local table.
     "t34_bpe_encode" -> ((s, dir) => {
       val d = Fixtures.table(s, dir, "documents")
       val model = graft.pipeline.Bpe.train(d, "text", numMerges = 8)
@@ -204,12 +204,11 @@ object BenchPhases {
       val full = Fixtures.table(s, dir, "documents")
       val d = full.filter(col("doc_id") < 50)
       val model = graft.pipeline.Bpe.train(full, "text", numMerges = 8)
-      val ids = graft.pipeline.Bpe.encodeIds(d, "doc_id", "text", model).cache()
+      val ids = graft.Lineage.cut(graft.pipeline.Bpe.encodeIds(d, "doc_id", "text", model))
       val counts = ids.groupBy("doc_id").agg(count(lit(1)).as("n_pieces"))
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
-      val packs = graft.pipeline.Packing.packGreedyByCount(
-        counts, "doc_id", "n_pieces", budget = 512, groupCols = Seq("lang")).cache()
-      ids.count(); packs.count()
+      val packs = graft.Lineage.cut(graft.pipeline.Packing.packGreedyByCount(
+        counts, "doc_id", "n_pieces", budget = 512, groupCols = Seq("lang")))
       () => {
         graft.pipeline.Packing.packedSequences(ids, packs, "doc_id", Seq("lang"))
           .count(); ()
@@ -356,11 +355,9 @@ object BenchPhases {
       val path = Fixtures.scratchDir("graft-t58-bench") + "/model"
       val trained = graft.pipeline.Bpe.train(d, "text", numMerges = 8)
       graft.pipeline.ModelStore.saveBpe(trained, path)
-      trained.words.unpersist(false)
       () => {
         val m = graft.pipeline.ModelStore.loadBpe(s, path)
-        graft.pipeline.Bpe.encodeIds(d, "doc_id", "text", m).count()
-        m.words.unpersist(false); ()
+        graft.pipeline.Bpe.encodeIds(d, "doc_id", "text", m).count(); ()
       }
     }),
     "t59_unigram_saved_encode" -> ((s, dir) => {

@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.pipeline.{Bpe, Classifier, Packing, SpecialTokens, TextOps, TextStats}
 
 /** The crawl-to-corpus pipeline's stage builders — ONE implementation
-  * shared by the oracled query (`p11_crawl_to_corpus`) and the runnable
-  * demo (`graft.tools.CrawlDemo`), so the demo can never drift from the
-  * chain the DuckDB oracle hash-pins. Each stage consumes the previous
-  * stage's frame; the frames that feed ≥ 2 downstream consumers
-  * materialize at the boundary (`localCheckpoint` — the p1 discipline;
-  * a production run writes parquet at exactly these seams).
+  * shared by the oracled queries (`p11_crawl_to_corpus` and its scale
+  * path `p13_crawl_to_corpus_scale`), so the two chains can never drift
+  * apart. Each stage consumes the previous stage's frame; the frames
+  * that feed ≥ 2 downstream consumers materialize at the boundary as a
+  * [[graft.Lineage.cut]] the caller owns (the p1 discipline; a
+  * production run writes parquet at exactly these seams).
   */
 private[graft] object CrawlStages {
 
@@ -23,8 +23,7 @@ private[graft] object CrawlStages {
     * ITS checkpoint), so an eager cut here bought nothing and paid one
     * full write+read of the raw body corpus per run — the
     * materialize-at-boundaries rule is "frames feeding ≥ 2 consumers",
-    * and this one doesn't. (CrawlDemo's extra diagnostic count re-runs
-    * the parse once at demo scale — the right trade.)
+    * and this one doesn't.
     * @return (ingested = (doc_id, body), quarantine)
     */
   def ingest(s: SparkSession, shardPath: String): (DataFrame, DataFrame) = {
@@ -54,34 +53,25 @@ private[graft] object CrawlStages {
     * kept) AFTER exact dedup — a real crawl runs both: republication
     * mirrors collapse on the fingerprint, boilerplate-padded
     * near-copies need the shingle index. Candidate generation is
-    * df-capped and bucketed (never corpus²); the pair indexes are pinned
-    * only inside the generator's scope, and the prune's loser side is
-    * `clusters`' cut, so the stage's cut after the scope reads no
-    * released pin.
+    * df-capped and bucketed (never corpus²); the pair indexes and the
+    * cluster cut live only inside the generator's and the prune's
+    * scopes, and the pruned corpus is cut before they are released.
     */
   def nearDedup(deduped: DataFrame): DataFrame =
     graft.pipeline.Dedup.withJaccardPairs(deduped, "doc_id", "text",
       PipelineQueries.ShingleN, PipelineQueries.DfCap,
       PipelineQueries.JaccardThreshold)(
-      pairs => graft.pipeline.Dedup.pruneDuplicates(deduped, pairs, "doc_id"))
-      .transform(graft.Lineage.cut)
+      pairs => graft.pipeline.Dedup.pruneDuplicates(deduped, pairs, "doc_id")(graft.Lineage.cut))
 
   /** STAGE 3 — LANGID: the t44 seed-trained softmax routes every doc
     * by its PREDICTED language (no metadata survives a crawl).
     * @return deduped + `pred_lang`, checkpointed
     */
   def route(s: SparkSession, deduped: DataFrame): DataFrame = {
-    import s.implicits._
-    val lfeats = (0 until PipelineQueries.LangidBuckets).map(b => s"x$b")
-    // The seed features feed every GD round: pinned for the training only.
-    val wl = graft.Lineage.pinned(PipelineQueries.langidFeatures(
-        PipelineQueries.LangidSeeds.toDF("doc_id", "lang", "text"))) { fSeed =>
-      Classifier.trainSoftmax(fSeed, lfeats, "y",
-        numClasses = PipelineQueries.LangidLangs.size, iters = 8, lr = 1.0)
-    }
     val routed = Classifier.scoreSoftmax(
         PipelineQueries.langidFeatures(
-          deduped.withColumn("lang", lit(null).cast("string"))), wl, lfeats)
+          deduped.withColumn("lang", lit(null).cast("string"))),
+        PipelineQueries.langidWeights(s), PipelineQueries.LangidFeatureCols)
       .withColumn("pred_lang", element_at(
         array(PipelineQueries.LangidLangs.map(lit): _*),
         (col("pred_class") + 1).cast("int")))
@@ -96,22 +86,13 @@ private[graft] object CrawlStages {
     * @return the gated corpus (doc_id, text, pred_lang), checkpointed
     */
   def gate(docs: DataFrame): DataFrame = {
-    // Pinned: trainLogistic scans the feature frame once per GD iteration
-    // (separate jobs — no exchange reuse across them) and the scoring
-    // join re-embeds it again, each scan re-paying split+array_distinct
-    // over the corpus text. The frame is doc_id + 4 doubles — cache it.
-    // try/finally: an exception mid-train/checkpoint must not leave the
-    // cache entry pinned in a composed session that catches and goes on
-    // (unpersist after a failed materialization is safe).
-    val cf = PipelineQueries.classifierFeatures(
-      docs.withColumn("n_chars", length(col("text")).cast("long"))).cache()
+    // The scored cut is read until this stage's own cut; try/finally, so
+    // a composed session that catches a failure here keeps no cut.
+    val scored = PipelineQueries.classifierScored(
+      docs.withColumn("n_chars", length(col("text")).cast("long")))
     try {
-      val wq = Classifier.trainLogistic(cf, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
       val ref = docs.join(
-        Classifier.score(cf, wq, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        scored.filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val lm = TextStats.ngramCounts(ref, "text", 3)
       val kept = TextStats.mknNgramNllAgainst(docs, lm, "doc_id", "text", 3)
         .join(docs.select("doc_id", "pred_lang"), Seq("doc_id"))
@@ -119,7 +100,7 @@ private[graft] object CrawlStages {
           Window.partitionBy("pred_lang").orderBy(col("avg_nll"), col("doc_id"))))
         .filter(col("bucket") <= 2).select("doc_id")
       graft.Lineage.cut(docs.join(kept, Seq("doc_id")))
-    } finally cf.unpersist(false)
+    } finally graft.Lineage.free(scored)
   }
 
   /** STAGE 4' — GATE, SCALE PATH: the p10 sketch-cutoff rule with
@@ -145,16 +126,12 @@ private[graft] object CrawlStages {
     * @return the gated corpus (doc_id, text, pred_lang), checkpointed
     */
   def gateSketch(docs: DataFrame): DataFrame = {
-    // Same feature-frame pin + try/finally release as [[gate]].
-    val cf = PipelineQueries.classifierFeatures(
-      docs.withColumn("n_chars", length(col("text")).cast("long"))).cache()
+    // Same scored cut and release as [[gate]].
+    val scored = PipelineQueries.classifierScored(
+      docs.withColumn("n_chars", length(col("text")).cast("long")))
     try {
-      val wq = Classifier.trainLogistic(cf, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
       val ref = docs.join(
-        Classifier.score(cf, wq, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        scored.filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val lm = TextStats.ngramCounts(ref, "text", 3, Seq("pred_lang"))
       val fixed = TextStats.mknNgramNllAgainst(
           docs, lm, "doc_id", "text", 3, groupCols = Seq("pred_lang"))
@@ -167,7 +144,7 @@ private[graft] object CrawlStages {
         .filter(col("__nf") <= col("__c2")) // buckets 1–2; tail dropped
         .select("doc_id")
       graft.Lineage.cut(docs.join(kept, Seq("doc_id")))
-    } finally cf.unpersist(false)
+    } finally graft.Lineage.free(scored)
   }
 
   /** STAGE 5a — TOKENIZE: driver-local BPE under the reserved band. */

@@ -189,6 +189,22 @@ $bandSelects
     }
   }
 
+  /** The langid feature columns [[langidFeatures]] emits. */
+  private[graft] val LangidFeatureCols: Seq[String] = (0 until LangidBuckets).map(b => s"x$b")
+
+  /** t44's trained langid: 8 rounds of full-batch softmax GD over the
+    * [[langidFeatures]] of [[LangidSeeds]], which are pinned for the
+    * training only. Every seed-langid chain (t44, st21, st25, the crawl
+    * router) scores under these weights.
+    */
+  private[graft] def langidWeights(s: SparkSession): Seq[Seq[Double]] = {
+    import s.implicits._
+    graft.Lineage.pinned(langidFeatures(LangidSeeds.toDF("doc_id", "lang", "text"))) { f =>
+      Classifier.trainSoftmax(f, LangidFeatureCols, "y",
+        numClasses = LangidLangs.size, iters = 8, lr = 1.0)
+    }
+  }
+
   /** t44's feature projection: fractions of char TRIGRAMS falling in
     * each of 16 hash buckets (6dp), plus the class index. Two
     * projections so the hash-per-trigram bucket array is named once;
@@ -384,8 +400,7 @@ $bandSelects
     "e8_semdedup" -> ((s, dir) => {
       val v = embNearAug(s, dir)
       Similarity.semDedup(v, v.filter(col("vec_id") < 8), "vec_id", "embedding",
-        threshold = 0.8, bucketCap = EmbBucketCap)
-        .select("vec_id")
+        threshold = 0.8, bucketCap = EmbBucketCap)(kept => Lineage.cut(kept.select("vec_id")))
         .orderBy("vec_id")
     }),
     // Containment near-dup (C68 / d21): |A∩B| / min(|A|,|B|) over the
@@ -507,15 +522,11 @@ $bandSelects
       val keep1 = TextStats.scriptMix(corpus, "doc_id", "text")
         .filter(col("dominant") === "latin" && !col("mixed_script")).select("doc_id")
       val g1 = corpus.join(keep1, Seq("doc_id"))
-      // The trainer makes one agg pass per GD round over the feature
-      // frame, and the survivors feed both BPE training and the count
-      // pass — cache the two reused frames so the gate chain (script
-      // regexes + joins) is evaluated once, not once per pass.
-      val f = classifierFeatures(g1).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y", iters = 3, lr = 1.0)
-      val keep2 = Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-        .filter(col("accepted")).select("doc_id")
-      val g2 = g1.join(keep2, Seq("doc_id")).cache()
+      // The survivors feed both BPE training and the count pass: cut,
+      // so the gate chain (script regexes + joins) is evaluated once,
+      // not once per pass.
+      val g2 = graft.Lineage.cut(g1.join(
+        classifierScored(g1).filter(col("accepted")).select("doc_id"), Seq("doc_id")))
       val model = Bpe.train(g2, "text", numMerges = 8)
       val counts = g2
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("word"))
@@ -547,11 +558,8 @@ $bandSelects
       val keep1 = TextStats.scriptMix(corpus, "doc_id", "text")
         .filter(col("dominant") === "latin" && !col("mixed_script")).select("doc_id")
       val g1 = corpus.join(keep1, Seq("doc_id"))
-      val f = classifierFeatures(g1).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y", iters = 3, lr = 1.0)
-      val keep2 = Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-        .filter(col("accepted")).select("doc_id")
-      val g2 = g1.join(keep2, Seq("doc_id")).cache()
+      val g2 = graft.Lineage.cut(g1.join(
+        classifierScored(g1).filter(col("accepted")).select("doc_id"), Seq("doc_id")))
       val model = Bpe.trainLocal(g2, "text", numMerges = 8)
       val counts = Bpe.encodeIds(g2, "doc_id", "text", model)
         .groupBy("doc_id")
@@ -580,21 +588,13 @@ $bandSelects
     "p9_perplexity_gate" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = table(s, dir, "documents")
-      // Feature-frame cache (here and in p10/p12/p14/t35/t40): the GD
-      // trainer scans it once per iteration and the scorer again. The
-      // query lambdas return a LAZY frame — the caller's action is what
-      // consumes the cache — so release inside the lambda is impossible;
-      // it is DELEGATED to the harness boundary (Bench.isolate()'s
-      // clearCache per iteration; Verify/session teardown otherwise).
-      // Composed-pipeline callers needing in-session release use the
-      // CrawlStages.gate shape (eager checkpoint + try/finally unpersist).
-      val f = classifierFeatures(d).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
+      // The scored cut (here and in p10/p12/p14/t35/t40) is read by the
+      // LAZY frame the lambda returns, so the harness's reset releases it
+      // (`Lineage.releaseAll` after each Bench iteration and each Verify
+      // query). Composed-pipeline callers needing in-session release
+      // free it once their own cut no longer reads it (CrawlStages.gate).
       val ref = d.join(
-        Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        classifierScored(d).filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val model = TextStats.ngramCounts(ref, "text", 3)
       TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
@@ -618,13 +618,8 @@ $bandSelects
     // bucket; ntile balances counts.
     "p10_perplexity_gate_sketch" -> ((s, dir) => {
       val d = table(s, dir, "documents")
-      val f = classifierFeatures(d).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
       val ref = d.join(
-        Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        classifierScored(d).filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val model = TextStats.ngramCounts(ref, "text", 3)
       val fixed = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
@@ -658,8 +653,7 @@ $bandSelects
     // feeds ≥ 2 downstream consumers).
     "p11_crawl_to_corpus" -> ((s, dir) => {
       // The six stages live in CrawlStages — ONE implementation shared
-      // with graft.tools.CrawlDemo, so the runnable surface can never
-      // drift from the chain this oracle hash-pins.
+      // with p13, so the two chains can never drift apart.
       val (ingested, _) = CrawlStages.ingest(
         s, IngestQueries.warcCrawlFixture(s, dir))
       val corpus = CrawlStages.gate(
@@ -720,13 +714,8 @@ $bandSelects
     // posture).
     "p14_perplexity_gate_perlang" -> ((s, dir) => {
       val d = table(s, dir, "documents")
-      val f = classifierFeatures(d).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
       val ref = d.join(
-        Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        classifierScored(d).filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val model = TextStats.ngramCounts(ref, "text", 3, Seq("lang"))
       val fixed = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3,
           groupCols = Seq("lang"))
@@ -786,10 +775,7 @@ $bandSelects
     // t35 gate — one row per distinct score (descending), cumulative
     // tp/fp/fn and precision/recall/f1 from integer counts only.
     "t40_classifier_pr_curve" -> ((s, dir) => {
-      val f = classifierFeatures(table(s, dir, "documents")).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y", iters = 3, lr = 1.0)
-      Classifier.prCurve(
-          Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5), "score", "y")
+      Classifier.prCurve(classifierScored(table(s, dir, "documents")), "score", "y")
         .orderBy(desc("thr"))
     }),
     // Trained language ID (C188–C189 / t44): the softmax multiclass
@@ -802,14 +788,9 @@ $bandSelects
     // token soup they actually are — regardless of their metadata lang.
     "t44_trained_langid" -> ((s, dir) => {
       import s.implicits._
-      val seed = LangidSeeds.toDF("doc_id", "lang", "text")
-      val feats = (0 until LangidBuckets).map(b => s"x$b")
-      val fSeed = langidFeatures(seed).cache()
-      val w = Classifier.trainSoftmax(fSeed, feats, "y",
-        numClasses = LangidLangs.size, iters = 8, lr = 1.0)
       val all = table(s, dir, "documents").select("doc_id", "lang", "text")
-        .unionByName(seed)
-      Classifier.scoreSoftmax(langidFeatures(all), w, feats)
+        .unionByName(LangidSeeds.toDF("doc_id", "lang", "text"))
+      Classifier.scoreSoftmax(langidFeatures(all), langidWeights(s), LangidFeatureCols)
         .withColumn("pred_lang",
           element_at(array(LangidLangs.map(lit): _*), (col("pred_class") + 1).cast("int")))
         .withColumn("src",
@@ -997,7 +978,7 @@ $bandSelects
         .select("doc_id", "dhash")
       val pairs = Dedup.hammingPairs(fps, "doc_id", "dhash",
         maxHamming = 4, bits = 56, bucketCap = 100)
-      Dedup.pruneDuplicates(fps, pairs, "doc_id").orderBy("doc_id")
+      Dedup.pruneDuplicates(fps, pairs, "doc_id")(Lineage.cut).orderBy("doc_id")
     }),
     // JPEG image dedup (mm17): the mm8 keep-one composition on the
     // container 90% of a real crawl's images use — real ImageIO JPEG
@@ -1015,8 +996,8 @@ $bandSelects
         .select("doc_id", "width", "height", "dhash")
       val pairs = Dedup.hammingPairs(fps, "doc_id", "dhash",
         maxHamming = 4, bits = 56, bucketCap = 100)
-      Dedup.pruneDuplicates(fps, pairs, "doc_id")
-        .select("doc_id", "width", "height").orderBy("doc_id")
+      Dedup.pruneDuplicates(fps, pairs, "doc_id")(
+        kept => Lineage.cut(kept.select("doc_id", "width", "height"))).orderBy("doc_id")
     }),
     // REAL WAV decode (mm9): synthetic RIFF/WAVE PCM16 payloads with
     // oracle-predicted samples, decoded by the JDK's javax.sound.sampled
@@ -1550,13 +1531,8 @@ $bandSelects
     "p12_perplexity_gate_5g" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = table(s, dir, "documents")
-      val f = classifierFeatures(d).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
       val ref = d.join(
-        Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-          .filter(col("accepted")).select("doc_id"),
-        Seq("doc_id"))
+        classifierScored(d).filter(col("accepted")).select("doc_id"), Seq("doc_id"))
       val model = TextStats.ngramCounts(ref, "text", 5)
       TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", order = 5)
         .join(d.select("doc_id", "lang"), Seq("doc_id"))
@@ -1597,10 +1573,7 @@ $bandSelects
     // text" filter. The oracle unrolls the identical 3 gradient steps
     // (the e20/e21 fixed-iteration discipline).
     "t35_quality_classifier" -> ((s, dir) => {
-      val f = classifierFeatures(table(s, dir, "documents")).cache()
-      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y",
-        iters = 3, lr = 1.0)
-      Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5)
+      classifierScored(table(s, dir, "documents"))
         .select("doc_id", "score", "accepted").orderBy("doc_id")
     }),
     // Multimodal curation pipeline (p2): the image twin of p1 — a mixed
@@ -1628,7 +1601,7 @@ $bandSelects
       val fps = Multimodal.decodePngDHash(pngs).select("doc_id", "dhash")
       val pairs = Dedup.hammingPairs(fps, "doc_id", "dhash",
         maxHamming = 4, bits = 56, bucketCap = 100)
-      Dedup.pruneDuplicates(fps, pairs, "doc_id").orderBy("doc_id")
+      Dedup.pruneDuplicates(fps, pairs, "doc_id")(Lineage.cut).orderBy("doc_id")
     }),
     // Real pixel resample (mm14): mm3's fit-in-box plan driving an
     // actual nearest-neighbor raster pass over decoded PNGs — explicit
@@ -1863,11 +1836,15 @@ $bandSelects
       // passthrough — without this the quality semi-join + dedup agg
       // recompute once per consumer (the demo-scale analog of the
       // intermediate parquet a production pipeline writes here).
-      val deduped = Dedup.exact(quality, "doc_id", "text").drop("n_copies")
-        .localCheckpoint(true)
-      val pruned = Dedup.withJaccardPairs(
+      val deduped = graft.Lineage.cut(
+        Dedup.exact(quality, "doc_id", "text").drop("n_copies"))
+      // The cap and split read ids and labels only: the prune's cut
+      // keeps those, and the deduped cut is freed once it is made.
+      val pruned = try Dedup.withJaccardPairs(
           deduped, "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
-        pairs => Dedup.pruneDuplicates(deduped, pairs, "doc_id"))
+        pairs => Dedup.pruneDuplicates(deduped, pairs, "doc_id")(
+          kept => Lineage.cut(kept.select("doc_id", "lang", "source"))))
+        finally Lineage.free(deduped)
       val capped = Sampling.capPerStratum(pruned, "doc_id", "source",
         maxPerStratum = 20, seed = 7)
       Sampling.split(capped, "doc_id",
@@ -2125,8 +2102,8 @@ $bandSelects
     "d31_soft_dedup_weights" -> ((s, dir) => {
       val corpus = docsNearAug(s, dir)
       Dedup.withJaccardPairs(corpus, "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
-        pairs => Dedup.softDedupWeights(corpus.select("doc_id"), pairs, "doc_id"))
-        .select("doc_id", "cluster_id", "weight")
+        pairs => Dedup.softDedupWeights(corpus.select("doc_id"), pairs, "doc_id")(
+          w => Lineage.cut(w.select("doc_id", "cluster_id", "weight"))))
         .orderBy("doc_id")
     }),
     // Leakage-safe split (C166 / p5): d9's cluster resolution feeding the
@@ -2395,18 +2372,18 @@ $bandSelects
     // Keep-one-per-cluster pruning (C32 / d10): the end-to-end composition
     // a pipeline user actually runs — d2's pair generator, d9's cluster
     // resolution, then the corpus LEFT ANTI the non-canonical members. The
-    // returned join's loser side is `clusters`' cut, so it stays evaluable
-    // after the generator's scope releases the pair indexes.
+    // kept ids are cut inside the prune's scope, so the frame stays
+    // evaluable after the pair indexes and the cluster cut are released.
     // One hoisted corpus frame feeds BOTH the pair generator and the
     // LEFT ANTI passthrough side (ADVICE r8 #2). Two SCANS remain by
     // design: the index build and the passthrough each read the corpus
     // once, and at 100 TB two pruned columnar scans beat pinning a
-    // corpus-sized cache between them.
+    // corpus-sized cache between them — the cut holds the id column only.
     "d10_prune_duplicates" -> ((s, dir) => {
       val corpus = docsNearAug(s, dir)
       Dedup.withJaccardPairs(corpus, "doc_id", "text", ShingleN, DfCap, JaccardThreshold)(
-        pairs => Dedup.pruneDuplicates(corpus, pairs, "doc_id"))
-        .select("doc_id")
+        pairs => Dedup.pruneDuplicates(corpus, pairs, "doc_id")(
+          kept => Lineage.cut(kept.select("doc_id"))))
         .orderBy("doc_id")
     }),
     // Corpus rebalancing (C30): per-language keep-rates — down-weight the
@@ -2532,9 +2509,21 @@ $bandSelects
       when(array_contains(toks, "the"), 1.0).otherwise(0.0).as("y"))
   }
 
-  /** st20's oracle: t35's GD machinery, accepted slice only — exposed
-    * here because the logistic CTE builder lives with its siblings.
+  /** t35's trained gate, the classifier-bootstrapped reference of every
+    * chain that uses one: 3 rounds of full-batch logistic GD over
+    * [[classifierFeatures]] of `docs` (which needs `doc_id`, `text` and
+    * `n_chars`), then the 0.5-threshold scoring. The features are pinned
+    * for the training only — each GD round and the scoring read them
+    * once. The scored rows (doc_id, x1, x2, x3, y, score, accepted) come
+    * back as a [[graft.Lineage.cut]] that the caller owns, so the lazy
+    * plan a caller returns reads no released pin.
     */
+  private[graft] def classifierScored(docs: DataFrame): DataFrame =
+    graft.Lineage.pinned(classifierFeatures(docs)) { f =>
+      val w = Classifier.trainLogistic(f, Seq("x1", "x2", "x3"), "y", iters = 3, lr = 1.0)
+      graft.Lineage.cut(Classifier.score(f, w, Seq("x1", "x2", "x3"), threshold = 0.5))
+    }
+
   /** st22's oracle: the p9 chain (classifier-selected reference, MKN
     * scoring of the full corpus) with the frozen-cutoff CASE replacing
     * the live ntile — cutoffs read off the ntile buckets exactly the

@@ -951,11 +951,7 @@ object StreamingQueries {
     implicit val ctx: SQLContext = s.sqlContext
     val scratch = Fixtures.scratchDir("graft-st21")
     val out = s"$scratch/out"
-    val feats = (0 until PipelineQueries.LangidBuckets).map(b => s"x$b")
-    val seed = PipelineQueries.LangidSeeds.toDF("doc_id", "lang", "text")
-    val w = graft.pipeline.Classifier.trainSoftmax(
-      PipelineQueries.langidFeatures(seed).cache(), feats, "y",
-      numClasses = PipelineQueries.LangidLangs.size, iters = 8, lr = 1.0)
+    val w = PipelineQueries.langidWeights(s)
     val rows = Fixtures.table(s, dir, "documents")
       .select("doc_id", "lang", "text")
       .as[(Long, String, String)].collect().sortBy(_._1)
@@ -964,7 +960,8 @@ object StreamingQueries {
     val stream = PipelineQueries.langidFeatures(
       mem.toDF().toDF("doc_id", "lang", "text"))
     val q = graft.streaming.StreamingScore.routeTo(
-      stream, w, feats, PipelineQueries.LangidLangs, out, s"$scratch/cp")
+      stream, w, PipelineQueries.LangidFeatureCols, PipelineQueries.LangidLangs,
+      out, s"$scratch/cp")
     val replay = () =>
       try rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
       finally q.stop()
@@ -987,44 +984,48 @@ object StreamingQueries {
     val scratch = Fixtures.scratchDir("graft-st22")
     val out = s"$scratch/out"
     val d = Fixtures.table(s, dir, "documents")
-    val feats = PipelineQueries.classifierFeatures(d)
-    val w = graft.pipeline.Classifier.trainLogistic(
-      feats, Seq("x1", "x2", "x3"), "y", iters = 3, lr = 1.0)
-    val ref = d.join(
-      graft.pipeline.Classifier.score(feats, w, Seq("x1", "x2", "x3"), threshold = 0.5)
-        .filter(col("accepted")).select("doc_id"),
-      Seq("doc_id"))
-    val model = TextStats.ngramCounts(ref, "text", 3).persist()
-    model.count()
-    // Batch calibration: the p9 terciles, read off as frozen cutoffs
-    // (one (lang, c1, c2) row per language — bounded collect).
-    val calib = TextStats.mknNgramNllAgainst(d, model, "doc_id", "text", 3)
-      .join(d.select("doc_id", "lang"), Seq("doc_id"))
-      .withColumn("bucket", ntile(3).over(
-        Window.partitionBy("lang").orderBy(col("avg_nll"), col("doc_id"))))
-      .groupBy("lang").agg(
-        max(when(col("bucket") === 1, col("avg_nll"))).as("c1"),
-        max(when(col("bucket") === 2, col("avg_nll"))).as("c2"))
-      .collect()
-    // A lang with < 2 scored docs has no bucket-2 rows ⇒ c2 is NULL:
-    // leave it out of the cutoff map (absent ⇒ the gate's tail CASE),
-    // matching the oracle's `avg_nll <= NULL ⇒ ELSE 3` semantics.
-    val cut1 = calib.collect {
-      case r if !r.isNullAt(1) => (r.getString(0), r.getDouble(1))
-    }.toMap
-    val cut2 = calib.collect {
-      case r if !r.isNullAt(2) => (r.getString(0), r.getDouble(2))
-    }.toMap
     val rows = d.select("doc_id", "lang", "text")
       .as[(Long, String, String)].collect().sortBy(_._1)
     val per = math.max(1, (rows.length + NBatches - 1) / NBatches)
     val mem = MemoryStream[(Long, String, String)]
     val stream = mem.toDF().toDF("doc_id", "lang", "text")
-    val q = graft.streaming.StreamingScore.lmGateTo(
-      stream, "doc_id", "text", "lang", model, cut1, cut2, out, s"$scratch/cp")
+    // The model is pinned while the calibration reads it, then cut for
+    // the gate: it outlives this call (every micro-batch joins it), and
+    // the replay frees it once the stream stops. Cut from the cache, the
+    // leaf carries the model's measured size, small enough to plan every
+    // batch's model and scoring-table joins as broadcasts; cut from the
+    // n-gram aggregate, it carries the aggregate's size estimate and
+    // every batch plans shuffle joins. The scored cut the model was
+    // trained from is read by nothing after that.
+    val scored = PipelineQueries.classifierScored(d)
+    val (q, model) = try graft.Lineage.pinned(TextStats.ngramCounts(
+        d.join(scored.filter(col("accepted")).select("doc_id"), Seq("doc_id")), "text", 3)) { m =>
+      // Batch calibration: the p9 terciles, read off as frozen cutoffs
+      // (one (lang, c1, c2) row per language — bounded collect).
+      val calib = TextStats.mknNgramNllAgainst(d, m, "doc_id", "text", 3)
+        .join(d.select("doc_id", "lang"), Seq("doc_id"))
+        .withColumn("bucket", ntile(3).over(
+          Window.partitionBy("lang").orderBy(col("avg_nll"), col("doc_id"))))
+        .groupBy("lang").agg(
+          max(when(col("bucket") === 1, col("avg_nll"))).as("c1"),
+          max(when(col("bucket") === 2, col("avg_nll"))).as("c2"))
+        .collect()
+      // A lang with < 2 scored docs has no bucket-2 rows ⇒ c2 is NULL:
+      // leave it out of the cutoff map (absent ⇒ the gate's tail CASE),
+      // matching the oracle's `avg_nll <= NULL ⇒ ELSE 3` semantics.
+      val cut1 = calib.collect {
+        case r if !r.isNullAt(1) => (r.getString(0), r.getDouble(1))
+      }.toMap
+      val cut2 = calib.collect {
+        case r if !r.isNullAt(2) => (r.getString(0), r.getDouble(2))
+      }.toMap
+      val model = graft.Lineage.cut(m)
+      (graft.streaming.StreamingScore.lmGateTo(
+        stream, "doc_id", "text", "lang", model, cut1, cut2, out, s"$scratch/cp"), model)
+    } finally graft.Lineage.free(scored)
     val replay = () =>
       try rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
-      finally { q.stop(); model.unpersist(false); () }
+      finally { q.stop(); graft.Lineage.free(model) }
     (replay, out)
   }
 
@@ -1044,13 +1045,8 @@ object StreamingQueries {
     val scratch = Fixtures.scratchDir("graft-st25")
     val out = s"$scratch/out"
     val root = s"$scratch/router"
-    val feats = (0 until PipelineQueries.LangidBuckets).map(b => s"x$b")
-    val seed = PipelineQueries.LangidSeeds.toDF("doc_id", "lang", "text")
-    graft.pipeline.ModelStore.saveSoftmax(s,
-      graft.pipeline.Classifier.trainSoftmax(
-        PipelineQueries.langidFeatures(seed).cache(), feats, "y",
-        numClasses = PipelineQueries.LangidLangs.size, iters = 8, lr = 1.0),
-      feats, PipelineQueries.LangidLangs, s"$root/v=1")
+    graft.pipeline.ModelStore.saveSoftmax(s, PipelineQueries.langidWeights(s),
+      PipelineQueries.LangidFeatureCols, PipelineQueries.LangidLangs, s"$root/v=1")
     graft.pipeline.ModelStore.publishVersion(s, root, 1)
     // A retrain IN FLIGHT: v=2's weights landed but its meta (and the
     // publish) never did — resolveLatest must keep answering v=1.

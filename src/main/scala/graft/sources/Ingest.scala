@@ -133,10 +133,12 @@ object Ingest {
     * `raw_line` is the csv source's corrupt record (the malformed
     * logical record, which may span input lines — the raw-bytes
     * guarantee weakens to raw-RECORD here, an inherent property of
-    * quote-aware splitting). The parsed frame is cached before the
-    * split: the csv source refuses plans that reference only the
-    * corrupt-record column (SPARK-26243), and after Catalyst prunes
+    * quote-aware splitting). The parsed frame is a [[graft.Lineage.cut]]
+    * before the split: the csv source refuses plans that reference only
+    * the corrupt-record column (SPARK-26243), and after Catalyst prunes
     * the quarantine projection that is exactly what the scan would be.
+    * Both returned frames read that cut; it lives until the session's
+    * [[graft.Lineage.releaseAll]] (a harness's reset between runs).
     */
   def csvMultiline(
       spark: SparkSession, path: String, schema: StructType,
@@ -147,9 +149,9 @@ object Ingest {
       .schema(withCorrupt).csv(path)
       .withColumn("is_clean", col(CorruptCol).isNull)
       // Provenance must be captured ON the scan — input_file_name() is
-      // empty once the rows live in the cache's InMemoryRelation.
+      // empty once the rows live in the cut's leaf.
       .withColumn("src_file", input_file_name())
-      .cache()
+      .transform(graft.Lineage.cut)
     val clean = parsed.filter(col("is_clean"))
       .select(schema.fieldNames.map(f => col(s"`$f`")).toSeq: _*)
     val quarantine = parsed.filter(!col("is_clean"))

@@ -19,8 +19,9 @@ import graft.pipeline.Similarity
 object StreamingNearDup {
 
   /** The pre-staged corpus side: occupancy-capped exploded signatures and
-    * the norm payloads, both persisted ONCE at index build — every
-    * micro-batch joins these instead of re-deriving the corpus lineage.
+    * the norm payloads, both [[graft.Lineage.cut]]s made ONCE at index
+    * build — every micro-batch joins these instead of re-deriving the
+    * corpus lineage. The caller owns them: [[release]] frees both.
     */
   final class CorpusIndex private[StreamingNearDup] (
       private[graft] val sig: DataFrame,
@@ -30,13 +31,13 @@ object StreamingNearDup {
       val bandBits: Int,
       val seed: Int) {
     def release(): Unit = {
-      sig.unpersist()
-      vecs.unpersist()
+      graft.Lineage.free(sig)
+      graft.Lineage.free(vecs)
     }
   }
 
   /** Stage the corpus for streaming ingest: norm projection + capped
-    * band-bucket signatures, persisted. Same cap semantics as
+    * band-bucket signatures, both cut. Same cap semantics as
     * [[Similarity.withHyperplaneIncrementalPairs]] (one
     * [[Similarity.cappedSignatures]]), so no micro-batch ever pays a
     * quadratic bucket fan-out.
@@ -50,9 +51,9 @@ object StreamingNearDup {
       bandBits: Int = 8,
       seed: Int = 7,
       bucketCap: Int = 10000): CorpusIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val vecs = Similarity.hyperplaneNorms(corpus, idCol, vecCol).persist(lvl)
-    val sig = Similarity.cappedSignatures(vecs, dim, nBits, bandBits, seed, bucketCap).persist(lvl)
+    val vecs = graft.Lineage.cut(Similarity.hyperplaneNorms(corpus, idCol, vecCol))
+    val sig = graft.Lineage.cut(
+      Similarity.cappedSignatures(vecs, dim, nBits, bandBits, seed, bucketCap))
     new CorpusIndex(sig, vecs, dim, nBits, bandBits, seed)
   }
 

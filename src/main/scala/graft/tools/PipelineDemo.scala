@@ -81,7 +81,7 @@ object PipelineDemo {
     val fluent = unrepeated.join(
       nll.crossJoin(broadcast(cut)).filter(col("avg_nll") <= col("__cut")).select("doc_id"),
       Seq("doc_id"), "left_semi")
-      .localCheckpoint(true) // gate references `unrepeated` 3× (corpus + self-trained model)
+      .transform(graft.Lineage.cut) // gate references `unrepeated` 3× (corpus + self-trained model)
     println(s"[demo] after perplexity gate: ${fluent.count()}")
 
     // 2. Exact dedup (content hash) — collapses byte-identical copies.
@@ -96,9 +96,12 @@ object PipelineDemo {
     val deboiled = exact.drop("text")
       .join(boilRep.filter(col("text_clean") =!= "")
         .select(col("doc_id"), col("text_clean").as("text")), "doc_id")
-      .localCheckpoint(true) // strip references `exact` 3× (blocks + reassembly + join-back)
+      .transform(graft.Lineage.cut) // strip references `exact` 3× (blocks + reassembly + join-back)
     val boilRemoved = boilRep.agg(sum(col("n_removed"))).first().getLong(0)
     println(s"[demo] after boilerplate strip: ${deboiled.count()} ($boilRemoved boilerplate blocks removed)")
+    // Each stage boundary is a cut; the one before it is freed once
+    // nothing left to run reads it.
+    graft.Lineage.free(fluent)
 
     // 2b. Block-level substring dedup: strip repeated PASSAGES (boilerplate,
     //     quoted chunks) that survive whole-doc dedup; docs stripped to
@@ -107,9 +110,10 @@ object PipelineDemo {
     val stripped = deboiled.drop("text")
       .join(stripRep.filter(col("text_clean") =!= "")
         .select(col("doc_id"), col("text_clean").as("text")), "doc_id")
-      .localCheckpoint(true) // same 3× shape; the near-dup pair self-join doubles it again
+      .transform(graft.Lineage.cut) // same 3× shape; the near-dup pair self-join doubles it again
     val blocksRemoved = stripRep.agg(sum(col("n_removed"))).first().getLong(0)
     println(s"[demo] after block strip: ${stripped.count()} ($blocksRemoved duplicate blocks removed)")
+    graft.Lineage.free(deboiled)
 
     // 2c. Sliding-gram span scrub: repeated passages the fixed grid
     //     cannot see (sub-block width — n = 8 under 2b's 16-token
@@ -121,17 +125,18 @@ object PipelineDemo {
     val scrubbed = stripped.drop("text")
       .join(spanRep.filter(col("text_clean") =!= "")
         .select(col("doc_id"), col("text_clean").as("text")), "doc_id")
-      .localCheckpoint(true)
+      .transform(graft.Lineage.cut)
     val spanTokensRemoved = spanRep.agg(sum(col("n_removed"))).first().getLong(0)
     println(s"[demo] after span scrub: ${scrubbed.count()} ($spanTokensRemoved repeated-span tokens removed)")
+    graft.Lineage.free(stripped)
 
     // 3. Near-dup prune: jaccard pairs → cluster resolution → keep one per
-    //    cluster. The scope releases the shingle indexes once the pruned
-    //    corpus is cut.
-    val pruned = Dedup.withJaccardPairs(scrubbed, "doc_id", "text", threshold = 0.8) { pairs =>
-      graft.Lineage.cut(Dedup.pruneDuplicates(scrubbed, pairs, "doc_id"))
-    }
+    //    cluster. The pruned corpus is cut inside the scopes, so they
+    //    release the shingle indexes and the cluster cut on return.
+    val pruned = Dedup.withJaccardPairs(scrubbed, "doc_id", "text", threshold = 0.8)(
+      pairs => Dedup.pruneDuplicates(scrubbed, pairs, "doc_id")(graft.Lineage.cut))
     println(s"[demo] after near-dup prune: ${pruned.count()}")
+    graft.Lineage.free(scrubbed)
 
     // 4. Decontaminate against a synthetic "eval set" (every 40th doc).
     val bench = raw.filter(col("doc_id") % 40 === 0)
@@ -201,6 +206,7 @@ object PipelineDemo {
     println(s"[demo] epoch shuffle: shard sizes {$shardSizes}; " +
       s"epoch1 leads with doc ${firstDoc(1)}, epoch2 with doc ${firstDoc(2)}")
 
+    graft.Lineage.free(pruned)
     spark.stop()
   }
 }

@@ -153,6 +153,58 @@ class LineageSpec extends GraftSuite {
       s"kCenters returns a driver-side frame; no round leaf may stay pinned, found ${added.size}")
   }
 
+  test("pruneDuplicates frees its cluster cut when its scope returns: persistent RDDs at baseline") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "prune leak probe alpha beta gamma delta"),
+      (2L, "prune leak probe alpha beta gamma delta"),
+      (3L, "an unrelated prune-leak document body"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val kept = graft.pipeline.Dedup.withJaccardPairs(docs, "doc_id", "text", 3, 50, 0.6)(
+      pairs => graft.pipeline.Dedup.pruneDuplicates(docs, pairs, "doc_id")(
+        _.select("doc_id").as[Long].collect().toSet))
+    assert(kept === Set(1L, 3L))
+    val added = spark.sparkContext.getPersistentRDDs -- before
+    assert(added.isEmpty, added.values.map(r => s"${r.id}:${r.getStorageLevel.description}").mkString(", "))
+  }
+
+  test("releaseAll after p9 under a checkpoint dir: no checkpoint file and no persistent RDD left") {
+    // p9's lazy result reads the classifier's scored cut, which only the
+    // harness's reset can release — under a checkpoint dir, files too.
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-reset").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      val cpDir = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      def rddDirs() = Option(cpDir.list()).toSeq.flatten.filter(_.startsWith("rdd-"))
+      val p9 = graft.SparkEntry.queries("p9_perplexity_gate")
+      assert(p9(spark, SparkTestBase.sf0001).count() > 0)
+      assert(rddDirs().nonEmpty, "p9's scored cut is reliable under a checkpoint dir")
+      Lineage.releaseAll(spark)
+      assert(rddDirs().isEmpty, rddDirs().mkString("checkpoint files left: ", ", ", ""))
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("src/main persists, caches, checkpoints and releases only through Lineage") {
+    // One materialization policy: a raw call outside Lineage decides the
+    // storage level, the caller-owned-cache rule or the release again.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no ${root.getAbsolutePath}")
+    val raw = """\.(persist|cache|localCheckpoint|checkpoint|unpersist)\(""".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = for {
+      f <- files(root) if f.getName != "Lineage.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if raw.findFirstIn(code.split("//", 2)(0)).isDefined
+    } yield s"${f.getPath}:${i + 1}: $code"
+    assert(hits.isEmpty, hits.mkString("raw materialization outside Lineage:\n", "\n", ""))
+  }
+
   test("p13's CrawlStages chain: persistent RDDs back at baseline once the caller frees the frames it holds") {
     import graft.queries.CrawlStages
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -34,7 +34,6 @@ class BpeLocalSpec extends GraftSuite {
       assert(loc.merges === dist.merges, s"k=$k merge tables diverge")
       assert(wordsOf(loc) === wordsOf(dist), s"k=$k segmentations diverge")
       assert(loc.cappedOut === 0L)
-      dist.words.unpersist(); loc.words.unpersist()
     }
   }
 
@@ -85,7 +84,6 @@ class BpeLocalSpec extends GraftSuite {
     val b = Bpe.trainLocal(d, "text", numMerges = 12)
     assert(a.merges === b.merges)
     assert(wordsOf(a) === wordsOf(b))
-    a.words.unpersist(); b.words.unpersist()
   }
 
   test("encode totality holds over a capped model (tail char-fallback still concatenates back)") {
@@ -98,6 +96,5 @@ class BpeLocalSpec extends GraftSuite {
         e => e.getField("piece")), "").as("w"))
       .select("w").collect().map(_.getString(0)).toSet
     assert(rebuilt === Set("stream", "batch", "rareword"))
-    model.words.unpersist()
   }
 }

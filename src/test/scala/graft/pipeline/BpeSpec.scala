@@ -140,7 +140,6 @@ class BpeSpec extends GraftSuite {
       .withColumn("__back", decode(unhex(regexp_replace(col("seg"), " ", "")), "UTF-8"))
       .filter(col("__back") =!= col("word"))
     assert(bad.isEmpty, bad.collect().mkString(", "))
-    model.words.unpersist()
   }
 
   test("byte level: trainLocal == train on real corpus data at k=8") {
@@ -152,7 +151,6 @@ class BpeSpec extends GraftSuite {
     val wd = dist.words.collect().map(r => r.getString(0) -> r.getString(2)).toMap
     val wl = loc.words.collect().map(r => r.getString(0) -> r.getString(2)).toMap
     assert(wl === wd)
-    dist.words.unpersist(); loc.words.unpersist()
   }
 
   test("byte level: pieceVocab alphabet is the hex-pair byte alphabet, merges follow") {

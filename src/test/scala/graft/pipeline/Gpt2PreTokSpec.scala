@@ -99,6 +99,7 @@ class Gpt2PreTokSpec extends GraftSuite {
   }
 
   test("Bpe integration: word grain rejects space-bearing pretokens") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalArgumentException] {
       Bpe.train(docs("the fast cat"), "text", numMerges = 2,
         tokenizer = TextOps.Gpt2Tok)
@@ -109,6 +110,20 @@ class Gpt2PreTokSpec extends GraftSuite {
         tokenizer = TextOps.Gpt2Tok)
     }
     assert(ex2.getMessage.contains("byteLevel"))
+    // A misdeclared tokenizer (space-bearing tokens under a " "
+    // separator) is rejected at the space-safe byte grain too.
+    val lying = TextOps.Tok("lying", TextOps.Gpt2Tok.fn, " ")
+    for (train <- Seq[() => Any](
+        () => Bpe.train(docs("the fast cat"), "text", numMerges = 2,
+          byteLevel = true, tokenizer = lying),
+        () => Bpe.trainLocal(docs("the fast cat"), "text", numMerges = 2,
+          byteLevel = true, tokenizer = lying))) {
+      val ex3 = intercept[IllegalArgumentException](train())
+      assert(ex3.getMessage.contains("separator"))
+    }
+    // A trainer that throws releases the word table it pinned.
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the rejected trainers left ${added.size} persistent RDDs")
   }
 
   test("decode ∘ encodeIds == identity at both grains, including GPT-2 pretokens and astral text") {

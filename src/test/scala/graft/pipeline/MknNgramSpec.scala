@@ -151,7 +151,6 @@ class MknNgramSpec extends GraftSuite {
         SpecialTokens.BandSize, Seq("lang"))
     }
     assert(ex.getMessage.contains("collides"))
-    model.words.unpersist()
   }
 
   test("at-rest index == live derivation BIT-FOR-BIT; probe scans prune to touched buckets") {

@@ -45,7 +45,24 @@ class ModelStoreSpec extends GraftSuite {
       .join(d.withColumnRenamed("text", "orig"), Seq("doc_id"))
       .filter(col("text") =!= col("orig")).count()
     assert(back === 0L)
-    trained.words.unpersist(); loaded.words.unpersist()
+  }
+
+  test("BPE: train, trainLocal and loadBpe return a driver-local word table, no persistent RDD") {
+    val d = docs("local words table stream", "table stream local local")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val trained = Bpe.train(d, "text", numMerges = 4)
+    assert(added.isEmpty, s"Bpe.train left ${added.size} persistent RDDs")
+    val local = Bpe.trainLocal(d, "text", numMerges = 4)
+    assert(added.isEmpty, s"Bpe.trainLocal left ${added.size} persistent RDDs")
+    val path = store("bpe-local-words")
+    ModelStore.saveBpe(trained, path)
+    val loaded = ModelStore.loadBpe(spark, path)
+    assert(Bpe.encodeIds(d, "doc_id", "text", loaded).count() > 0L)
+    assert(added.isEmpty, s"ModelStore.loadBpe left ${added.size} persistent RDDs")
+    // One construction: the three tables are the same rows.
+    def rows(m: Bpe.BpeModel) = m.words.orderBy("word").collect().toSeq
+    assert(rows(loaded) === rows(trained) && rows(local) === rows(trained))
   }
 
   test("BPE: the GPT-2 byte grain round-trips with its recorded separator") {
@@ -67,7 +84,6 @@ class ModelStoreSpec extends GraftSuite {
       .join(d.withColumnRenamed("text", "orig"), Seq("doc_id"))
       .filter(col("text") =!= col("orig")).count()
     assert(back === 0L)
-    trained.words.unpersist(); loaded.words.unpersist()
   }
 
   test("Unigram: loaded model == trained model (piece sequence, unkLogp, maxPieceLen) and segments identically") {
@@ -192,7 +208,6 @@ class ModelStoreSpec extends GraftSuite {
       ModelStore.loadBpe(spark, fpath)
     }
     assert(exV.getMessage.contains("format_version"))
-    trained.words.unpersist()
   }
 
   test("torn save fails loud: stale meta beside a mismatched data table is rejected by the row checksum") {
@@ -209,7 +224,6 @@ class ModelStoreSpec extends GraftSuite {
       ModelStore.loadBpe(spark, path)
     }
     assert(ex.getMessage.contains("TORN"))
-    trained.words.unpersist()
   }
 
   test("version registry: publish is atomic-by-create, readers resolve old-or-new, never a torn pair") {
@@ -239,6 +253,5 @@ class ModelStoreSpec extends GraftSuite {
     // Re-publishing is a no-op, not an error (idempotent replays).
     ModelStore.publishVersion(spark, root, 2)
     assert(ModelStore.latestVersion(spark, root) === Some(2))
-    m1.words.unpersist(); m2.words.unpersist(); loaded.words.unpersist()
   }
 }

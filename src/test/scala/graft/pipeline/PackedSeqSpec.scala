@@ -41,7 +41,6 @@ class PackedSeqSpec extends GraftSuite {
       assert(r.getAs[Long]("mx") === r.getAs[Long]("n") - 1, r.toString)
       assert(r.getAs[Long]("nd") === r.getAs[Long]("n"), r.toString)
     }
-    model.words.unpersist()
   }
 
   test("each document's ids are contiguous, in encode order, and in ONE pack") {
@@ -64,7 +63,6 @@ class PackedSeqSpec extends GraftSuite {
       .collect()
     spans.foreach(r =>
       assert(r.getAs[Long]("mx") - r.getAs[Long]("mn") + 1 === r.getAs[Long]("n"), r.toString))
-    model.words.unpersist()
   }
 
   test("withEos: exactly one marker per doc, LAST in its document, counted against the budget") {
@@ -107,7 +105,6 @@ class PackedSeqSpec extends GraftSuite {
       Packing.withEos(ids, "doc_id", SpecialTokens.EosId, vocabSize)
     }
     assert(ex2.getMessage.contains("collides"))
-    model.words.unpersist()
   }
 
   test("withEosForDocs: empty-stream documents still get their EOS, anchored to the doc frame") {
@@ -133,7 +130,6 @@ class PackedSeqSpec extends GraftSuite {
         SpecialTokens.BandSize)
       .filter(col("piece_id") === SpecialTokens.EosId && col("doc_id") === 1L)
       .isEmpty)
-    model.words.unpersist()
   }
 
   test("withBos: exactly one marker per doc, FIRST in its document, counted against the budget") {
@@ -161,7 +157,6 @@ class PackedSeqSpec extends GraftSuite {
       Packing.withBos(ids, "doc_id", vocabSize - 1, vocabSize)
     }
     assert(ex.getMessage.contains("collides"))
-    model.words.unpersist()
   }
 
   test("withBosForDocs + withEosForDocs: an empty doc packs as the visible BOS/EOS pair") {
@@ -192,7 +187,6 @@ class PackedSeqSpec extends GraftSuite {
       .collect()
     assert(ends.forall(r =>
       r.getLong(0) === SpecialTokens.BosId && r.getLong(1) === SpecialTokens.EosId))
-    model.words.unpersist()
   }
 
   test("reserved band: both families lay out UNK/BOS/EOS/PAD at 0..3 with pieces at 4+; collisions fail loud") {
@@ -226,7 +220,6 @@ class PackedSeqSpec extends GraftSuite {
       Bpe.pieceVocab(model.copy(reserved = Seq("s"))) // "s" is in the alphabet
     }
     assert(exC.getMessage.contains("collide"))
-    model.words.unpersist()
   }
 
   test("deterministic across runs") {
@@ -234,6 +227,5 @@ class PackedSeqSpec extends GraftSuite {
     def run() = Packing.packedSequences(ids, packs, "doc_id", Seq("lang"))
       .orderBy("lang", "pack_id", "pos").collect().map(_.toString).toSeq
     assert(run() === run())
-    model.words.unpersist()
   }
 }

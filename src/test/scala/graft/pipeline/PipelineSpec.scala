@@ -33,8 +33,8 @@ class PipelineSpec extends GraftSuite {
     // regression: the span scrub emptied the pair set at sf0.001).
     val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(noPairs).count() === 0)
-    val kept = Dedup.pruneDuplicates(docs, noPairs, "doc_id")
-      .select("doc_id").as[Long].collect().toSet
+    val kept = Dedup.pruneDuplicates(docs, noPairs, "doc_id")(
+      _.select("doc_id").as[Long].collect().toSet)
     assert(kept === Set(1L, 2L, 3L, 4L, 5L))
   }
 
@@ -104,7 +104,7 @@ class PipelineSpec extends GraftSuite {
   test("pruneDuplicates over a 64-hop chain keeps exactly the min id at the default maxIters") {
     val corpus = (1L to 65L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val chain = (1L until 65L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val kept = Dedup.pruneDuplicates(corpus, chain, "doc_id").select("doc_id").as[Long].collect()
+    val kept = Dedup.pruneDuplicates(corpus, chain, "doc_id")(_.select("doc_id").as[Long].collect())
     assert(kept.toSeq === Seq(1L))
   }
 
@@ -115,14 +115,16 @@ class PipelineSpec extends GraftSuite {
       (9L, "c", 90)                                 // unpaired — must survive
     ).toDF("doc_id", "lang", "n")
     val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.8), (5L, 6L, 0.99)).toDF("doc_a", "doc_b", "jaccard")
-    val kept = Dedup.pruneDuplicates(corpus, pairs, "doc_id")
-    assert(kept.columns.toSeq === Seq("doc_id", "lang", "n")) // pass-through schema
-    assert(kept.select("doc_id").as[Long].collect().toSet === Set(1L, 5L, 9L))
+    val (cols, kept) = Dedup.pruneDuplicates(corpus, pairs, "doc_id")(
+      k => (k.columns.toSeq, k.select("doc_id").as[Long].collect().toSet))
+    assert(cols === Seq("doc_id", "lang", "n")) // pass-through schema
+    assert(kept === Set(1L, 5L, 9L))
     // The documented cosine composition: pair frames with vec_a/vec_b
     // endpoint columns cluster and prune through the aCol/bCol knobs.
     val vecPairs = Seq((1L, 2L, 0.97), (5L, 6L, 0.99)).toDF("vec_a", "vec_b", "sim")
-    val keptVec = Dedup.pruneDuplicates(corpus, vecPairs, "doc_id", aCol = "vec_a", bCol = "vec_b")
-    assert(keptVec.select("doc_id").as[Long].collect().toSet === Set(1L, 3L, 5L, 9L))
+    val keptVec = Dedup.pruneDuplicates(corpus, vecPairs, "doc_id", aCol = "vec_a", bCol = "vec_b")(
+      _.select("doc_id").as[Long].collect().toSet)
+    assert(keptVec === Set(1L, 3L, 5L, 9L))
   }
 
   test("incremental jaccard pairs the new batch against the corpus, never corpus x corpus") {
@@ -640,23 +642,18 @@ class PipelineSpec extends GraftSuite {
     assert(recall.length === 1 && recall.head.getLong(0) >= 1L)
     assert(added.isEmpty, s"lshRecall left ${added.size} persistent RDDs")
 
-    val kept = Similarity.semDedup(vecs, cents, "vec_id", "embedding", threshold = 0.95)
-    assert(kept.select("vec_id").as[Long].collect().toSet === Set(1L, 3L))
-    // What stays is the one cluster cut the returned anti-join reads; the
-    // caller owns it.
-    val leaves = kept.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    assert(leaves.size === 1)
-    leaves.foreach(_.unpersist(false))
-    assert(added.isEmpty, s"semDedup left ${added.size} persistent RDDs beyond its cluster cut")
+    val kept = Similarity.semDedup(vecs, cents, "vec_id", "embedding", threshold = 0.95)(
+      _.select("vec_id").as[Long].collect().toSet)
+    assert(kept === Set(1L, 3L))
+    assert(added.isEmpty, s"semDedup left ${added.size} persistent RDDs")
   }
 
   test("composed d9/d10 path releases the pair indexes but stays evaluable") {
     // The d9/d10 query shape (VERDICT r7 "what's wrong" #3): clusters /
-    // pruneDuplicates inside withJaccardPairs. clusters cuts its output
-    // inside the scope, so the scope's pins are released by the time the
-    // query frame is returned — and the frame still evaluates afterwards.
+    // pruneDuplicates inside withJaccardPairs. The caller cuts the pruned
+    // frame inside both scopes, so their pins and the cluster cut are
+    // released by the time the query frame is returned — and the frame
+    // still evaluates afterwards.
     val own = Seq(
       (1L, "composed release corpus alpha beta gamma delta epsilon"),
       (2L, "composed release corpus alpha beta gamma delta epsilon zeta"),
@@ -665,12 +662,14 @@ class PipelineSpec extends GraftSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     var pinned = 0
     val pruned = Dedup.withJaccardPairs(own, "doc_id", "text", n = 3, dfCap = 50, threshold = 0.5) { pairs =>
-      val out = Dedup.pruneDuplicates(own, pairs, "doc_id")
-      pinned = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
-      out
+      Dedup.pruneDuplicates(own, pairs, "doc_id") { kept =>
+        val out = graft.Lineage.cut(kept)
+        pinned = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+        out
+      }
     }
-    // Inside the scope: the index, filtered index, sizes and the cluster
-    // cut; after it only the cut the returned anti-join reads.
+    // Inside the scope: the index, filtered index, sizes and the result
+    // cut; after it only the returned cut.
     assert(pinned >= 2)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
     // Docs 1/2 are near-dups (one survivor, min id), doc 3 untouched.
@@ -1258,8 +1257,8 @@ class PipelineSpec extends GraftSuite {
       val root = find(i)
       (0L until 60L).filter(find(_) == root).min == i
     }.toSet
-    val kept = Dedup.pruneDuplicates(fps, pairFrame, "doc_id")
-      .select("doc_id").as[Long].collect().toSet
+    val kept = Dedup.pruneDuplicates(fps, pairFrame, "doc_id")(
+      _.select("doc_id").as[Long].collect().toSet)
     assert(kept === expected)
     // Every planted variant triple collapsed: no base survives alongside
     // its brightness twin or tweak.
@@ -1981,8 +1980,8 @@ class PipelineSpec extends GraftSuite {
     val cents = Seq(
       (100L, Array(1.0f, 0.1f)), (101L, Array(0.1f, 1.0f))
     ).toDF("vec_id", "embedding")
-    val kept = Similarity.semDedup(vecs, cents, "vec_id", "embedding", threshold = 0.95)
-      .select("vec_id", "tag").as[(Long, String)].collect().toMap
+    val kept = Similarity.semDedup(vecs, cents, "vec_id", "embedding", threshold = 0.95)(
+      _.select("vec_id", "tag").as[(Long, String)].collect().toMap)
     // min-id representative per group + the unpaired vector; every input
     // column survives the prune.
     assert(kept === Map(1L -> "a", 10L -> "d", 20L -> "f"))
@@ -2752,8 +2751,8 @@ class PipelineSpec extends GraftSuite {
     val fps = Multimodal.decodeJpegDHash(jp).select(col("doc_id"), col("dhash"))
     val pairs = Dedup.hammingPairs(fps, "doc_id", "dhash",
       maxHamming = 4, bits = 56, bucketCap = 100)
-    val kept = Dedup.pruneDuplicates(fps, pairs, "doc_id")
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    val kept = Dedup.pruneDuplicates(fps, pairs, "doc_id")(
+      _.select("doc_id").as[Long].collect().sorted.toSeq)
     assert(kept === (0L until 20L))
     // Detector diversity holds for JPEG too.
     assert((0L until 20L).exists(i => dh(i) !== ah(i)))

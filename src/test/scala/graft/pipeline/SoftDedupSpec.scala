@@ -16,8 +16,8 @@ class SoftDedupSpec extends GraftSuite {
     import spark.implicits._
     val docs = (1L to 6L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val w = Dedup.softDedupWeights(docs, pairs, "doc_id")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val w = Dedup.softDedupWeights(docs, pairs, "doc_id")(
+      _.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap)
     assert(w(1L) === ((1L, 0.333333)) && w(2L) === ((1L, 0.333333)) && w(3L) === ((1L, 0.333333)))
     assert(w(4L) === ((4L, 0.5)) && w(5L) === ((4L, 0.5)))
     assert(w(6L) === ((6L, 1.0)))
@@ -31,8 +31,7 @@ class SoftDedupSpec extends GraftSuite {
         concat(col("text"), lit(" zq zq zq")).as("text")))
     val out = Dedup.withJaccardPairs(aug, "doc_id", "text",
         n = 3, dfCap = 100, threshold = 0.5)(
-      pairs => Dedup.softDedupWeights(aug.select("doc_id"), pairs, "doc_id"))
-      .localCheckpoint()
+      pairs => Dedup.softDedupWeights(aug.select("doc_id"), pairs, "doc_id")(graft.Lineage.cut))
     assert(out.count() === aug.count()) // nothing dropped — that's the point
     val Array(sumW, nClusters) = out.agg(
       sum("weight"), countDistinct("cluster_id")).head()

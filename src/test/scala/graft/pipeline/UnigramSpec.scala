@@ -217,6 +217,7 @@ class UnigramSpec extends GraftSuite {
   }
 
   test("grain guard: GPT-2 pretokens at the CHAR grain are rejected (space-joined segs cannot hold them)") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalArgumentException] {
       Unigram.train(docs("the cat sat"), "text", vocabSize = 8, iters = 1,
         maxPieceLen = 3, seedMulti = 5, tokenizer = TextOps.Gpt2Tok)
@@ -231,6 +232,14 @@ class UnigramSpec extends GraftSuite {
         maxPieceLen = 3, seedMulti = 5, byteLevel = true, tokenizer = lying)
     }
     assert(ex2.getMessage.contains("separator"))
+    val ex3 = intercept[IllegalArgumentException] {
+      Unigram.trainLocal(docs("the cat sat"), "text", vocabSize = 8, iters = 1,
+        maxPieceLen = 3, seedMulti = 5, byteLevel = true, tokenizer = lying)
+    }
+    assert(ex3.getMessage.contains("separator"))
+    // A trainer that throws releases the word table it pinned.
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the rejected trainers left ${added.size} persistent RDDs")
   }
 
   test("decode: inverse of encodeIds at the byte grain; all-control docs come back as ''") {
