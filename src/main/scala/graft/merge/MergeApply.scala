@@ -6,6 +6,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.json4s.{JArray, JInt, JObject, JString}
 
 /** Outcome of a merge apply — counts and verdict the reference surfaces via
   * `@@ROWCOUNT` / variance / RAISERROR (sp_SimpleMerge.sql:470-491).
@@ -235,30 +236,6 @@ object MergeApply {
   private def markerPath(tgt: Path, token: String): Path =
     new Path(tgt.getParent, s".${tgt.getName}.swap-$token.json")
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def jsonUnescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Persist the swap intent BEFORE the first rename: which staging dir is
     * being promoted, where the previous content retires to, and (for a
     * partitioned apply) which bucket directories participate and which of
@@ -269,8 +246,8 @@ object MergeApply {
     * (retire-only delete), and guessing wrong deletes pre-merge data
     * (ADVICE r3 #1). Removed as the final step of a successful swap — so a
     * marker on disk always means "a swap was interrupted" and carries
-    * everything [[recover]] needs. Path strings are JSON-escaped so quotes
-    * or backslashes in a target path cannot corrupt the marker.
+    * everything [[recover]] needs. Written through [[graft.Sidecar]], so
+    * quotes or backslashes in a target path cannot corrupt the marker.
     */
   private[merge] def writeSwapMarker(
       fs: FileSystem,
@@ -281,12 +258,12 @@ object MergeApply {
       buckets: Seq[Int],
       preExisting: Seq[Int],
       partCol: String = PartitionedTarget.BucketCol): Unit = {
-    val json =
-      s"""{"staging": "${jsonEscape(staging.toString)}", "retired": "${jsonEscape(retired.toString)}", """ +
-        s""""buckets": [${buckets.mkString(", ")}], "preExisting": [${preExisting.mkString(", ")}], """ +
-        s""""partCol": "${jsonEscape(partCol)}"}"""
-    val out = fs.create(markerPath(tgt, token), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    graft.Sidecar.write(fs, markerPath(tgt, token), JObject(
+      "staging" -> JString(staging.toString),
+      "retired" -> JString(retired.toString),
+      "buckets" -> JArray(buckets.map(JInt(_)).toList),
+      "preExisting" -> JArray(preExisting.map(JInt(_)).toList),
+      "partCol" -> JString(partCol)))
   }
 
   private[merge] def removeSwapMarker(fs: FileSystem, tgt: Path, token: String): Unit =
@@ -322,18 +299,11 @@ object MergeApply {
       .filter(p => p.getName.startsWith(prefix) && p.getName.endsWith(".json"))
     var repaired = false
     markers.foreach { m =>
-      val in = fs.open(m)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      def strField(k: String): Option[String] =
-        ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r.findFirstMatchIn(txt)
-          .map(mm => jsonUnescape(mm.group(1)))
-      def intsField(k: String): Option[Seq[Int]] =
-        ("\"" + k + "\"\\s*:\\s*\\[([^\\]]*)\\]").r.findFirstMatchIn(txt)
-          .map(_.group(1).split(',').map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq)
-
+      val json = graft.Sidecar.read(fs, m)
+      import graft.Sidecar.{ints, string}
       // partCol absent in pre-r10 markers → the merge-target default.
-      val partCol = strField("partCol").getOrElse(PartitionedTarget.BucketCol)
-      (strField("staging"), strField("retired"), intsField("buckets"), intsField("preExisting")) match {
+      val partCol = string(json, "partCol").getOrElse(PartitionedTarget.BucketCol)
+      (string(json, "staging"), string(json, "retired"), ints(json, "buckets"), ints(json, "preExisting")) match {
         case (Some(stg), Some(ret), Some(buckets), Some(preExisting)) =>
           recoverOne(fs, tgt, new Path(stg), new Path(ret), buckets, preExisting.toSet, partCol)
           fs.delete(m, false)
@@ -391,23 +361,14 @@ object MergeApply {
   private[merge] def stampLastUpdate(fs: FileSystem, tgt: Path): Unit = {
     val ts = DateTimeFormatter.ISO_INSTANT
       .format(Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MILLIS))
-    val out = fs.create(new Path(tgt, MetaFile), true)
-    try out.write(s"""{"lastUpdate": "$ts"}""".getBytes("UTF-8"))
-    finally out.close()
+    graft.Sidecar.write(fs, new Path(tgt, MetaFile), JObject("lastUpdate" -> JString(ts)))
   }
 
   /** Read back the lastUpdate stamp, if any. */
   def lastUpdate(spark: SparkSession, targetPath: String): Option[String] = {
     val tgt = new Path(targetPath, MetaFile)
     val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tgt)) None
-    else {
-      val in = fs.open(tgt)
-      try {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        "\"lastUpdate\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
-      } finally in.close()
-    }
+    graft.Sidecar.string(graft.Sidecar.read(fs, tgt), "lastUpdate")
   }
 }
 

@@ -7,6 +7,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s.{JArray, JField, JInt, JObject, JString}
 
 import graft.pipeline.HashMode
 
@@ -96,17 +97,6 @@ object PartitionedTarget {
   val BucketCol = "__graft_bucket"
 
   val SpecFile = "_simplemerge_partspec.json"
-
-  private def modeName(m: HashMode): String = m match {
-    case HashMode.Md5Portable => "md5"
-    case HashMode.Xxhash64 => "xxhash64"
-  }
-
-  private def modeOf(s: String): HashMode = s match {
-    case "md5" => HashMode.Md5Portable
-    case "xxhash64" => HashMode.Xxhash64
-    case other => throw new MergeValidationException(s"Unknown hash mode in partition spec: $other")
-  }
 
   /** Write `df` as a bucket-partitioned target (full initial load /
     * backfill). Every later delta goes through
@@ -246,13 +236,14 @@ object PartitionedTarget {
   }
 
   /** The one shared layout-health computation — [[layoutReport]]'s
-    * verdicts and [[compactDirs]]' flagging cannot drift because they
-    * are this function.
+    * verdicts, [[compactDirs]]' flagging and the flat index subdirs'
+    * compaction ([[graft.pipeline.IndexDir.compactFlat]]) cannot drift
+    * because they are this function.
     */
-  private final case class DirHealth(
+  private[graft] final case class DirHealth(
       nFiles: Int, bytes: Long, desired: Int, fragmented: Boolean, oversized: Boolean)
 
-  private def dirHealth(
+  private[graft] def dirHealth(
       fs: org.apache.hadoop.fs.FileSystem, dir: Path,
       targetFileBytes: Long, minFiles: Int): DirHealth = {
     val files = fs.listStatus(dir).filter(isDataFile)
@@ -456,15 +447,14 @@ object PartitionedTarget {
     }
   }
 
-  private[merge] def writeSpec(spark: SparkSession, path: String, spec: PartitionSpec): Unit = {
-    val p = new Path(path, SpecFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shift = spec.rangeShift.map(sh => s""", "rangeShift": $sh""").getOrElse("")
-    val json =
-      s"""{"keys": [${spec.keys.map("\"" + _ + "\"").mkString(", ")}], "nBuckets": ${spec.nBuckets}, "hashMode": "${modeName(spec.hashMode)}"$shift}"""
-    val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
+  private[merge] def writeSpec(spark: SparkSession, path: String, spec: PartitionSpec): Unit =
+    graft.Sidecar.write(
+      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(path, SpecFile),
+      JObject(List[JField](
+        "keys" -> JArray(spec.keys.map(JString(_)).toList),
+        "nBuckets" -> JInt(spec.nBuckets),
+        "hashMode" -> JString(spec.hashMode.name)) ++
+        spec.rangeShift.map(sh => "rangeShift" -> JInt(sh))))
 
   def readSpec(spark: SparkSession, path: String): PartitionSpec = {
     val p = new Path(path, SpecFile)
@@ -472,16 +462,14 @@ object PartitionedTarget {
     if (!fs.exists(p))
       throw new MergeValidationException(
         s"$path is not a partitioned merge target (no $SpecFile) — write it with PartitionedTarget.write")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val keys = "\"keys\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(',').map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq)
-      .getOrElse(throw new MergeValidationException(s"Malformed $SpecFile at $path"))
-    val n = "\"nBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-      .getOrElse(throw new MergeValidationException(s"Malformed $SpecFile at $path"))
-    val hm = "\"hashMode\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(m => modeOf(m.group(1)))
-      .getOrElse(throw new MergeValidationException(s"Malformed $SpecFile at $path"))
-    val shift = "\"rangeShift\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    PartitionSpec(keys, n, hm, shift)
+    val json = graft.Sidecar.read(fs, p)
+    def malformed = throw new MergeValidationException(s"Malformed $SpecFile at $path")
+    val hm = graft.Sidecar.string(json, "hashMode").getOrElse(malformed)
+    PartitionSpec(
+      graft.Sidecar.strings(json, "keys").getOrElse(malformed),
+      graft.Sidecar.int(json, "nBuckets").getOrElse(malformed),
+      HashMode.named(hm).getOrElse(
+        throw new MergeValidationException(s"Unknown hash mode in partition spec: $hm")),
+      graft.Sidecar.int(json, "rangeShift"))
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject, JString}
 
 /** Deduplication operators for large document corpora — the core of a
   * training-data pipeline. All three families are designed for the 100 TB
@@ -910,10 +911,16 @@ object Dedup {
   /** Filename of the shingle-index sidecar recording (n, hashMode). */
   private val ShingleSpecFile = "_graft_shingle_spec.json"
 
+  /** The shingle index's layout under the shared maintenance protocol
+    * ([[IndexDir]]): appends grow `index` and `sizes` file by file. */
+  private val ShingleLayout = IndexDir.Layout(
+    "shingle index", ShingleSpecFile, "writeShingleIndex", "recoverShingleIndex",
+    appended = Seq("index", "sizes"))
+
   /** Build and persist the corpus's inverted shingle index ON DISK — the
     * operational form of the incremental near-dup discipline at 100 TB:
     * the corpus TEXT is scanned and shingled ONCE EVER; every later delta
-    * probes the at-rest `(sh, id)` index ([[jaccardPairsAgainstIndex]])
+    * probes the at-rest `(sh, id)` index ([[withJaccardPairsAgainstIndex]])
     * and appends itself ([[appendToShingleIndex]]) without re-reading a
     * byte of corpus text. Layout:
     *
@@ -937,32 +944,25 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/df")
     }
     val p = new org.apache.hadoop.fs.Path(path, ShingleSpecFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mode = hashMode match { case HashMode.Md5Portable => "md5"; case HashMode.Xxhash64 => "xxhash64" }
-    val out = fs.create(p, true)
-    try out.write(s"""{"n": $n, "hashMode": "$mode"}""".getBytes("UTF-8")) finally out.close()
+    graft.Sidecar.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      JObject("n" -> JInt(n), "hashMode" -> JString(hashMode.name)))
   }
 
+  /** The pinned (n, hashMode), behind the index gate: a pending intent
+    * marker means an append is mid-promotion, the live index/sizes dirs
+    * may be mutually inconsistent, and a probe would silently drop pairs
+    * (sizes inner-join) — so it fails loudly instead.
+    */
   private def readShingleSpec(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, HashMode) = {
+    IndexDir.guard(spark, path, ShingleLayout)
     val p = new org.apache.hadoop.fs.Path(path, ShingleSpecFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"$path is not a shingle index (no $ShingleSpecFile) — build it with writeShingleIndex")
-    // A pending intent marker means a staged append is mid-promotion:
-    // the live index/sizes dirs may be mutually inconsistent, and a probe
-    // would silently drop pairs (sizes inner-join). Fail loudly instead.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(path, AppendIntentFile)),
-      s"$path has an interrupted append — run recoverShingleIndex to roll it forward")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val n = "\"n\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    val json = graft.Sidecar.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    val n = graft.Sidecar.int(json, "n")
       .getOrElse(throw new IllegalArgumentException(s"Malformed $ShingleSpecFile at $path"))
-    val hm = "\"hashMode\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1)) match {
-      case Some("md5") => HashMode.Md5Portable
-      case Some("xxhash64") => HashMode.Xxhash64
-      case other => throw new IllegalArgumentException(s"Unknown hashMode $other in $ShingleSpecFile at $path")
-    }
-    (n, hm)
+    val hm = graft.Sidecar.string(json, "hashMode")
+    (n, hm.flatMap(HashMode.named).getOrElse(
+      throw new IllegalArgumentException(s"Unknown hashMode $hm in $ShingleSpecFile at $path")))
   }
 
   /** The df cache, rebuilt from the authoritative index if a crashed
@@ -974,171 +974,64 @@ object Dedup {
     else spark.read.parquet(s"$path/index").groupBy("sh").agg(count(lit(1)).as("df"))
   }
 
-  /** Filename of the append intent marker: present ⇔ a fully-staged
-    * append is mid-promotion, which [[recoverShingleIndex]] rolls
-    * FORWARD. Probes and appends refuse to run while it exists. */
-  private val AppendIntentFile = "_graft_append_intent"
-
   /** Append a delta's shingles to the at-rest index, crash-atomically
     * (ADVICE r10: the previous three-commit append could crash between
     * the index and sizes appends, leaving docs in `index` with no
     * `sizes` row — and since probes inner-join sizes, their pairs
-    * silently vanished). Protocol:
-    *
-    *   1. the delta's `(sh, id)` rows, per-doc sizes, AND the merged df
-    *      cache (old-df ⊎ delta-df — one aggregation over the df table
-    *      + delta, never a corpus text re-scan) are written COMPLETELY
-    *      under `append.staging/`;
-    *   2. an intent marker declares the append committed;
-    *   3. staged files are promoted into the live `index`/`sizes` dirs
-    *      by per-file rename, the df cache by stage-delete-rename, and
-    *      the marker is removed.
-    *
-    * Every crash point is unambiguous: no marker → the live index is
-    * untouched and the orphan staging dir is garbage (the append did
-    * not happen); marker present → the staged data is complete and
-    * [[recoverShingleIndex]] re-runs the promotion (renames are
-    * idempotent — already-promoted files are no longer in staging)
-    * while probes/appends FAIL LOUDLY via the [[readShingleSpec]]
-    * gate rather than read a half-promoted index; marker gone → the
-    * append is fully visible. Callers must have checked the delta
-    * against the index FIRST ([[jaccardPairsAgainstIndex]]) — append
-    * is the accept step of check-then-accept ingest.
+    * silently vanished). One [[IndexDir.commit]]: the delta's `(sh, id)`
+    * rows, per-doc sizes, AND the merged df cache (old-df ⊎ delta-df —
+    * one aggregation over the df table + delta, never a corpus text
+    * re-scan) stage completely under `append.staging/`, an intent marker
+    * declares the append, and the promotion moves the staged
+    * `index`/`sizes` files into the live dirs and swaps the df cache in.
+    * Mid-promotion, probes and appends fail loudly and
+    * [[recoverShingleIndex]] rolls the append forward. Callers must have
+    * checked the delta against the index FIRST
+    * ([[withJaccardPairsAgainstIndex]]) — append is the accept step of
+    * check-then-accept ingest.
     */
   def appendToShingleIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String): Unit = {
     val (n, hm) = readShingleSpec(spark, path) // gates on a pending marker
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Unmarked staging leftovers are garbage from an append that never
-    // reached its intent point.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    graft.Lineage.pinned(shingleIndex(newDocs, idCol, textCol, n, hashWith = Some(hm))) { idx =>
-      idx.write.mode("overwrite").parquet(s"$path/append.staging/index")
-      idx.groupBy("id").agg(count(lit(1)).as("sz"))
-        .write.mode("overwrite").parquet(s"$path/append.staging/sizes")
-      indexDf(spark, path)
-        .unionByName(idx.groupBy("sh").agg(count(lit(1)).as("df")))
-        .groupBy("sh").agg(sum("df").as("df"))
-        .write.mode("overwrite").parquet(s"$path/append.staging/df")
-      val marker = fs.create(new org.apache.hadoop.fs.Path(path, AppendIntentFile), true)
-      try marker.write("pending".getBytes("UTF-8")) finally marker.close()
-      promoteAppend(fs, path)
-    }
-  }
-
-  /** Promote a fully-staged append (intent marker present). Idempotent:
-    * every step checks what remains to be done, so an interrupted
-    * promotion re-runs to completion. */
-  private def promoteAppend(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    for (sub <- Seq("index", "sizes")) {
-      val from = new org.apache.hadoop.fs.Path(s"$path/append.staging/$sub")
-      if (fs.exists(from)) {
-        fs.listStatus(from)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            val dest = new org.apache.hadoop.fs.Path(s"$path/$sub/${f.getPath.getName}")
-            if (!fs.rename(f.getPath, dest))
-              throw new IllegalStateException(s"append: could not promote ${f.getPath} to $dest")
-          }
+    IndexDir.commit(spark, path, ShingleLayout) { staged =>
+      graft.Lineage.pinned(shingleIndex(newDocs, idCol, textCol, n, hashWith = Some(hm))) { idx =>
+        idx.write.mode("overwrite").parquet(s"$staged/index")
+        idx.groupBy("id").agg(count(lit(1)).as("sz"))
+          .write.mode("overwrite").parquet(s"$staged/sizes")
+        indexDf(spark, path)
+          .unionByName(idx.groupBy("sh").agg(count(lit(1)).as("df")))
+          .groupBy("sh").agg(sum("df").as("df"))
+          .write.mode("overwrite").parquet(s"$staged/df")
       }
     }
-    val dfStaged = new org.apache.hadoop.fs.Path(s"$path/append.staging/df")
-    if (fs.exists(dfStaged)) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/df"), true)
-      if (!fs.rename(dfStaged, new org.apache.hadoop.fs.Path(s"$path/df")))
-        throw new IllegalStateException(s"append: could not promote df cache at $path")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path, AppendIntentFile), false)
   }
 
-  /** Restore a healthy file layout to an append-accreted shingle index:
-    * every [[appendToShingleIndex]] lands one file set per subdir, and a
-    * year of daily deltas is 365 file sets per probe scan — the same
-    * degradation [[Similarity.compactIndex]] guards the IVF index
-    * against. `index` files coalesce (content already distinct); `sizes`
-    * rows also AGGREGATE to one row per doc (the probe sums them, so the
+  /** Restore a healthy file layout to an append-accreted shingle index
+    * ([[IndexDir.compactFlat]]) — the degradation
+    * [[Similarity.compactIndex]] guards the IVF index against. `index`
+    * files coalesce (content already distinct); `sizes` rows also
+    * AGGREGATE to one row per doc (the probe sums them, so the
     * pre-aggregated form is semantically identical); the df cache is
-    * untouched (content didn't change). Each subdir swaps through
-    * stage → retire → promote, and [[recoverShingleIndex]] rolls an
-    * interrupted swap deterministically.
+    * untouched (content didn't change). [[recoverShingleIndex]] rolls an
+    * interrupted swap.
     *
     * @return the subdirs actually rewritten (empty = nothing degraded).
     */
   def compactShingleIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20, minFiles: Int = 2): Seq[String] = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
-    readShingleSpec(spark, path) // gate: only operate on a real index
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("index", "sizes").flatMap { sub =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val files = fs.listStatus(dir).filter(f =>
-        f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      val bytes = files.map(_.getLen).sum
-      val desired = math.min(256L, math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
-      if (files.length < minFiles || files.length <= desired) None
-      else {
-        val staging = new org.apache.hadoop.fs.Path(s"$path/$sub.staging")
-        val retired = new org.apache.hadoop.fs.Path(s"$path/$sub.retired")
-        val content = spark.read.parquet(dir.toString)
-        val rewritten =
-          if (sub == "sizes") content.groupBy("id").agg(sum("sz").as("sz"))
-          else content
-        rewritten.repartition(desired).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging.toString)
-        if (!fs.rename(dir, retired))
-          throw new IllegalStateException(s"compact: could not retire $dir")
-        if (!fs.rename(staging, dir))
-          throw new IllegalStateException(s"compact: could not promote $staging")
-        fs.delete(retired, true)
-        Some(sub)
-      }
+      targetFileBytes: Long = 128L << 20, minFiles: Int = 2): Seq[String] =
+    IndexDir.compactFlat(spark, path, ShingleLayout, targetFileBytes, minFiles) {
+      case ("sizes", sizes) => sizes.groupBy("id").agg(sum("sz").as("sz"))
+      case (_, content) => content
     }
-  }
 
-  /** Roll an interrupted [[compactShingleIndex]] swap to a consistent
-    * state. Per subdir (the swap order makes each state unambiguous):
-    * live dir missing but a `.retired` backup present → roll BACK
-    * (restore the backup, drop staging); live dir present with leftover
-    * `.retired` → the swap completed, drop the backup; orphan `.staging`
-    * → drop it. @return true when anything was repaired. */
-  def recoverShingleIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Interrupted APPEND states first (see [[appendToShingleIndex]]):
-    // marker present → the staged data is complete, roll the promotion
-    // forward; unmarked staging → the append never reached its intent
-    // point, the leftovers are garbage.
-    val appendActed = {
-      val marker = new org.apache.hadoop.fs.Path(path, AppendIntentFile)
-      val staging = new org.apache.hadoop.fs.Path(s"$path/append.staging")
-      if (fs.exists(marker)) { promoteAppend(fs, path); true }
-      else if (fs.exists(staging)) { fs.delete(staging, true); true }
-      else false
-    }
-    appendActed | Seq("index", "sizes").map { sub =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val staging = new org.apache.hadoop.fs.Path(s"$path/$sub.staging")
-      val retired = new org.apache.hadoop.fs.Path(s"$path/$sub.retired")
-      var acted = false
-      if (!fs.exists(dir) && fs.exists(retired)) {
-        if (!fs.rename(retired, dir))
-          throw new IllegalStateException(s"recover: could not restore $retired")
-        acted = true
-      }
-      if (fs.exists(dir) && fs.exists(retired)) { fs.delete(retired, true); acted = true }
-      if (fs.exists(staging)) { fs.delete(staging, true); acted = true }
-      acted
-    }.exists(identity)
-  }
+  /** Roll an interrupted [[appendToShingleIndex]] or
+    * [[compactShingleIndex]] to a consistent state ([[IndexDir.recover]]).
+    * @return true when anything was repaired.
+    */
+  def recoverShingleIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    IndexDir.recover(spark, path, ShingleLayout)
 
   /** [[withIncrementalJaccardPairs]] against the AT-REST index: the delta
     * is shingled in memory, the corpus side reads `(sh, id)` rows from

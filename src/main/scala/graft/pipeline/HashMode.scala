@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   */
 sealed trait HashMode {
 
+  /** The mode's name in the sidecars that record it (partition and
+    * shingle-index specs).
+    */
+  def name: String
+
   /** Uniform hash of `v` into [0, 2^60), parameterized by (seed, part) —
     * (seed, part) pairs index independent hash functions.
     */
@@ -30,10 +35,14 @@ sealed trait HashMode {
 
 object HashMode {
 
+  /** The mode a sidecar names, if any. */
+  def named(name: String): Option[HashMode] = Seq(Md5Portable, Xxhash64).find(_.name == name)
+
   /** md5-prefix hash — bit-identical to the DuckDB twin
     * `('0x' || substr(md5(seed || ':' || v), 1 + part*16, 15))::BIGINT`.
     */
   case object Md5Portable extends HashMode {
+    val name = "md5"
     def hash(v: Column, seed: Int, part: Int = 0): Column =
       TextOps.portableHash(v, seed, part)
   }
@@ -43,6 +52,7 @@ object HashMode {
     * shifts (unsigned) down to the shared non-negative 60-bit space.
     */
   case object Xxhash64 extends HashMode {
+    val name = "xxhash64"
     def hash(v: Column, seed: Int, part: Int = 0): Column = {
       require(part == 0 || part == 1, s"part must be 0 or 1, got $part")
       shiftrightunsigned(xxhash64(lit(seed * 2 + part), v), 4)

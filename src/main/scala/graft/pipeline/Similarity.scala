@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject}
 
 import graft.functions.GraftFunctions
 
@@ -681,8 +682,12 @@ object Similarity {
   // ---- persisted hyperplane signature index (VERDICT r13 next #3) ----
 
   private val SigSpecFile = "_graft_sig_spec"
-  private val SigAppendIntent = "_graft_append_intent"
-  private[graft] val SigStreamBatchFile = "_graft_stream_batch"
+
+  /** The signature index's layout under the shared maintenance protocol
+    * ([[IndexDir]]): appends grow `sig` and `vecs` file by file. */
+  private val SigLayout = IndexDir.Layout(
+    "signature index", SigSpecFile, "writeSignatureIndex", "recoverSignatureIndex",
+    appended = Seq("sig", "vecs"))
 
   /** Persist the hyperplane-LSH signature index — the at-rest form of the
     * [[withHyperplaneIncrementalPairs]] corpus side (the C82/d23 protocol
@@ -721,12 +726,9 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$path/occ")
     }
     val p = new org.apache.hadoop.fs.Path(path, SigSpecFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"dim": $dim, "nBits": $nBits, "bandBits": $bandBits, "seed": $seed}"""
-        .getBytes("UTF-8"))
-    finally out.close()
+    graft.Sidecar.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      JObject("dim" -> JInt(dim), "nBits" -> JInt(nBits), "bandBits" -> JInt(bandBits),
+        "seed" -> JInt(seed)))
   }
 
   /** The pinned plane-family spec, behind the index/consistency gate:
@@ -736,18 +738,11 @@ object Similarity {
     */
   private def readSigSpec(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int, Int, Int) = {
+    IndexDir.guard(spark, path, SigLayout)
     val p = new org.apache.hadoop.fs.Path(path, SigSpecFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"$path is not a signature index (no $SigSpecFile) — build it with writeSignatureIndex")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, SigAppendIntent)))
-      throw new IllegalStateException(
-        s"$path has an interrupted append — run recoverSignatureIndex to roll it forward")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(name: String): Int =
-      ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(s"Malformed $SigSpecFile at $path"))
+    val json = graft.Sidecar.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    def field(name: String): Int = graft.Sidecar.int(json, name)
+      .getOrElse(throw new IllegalArgumentException(s"Malformed $SigSpecFile at $path"))
     (field("dim"), field("nBits"), field("bandBits"), field("seed"))
   }
 
@@ -787,16 +782,14 @@ object Similarity {
   }
 
   /** Append a delta's signatures + norm payloads to the at-rest index,
-    * crash-atomically — the [[graft.pipeline.Dedup.appendToShingleIndex]]
-    * protocol verbatim: stage sig/vecs/merged-occ (one aggregation over
-    * the occ cache + the STAGED files, never a corpus re-scan) completely
-    * under `append.staging/`, declare with an intent marker, promote by
-    * per-file rename (occ and the optional stream watermark by
-    * stage-delete-rename), drop the marker. Crash points unambiguous: no
-    * marker → live index untouched, staging is garbage; marker → staged
-    * data complete, [[recoverSignatureIndex]] re-runs the idempotent
-    * promotion while probes fail loudly; marker gone → fully visible.
-    * Contract: delta ids disjoint from indexed ones (append, not
+    * crash-atomically — one [[IndexDir.commit]], the
+    * [[graft.pipeline.Dedup.appendToShingleIndex]] protocol: sig/vecs and
+    * the merged occ cache (one aggregation over the occ cache + the
+    * STAGED files, never a corpus re-scan) stage completely under
+    * `append.staging/`, an intent marker declares the append, the staged
+    * sig/vecs files move into the live dirs and occ swaps in. Mid-promotion,
+    * probes fail loudly and [[recoverSignatureIndex]] rolls the append
+    * forward. Contract: delta ids disjoint from indexed ones (append, not
     * upsert); callers probe FIRST — append is the accept step of
     * check-then-accept ingest.
     *
@@ -809,142 +802,45 @@ object Similarity {
       newVecs: DataFrame, idCol: String, vecCol: String,
       streamBatchId: Option[Long] = None): Unit = {
     val (dim, nBits, bandBits, seed) = readSigSpec(spark, path) // gates on a pending marker
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    graft.Lineage.pinned(hyperplaneNorms(newVecs, idCol, vecCol)) { vecs =>
-      vecs.select(col("vid"), col("__v").as("v"), col("__vn").as("vn"))
-        .write.mode("overwrite").parquet(s"$path/append.staging/vecs")
-      signatureOf(vecs, dim, nBits, bandBits, seed)
-        .write.mode("overwrite").parquet(s"$path/append.staging/sig")
-      sigOcc(spark, path)
-        .unionByName(spark.read.parquet(s"$path/append.staging/sig")
-          .groupBy("band", "bucket").agg(count(lit(1)).as("occ")))
-        .groupBy("band", "bucket").agg(sum("occ").as("occ"))
-        .write.mode("overwrite").parquet(s"$path/append.staging/occ")
-      streamBatchId.foreach(id =>
-        TextStats.atomicWriteWatermark(fs, s"$path/append.staging", SigStreamBatchFile, id))
-      val marker = fs.create(new org.apache.hadoop.fs.Path(path, SigAppendIntent), true)
-      try marker.write("pending".getBytes("UTF-8")) finally marker.close()
-      promoteSigAppend(fs, path)
+    IndexDir.commit(spark, path, SigLayout, streamBatchId = streamBatchId) { staged =>
+      graft.Lineage.pinned(hyperplaneNorms(newVecs, idCol, vecCol)) { vecs =>
+        vecs.select(col("vid"), col("__v").as("v"), col("__vn").as("vn"))
+          .write.mode("overwrite").parquet(s"$staged/vecs")
+        signatureOf(vecs, dim, nBits, bandBits, seed)
+          .write.mode("overwrite").parquet(s"$staged/sig")
+        sigOcc(spark, path)
+          .unionByName(spark.read.parquet(s"$staged/sig")
+            .groupBy("band", "bucket").agg(count(lit(1)).as("occ")))
+          .groupBy("band", "bucket").agg(sum("occ").as("occ"))
+          .write.mode("overwrite").parquet(s"$staged/occ")
+      }
     }
   }
 
-  /** Promote a fully-staged signature append (intent marker present);
-    * idempotent — already-promoted files are no longer in staging. */
-  private def promoteSigAppend(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    for (sub <- Seq("sig", "vecs")) {
-      val from = new org.apache.hadoop.fs.Path(s"$path/append.staging/$sub")
-      if (fs.exists(from)) {
-        fs.listStatus(from)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .foreach { f =>
-            val dest = new org.apache.hadoop.fs.Path(s"$path/$sub/${f.getPath.getName}")
-            if (!fs.rename(f.getPath, dest))
-              throw new IllegalStateException(s"append: could not promote ${f.getPath} to $dest")
-          }
-      }
-    }
-    for (sub <- Seq("occ", SigStreamBatchFile)) {
-      val staged = new org.apache.hadoop.fs.Path(s"$path/append.staging/$sub")
-      if (fs.exists(staged)) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-        if (!fs.rename(staged, new org.apache.hadoop.fs.Path(s"$path/$sub")))
-          throw new IllegalStateException(s"append: could not promote $sub at $path")
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path, SigAppendIntent), false)
-  }
-
-  /** The last applied stream batch id, or None for a batch-built index;
-    * torn/unparseable reads as None (the BM25/PQ contract). */
+  /** The last applied stream batch id ([[IndexDir.readStreamBatch]]). */
   private[graft] def readSigStreamBatch(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, SigStreamBatchFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.trim.toLongOption
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
+    IndexDir.readStreamBatch(spark, path)
 
   /** Restore a healthy file layout to an append-accreted signature index
-    * — each append lands one file set per subdir, the same degradation
-    * every persisted index guards against. `sig`/`vecs` coalesce
-    * (content already one row per fact); the occ cache is untouched.
-    * Stage → retire → promote per subdir; [[recoverSignatureIndex]]
-    * rolls an interrupted swap deterministically.
+    * ([[IndexDir.compactFlat]]): `sig`/`vecs` coalesce (content already
+    * one row per fact); the occ cache is untouched.
+    * [[recoverSignatureIndex]] rolls an interrupted swap.
     *
     * @return the subdirs actually rewritten (empty = nothing degraded).
     */
   def compactSignatureIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFileBytes: Long = 128L << 20, minFiles: Int = 2): Seq[String] = {
-    require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
-    readSigSpec(spark, path) // gate: only operate on a real index
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("sig", "vecs").flatMap { sub =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val files = fs.listStatus(dir).filter(f =>
-        f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-      val bytes = files.map(_.getLen).sum
-      val desired = math.min(256L, math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
-      if (files.length < minFiles || files.length <= desired) None
-      else {
-        val staging = new org.apache.hadoop.fs.Path(s"$path/$sub.staging")
-        val retired = new org.apache.hadoop.fs.Path(s"$path/$sub.retired")
-        spark.read.parquet(dir.toString).repartition(desired).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging.toString)
-        if (!fs.rename(dir, retired))
-          throw new IllegalStateException(s"compact: could not retire $dir")
-        if (!fs.rename(staging, dir))
-          throw new IllegalStateException(s"compact: could not promote $staging")
-        fs.delete(retired, true)
-        Some(sub)
-      }
-    }
-  }
+      targetFileBytes: Long = 128L << 20, minFiles: Int = 2): Seq[String] =
+    IndexDir.compactFlat(spark, path, SigLayout, targetFileBytes, minFiles)()
 
-  /** Roll an interrupted signature-index maintenance step to a
-    * consistent state: a marked append promotes FORWARD, unmarked
-    * staging leftovers drop, and an interrupted compaction swap rolls
-    * per subdir (live missing + retired present → roll back; both
-    * present → swap completed, drop the backup; orphan staging → drop).
+  /** Roll an interrupted signature-index append or compaction to a
+    * consistent state ([[IndexDir.recover]]).
     * @return true when anything was repaired.
     */
   def recoverSignatureIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val appendActed = {
-      val marker = new org.apache.hadoop.fs.Path(path, SigAppendIntent)
-      val staging = new org.apache.hadoop.fs.Path(s"$path/append.staging")
-      if (fs.exists(marker)) { promoteSigAppend(fs, path); true }
-      else if (fs.exists(staging)) { fs.delete(staging, true); true }
-      else false
-    }
-    appendActed | Seq("sig", "vecs").map { sub =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val staging = new org.apache.hadoop.fs.Path(s"$path/$sub.staging")
-      val retired = new org.apache.hadoop.fs.Path(s"$path/$sub.retired")
-      var acted = false
-      if (!fs.exists(dir) && fs.exists(retired)) {
-        if (!fs.rename(retired, dir))
-          throw new IllegalStateException(s"recover: could not restore $retired")
-        acted = true
-      }
-      if (fs.exists(dir) && fs.exists(retired)) { fs.delete(retired, true); acted = true }
-      if (fs.exists(staging)) { fs.delete(staging, true); acted = true }
-      acted
-    }.exists(identity)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    IndexDir.recover(spark, path, SigLayout)
 
   /** Persist an IVF index to disk: vectors bucket-assigned once and
     * written PARTITIONED BY bucket, centroids as a sidecar — so the
@@ -1489,67 +1385,34 @@ object Similarity {
       .map(_._2.sortBy(_._2).map(_._3))
   }
 
-  /** Filename of the PQ-index append intent marker and stream-batch
-    * watermark — the [[graft.pipeline.TextStats]] BM25 protocol applied
-    * to the IVFADC layout, so a streaming ingest
+  /** The IVFADC index's layout under the shared maintenance protocol
+    * ([[IndexDir]]) — the [[graft.pipeline.TextStats]] BM25 protocol
+    * applied to the IVFADC layout, so a streaming ingest
     * ([[graft.streaming.StreamingIndex.pqIndexTo]]) gets crash-atomic,
-    * replay-dedupable appends.
+    * replay-dedupable appends: appends grow the `codes/bucket=N`
+    * directories file by file; the codebooks sidecar marks the index.
     */
-  private val PqAppendIntent = "_graft_append_intent"
-  private val PqRebuildIntent = "_graft_rebuild_intent"
-  private[graft] val PqStreamBatchFile = "_graft_stream_batch"
+  private[graft] val PqLayout = IndexDir.Layout(
+    "persisted IVFADC index", "codebooks", "writePqIndex", "recoverPqIndex",
+    appended = Seq("codes"))
 
-  /** Guard shared by the probes and the append: `path` must be a
-    * [[writePqIndex]] layout with no append mid-promotion (a probe
-    * against a half-promoted append would silently miss codes).
-    */
-  private def pqIndexGuard(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/codebooks")))
-      throw new IllegalArgumentException(
-        s"$path is not a persisted IVFADC index (no codebooks sidecar) — build it with writePqIndex")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, PqAppendIntent)))
-      throw new IllegalStateException(
-        s"$path has an interrupted append — run recoverPqIndex to roll it forward")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, PqRebuildIntent)))
-      throw new IllegalStateException(
-        s"$path has an interrupted rebuild — run recoverPqIndex to roll it forward")
-  }
-
-  /** The last applied stream batch id, or None for a batch-built (or
-    * interrupted-bootstrap) index. A torn/unparseable watermark also
-    * reads as None so the interrupted-bootstrap rebuild path repairs it
-    * (ADVICE r13 #1 — the BM25 contract).
-    */
+  /** The last applied stream batch id ([[IndexDir.readStreamBatch]]). */
   private[graft] def readPqStreamBatch(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, PqStreamBatchFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.trim.toLongOption
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
+    IndexDir.readStreamBatch(spark, path)
 
-  /** Temp-write + atomic rename, like the BM25 twin (ADVICE r13 #1). */
+  /** The atomic watermark write ([[IndexDir.writeStreamBatch]]). */
   private[graft] def writePqStreamBatch(
       fs: org.apache.hadoop.fs.FileSystem, dir: String, batchId: Long): Unit =
-    TextStats.atomicWriteWatermark(fs, dir, PqStreamBatchFile, batchId)
+    IndexDir.writeStreamBatch(fs, dir, batchId)
 
   /** Append new vectors into a [[writePqIndex]]-persisted IVFADC index,
     * crash-atomically: the increment is bucket-assigned with the STORED
     * centroids and encoded with the STORED codebooks (placement and
     * codes consistent with every existing row), staged COMPLETELY under
-    * `append.staging/codes`, declared by an intent marker, then
-    * promoted by per-file rename into the touched bucket directories
-    * only — the BM25-index protocol (crash points unambiguous: no
-    * marker → live index untouched, staging is garbage; marker → staged
-    * data complete, [[recoverPqIndex]] re-runs the idempotent promotion
-    * while probes fail loudly; marker gone → fully visible). The
+    * `append.staging/codes` and promoted into the touched bucket
+    * directories only — one [[IndexDir.commit]] (mid-promotion, probes
+    * fail loudly and [[recoverPqIndex]] rolls the append forward). The
     * [[appendToIndex]] contract otherwise: ids disjoint, model fixed at
     * build time; re-train and rebuild on drift.
     *
@@ -1561,53 +1424,16 @@ object Similarity {
       newVectors: DataFrame, idCol: String, vecCol: String, path: String,
       streamBatchId: Option[Long] = None): Unit = {
     val spark = newVectors.sparkSession
-    pqIndexGuard(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
+    IndexDir.guard(spark, path, PqLayout)
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("centroid_id").as(idCol), col("cvec").as(vecCol))
-    pqEncode(
-      assignBuckets(newVectors, cents, idCol, vecCol)
-        .select(col("vid"), col("bucket"), col("__v")), "__v", readCodebooks(spark, path))
-      .select(col("vid"), col("codes"), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/append.staging/codes")
-    streamBatchId.foreach(id => writePqStreamBatch(fs, s"$path/append.staging", id))
-    val marker = fs.create(new org.apache.hadoop.fs.Path(path, PqAppendIntent), true)
-    try marker.write("pending".getBytes("UTF-8")) finally marker.close()
-    promotePqAppend(fs, path)
-  }
-
-  /** Promote a fully-staged PQ append (intent marker present);
-    * idempotent — already-promoted files are no longer in staging. */
-  private def promotePqAppend(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val staged = new org.apache.hadoop.fs.Path(s"$path/append.staging/codes")
-    if (fs.exists(staged)) {
-      fs.listStatus(staged)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("bucket="))
-        .foreach { d =>
-          val dest = new org.apache.hadoop.fs.Path(s"$path/codes/${d.getPath.getName}")
-          if (!fs.exists(dest)) fs.mkdirs(dest)
-          fs.listStatus(d.getPath)
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            .foreach { f =>
-              val to = new org.apache.hadoop.fs.Path(dest, f.getPath.getName)
-              if (!fs.rename(f.getPath, to))
-                throw new IllegalStateException(s"append: could not promote ${f.getPath} to $to")
-            }
-        }
+    IndexDir.commit(spark, path, PqLayout, streamBatchId = streamBatchId) { staged =>
+      pqEncode(
+        assignBuckets(newVectors, cents, idCol, vecCol)
+          .select(col("vid"), col("bucket"), col("__v")), "__v", readCodebooks(spark, path))
+        .select(col("vid"), col("codes"), col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$staged/codes")
     }
-    val stagedWm = new org.apache.hadoop.fs.Path(s"$path/append.staging/$PqStreamBatchFile")
-    if (fs.exists(stagedWm)) {
-      fs.delete(new org.apache.hadoop.fs.Path(path, PqStreamBatchFile), false)
-      if (!fs.rename(stagedWm, new org.apache.hadoop.fs.Path(path, PqStreamBatchFile)))
-        throw new IllegalStateException(s"append: could not promote stream watermark at $path")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path, PqAppendIntent), false)
   }
 
   /** [[ivfPqTopK]] against a [[writePqIndex]]-persisted index — the
@@ -1623,7 +1449,7 @@ object Similarity {
       path: String, idCol: String,
       query: Seq[Double], k: Int, nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    pqIndexGuard(spark, path)
+    IndexDir.guard(spark, path, PqLayout)
     import spark.implicits._
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("centroid_id").cast("long"), col("cvec"))
@@ -1758,7 +1584,7 @@ object Similarity {
       path: String, probes: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    pqIndexGuard(spark, path)
+    IndexDir.guard(spark, path, PqLayout)
     import spark.implicits._
     val cents = spark.read.parquet(s"$path/centroids")
       .select(col("centroid_id").as(idCol), col("cvec").as(vecCol))
@@ -1903,39 +1729,17 @@ object Similarity {
       path: String,
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 2): Seq[Int] = {
-    val books = new org.apache.hadoop.fs.Path(s"$path/codebooks")
-    val fs = books.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(books))
-      throw new IllegalArgumentException(
-        s"$path is not a persisted IVFADC index (no codebooks sidecar) — build it with writePqIndex")
+    IndexDir.guard(spark, path, PqLayout)
     graft.merge.PartitionedTarget.compactDirs(
       spark, s"$path/codes", "bucket", targetFileBytes, minFiles)
   }
 
-  /** Roll an interrupted PQ-index maintenance step to a consistent
-    * state: a marked append promotes FORWARD (staged data is complete
-    * by the marker's contract), unmarked staging leftovers are dropped,
-    * and an interrupted [[compactPqIndex]] swap rolls through the shared
-    * marker protocol against the codes root. @return true when anything
+  /** Roll an interrupted PQ-index append, rebuild or compaction to a
+    * consistent state ([[IndexDir.recover]]). @return true when anything
     * was repaired.
     */
-  def recoverPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, PqAppendIntent)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/append.staging")
-    val appendActed =
-      if (fs.exists(marker)) { promotePqAppend(fs, path); true }
-      else if (fs.exists(staging)) { fs.delete(staging, true); true }
-      else false
-    val rebuildMarker = new org.apache.hadoop.fs.Path(path, PqRebuildIntent)
-    val rebuildStaging = new org.apache.hadoop.fs.Path(s"$path/rebuild.staging")
-    val rebuildActed =
-      if (fs.exists(rebuildMarker)) { promotePqRebuild(fs, path); true }
-      else if (fs.exists(rebuildStaging)) { fs.delete(rebuildStaging, true); true }
-      else false
-    appendActed | rebuildActed | graft.merge.MergeApply.recover(spark, s"$path/codes")
-  }
+  def recoverPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    IndexDir.recover(spark, path, PqLayout)
 
   /** Retrain-and-swap a drifted IVFADC index IN PLACE (VERDICT r13 next
     * #5 — the recall gauges existed, the rebuild they exist FOR didn't):
@@ -1945,12 +1749,11 @@ object Similarity {
     * deterministic hash sample of `vectors` (the C21 discipline — a
     * model fit, never a mandatory full scan), the ENTIRE new index
     * (codes + centroids + codebooks) builds under `rebuild.staging/`,
-    * an intent marker declares the swap, and each subdir promotes by
-    * retire-rename — the existing marker protocol, so every crash point
-    * is unambiguous: no marker → live index untouched, staging is
-    * garbage; marker → staged index complete, [[recoverPqIndex]]
-    * re-runs the idempotent promotion while probes fail loudly through
-    * [[pqIndexGuard]]; marker gone → the rebuilt index is fully live.
+    * and one [[IndexDir.commit]] of the rebuild step swaps each subdir
+    * in — so every crash point is unambiguous: no marker → live index
+    * untouched, staging is garbage; marker → staged index complete,
+    * [[recoverPqIndex]] re-runs the idempotent promotion while probes
+    * fail loudly; marker gone → the rebuilt index is fully live.
     *
     * The stream-batch watermark is deliberately preserved: a rebuild
     * re-encodes the same corpus the watermark describes (pass the
@@ -1964,71 +1767,13 @@ object Similarity {
       vectors: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, m: Int, pqK: Int,
       iters: Int = 5, seed: Int = 42, sampleRate: Double = 1.0): Unit = {
-    pqIndexGuard(spark, path) // never start over a half-done append/rebuild
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/rebuild.staging"), true)
-    val cents = trainCentroids(
-      vectors, idCol, vecCol, nCentroids, iters, seed, sampleRate)
-    val books = pqTrainCodebooks(
-      vectors, idCol, vecCol, m, pqK, iters, seed, sampleRate)
-    writePqIndex(vectors, cents, idCol, vecCol, books, s"$path/rebuild.staging")
-    val marker = fs.create(new org.apache.hadoop.fs.Path(path, PqRebuildIntent), true)
-    try marker.write("pending".getBytes("UTF-8")) finally marker.close()
-    promotePqRebuild(fs, path)
-  }
-
-  /** Promote a fully-staged rebuild (intent marker present). Idempotent
-    * per subdir: staged present → retire the live dir and swap the
-    * staged one in; staged absent → that subdir already promoted (its
-    * retired backup, if any, is dropped).
-    */
-  private def promotePqRebuild(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    for (sub <- Seq("codes", "centroids", "codebooks")) {
-      val staged = new org.apache.hadoop.fs.Path(s"$path/rebuild.staging/$sub")
-      val live = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val retired = new org.apache.hadoop.fs.Path(s"$path/$sub.rebuild-retired")
-      if (fs.exists(staged)) {
-        if (fs.exists(live)) {
-          if (fs.exists(retired)) fs.delete(retired, true) // stale earlier attempt
-          if (!fs.rename(live, retired))
-            throw new IllegalStateException(s"rebuild: could not retire $live")
-        }
-        if (!fs.rename(staged, live))
-          throw new IllegalStateException(s"rebuild: could not promote $staged")
-      }
-      if (fs.exists(live) && fs.exists(retired)) fs.delete(retired, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/rebuild.staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path, PqRebuildIntent), false)
-  }
-
-  /** The closed maintenance loop: gauge the at-rest index's recall on a
-    * probe sample ([[pqIndexRecallAt]]) and, only if macro recall fell
-    * below `minRecall`, retrain-and-swap via [[rebuildPqIndex]] — with
-    * the model SHAPE (nCentroids, m, pqK) read from the index's own
-    * sidecars, so the scheduled job needs no out-of-band record of how
-    * the index was built. Returns (recall before, whether it rebuilt);
-    * a healthy index costs one sampled probe batch and touches nothing.
-    */
-  def maintainPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int, minRecall: Double,
-      probeSampleRate: Double = 0.05,
-      iters: Int = 5, seed: Int = 42, trainSampleRate: Double = 1.0): (Double, Boolean) = {
-    val recall = pqIndexRecallAt(
-      spark, path, vectors, vectors, idCol, vecCol, k, nProbe,
-      probeSampleRate, seed)
-      .select("macro_recall").head().getDouble(0)
-    if (recall >= minRecall) (recall, false)
-    else {
-      val nCentroids = spark.read.parquet(s"$path/centroids").count().toInt
-      val books = readCodebooks(spark, path) // model-bounded: m × pqK × dim
-      rebuildPqIndex(spark, path, vectors, idCol, vecCol,
-        nCentroids, books.length, books.head.length, iters, seed, trainSampleRate)
-      (recall, true)
+    IndexDir.guard(spark, path, PqLayout) // never start over a half-done append/rebuild
+    IndexDir.commit(spark, path, PqLayout, IndexDir.Rebuild) { staged =>
+      val cents = trainCentroids(
+        vectors, idCol, vecCol, nCentroids, iters, seed, sampleRate)
+      val books = pqTrainCodebooks(
+        vectors, idCol, vecCol, m, pqK, iters, seed, sampleRate)
+      writePqIndex(vectors, cents, idCol, vecCol, books, staged)
     }
   }
 

@@ -257,26 +257,20 @@ object TextStats {
       .limit(k)
   }
 
-  /** Filename of the BM25 append intent marker: present ⇔ a fully-staged
-    * append is mid-promotion, which [[recoverBm25Index]] rolls FORWARD.
-    * Probes, appends, and compactions refuse to run while it exists —
-    * the postings/terms/corpus trio may be mutually inconsistent
-    * mid-swap, and a probe would score with a stale df or N silently.
+  /** The BM25 index's layout under the shared maintenance protocol
+    * ([[IndexDir]]): appends grow the `postings/pbucket=N` directories
+    * file by file; the corpus sidecar marks the index. Probes, appends
+    * and compactions refuse to run while an append is mid-promotion —
+    * the postings/terms/corpus trio may be mutually inconsistent, and a
+    * probe would score with a stale df or N silently.
     */
-  private val Bm25AppendIntent = "_graft_append_intent"
+  private[graft] val Bm25Layout = IndexDir.Layout(
+    "persisted BM25 index", "corpus", "writeBm25Index", "recoverBm25Index",
+    appended = Seq("postings"))
 
-  /** The corpus sidecar, behind the index/consistency gate: `path` must
-    * be a [[writeBm25Index]] layout and must not have a pending append.
-    */
+  /** The corpus sidecar, behind the index/consistency gate. */
   private def bm25Corpus(spark: SparkSession, path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/corpus")))
-      throw new IllegalArgumentException(
-        s"$path is not a persisted BM25 index (no corpus sidecar) — build it with writeBm25Index")
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, Bm25AppendIntent)))
-      throw new IllegalStateException(
-        s"$path has an interrupted append — run recoverBm25Index to roll it forward")
+    IndexDir.guard(spark, path, Bm25Layout)
     spark.read.parquet(s"$path/corpus")
   }
 
@@ -298,79 +292,25 @@ object TextStats {
   /** Append an ingest delta to the at-rest BM25 index, crash-atomically
     * (VERDICT r12 next #3 — every other persisted index already had the
     * append/compact/recover discipline; an ingest-growing corpus forced
-    * a full rebuild here). The [[appendToShingleIndex]] protocol:
+    * a full rebuild here). One [[IndexDir.commit]]: the delta's postings
+    * (tokenized once, bucketed by the SAME term hash the build used), the
+    * merged df cache (old ⊎ delta — one aggregation over the terms cache
+    * + the STAGED files, never a corpus re-scan), and the advanced corpus
+    * sidecar (N + |delta|, Σdl + Σdl_delta) stage COMPLETELY under
+    * `append.staging/`, an intent marker declares the append, the staged
+    * posting files move into their `pbucket=` directories and the
+    * df/corpus sidecars swap in. Mid-promotion, probes fail loudly
+    * through the [[bm25Corpus]] gate and [[recoverBm25Index]] rolls the
+    * append forward. Contract (the [[Similarity.appendToPqIndex]]
+    * convention): delta doc ids are disjoint from indexed ones —
+    * re-ingesting a doc would double its postings, not replace them.
     *
-    *   1. the delta's postings (tokenized once, bucketed by the SAME
-    *      term hash the build used), the merged df cache (old ⊎ delta —
-    *      one aggregation over the terms cache + the STAGED files, never
-    *      a corpus re-scan), and the advanced corpus sidecar
-    *      (N + |delta|, Σdl + Σdl_delta) are written COMPLETELY under
-    *      `append.staging/`;
-    *   2. an intent marker declares the append committed;
-    *   3. staged posting files promote by per-file rename into their
-    *      `pbucket=` directories, the df/corpus sidecars by
-    *      stage-delete-rename, and the marker is removed.
-    *
-    * Crash points are unambiguous: no marker → live index untouched,
-    * staging is garbage; marker → staged data complete,
-    * [[recoverBm25Index]] re-runs the (idempotent) promotion while
-    * probes fail loudly through the [[bm25Corpus]] gate; marker gone →
-    * fully visible. Contract (the [[appendToPqIndex]] convention): delta
-    * doc ids are disjoint from indexed ones — re-ingesting a doc would
-    * double its postings, not replace them.
+    * @param streamBatchId when set, the stream-batch watermark stages and
+    *                      promotes WITH the postings, so a replayed
+    *                      micro-batch can tell whether its append landed —
+    *                      the exactly-once hinge of
+    *                      [[graft.streaming.StreamingIndex.bm25IndexTo]].
     */
-  /** Filename of the stream-batch watermark sidecar: holds the last
-    * streaming batch id applied to the index. Staged and promoted
-    * ATOMICALLY with an append (under the same intent marker), so a
-    * replayed micro-batch can always tell whether its append landed —
-    * the exactly-once hinge of
-    * [[graft.streaming.StreamingIndex.bm25IndexTo]].
-    */
-  private[graft] val Bm25StreamBatchFile = "_graft_stream_batch"
-
-  /** Write the stream-batch watermark (bootstrap path; appends stage it
-    * through [[appendToBm25Index]]'s `streamBatchId` instead). Written to
-    * a temp name and renamed into place — single-file rename is atomic on
-    * local/HDFS, so a crash mid-write can never leave a torn watermark in
-    * the live directory (ADVICE r13 #1; the torn file would otherwise
-    * wedge every later batch on a parse error the recovery path cannot
-    * see).
-    */
-  private[graft] def writeBm25StreamBatch(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, batchId: Long): Unit =
-    atomicWriteWatermark(fs, dir, Bm25StreamBatchFile, batchId)
-
-  /** Shared by the BM25 and PQ watermark writers: stage the bytes under a
-    * dot-temp name, fsync-close, then rename over the live file. */
-  private[graft] def atomicWriteWatermark(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, name: String, batchId: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val live = new org.apache.hadoop.fs.Path(dir, name)
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(live, false)
-    if (!fs.rename(tmp, live))
-      throw new IllegalStateException(s"could not promote watermark $tmp to $live")
-  }
-
-  /** The last applied stream batch id, or None for a non-streaming (or
-    * interrupted-bootstrap) index. An unreadable/unparseable watermark —
-    * a torn write from a pre-rename crash, or manual damage — also reads
-    * as None (ADVICE r13 #1): the caller's interrupted-bootstrap rebuild
-    * path then repairs it, instead of every batch dying on the parse.
-    */
-  private[graft] def readBm25StreamBatch(
-      spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, Bm25StreamBatchFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.trim.toLongOption
-    }
-  }
-
   def appendToBm25Index(spark: SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       streamBatchId: Option[Long] = None): Unit = {
@@ -378,76 +318,40 @@ object TextStats {
     val (oldN, oldSumdl) = (corpus.getLong(corpus.fieldIndex("n")),
       corpus.getLong(corpus.fieldIndex("sumdl")))
     val nBuckets = corpus.getInt(corpus.fieldIndex("n_buckets"))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Unmarked staging leftovers are garbage from an append that never
-    // reached its intent point.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    graft.Lineage.pinned(newDocs
-        .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("__w"))
-        .withColumn("dl", size(col("__w")).cast("long"))) { base =>
-      base.select(col("doc_id"), col("dl"), explode(col("__w")).as("term"))
-        .groupBy("term", "doc_id", "dl").agg(count(lit(1)).cast("long").as("tf"))
-        .withColumn("pbucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-        .write.mode("overwrite").partitionBy("pbucket")
-        .parquet(s"$path/append.staging/postings")
-      // Delta df from the WRITTEN staging files, so the cache cannot
-      // drift from what actually landed.
-      val stagedDf = spark.read.parquet(s"$path/append.staging/postings")
-        .groupBy("term").agg(count(lit(1)).as("df"))
-      bm25Terms(spark, path).unionByName(stagedDf)
-        .groupBy("term").agg(sum("df").as("df"))
-        .write.mode("overwrite").parquet(s"$path/append.staging/terms")
-      val d = base.agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("dsumdl")).head()
-      spark.range(1).select(
-        lit(oldN + d.getLong(0)).as("n"),
-        lit(oldSumdl + d.getLong(1)).as("sumdl"),
-        lit(nBuckets).as("n_buckets"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/append.staging/corpus")
-      // The stream watermark stages WITH the append, so it promotes (or
-      // rolls forward) atomically with the postings it describes.
-      streamBatchId.foreach(id =>
-        writeBm25StreamBatch(fs, s"$path/append.staging", id))
-      val marker = fs.create(new org.apache.hadoop.fs.Path(path, Bm25AppendIntent), true)
-      try marker.write("pending".getBytes("UTF-8")) finally marker.close()
-      promoteBm25Append(fs, path)
+    IndexDir.commit(spark, path, Bm25Layout, streamBatchId = streamBatchId) { staged =>
+      graft.Lineage.pinned(newDocs
+          .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("__w"))
+          .withColumn("dl", size(col("__w")).cast("long"))) { base =>
+        base.select(col("doc_id"), col("dl"), explode(col("__w")).as("term"))
+          .groupBy("term", "doc_id", "dl").agg(count(lit(1)).cast("long").as("tf"))
+          .withColumn("pbucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+          .write.mode("overwrite").partitionBy("pbucket")
+          .parquet(s"$staged/postings")
+        // Delta df from the WRITTEN staging files, so the cache cannot
+        // drift from what actually landed.
+        val stagedDf = spark.read.parquet(s"$staged/postings")
+          .groupBy("term").agg(count(lit(1)).as("df"))
+        bm25Terms(spark, path).unionByName(stagedDf)
+          .groupBy("term").agg(sum("df").as("df"))
+          .write.mode("overwrite").parquet(s"$staged/terms")
+        val d = base.agg(count(lit(1)).as("dn"), coalesce(sum("dl"), lit(0L)).as("dsumdl")).head()
+        spark.range(1).select(
+          lit(oldN + d.getLong(0)).as("n"),
+          lit(oldSumdl + d.getLong(1)).as("sumdl"),
+          lit(nBuckets).as("n_buckets"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$staged/corpus")
+      }
     }
   }
 
-  /** Promote a fully-staged BM25 append (intent marker present).
-    * Idempotent: already-promoted files are no longer in staging, so an
-    * interrupted promotion re-runs to completion.
-    */
-  private def promoteBm25Append(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val stagedPosts = new org.apache.hadoop.fs.Path(s"$path/append.staging/postings")
-    if (fs.exists(stagedPosts)) {
-      fs.listStatus(stagedPosts)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("pbucket="))
-        .foreach { d =>
-          val dest = new org.apache.hadoop.fs.Path(s"$path/postings/${d.getPath.getName}")
-          if (!fs.exists(dest)) fs.mkdirs(dest)
-          fs.listStatus(d.getPath)
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-            .foreach { f =>
-              val to = new org.apache.hadoop.fs.Path(dest, f.getPath.getName)
-              if (!fs.rename(f.getPath, to))
-                throw new IllegalStateException(s"append: could not promote ${f.getPath} to $to")
-            }
-        }
-    }
-    for (sub <- Seq("terms", "corpus", Bm25StreamBatchFile)) {
-      val staged = new org.apache.hadoop.fs.Path(s"$path/append.staging/$sub")
-      if (fs.exists(staged)) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-        if (!fs.rename(staged, new org.apache.hadoop.fs.Path(s"$path/$sub")))
-          throw new IllegalStateException(s"append: could not promote $sub sidecar at $path")
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/append.staging"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path, Bm25AppendIntent), false)
-  }
+  /** The last applied stream batch id ([[IndexDir.readStreamBatch]]). */
+  private[graft] def readBm25StreamBatch(spark: SparkSession, path: String): Option[Long] =
+    IndexDir.readStreamBatch(spark, path)
+
+  /** The atomic watermark write ([[IndexDir.writeStreamBatch]]). */
+  private[graft] def writeBm25StreamBatch(
+      fs: org.apache.hadoop.fs.FileSystem, dir: String, batchId: Long): Unit =
+    IndexDir.writeStreamBatch(fs, dir, batchId)
 
   /** Restore a healthy file layout to an append-accreted BM25 index:
     * every [[appendToBm25Index]] lands one file set per touched
@@ -463,29 +367,17 @@ object TextStats {
     */
   def compactBm25Index(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20, minFiles: Int = 2): Seq[Int] = {
-    bm25Corpus(spark, path) // gate: real index, no pending append
+    IndexDir.guard(spark, path, Bm25Layout)
     graft.merge.PartitionedTarget.compactDirs(
       spark, s"$path/postings", "pbucket", targetFileBytes, minFiles)
   }
 
-  /** Roll an interrupted BM25 maintenance step to a consistent state:
-    * a marked append promotes FORWARD (staged data is complete by the
-    * marker's contract), unmarked staging leftovers are dropped, and an
-    * interrupted compaction swap rolls through the shared marker
-    * protocol against the postings root. @return true when anything was
+  /** Roll an interrupted BM25 append or compaction to a consistent
+    * state ([[IndexDir.recover]]). @return true when anything was
     * repaired.
     */
-  def recoverBm25Index(spark: SparkSession, path: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(path, Bm25AppendIntent)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/append.staging")
-    val appendActed =
-      if (fs.exists(marker)) { promoteBm25Append(fs, path); true }
-      else if (fs.exists(staging)) { fs.delete(staging, true); true }
-      else false
-    appendActed | graft.merge.MergeApply.recover(spark, s"$path/postings")
-  }
+  def recoverBm25Index(spark: SparkSession, path: String): Boolean =
+    IndexDir.recover(spark, path, Bm25Layout)
 
   /** Vocabulary-coverage / OOV-rate report (C90): build the top-V corpus
     * vocabulary by token OCCURRENCE count (deterministic tie-break:

@@ -17,8 +17,8 @@ import graft.streaming.{StreamingIndex, StreamingIngest, StreamingMultimodal, St
   * Reading the number: the FIRST batch carries the stream's one-time
   * planning/codegen cost, and the bench restarts the stream every
   * iteration — per-STREAM setup a long-running deployment amortizes to
-  * zero. Cost attribution (SPARK_GRAFT_ST1_PROFILE=1, sf0.1 local[32],
-  * durationMs medians): addBatch — the partition-scoped merge apply
+  * zero. Cost attribution (each batch's progress `durationMs`, sf0.1
+  * local[32], medians): addBatch — the partition-scoped merge apply
   * itself — is ~95% of every batch (~1.5 s; batch 0 ~2.0 s with
   * first-codegen), checkpoint I/O (walCommit+commitOffsets) ~70 ms (~5%),
   * query planning ~5 ms. The bench line prices the APPLY, not harness
@@ -36,17 +36,6 @@ import graft.streaming.{StreamingIndex, StreamingIngest, StreamingMultimodal, St
 object StreamingQueries {
 
   private val NBatches = 4
-
-  /** Opt-in micro-batch cost attribution (the st1 SPARK_GRAFT_ST1_PROFILE
-    * precedent, generalized): with SPARK_GRAFT_ST_PROFILE set, dump every
-    * batch's full progress JSON — durationMs (addBatch vs WAL vs planning)
-    * and stateOperators (commit times, rows, state memory) — to stderr
-    * before the stream stops. Never set by the driver; measurement only.
-    */
-  private def stProfileDump(
-      tag: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_ST_PROFILE"))
-      q.recentProgress.foreach(p => System.err.println(s"[st-profile:$tag] ${p.json}"))
 
   /** Run `body` (which must CREATE AND START a streaming query) with the
     * session's shuffle-partition count pinned to `n`, restoring the
@@ -72,7 +61,7 @@ object StreamingQueries {
     // waiting for the next arrival. Each one pays the full per-batch
     // floor — planning + a state-store commit round across every
     // (operator × partition) — for zero new input; profiled on st3/st9
-    // (SPARK_GRAFT_ST_PROFILE, sf0.1) they were HALF the replayed
+    // (each batch's progress JSON, sf0.1) they were HALF the replayed
     // batches and ~40-50 % of replay wall time. A replay/backfill
     // stream — this harness, or any throughput-bound production
     // backfill — reads results at convergence, so the early emission
@@ -128,12 +117,6 @@ object StreamingQueries {
     val replay = () => pinnedStateParts(s, 8) {
       try {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
-        // Opt-in cost attribution (VERDICT r5 next #8): durationMs splits a
-        // batch into addBatch (the partition-scoped merge apply itself),
-        // walCommit+commitOffsets (checkpoint I/O), and planning overheads.
-        if (sys.env.contains("SPARK_GRAFT_ST1_PROFILE"))
-          q.recentProgress.foreach(p =>
-            System.err.println(s"[st1-profile] batch=${p.batchId} durationMs=${p.durationMs}"))
       } finally q.stop()
     }
     (replay, target)
@@ -275,7 +258,6 @@ object StreamingQueries {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
         mem.addData((maxUs + 3 * hourUs, "zzz_sentinel", 0.0)); q.processAllAvailable()
         mem.addData((maxUs + 6 * hourUs, "zzz_sentinel", 0.0)); q.processAllAvailable()
-        stProfileDump("st3", q)
       } finally q.stop()
     (replay, out)
   }
@@ -318,7 +300,6 @@ object StreamingQueries {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
         mem.addData((-1L, maxUs + 3 * hourUs)); q.processAllAvailable()
         mem.addData((-1L, maxUs + 6 * hourUs)); q.processAllAvailable()
-        stProfileDump("st4", q)
       } finally q.stop()
     (replay, out)
   }
@@ -710,7 +691,6 @@ object StreamingQueries {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
         mem.addData((maxUs + 3 * hourUs, -1L)); q.processAllAvailable()
         mem.addData((maxUs + 6 * hourUs, -1L)); q.processAllAvailable()
-        stProfileDump("st7", q)
       } finally q.stop()
     (replay, out)
   }
@@ -1333,7 +1313,6 @@ object StreamingQueries {
     val replay = () =>
       try {
         rows.grouped(per).foreach { b => mem.addData(b.toIndexedSeq: _*); q.processAllAvailable() }
-        stProfileDump("st9", q)
       } finally q.stop()
     (replay, out)
   }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.pipeline.{Similarity, TextStats}
+import graft.pipeline.{IndexDir, Similarity, TextStats}
 
 /** Continuous posting-index maintenance — the ingest-time twin of the
   * batch [[TextStats.writeBm25Index]]/[[TextStats.appendToBm25Index]]
@@ -75,28 +75,39 @@ object StreamingIndex {
   private[graft] def applyBatch(
       batch: DataFrame, batchId: Long, path: String,
       idCol: String, textCol: String, nBuckets: Int,
-      compactEvery: Int = 0): Unit =
+      compactEvery: Int = 0): Unit = {
+    val spark = batch.sparkSession
+    exactlyOnce(batch, batchId, path, TextStats.Bm25Layout, compactEvery)(
+      bootstrap = () => TextStats.writeBm25Index(batch, idCol, textCol, path, nBuckets),
+      append = () => TextStats.appendToBm25Index(spark, path, batch, idCol, textCol,
+        streamBatchId = Some(batchId)),
+      compact = () => TextStats.compactBm25Index(spark, path))
+  }
+
+  /** The micro-batch skeleton of the watermarked index maintainers: roll
+    * any interrupted maintenance step forward BEFORE reading the
+    * watermark (a staged watermark promotes with its append), then let
+    * the watermark decide — none: bootstrap (or an interrupted bootstrap,
+    * whose rebuild is the recovery) as an overwrite build, with the
+    * watermark strictly after; this batch id or older: a replay that
+    * already landed, skipped; newer: a watermarked append. Every
+    * `compactEvery`-th batch then compacts (0 never).
+    */
+  private def exactlyOnce(
+      batch: DataFrame, batchId: Long, path: String, layout: IndexDir.Layout,
+      compactEvery: Int)(bootstrap: () => Unit, append: () => Unit, compact: () => Unit): Unit =
     if (!batch.isEmpty) {
       val spark = batch.sparkSession
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasCorpus = fs.exists(new Path(s"$path/corpus"))
-      // Roll any interrupted append forward BEFORE reading the
-      // watermark — the staged watermark promotes with it.
-      if (hasCorpus) TextStats.recoverBm25Index(spark, path)
-      TextStats.readBm25StreamBatch(spark, path) match {
+      IndexDir.recover(spark, path, layout)
+      IndexDir.readStreamBatch(spark, path) match {
         case None =>
-          // Bootstrap (or interrupted bootstrap — rebuild is the
-          // recovery): overwrite build, watermark strictly after.
-          TextStats.writeBm25Index(batch, idCol, textCol, path, nBuckets)
-          TextStats.writeBm25StreamBatch(fs, path, batchId)
+          bootstrap()
+          IndexDir.writeStreamBatch(
+            new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), path, batchId)
         case Some(last) if batchId <= last => () // replayed, already landed
-        case Some(_) =>
-          TextStats.appendToBm25Index(spark, path, batch, idCol, textCol,
-            streamBatchId = Some(batchId))
+        case Some(_) => append()
       }
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        TextStats.compactBm25Index(spark, path)
-      ()
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) compact()
     }
 
   /** Continuous IVFADC index maintenance — [[bm25IndexTo]]'s discipline
@@ -141,24 +152,11 @@ object StreamingIndex {
       idCol: String, vecCol: String,
       centroids: DataFrame, codebooks: Seq[Seq[Seq[Double]]],
       compactEvery: Int = 0): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new Path(s"$path/codebooks")))
-        Similarity.recoverPqIndex(spark, path)
-      Similarity.readPqStreamBatch(spark, path) match {
-        case None =>
-          Similarity.writePqIndex(batch, centroids, idCol, vecCol, codebooks, path)
-          Similarity.writePqStreamBatch(fs, path, batchId)
-        case Some(last) if batchId <= last => () // replayed, already landed
-        case Some(_) =>
-          Similarity.appendToPqIndex(batch, idCol, vecCol, path,
-            streamBatchId = Some(batchId))
-      }
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        Similarity.compactPqIndex(spark, path)
-      ()
-    }
+    exactlyOnce(batch, batchId, path, Similarity.PqLayout, compactEvery)(
+      bootstrap = () => Similarity.writePqIndex(batch, centroids, idCol, vecCol, codebooks, path),
+      append = () => Similarity.appendToPqIndex(batch, idCol, vecCol, path,
+        streamBatchId = Some(batchId)),
+      compact = () => Similarity.compactPqIndex(batch.sparkSession, path))
 
   /** Continuous distinct-count sketch-store maintenance — the ingest-time
     * twin of the at-rest [[graft.operators.Sketches]] store: rows stream

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.pipeline.Similarity
+import graft.pipeline.{IndexDir, Similarity}
 
 /** Streaming embedding near-dup-on-ingest: incoming vectors are checked
   * against a STATIC corpus via random-hyperplane LSH
@@ -154,7 +154,7 @@ object StreamingNearDup {
       // Roll any interrupted append forward BEFORE reading the
       // watermark — the staged watermark promotes with it.
       Similarity.recoverSignatureIndex(spark, indexPath)
-      Similarity.readSigStreamBatch(spark, indexPath) match {
+      IndexDir.readStreamBatch(spark, indexPath) match {
         case Some(last) if batchId <= last => () // replayed, already landed
         case _ =>
           Similarity.pairsAgainstSignatureIndex(

@@ -212,6 +212,25 @@ class PartitionedApplySpec extends GraftSuite {
     assert(e2.getMessage.contains("not a partitioned merge target"))
   }
 
+  test("a key column named with a comma round-trips through the spec sidecar and merges") {
+    // The sidecar's keys array was once split on ',': a target keyed on
+    // `k,1` read back as keys [k, 1], so every later apply failed (and
+    // range bucketing's single-key require threw).
+    val t = target60.withColumnRenamed("k", "k,1")
+    for (s <- Seq(PartitionSpec(Seq("k,1"), 16, HashMode.Xxhash64),
+        PartitionSpec(Seq("k,1"), 16, HashMode.Md5Portable, rangeShift = Some(2)))) {
+      val path = freshDir("papply-commakey")
+      PartitionedTarget.write(t, path, s)
+      assert(PartitionedTarget.readSpec(spark, path) === s)
+      val r = MergeApply.applyToPartitioned(spark, path,
+        Seq((5L, "N5", 500.0), (99L, "new", 1.0)).toDF("k,1", "name", "v"),
+        MergeOptions(keys = Seq("k,1"), delete = DeleteMode.Ignore))
+      assert(r.committed && r.affectedRows === 2L)
+      val out = PartitionedTarget.read(spark, path).as[(Long, String, Double)].collect().toSet
+      assert(out.size === 61 && out((5L, "N5", 500.0)) && out((99L, "new", 1.0)))
+    }
+  }
+
   test("range bucketing: contiguous delta touches few buckets; spec roundtrips") {
     val rspec = PartitionSpec(Seq("k"), 16, HashMode.Xxhash64, rangeShift = Some(3)) // width 8
     val path = freshDir("papply-range")

@@ -306,7 +306,7 @@ class PipelineSpec extends GraftSuite {
       Dedup.withJaccardPairsAgainstIndex(spark, path, probeDocs, "doc_id", "text",
         dfCap = 50, threshold = 0.5)(_.as[(Long, Long, Double)].collect().toSet)
     // Mid-promotion: loud failure, never a silently-pairless answer.
-    intercept[IllegalArgumentException] { probe() }
+    intercept[IllegalStateException] { probe() }
     assert(Dedup.recoverShingleIndex(spark, path))
     assert(!fs.exists(marker))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/append.staging")))

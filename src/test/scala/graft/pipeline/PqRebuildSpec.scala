@@ -126,45 +126,4 @@ class PqRebuildSpec extends GraftSuite {
     // Healthy: recover is a no-op.
     assert(!Similarity.recoverPqIndex(spark, idx))
   }
-
-  test("maintainPqIndex: healthy index untouched; drifted index rebuilt from its own sidecar shape") {
-    val base = java.nio.file.Files.createTempDirectory("pqmaintain").toString
-    val idx = s"$base/idx"
-    val cents0 = Similarity.trainCentroids(initialVecs, "vec_id", "embedding", K)
-    val books0 = Similarity.pqTrainCodebooks(initialVecs, "vec_id", "embedding", M, 16)
-    Similarity.writePqIndex(initialVecs, cents0, "vec_id", "embedding", books0, idx)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // Healthy (the corpus IS the training set): recall clears the bar,
-    // nothing rewritten.
-    def codesState() = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$idx/codes"))
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getPath -> f.lastModified()).toMap
-    }
-    val before = codesState()
-    val (r0, rebuilt0) = Similarity.maintainPqIndex(
-      spark, idx, initialVecs, "vec_id", "embedding",
-      k = 5, nProbe = K, minRecall = 0.85, probeSampleRate = 1.0)
-    assert(!rebuilt0 && r0 >= 0.85)
-    assert(codesState() === before)
-
-    // Drift in, recall collapses below the bar: one maintain call
-    // retrains with (nCentroids, m, pqK) read from the index's own
-    // sidecars and restores it.
-    Similarity.appendToPqIndex(driftVecs, "vec_id", "embedding", idx)
-    val corpus = initialVecs.unionByName(driftVecs)
-    val (r1, rebuilt1) = Similarity.maintainPqIndex(
-      spark, idx, corpus, "vec_id", "embedding",
-      k = 5, nProbe = K, minRecall = 0.85, probeSampleRate = 1.0)
-    assert(rebuilt1 && r1 < 0.85, s"drift should trip the gate (recall $r1)")
-    val (r2, rebuilt2) = Similarity.maintainPqIndex(
-      spark, idx, corpus, "vec_id", "embedding",
-      k = 5, nProbe = K, minRecall = 0.85, probeSampleRate = 1.0)
-    assert(!rebuilt2 && r2 > r1, s"rebuild should restore recall: $r1 -> $r2")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/rebuild.staging")))
-  }
 }
